@@ -303,6 +303,16 @@ object Kernels {
     tile.copy(shape = box.shape, data = data, classes = classes)
   }
 
+  /** Why an O10 remap can meet a label its rank pass never saw. Both
+    * passes read one physical plan, so the only way left is a map stage
+    * that Spark re-runs (after a shuffle fetch failure) computing
+    * different labels than its first run.
+    */
+  val RankMissCause: String =
+    "a map stage was re-run (e.g. after a shuffle fetch failure) under a " +
+      "nondeterministic segmentation function; make the segmentation " +
+      "deterministic or persist the input before sorting"
+
   /** O10 `sort_indices` (`chunkops.py:104-113`): remap every label to its
     * index in the globally sorted distinct-label list (broadcast).
     */
@@ -311,11 +321,9 @@ object Kernels {
     var i = 0
     while (i < out.length) {
       val r = rank.get(tile.data(i))
-      // fail loudly instead of an opaque unboxing NPE: a miss means the tiles
-      // lineage recomputed differently between the distinct pass and this one
+      // fail loudly instead of an opaque unboxing NPE
       if (r == null) throw new IllegalStateException(
-        s"label ${tile.data(i)} has no rank: non-deterministic input " +
-          "lineage? persist the tiles Dataset before sorting")
+        s"label ${tile.data(i)} has no rank: $RankMissCause")
       out(i) = r
       i += 1
     }

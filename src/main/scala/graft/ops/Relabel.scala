@@ -167,10 +167,13 @@ object Relabel {
 
   /** O10 `sort_label_indices` (`relabeling.py:312-346`): global distinct of
     * the label space (eager, like the reference's `da.unique(...).compute()`
-    * at `relabeling.py:331`) broadcast back as a dense-rank map. Persist the
-    * input first if it is expensive to recompute — the reference's docstring
-    * gives the same advice. Label spaces above [[SortBroadcastCapKey]]
-    * never reach the driver: the call degrades to the distributed variant.
+    * at `relabeling.py:331`) broadcast back as a dense-rank map. The probe
+    * and the remap read the input through one physical plan, so the remap
+    * reuses the shuffle output the probe already wrote (the halo exchanges
+    * of an `image2labels` input run once, not twice). Persist the input
+    * first if it is expensive to recompute. Label spaces above
+    * [[SortBroadcastCapKey]] never reach the driver: the call degrades to
+    * the distributed variant.
     */
   def sortLabelIndices(tiles: Dataset[Tile]): Dataset[Tile] = {
     val spark = tiles.sparkSession
@@ -178,33 +181,25 @@ object Relabel {
     val cap = spark.conf.get(SortBroadcastCapKey, "4000000").toLong
     require(cap > 0, s"$SortBroadcastCapKey must be positive, got $cap")
     val probeN = math.min(cap, Int.MaxValue - 1L).toInt + 1
-    // per-tile distinct first: shrinks the shuffle to O(labels), not O(pixels)
-    // COST NOTE (accepted trade, r13 ADVICE): limit(cap+1) compiles to
-    // CollectLimit, whose below-cap path (the limit is never satisfied, so
-    // it exhausts the input) runs ~log4(P) scale-up jobs (1, 4, 16, ...
-    // reduce partitions). The upstream per-tile-distinct MAP stage is one
-    // shared shuffle write reused by every retry — each retry re-reads
-    // shuffled label ids (O(distinct labels), tiny vs the pixel scan), so
-    // the worst case over the old unbounded collect() is a few extra
-    // reduce-side passes over the label set, bought against the driver-OOM
-    // guarantee. A count()-first probe would pin it to exactly two passes
-    // but pays a full extra aggregate even for tiny label spaces — the
-    // common case here.
-    val probe = tiles
-      .flatMap(t => t.data.distinct.iterator)
+    val pinned = tiles.rdd
+    // per-tile distinct first: shrinks the shuffle to O(labels), not O(pixels).
+    // Below the cap, limit(cap+1) exhausts the input in ~log4(P) scale-up
+    // jobs, each re-reading only the shuffled label ids: the price of
+    // never collecting an unbounded label space to the driver.
+    val probe = spark.createDataset(pinned.flatMap(t => t.data.distinct.iterator))
       .distinct()
       .limit(probeN)
       .collect()
     if (probe.length >= probeN)
       // over the cap: the probe saw cap+1 distinct labels, so the full
       // collect would be the driver OOM this guard exists to prevent
-      return sortLabelIndicesDistributed(tiles)
+      return sortLabelIndicesDistributed(spark.createDataset(pinned))
     val distinctLabels = probe.sorted
     val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     var i = 0L
     distinctLabels.foreach { l => rank.put(l, i); i += 1 }
     val bc = spark.sparkContext.broadcast(rank)
-    tiles.map(t => Kernels.sortRemap(t, bc.value))
+    spark.createDataset(pinned.map(t => Kernels.sortRemap(t, bc.value)))
   }
 
   /** O10 without the driver round-trip: the reference (and
@@ -214,24 +209,22 @@ object Relabel {
     * `zipWithIndex` (two passes, no single-partition sort) -> per-tile rank
     * maps via an equi-join on the tile's own distinct labels -> cogroup
     * remap. More shuffles than the broadcast path; choose by label-space
-    * size.
+    * size. Like the broadcast variant, it runs jobs at call time (range
+    * sampling + zipWithIndex) and reads the input through one physical
+    * plan; persist the input first if it is expensive to recompute.
     */
   def sortLabelIndicesDistributed(tiles: Dataset[Tile]): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    // NOTE: like the broadcast variant (and the reference, which computes
-    // eagerly at `relabeling.py:331`), this runs jobs at call time (range
-    // sampling + zipWithIndex). Persist `tiles` first if its lineage is
-    // expensive or non-deterministic — the rank table and the remap pass
-    // must observe the same label sets.
+    val pinned = tiles.rdd
     // read three times below (rank build, join probe, implicit in sort
     // sampling); tiny (O(distinct labels per tile)). Persist EAGERLY here —
     // the sortBy sampling and zipWithIndex jobs below run at call time, and
     // they must populate (then reuse) the cache, not each recompute the
-    // tiles lineage. releaseAfterAction's own persist() is then a no-op;
+    // label scan. releaseAfterAction's own persist() is then a no-op;
     // its listener still releases after the remapped result's action.
-    val tileLabels = tiles.flatMap(t =>
-      t.data.distinct.iterator.map(l => (t.linearIndex, l)))
+    val tileLabels = spark.createDataset(pinned.flatMap(t =>
+      t.data.distinct.iterator.map(l => (t.linearIndex, l))))
       .toDF("lin", "label")
       .persist()
     val ranks = tileLabels.select("label").distinct().as[Long]
@@ -243,22 +236,20 @@ object Relabel {
       .mapGroups { (lin, it) =>
         (lin, it.map { case (_, l, r) => (l, r) }.toArray)
       }
-    graft.Caching.releaseAfterAction(tiles
+    graft.Caching.releaseAfterAction(spark.createDataset(pinned)
       .groupByKey(_.linearIndex)
       .cogroup(perTile.groupByKey(_._1)) { (lin, ts, rs) =>
         val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
         rs.foreach(_._2.foreach { case (l, r) => rank.put(l, r) })
         // remap every tile in the group (duplicated locations are remapped,
-        // not dropped) and fail loudly on rank misses rather than NPE-ing —
-        // a miss means the tiles lineage diverged between passes
+        // not dropped) and fail loudly on rank misses rather than NPE-ing
         ts.map { t =>
           val checked = new java.util.HashMap[java.lang.Long, java.lang.Long]()
           t.data.foreach { l =>
             if (!checked.containsKey(l)) {
               val r = rank.get(l)
               require(r != null,
-                s"label $l of tile $lin has no rank: non-deterministic input " +
-                  "lineage? persist the tiles Dataset before sorting")
+                s"label $l of tile $lin has no rank: ${Kernels.RankMissCause}")
               checked.put(l, r)
             }
           }

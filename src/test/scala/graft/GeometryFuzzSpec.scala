@@ -68,20 +68,10 @@ class GeometryFuzzSpec extends AnyFunSuite {
       val out = Relabel.image2labels(spark.createDataset(tiles),
         GridSpec(Array(g.h.toLong, g.w.toLong), Array(g.cs, g.cs)),
         CCLSegmentation(), Array(g.ov, g.ov), g.thr).collect()
-      val flat = new Array[Long](g.h * g.w)
-      for (t <- out; y <- 0 until t.shape(0); x <- 0 until t.shape(1))
-        flat((t.loc(0) * g.cs + y) * g.w + t.loc(1) * g.cs + x) =
-          t.data(y * t.shape(1) + x)
+      val flat = BlobImages.assemble(out.toSeq, g.h, g.w, g.cs)
       val whole = CCL.label(g.img, Array(g.h, g.w))
-      val ctx = s"seed $i geo h=${g.h} w=${g.w} cs=${g.cs} ov=${g.ov} thr=${g.thr}"
-      assert(flat.indices.forall(j => (flat(j) == 0L) == (whole(j) == 0L)),
-        s"$ctx: foreground mismatch")
-      val fwd = scala.collection.mutable.Map.empty[Long, Long]
-      val bwd = scala.collection.mutable.Map.empty[Long, Long]
-      flat.indices.filter(whole(_) != 0L).foreach { j =>
-        assert(fwd.getOrElseUpdate(whole(j), flat(j)) == flat(j), s"$ctx: split")
-        assert(bwd.getOrElseUpdate(flat(j), whole(j)) == whole(j), s"$ctx: merge")
-      }
+      BlobImages.assertIsomorphic(flat, whole,
+        s"seed $i geo h=${g.h} w=${g.w} cs=${g.cs} ov=${g.ov} thr=${g.thr}")
     }
   }
 }

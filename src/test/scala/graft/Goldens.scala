@@ -8,7 +8,10 @@ import graft.tiles.Tile
   * tables directly.
   */
 object Goldens {
-  val dir = "/root/reference/tests/samples"
+  /** The reference's golden `*.npz` samples (its `tests/samples`):
+    * `$GRAFT_GOLDENS_DIR` if set, else a reference checkout next to this one.
+    */
+  val dir: String = sys.env.getOrElse("GRAFT_GOLDENS_DIR", "../reference/tests/samples")
 
   def grid2d = Array(4, 3)
   def grid3d = Array(3, 2, 3)
@@ -21,7 +24,11 @@ object Goldens {
 
   def localTiles(file: String, grid: Array[Int],
                  withClasses: Boolean = false): Seq[Tile] = {
-    val arrs = Npz.read(s"$dir/$file.npz")
+    val path = java.nio.file.Paths.get(dir, s"$file.npz").toAbsolutePath.normalize
+    if (!java.nio.file.Files.isRegularFile(path))
+      org.scalatest.Assertions.fail(s"golden corpus missing: no $file.npz in " +
+        s"${path.getParent} (set GRAFT_GOLDENS_DIR to the reference's tests/samples)")
+    val arrs = Npz.read(path.toString)
     arrs.toSeq.map { case (key, arr) =>
       val loc = key.split("-").map(_.toInt)
       val classes =

@@ -4,8 +4,8 @@ import java.io.{DataInputStream, BufferedInputStream, FileInputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.ZipInputStream
 
-/** Minimal NPZ/NPY reader for the reference golden fixtures under
-  * `/root/reference/tests/samples` — numeric dtypes only
+/** Minimal NPZ/NPY reader for the reference golden fixtures
+  * ([[Goldens.dir]]) — numeric dtypes only
   * (`|u1`, `<i4`, `<i8`), C-order, npy format v1.
   */
 object Npz {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -21,60 +22,31 @@ class PipelinePropertySpec extends AnyFunSuite {
   private val H = 12; private val W = 12; private val CS = 4; private val OV = 2
 
   /** Random image of small objects (1x1, 1x2, 2x2 — all diameter <= OV). */
-  private val imageGen: Gen[Array[Long]] = for {
-    n <- Gen.choose(1, 10)
-    blobs <- Gen.listOfN(n, for {
-      y <- Gen.choose(0, H - 2); x <- Gen.choose(0, W - 2)
-      h <- Gen.choose(1, 2); w <- Gen.choose(1, 2)
-    } yield (y, x, h, w))
-  } yield {
-    val img = new Array[Long](H * W)
-    // blobs may merge into bigger shapes; keep a safety erosion: skip blobs
-    // that would touch an existing blob (so diameters stay <= 2)
-    for ((y, x, h, w) <- blobs) {
-      val touches = (math.max(0, y - 1) to math.min(H - 1, y + h)).exists(yy =>
-        (math.max(0, x - 1) to math.min(W - 1, x + w)).exists(xx =>
-          img(yy * W + xx) != 0L))
-      if (!touches)
-        for (yy <- y until y + h; xx <- x until x + w) img(yy * W + xx) = 1L
-    }
-    img
-  }
+  private val imageGen: Gen[Array[Long]] = BlobImages.gen(H, W, 1, 10, 2)
 
-  private def toTiles(img: Array[Long]): Seq[Tile] =
-    for (gy <- 0 until H / CS; gx <- 0 until W / CS) yield {
-      val data = new Array[Long](CS * CS)
-      for (y <- 0 until CS; x <- 0 until CS)
-        data(y * CS + x) = img((gy * CS + y) * W + gx * CS + x)
-      Tile(Array(gy, gx), Array(H / CS, W / CS), Array(CS, CS), data)
-    }
-
-  test("chunked pipeline is isomorphic to whole-image CCL for small objects") {
+  /** For 30 seeded images, `run` on the tiles must be isomorphic to
+    * whole-image CCL and, when `dense`, label its objects exactly 1..K.
+    */
+  private def checkImages(run: Dataset[Tile] => Array[Tile], dense: Boolean): Unit = {
     import spark.implicits._
     (0 until 30).foreach { i =>
       val img = imageGen.pureApply(Gen.Parameters.default, Seed(i.toLong))
-      val tiles = spark.createDataset(toTiles(img))
-      val out = Relabel.image2labels(tiles,
-        GridSpec(Array(H.toLong, W.toLong), Array(CS, CS)),
-        CCLSegmentation(), Array(OV, OV), threshold = 0.25).collect()
-      val flat = new Array[Long](H * W)
-      for (t <- out; y <- 0 until t.shape(0); x <- 0 until t.shape(1))
-        flat((t.loc(0) * CS + y) * W + t.loc(1) * CS + x) = t.data(y * t.shape(1) + x)
-      val whole = CCL.label(img, Array(H, W))
-      // same foreground
-      assert(flat.indices.forall(j => (flat(j) == 0L) == (whole(j) == 0L)),
-        s"seed $i: foreground mismatch")
-      // bijective label correspondence
-      val fwd = scala.collection.mutable.Map.empty[Long, Long]
-      val bwd = scala.collection.mutable.Map.empty[Long, Long]
-      flat.indices.foreach { j =>
-        if (whole(j) != 0L) {
-          assert(fwd.getOrElseUpdate(whole(j), flat(j)) == flat(j),
-            s"seed $i: component ${whole(j)} split in chunked output")
-          assert(bwd.getOrElseUpdate(flat(j), whole(j)) == whole(j),
-            s"seed $i: chunked label ${flat(j)} spans two components")
-        }
-      }
+      val out = run(spark.createDataset(BlobImages.toTiles(img, H, W, CS)))
+      val got = BlobImages.assemble(out.toSeq, H, W, CS)
+      BlobImages.assertIsomorphic(got, CCL.label(img, Array(H, W)), s"seed $i")
+      if (dense) BlobImages.assertDense(got, s"seed $i")
     }
+  }
+
+  private def labels(tiles: Dataset[Tile]) =
+    Relabel.image2labels(tiles, GridSpec(Array(H.toLong, W.toLong), Array(CS, CS)),
+      CCLSegmentation(), Array(OV, OV), threshold = 0.25)
+
+  test("chunked pipeline is isomorphic to whole-image CCL for small objects") {
+    checkImages(labels(_).collect(), dense = false)
+  }
+
+  test("sortLabelIndices of the chunked pipeline is dense 1..K and isomorphic to whole-image CCL") {
+    checkImages(t => Relabel.sortLabelIndices(labels(t)).collect(), dense = true)
   }
 }

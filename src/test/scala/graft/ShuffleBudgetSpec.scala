@@ -2,7 +2,11 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ops.{CCLSegmentation, Relabel}
+import graft.tiles.GridSpec
 
 /** Shuffle-volume regression guards: the scale arguments in the query
   * docstrings ("only margins move", "communication is d² per partition",
@@ -24,19 +28,19 @@ class ShuffleBudgetSpec extends AnyFunSuite {
         bytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
   }
 
-  /** Shuffle bytes written while materializing query `name` once. The
+  /** Shuffle bytes written while running `action` once. The
     * counter is only meaningful because suites run serially against the
     * shared session (build.sbt `Test / parallelExecution := false`) — a
     * concurrent suite's tasks would land in the same global listener.
     */
-  private def shuffleOf(name: String): Long = {
+  private def shuffleOf(action: => Any): Long = {
     val sc = spark.sparkContext
     // deterministic drain: no events from before this measurement linger
     org.apache.spark.ListenerDrain.drain(sc)
     sc.addSparkListener(listener)
     try {
       bytes.set(0)
-      SparkEntry.queries(name)(spark, sf).count()
+      action
       // block until the bus has dispatched every posted event — a fixed
       // sleep either truncates the count (slow bus) or wastes wall-clock
       org.apache.spark.ListenerDrain.drain(sc)
@@ -74,9 +78,24 @@ class ShuffleBudgetSpec extends AnyFunSuite {
 
   for ((q, budget, claim) <- budgets)
     test(s"$q stays under ${budget >> 20} MB of shuffle ($claim)") {
-      val b = shuffleOf(q)
+      val b = shuffleOf(SparkEntry.queries(q)(spark, sf).count())
       info(s"$q shuffled ${b / 1024} KiB (budget ${budget >> 10} KiB)")
       assert(b <= budget,
         s"$q shuffled $b bytes — the '$claim' shape regressed")
     }
+
+  test("sortLabelIndices adds only its label probe's shuffle to image2labels") {
+    import spark.implicits._
+    val img = BlobImages.gen(64, 64, 100, 200, 3).pureApply(Gen.Parameters.default, Seed(0L))
+    def labels() = Relabel.image2labels(
+      spark.createDataset(BlobImages.toTiles(img, 64, 64, 16)),
+      GridSpec(Array(64L, 64L), Array(16, 16)), CCLSegmentation(), Array(4, 4),
+      threshold = 0.25)
+    val base = shuffleOf(labels().collect())
+    val sorted = shuffleOf(Relabel.sortLabelIndices(labels()).collect())
+    info(s"image2labels shuffled $base B, with sortLabelIndices $sorted B")
+    // a second pair of halo exchanges would double the bytes
+    assert(sorted <= base * 1.1,
+      s"sortLabelIndices shuffled $sorted bytes vs $base for image2labels alone")
+  }
 }
