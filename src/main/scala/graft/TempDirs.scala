@@ -15,6 +15,6 @@ object TempDirs {
       }
       rm(p.toFile)
     }))
-    p.toString
+    p.toAbsolutePath.toString
   }
 }

@@ -1,5 +1,7 @@
 package graft.core
 
+import java.nio.{ByteBuffer, ByteOrder}
+
 /** Row-major N-d index math over flat arrays (dims = 2 or 3 in practice).
   *
   * The reference operates on per-chunk numpy arrays; here every tile is a flat
@@ -78,6 +80,76 @@ object Nd {
                payload: Array[Long]): Unit = {
     var i = 0
     foreachIndex(dstShape, box) { flat => dst(flat) = payload(i); i += 1 }
+  }
+
+  /** Visit `box` as maximal contiguous runs: `f(flatStart, length)`. Trailing
+    * axes the box spans in full fold into one run, so a full box is one run.
+    */
+  def foreachRun(shape: Array[Int], box: Box)(f: (Int, Int) => Unit): Unit = {
+    if (box.numel == 0) return
+    var k = shape.length - 1
+    var run = box.end(k) - box.start(k)
+    while (k > 0 && box.start(k) == 0 && box.end(k) == shape(k)) {
+      k -= 1
+      run *= box.end(k) - box.start(k)
+    }
+    val heads = Box(box.start,
+      Array.tabulate(shape.length)(a => if (a >= k) box.start(a) + 1 else box.end(a)))
+    foreachIndex(shape, heads)(flat => f(flat, run))
+  }
+
+  /** Narrowest wire width (1, 2, 4 or 8 bytes) holding every value of `a`
+    * unsigned; a negative value or one >= 2^32 needs 8.
+    */
+  def packWidth(a: Array[Long]): Int = {
+    var bits = 0L
+    var i = 0
+    while (i < a.length) { bits |= a(i); i += 1 }
+    if (bits < 0L || (bits >>> 32) != 0L) 8
+    else if ((bits >>> 16) != 0L) 4
+    else if ((bits >>> 8) != 0L) 2
+    else 1
+  }
+
+  /** [[sliceBox]] into the width-tagged wire format: byte 0 = `width`, then
+    * `box.numel` little-endian values of `width` bytes each.
+    */
+  def packBox(src: Array[Long], srcShape: Array[Int], box: Box, width: Int): Array[Byte] = {
+    val out = new Array[Byte](1 + box.numel * width)
+    out(0) = width.toByte
+    val buf = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
+    buf.position(1)
+    foreachRun(srcShape, box) { (from, n) =>
+      var i = from
+      val end = from + n
+      width match {
+        case 1 => while (i < end) { buf.put(src(i).toByte); i += 1 }
+        case 2 => while (i < end) { buf.putShort(src(i).toShort); i += 1 }
+        case 4 => while (i < end) { buf.putInt(src(i).toInt); i += 1 }
+        case _ => while (i < end) { buf.putLong(src(i)); i += 1 }
+      }
+    }
+    out
+  }
+
+  /** [[pasteBox]] from the wire format written by [[packBox]]. */
+  def unpackBox(dst: Array[Long], dstShape: Array[Int], box: Box,
+                packed: Array[Byte]): Unit = {
+    val width = packed(0).toInt
+    require(packed.length == 1 + box.numel * width,
+      s"packed payload of ${packed.length} bytes does not hold ${box.numel} values of width $width")
+    val buf = ByteBuffer.wrap(packed).order(ByteOrder.LITTLE_ENDIAN)
+    buf.position(1)
+    foreachRun(dstShape, box) { (from, n) =>
+      var i = from
+      val end = from + n
+      width match {
+        case 1 => while (i < end) { dst(i) = buf.get() & 0xffL; i += 1 }
+        case 2 => while (i < end) { dst(i) = buf.getShort() & 0xffffL; i += 1 }
+        case 4 => while (i < end) { dst(i) = buf.getInt() & 0xffffffffL; i += 1 }
+        case _ => while (i < end) { dst(i) = buf.getLong(); i += 1 }
+      }
+    }
   }
 
   /** Paste only non-zero payload values (`np.where(mask, v, dst)` painting). */

@@ -23,7 +23,10 @@ object Halo {
   /** A margin shard in flight. `destLin` = linear index of the receiving
     * chunk (the shuffle key); `rd` = where the *sender* sits relative to the
     * receiver (-1/0/+1 per axis; all-zero = the receiver's own payload);
-    * `shape` = shard extent.
+    * `shape` = shard extent. `data` and each `classes` channel are
+    * width-tagged bytes ([[Nd.packBox]]): a uint8 image crosses the O1
+    * shuffle at one byte per pixel, O4's chunk-disjoint global labels at
+    * eight.
     */
   final case class Shard(
       destLin: Long,
@@ -31,8 +34,8 @@ object Halo {
       grid: Array[Int],
       rd: Array[Int],
       shape: Array[Int],
-      data: Array[Long],
-      classes: Array[Array[Long]]
+      data: Array[Byte],
+      classes: Array[Array[Byte]]
   )
 
   /** All non-zero direction vectors in {-1,0,1}^dims. */
@@ -76,16 +79,28 @@ object Halo {
     Nd.Box(start, end)
   }
 
-  private[graft] def ownShard(t: Tile): Shard =
-    Shard(t.linearIndex, t.loc, t.grid, new Array[Int](t.dims), t.shape, t.data, t.classes)
-
-  private[graft] def shardOf(tile: Tile, d: Array[Int], overlaps: Array[Int]): Shard = {
-    val dest = Array.tabulate(tile.dims)(a => tile.loc(a) + d(a))
-    val box = marginBox(tile, d, overlaps)
-    Shard(Regions.linearIndex(dest, tile.grid), dest, tile.grid, d.map(-_), box.shape,
-      Nd.sliceBox(tile.data, tile.shape, box),
-      if (tile.hasClasses) tile.classes.map(ch => Nd.sliceBox(ch, tile.shape, box))
-      else Array.empty[Array[Long]])
+  /** The shards `t` sends: its own payload plus one margin per in-grid
+    * direction `d` with `send(t.loc, d)`. Each array is packed at the width
+    * of its whole source array, found once per tile.
+    */
+  private[graft] def shardsOf(t: Tile, overlaps: Array[Int],
+      send: (Array[Int], Array[Int]) => Boolean): Seq[Shard] = {
+    val width = Nd.packWidth(t.data)
+    val classWidths = t.classes.map(Nd.packWidth)
+    def pack(box: Nd.Box): (Array[Byte], Array[Array[Byte]]) =
+      (Nd.packBox(t.data, t.shape, box, width),
+        Array.tabulate(t.classes.length)(ch =>
+          Nd.packBox(t.classes(ch), t.shape, box, classWidths(ch))))
+    val (own, ownClasses) = pack(Nd.fullBox(t.shape))
+    Shard(t.linearIndex, t.loc, t.grid, new Array[Int](t.dims), t.shape, own, ownClasses) +:
+      directions(t.dims).collect {
+        case d if inGrid(t.loc, d, t.grid) && send(t.loc, d) =>
+          val dest = Array.tabulate(t.dims)(a => t.loc(a) + d(a))
+          val box = marginBox(t, d, overlaps)
+          val (data, classes) = pack(box)
+          Shard(Regions.linearIndex(dest, t.grid), dest, t.grid, d.map(-_), box.shape,
+            data, classes)
+      }
   }
 
   /** O1 halo expansion: input tiles are core (chunk) sized; output tiles
@@ -95,14 +110,8 @@ object Halo {
   def expand(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val dims = overlaps.length
-    val dirs = directions(dims)
     tiles
-      .flatMap { t =>
-        ownShard(t) +: dirs.collect {
-          case d if inGrid(t.loc, d, t.grid) => shardOf(t, d, overlaps)
-        }
-      }
+      .flatMap(t => shardsOf(t, overlaps, (_, _) => true))
       .groupByKey(_.destLin)
       .mapGroups { (lin, it) =>
         val all = it.toArray
@@ -141,9 +150,9 @@ object Halo {
         a += 1
       }
       val box = Nd.Box(start, end)
-      Nd.pasteBox(out, outShape, box, s.data)
+      Nd.unpackBox(out, outShape, box, s.data)
       var ch = 0
-      while (ch < nCh) { Nd.pasteBox(outCls(ch), outShape, box, s.classes(ch)); ch += 1 }
+      while (ch < nCh) { Nd.unpackBox(outCls(ch), outShape, box, s.classes(ch)); ch += 1 }
     }
     Tile(loc, grid, outShape, out, outCls)
   }
@@ -158,15 +167,8 @@ object Halo {
   def mergeAndTrim(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val dims = overlaps.length
-    val dirs = directions(dims)
     tiles
-      .flatMap { t =>
-        ownShard(t) +: dirs.collect {
-          case d if inGrid(t.loc, d, t.grid) && receiverWillMerge(t.loc, d) =>
-            shardOf(t, d, overlaps)
-        }
-      }
+      .flatMap(t => shardsOf(t, overlaps, receiverWillMerge))
       .groupByKey(_.destLin)
       .mapGroups((lin, it) => assembleMerged(lin, it.toArray, overlaps))
   }
@@ -179,7 +181,17 @@ object Halo {
     val core = all.find(_.rd.forall(_ == 0)).getOrElse(
       throw new IllegalArgumentException(
         s"merge: no tile present at linear chunk index $lin — dense grid required"))
-    val own = Tile(core.destLoc, core.grid, core.shape, core.data, core.classes)
+    def unpack(s: Shard): (Array[Long], Array[Array[Long]]) = {
+      val box = Nd.fullBox(s.shape)
+      def one(packed: Array[Byte]): Array[Long] = {
+        val out = new Array[Long](box.numel)
+        Nd.unpackBox(out, s.shape, box, packed)
+        out
+      }
+      (one(s.data), s.classes.map(one))
+    }
+    val (data, classes) = unpack(core)
+    val own = Tile(core.destLoc, core.grid, core.shape, data, classes)
     // region levels (receiver perspective): sender above (rd=+1) feeds a
     // level-1 region, sender below (rd=-1) a level-0 region.
     val byRegion = all.filter(_.rd.exists(_ != 0)).map { s =>
@@ -190,7 +202,7 @@ object Halo {
         throw new IllegalArgumentException(
           s"merge: missing neighbor shard for region ${levels.mkString(",")} " +
             s"of tile ${own.loc.mkString(",")} — dense grid required"))
-      (s.data, s.classes)
+      unpack(s)
     })
     Kernels.trimOverlap(merged, overlaps)
   }

@@ -143,12 +143,7 @@ object StreamingTiles {
     val ov = overlaps.clone()
 
     withIngestWatermark(removed
-      .flatMap { t =>
-        Halo.ownShard(t) +: dirs.collect {
-          case d if Halo.inGrid(t.loc, d, t.grid) &&
-            Halo.receiverWillMerge(t.loc, d) => Halo.shardOf(t, d, ov)
-        }
-      })
+      .flatMap(t => Halo.shardsOf(t, ov, Halo.receiverWillMerge)))
       .groupByKey(_._1.destLin)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
@@ -205,11 +200,7 @@ object StreamingTiles {
     val ov = overlaps.clone()
 
     withIngestWatermark(tiles
-      .flatMap { t =>
-        Halo.ownShard(t) +: dirs.collect {
-          case d if Halo.inGrid(t.loc, d, t.grid) => Halo.shardOf(t, d, ov)
-        }
-      })
+      .flatMap(t => Halo.shardsOf(t, ov, (_, _) => true)))
       .groupByKey(_._1.destLin)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(

@@ -11,7 +11,9 @@ import graft.core.Nd
   * (border chunks have one-sided halos, `relabeling.py:185-190`).
   *
   * `data` is the row-major flattened pixel payload (int64 — the superset of
-  * every dtype the reference uses). `classes` is the optional per-object
+  * every dtype the reference uses). The halo shards carry it as
+  * width-tagged bytes instead, as narrow as the values allow
+  * ([[graft.ops.Halo.Shard]]). `classes` is the optional per-object
   * class channels (the reference's leading classes axis,
   * `relabeling.py:22-27`); empty array = no classes.
   */

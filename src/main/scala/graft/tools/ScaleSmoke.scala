@@ -3,13 +3,13 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import graft.ops.{ByteRelabel, CCLSegmentation, Relabel}
-import graft.tiles.{ByteTile, GridSpec, Tile}
+import graft.ops.{CCLSegmentation, Relabel}
+import graft.tiles.{GridSpec, Tile}
 
 /** Throughput smoke for the tile engine: an NxN grid of 128x128 tiles with
   * a dense synthetic blob field through the full image2labels pipeline (two
-  * shuffles) on local[32], for both the int64 and the packed-byte ingest
-  * paths, reporting wall time and actual shuffle bytes written.
+  * shuffles) on local[32], reporting wall time and actual shuffle bytes
+  * written. The 0/1 blob pixels cross the O1 halo at one byte each.
   *
   * `sbt "runMain graft.tools.ScaleSmoke 32"` -> 32x32 grid = 16.8M pixels.
   */
@@ -61,11 +61,6 @@ object ScaleSmoke {
       val (gy, gx) = ((lin / n).toInt, (lin % n).toInt)
       Tile(Array(gy, gx), Array(n, n), Array(cs, cs), blob(gy, gx))
     }
-    def byteTiles = spark.range(n.toLong * n).map { lin =>
-      val (gy, gx) = ((lin / n).toInt, (lin % n).toInt)
-      ByteTile(Array(gy, gx), Array(n, n), Array(cs, cs),
-        blob(gy, gx).map(_.toByte))
-    }
 
     val spec = GridSpec(Array(n.toLong * cs, n.toLong * cs), Array(cs, cs))
     val totalPx = n.toLong * n * cs * cs
@@ -82,12 +77,8 @@ object ScaleSmoke {
         f"shuffle ${shuffleBytes.get / 1e6}%8.1f MB  objects ${labels - 1}")
     }
 
-    run("int64") {
+    run("u8-wire") {
       Relabel.image2labels(longTiles, spec, CCLSegmentation(), Array(ov, ov), 0.05)
-        .flatMap(_.data.distinct.iterator).distinct().count()
-    }
-    run("bytes") {
-      ByteRelabel.image2labels(byteTiles, spec, CCLSegmentation(), Array(ov, ov), 0.05)
         .flatMap(_.data.distinct.iterator).distinct().count()
     }
     // overlap-sufficiency diagnostic marginal cost: time the segmented

@@ -72,7 +72,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
   test("zip sink writes one member per non-empty tile") {
     val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
     val ann = Annotate.annotateLabeledTiles(in, ov)
-    val out = java.nio.file.Files.createTempDirectory("graft-zip")
+    val out = java.nio.file.Paths.get(TempDirs.create("graft-zip"))
       .resolve("annotations.zip")
     Annotate.zipAnnotations(ann, out)
     val zf = new java.util.zip.ZipFile(out.toFile)
@@ -97,7 +97,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
     // via the serialized Hadoop conf) and golden-check what landed
     spark.sparkContext.hadoopConfiguration
       .set("fs.cfs.impl", "graft.CountingFileSystem")
-    val backing = java.nio.file.Files.createTempDirectory("graft-anncfs")
+    val backing = java.nio.file.Paths.get(TempDirs.create("graft-anncfs"))
     val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
     val ann = Annotate.annotateLabeledTiles(in, ov)
     val n = Annotate.writeAnnotationDir(ann, "cfs:" + backing.toAbsolutePath)
@@ -117,7 +117,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
   test("zip sink writes through a non-default Hadoop scheme; empty is a no-op row count") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.cfs.impl", "graft.CountingFileSystem")
-    val backing = java.nio.file.Files.createTempDirectory("graft-zipcfs")
+    val backing = java.nio.file.Paths.get(TempDirs.create("graft-zipcfs"))
     val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
     val ann = Annotate.annotateLabeledTiles(in, ov)
     Annotate.zipAnnotations(ann, "cfs:" + backing.resolve("a.zip"))
@@ -141,7 +141,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
   test("executor-side annotation dir matches the zip members") {
     val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
     val ann = Annotate.annotateLabeledTiles(in, ov)
-    val dir = java.nio.file.Files.createTempDirectory("graft-anndir")
+    val dir = java.nio.file.Paths.get(TempDirs.create("graft-anndir"))
     val n = Annotate.writeAnnotationDir(ann, dir)
     // hidden `.crc` siblings are local-ChecksumFileSystem metadata
     val files = dir.toFile.listFiles().map(_.getName)

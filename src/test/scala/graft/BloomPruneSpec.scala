@@ -22,8 +22,7 @@ class BloomPruneSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.01"
 
   private def writeStore(bloom: Boolean): String = {
-    val dir = "cfs:" +
-      java.nio.file.Files.createTempDirectory("graft_bloom").toAbsolutePath
+    val dir = "cfs:" + TempDirs.create("graft_bloom")
     val w = spark.read.parquet(s"$sf/events.parquet")
       .sort("user_id") // scatter event_id across every row group
       .coalesce(1)

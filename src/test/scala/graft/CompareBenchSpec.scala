@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.sys.process._
 
@@ -51,8 +51,7 @@ class CompareBenchSpec extends AnyFunSuite {
   }
 
   private def withDir(f: Path => Unit): Unit = {
-    val d = Files.createTempDirectory("comparebench_spec")
-    d.toFile.deleteOnExit()
+    val d = Paths.get(TempDirs.create("comparebench_spec"))
     f(d)
   }
 

@@ -142,19 +142,50 @@ class CorePropertySpec extends AnyFunSuite {
   }
 
   test("sliceBox/pasteBox round-trip") {
+    // values of every wire width class: 1, 2, 4 and 8 bytes, negatives and
+    // the Long extremes
+    val valueClasses = Seq(Gen.choose(0L, 255L), Gen.choose(0L, 65535L),
+      Gen.choose(0L, 0xffffffffL), Gen.choose(1L << 32, Long.MaxValue),
+      Gen.choose(Long.MinValue, -1L), Gen.oneOf(Long.MinValue, Long.MaxValue, 0L))
     val gen = for {
       h <- Gen.choose(1, 6); w <- Gen.choose(1, 6); d <- Gen.choose(1, 4)
       y0 <- Gen.choose(0, h - 1); x0 <- Gen.choose(0, w - 1); z0 <- Gen.choose(0, d - 1)
-      y1 <- Gen.choose(y0 + 1, h); x1 <- Gen.choose(x0 + 1, w); z1 <- Gen.choose(z0 + 1, d)
-    } yield (Array(d, h, w), Nd.Box(Array(z0, y0, x0), Array(z1, y1, x1)))
-    forAll(gen) { case (shape, box) =>
-      val src = Array.tabulate(Nd.size(shape))(_.toLong + 1)
+      y1 <- Gen.choose(y0 + 1, h); x1 <- Gen.choose(x0 + 1, w)
+      z1 <- Gen.frequency((9, Gen.choose(z0 + 1, d)), (1, Gen.const(z0)))
+      values <- Gen.oneOf(valueClasses)
+      src <- Gen.listOfN(d * h * w, values)
+    } yield (Array(d, h, w), Nd.Box(Array(z0, y0, x0), Array(z1, y1, x1)), src.toArray)
+    val widths = scala.collection.mutable.Set.empty[Int]
+    var zeroSize, subBox = 0
+    forAll(gen) { case (shape, box, src) =>
       val cut = Nd.sliceBox(src, shape, box)
       assert(cut.length == box.numel)
       val dst = new Array[Long](src.length)
       Nd.pasteBox(dst, shape, box, cut)
       Nd.foreachIndex(shape, box) { flat => assert(dst(flat) == src(flat)) }
       assert(dst.sum == cut.sum)
+
+      // the packed wire codec: narrowest width, same round-trip
+      val width = Nd.packWidth(src)
+      val expected =
+        if (src.exists(v => v < 0L || v > 0xffffffffL)) 8
+        else if (src.exists(_ > 65535L)) 4
+        else if (src.exists(_ > 255L)) 2
+        else 1
+      assert(width == expected, s"width of ${src.mkString(",")}")
+      val packed = Nd.packBox(src, shape, box, width)
+      assert(packed.length == 1 + box.numel * width)
+      val back = new Array[Long](src.length)
+      Nd.unpackBox(back, shape, box, packed)
+      assert(back.sameElements(dst))
+      val flat = new Array[Long](box.numel)
+      Nd.unpackBox(flat, box.shape, Nd.fullBox(box.shape), packed)
+      assert(flat.sameElements(cut))
+      widths += width
+      if (box.numel == 0) zeroSize += 1
+      else if (box.numel < src.length) subBox += 1
     }
+    assert(widths == Set(1, 2, 4, 8))
+    assert(zeroSize > 0 && subBox > 0, s"zero-size $zeroSize, strict sub-box $subBox")
   }
 }

@@ -440,7 +440,7 @@ class GraftLayoutSpec extends AnyFunSuite {
     // that accidentally validates per-Filter-node or per-file fails here
     spark.sparkContext.hadoopConfiguration
       .set("fs.cfs.impl", "graft.CountingFileSystem")
-    val backing = java.nio.file.Files.createTempDirectory("glayout_cost")
+    val backing = java.nio.file.Paths.get(TempDirs.create("glayout_cost"))
     val dir = "cfs:" + backing.toAbsolutePath
     GraftLayout.writeHilbert(src, dir, "gx", "gy", "gh", 4)
     GraftLayout.read(spark, dir)

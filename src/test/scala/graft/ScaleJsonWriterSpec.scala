@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Locale
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,8 +17,7 @@ import graft.tools.ShuffleScale
 class ScaleJsonWriterSpec extends AnyFunSuite {
 
   private def tmpRoot(): Path = {
-    val d = Files.createTempDirectory("scalejson_spec")
-    d.toFile.deleteOnExit()
+    val d = Paths.get(TempDirs.create("scalejson_spec"))
     d
   }
 

@@ -61,7 +61,7 @@ class SelectOpsSpec extends AnyFunSuite {
     // pinned on a planted corpus instead: good docs speak vocab A, bad docs
     // vocab B, with a shared filler token in every doc.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("clf_plant").toString
+    val dir = TempDirs.create("clf_plant")
     val rows = (0 until 200).map { i =>
       val good = i % 2 == 0
       val voc = if (good) Seq("alpha", "beta", "gamma") else Seq("zeta", "eta", "theta")

@@ -5,6 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Nd
 import graft.ops.{CCLSegmentation, Relabel}
 import graft.tiles.GridSpec
 
@@ -83,6 +84,22 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       assert(b <= budget,
         s"$q shuffled $b bytes — the '$claim' shape regressed")
     }
+
+  test("O1 ships a uint8 image at under 1.5 bytes per expanded pixel") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(3)
+    val img = Array.fill(128 * 128)(rnd.nextInt(256).toLong)
+    val spec = GridSpec(Array(128L, 128L), Array(32, 32))
+    val ov = Array(8, 8)
+    val expanded = (for (gy <- 0 until 4; gx <- 0 until 4)
+      yield Nd.size(spec.overlappedShape(Array(gy, gx), ov)).toLong).sum
+    val b = shuffleOf(Relabel.prepareInput(
+      spark.createDataset(BlobImages.toTiles(img, 128, 128, 32)), spec, ov).count())
+    info(s"prepareInput shuffled $b B for $expanded expanded pixels")
+    // uniform noise does not compress: 8-byte longs would cost ~3-4 B/px
+    assert(b <= expanded * 3 / 2,
+      s"prepareInput shuffled $b bytes for $expanded expanded uint8 pixels")
+  }
 
   test("sortLabelIndices adds only its label probe's shuffle to image2labels") {
     import spark.implicits._

@@ -138,7 +138,7 @@ class StreamingTilesSpec extends AnyFunSuite {
       .collect().filter(_.geojson != null)
       .map(a => a.locKey -> a.geojson).toMap
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ann")
+    val dir = java.nio.file.Paths.get(TempDirs.create("graft_stream_ann"))
     val mem = MemoryStream[Tile]
     val query = graft.geojson.Annotate.streamAnnotationDir(
       graft.geojson.Annotate.annotateLabeledTiles(mem.toDS(), ov),
@@ -185,7 +185,7 @@ class StreamingTilesSpec extends AnyFunSuite {
       } finally zf.close()
     }
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_zip")
+    val dir = java.nio.file.Paths.get(TempDirs.create("graft_stream_zip"))
     val mem = MemoryStream[Tile]
     val query = graft.geojson.Annotate.streamAnnotationZips(
       graft.geojson.Annotate.annotateLabeledTiles(mem.toDS(), ov),

@@ -13,7 +13,7 @@ class TileIOSpec extends AnyFunSuite {
     val in = Goldens.localTiles("rem_2d", Goldens.grid2d, withClasses = true)
     val ds = spark.createDataset(in)(spark.implicits.newProductEncoder)
     for (coarse <- Seq(0, 4)) {
-      val dir = java.nio.file.Files.createTempDirectory("tileio").toString
+      val dir = TempDirs.create("tileio")
       TileIO.write(ds, dir, coarsePartitions = coarse)
       val back = TileIO.read(spark, dir).collect().toSeq
       Goldens.assertSameTiles(back, in, checkClasses = true)
@@ -23,7 +23,7 @@ class TileIOSpec extends AnyFunSuite {
   test("readBox prunes to the requested grid range") {
     val in = Goldens.localTiles("rem_2d", Goldens.grid2d)
     val ds = spark.createDataset(in)(spark.implicits.newProductEncoder)
-    val dir = java.nio.file.Files.createTempDirectory("tileio").toString
+    val dir = TempDirs.create("tileio")
     TileIO.write(ds, dir, coarsePartitions = 3)
     val got = TileIO.readBox(spark, dir, Array(1, 1), Array(2, 2)).collect()
     assert(got.map(_.loc.toSeq).toSet ==

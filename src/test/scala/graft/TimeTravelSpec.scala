@@ -21,8 +21,7 @@ class TimeTravelSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("manifest v1 read is isolated from the append and listing-free") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tt_spec").toString
+    val dir = TempDirs.create("graft_tt_spec")
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_id"), col("ts"), col("value"))
     val mid = 1705363200000000L

@@ -14,11 +14,8 @@ class Zarr3Spec extends AnyFunSuite {
 
   lazy val spark = SparkTest.session
 
-  private def tmp(): java.nio.file.Path = {
-    val p = Files.createTempDirectory("zarr3spec")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): java.nio.file.Path =
+    Paths.get(TempDirs.create("zarr3spec"))
 
   test("reads a hand-constructed v3 store (spec bytes, not our writer)") {
     val dir = tmp()

@@ -25,7 +25,7 @@ class ZarrAssumeCompleteSpec extends AnyFunSuite {
   }
 
   private def tmpUri(prefix: String): String =
-    "cfs:" + java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath
+    "cfs:" + TempDirs.create(prefix)
 
   /** 4x4 image in 2x2 chunks (2x2 grid, 4 chunks, 16 cells), value
     * v(y, x) = y * 10 + x + 1 (nonzero everywhere).

@@ -17,7 +17,7 @@ class ZarrHadoopSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
 
   private def tmpUri(prefix: String): String =
-    "file:" + java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath
+    "file:" + TempDirs.create(prefix)
 
   private def sampleTiles(spec: GridSpec): Seq[Tile] = {
     val rnd = new scala.util.Random(7)

@@ -22,7 +22,7 @@ class ZarrSchemeSpec extends AnyFunSuite {
   }
 
   private def tmpUri(prefix: String): String =
-    "cfs:" + java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath
+    "cfs:" + TempDirs.create(prefix)
 
   /** 6x6 image in 2x2 inners (3x3 inner grid), 4x4-element shards (2x2
     * shard grid); all inners present.

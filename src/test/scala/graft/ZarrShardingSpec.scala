@@ -18,7 +18,7 @@ class ZarrShardingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath.toString
+    TempDirs.create(prefix)
 
   /** Tiles over a 5x7 image in 2x2 inner chunks (3x4 inner grid, edges
     * clipped); shard = 4x4 elements = 2x2 inners (2x2 shard grid, all four

@@ -86,7 +86,7 @@ class ZarrSpec extends AnyFunSuite {
         Array.fill(shape.product)(rnd.nextInt(200).toLong))
     }).toSeq
     for (dtype <- Seq("|u1", "<u2", "<i4", "<i8"); comp <- Seq("", "zlib", "gzip")) {
-      val dir = java.nio.file.Files.createTempDirectory("zarr").toString
+      val dir = TempDirs.create("zarr")
       ZarrIO.write(spark.createDataset(tiles), spec, dir, dtype, comp)
       val back = ZarrIO.read(spark, dir).collect()
       assert(back.length == 9, s"$dtype/$comp")
@@ -102,7 +102,7 @@ class ZarrSpec extends AnyFunSuite {
     import spark.implicits._
     val spec = GridSpec(Array(2L, 2L), Array(2, 2))
     val t = Tile(Array(0, 0), Array(1, 1), Array(2, 2), Array(1L, 2L, 3L, 300L))
-    val dir = java.nio.file.Files.createTempDirectory("zarr").toString
+    val dir = TempDirs.create("zarr")
     val ex = intercept[org.apache.spark.SparkException] {
       ZarrIO.write(spark.createDataset(Seq(t)), spec, dir, "|u1", "")
     }
@@ -116,7 +116,7 @@ class ZarrSpec extends AnyFunSuite {
     val tiles = (for (gy <- 0 until 2; gx <- 0 until 2) yield
       Tile(Array(gy, gx), Array(2, 2), Array(3, 4),
         Array.fill(12)((gy * 2 + gx + 1).toLong))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("zarr_sparse").toString
+    val dir = TempDirs.create("zarr_sparse")
     ZarrIO.write(spark.createDataset(tiles), spec, dir, "<i4", "")
     // punch a hole: delete chunk (1,0) so the store is genuinely sparse
     val sep = ZarrIO.readMeta(dir).separator

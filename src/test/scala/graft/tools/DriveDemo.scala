@@ -178,7 +178,7 @@ object DriveGeoJson {
     val ann = graft.ops.Relabel.image2geojson(in,
       graft.tiles.GridSpec(Array(16L, 12L), Array(4, 4)),
       graft.ops.CCLSegmentation(), Array(2, 2), threshold = 0.25)
-    val out = java.nio.file.Files.createTempDirectory("drive").resolve("ann.zip")
+    val out = java.nio.file.Paths.get(graft.TempDirs.create("drive")).resolve("ann.zip")
     graft.geojson.Annotate.zipAnnotations(ann, out)
     println("ZIP: " + out + " size=" + java.nio.file.Files.size(out))
     val zf = new java.util.zip.ZipFile(out.toFile)
@@ -198,7 +198,7 @@ object DriveTileIO {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val tiles = graft.Goldens.tiles(spark, "rem_2d", graft.Goldens.grid2d)
-    val dir = java.nio.file.Files.createTempDirectory("drive-tileio").toString
+    val dir = graft.TempDirs.create("drive-tileio")
     graft.sources.TileIO.write(tiles, dir, coarsePartitions = 3)
     println("WROTE: " + new java.io.File(dir).listFiles().map(_.getName).sorted.mkString(", "))
     val box = graft.sources.TileIO.readBox(spark, dir, Array(0, 0), Array(1, 1)).collect()
@@ -230,7 +230,7 @@ object DriveTileIO {
     // PROBE zarr v3 roundtrip through the library surface (core tiles fit
     // the 4x4 chunk grid; the golden `rem_2d` tiles above are overlapped
     // and would not)
-    val z3 = java.nio.file.Files.createTempDirectory("drive_zarr3").toString
+    val z3 = graft.TempDirs.create("drive_zarr3")
     graft.sources.Zarr3IO.write(coreTiles,
       graft.tiles.GridSpec(Array(8L, 8L), Array(4, 4)), z3, "int64", gzip = true)
     val back = graft.sources.Zarr3IO.read(spark, z3).collect()
@@ -255,7 +255,7 @@ object DriveU16 {
       }
       graft.tiles.Tile(Array(gy, gx), Array(2, 2), Array(4, 4), data)
     }
-    val out = graft.ops.ByteRelabel.image2labelsU16(spark.createDataset(tiles),
+    val out = graft.ops.Relabel.image2labels(spark.createDataset(tiles),
       graft.tiles.GridSpec(Array(8L, 8L), Array(4, 4)),
       graft.ops.CCLSegmentation(), Array(2, 2), 0.25).collect()
       .sortBy(t => (t.loc(0), t.loc(1)))
