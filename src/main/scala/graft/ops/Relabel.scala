@@ -265,15 +265,7 @@ object Relabel {
   def cropToImage(tiles: Dataset[Tile], spec: GridSpec): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val chunk = spec.chunk
-    val imageShape = spec.imageShape
-    tiles.map { t =>
-      val target = Array.tabulate(t.dims) { a =>
-        val remaining = imageShape(a) - t.loc(a).toLong * chunk(a)
-        math.min(chunk(a).toLong, remaining).toInt
-      }
-      Kernels.cropTo(t, target)
-    }
+    tiles.map(t => Kernels.cropTo(t, spec.tileShape(t.loc)))
   }
 
   /** O7 `image2labels` (`relabeling.py:195-242`): the flagship composition.

@@ -295,8 +295,7 @@ object PipelineOps {
       .option("dtype", "uint16").option("compressor", "gzip")
       .option("zarrFormat", "3")
       .mode("overwrite").save(zarr3ShardWriteDir)
-    require(graft.sources.zarr.ZarrTableProvider
-      .shardInfoOf(zarr3ShardWriteDir).isDefined,
+    require(graft.sources.ZarrLayout.of(zarr3ShardWriteDir).shard.isDefined,
       "the shards option did not produce a sharding_indexed store")
     s.read.format("zarr").load(zarr3ShardWriteDir)
       .filter(col("value") =!= 0)

@@ -91,10 +91,7 @@ object TileIO {
         var rest = lin
         var a = dims - 1
         while (a >= 0) { loc(a) = (rest % grid(a)).toInt; rest /= grid(a); a -= 1 }
-        val shape = Array.tabulate(dims) { a =>
-          math.min(chunk(a).toLong,
-            spec.imageShape(a) - loc(a).toLong * chunk(a)).toInt
-        }
+        val shape = spec.tileShape(loc)
         val data = new Array[Long](shape.product)
         val strides = graft.core.Nd.strides(shape)
         it.foreach { case (coords, v) =>

@@ -11,19 +11,18 @@ import graft.tiles.{GridSpec, Tile}
   * [[ZarrIO]] — the published v3 core layout: a `zarr.json` descriptor
   * (`zarr_format: 3`, `node_type: "array"`, regular chunk grid, default
   * chunk-key encoding) and chunk files under the `c` prefix
-  * (`c/1/2` with the default `/` separator). The wire format of a chunk is
-  * the v3 codec chain: `bytes` (little-endian) optionally followed by
-  * `gzip` — structurally the same full-size C-order fill-padded buffer as
-  * v2, so the element codec is shared with [[ZarrIO]] via an internal
-  * dtype mapping.
+  * (`c/1/2` with the default `/` separator), optionally packed into
+  * `sharding_indexed` shard objects. The wire format of a chunk is the v3
+  * codec chain: `bytes` (little-endian) optionally followed by `gzip` —
+  * structurally the same full-size C-order fill-padded buffer as v2, so the
+  * element codec is shared with [[ZarrIO]] via an internal dtype mapping.
   *
-  * Same scale posture as v2: the driver lists chunk KEYS only; payloads are
-  * read and written on executors; [[readBox]]-style pruning composes via
-  * [[read]]'s predicate overload.
+  * This object reads and writes the v3 metadata; [[Meta3.layout]] turns it
+  * into the [[ZarrLayout]] that is the one home of the key format, the
+  * listing, the tile extents and the shard-index entry rule, and reads and
+  * writes go through the same reader and writer as v2.
   */
-// Serializable for the same reason as ZarrIO: executor closures call the
-// lifted local fillTile, capturing the stateless singleton.
-object Zarr3IO extends Serializable {
+object Zarr3IO {
 
   /** v3 data_type -> v2 dtype string understood by the shared chunk codec. */
   private val DTYPES = Map(
@@ -37,12 +36,10 @@ object Zarr3IO extends Serializable {
 
   private[sources] def isV3Name(n: String): Boolean = DTYPES.contains(n)
 
-  /** `sharding_indexed` codec configuration: each outer chunk ("shard") is
-    * one store object packing a grid of `inner`-shaped chunks plus a binary
-    * index of `(offset: uint64 LE, nbytes: uint64 LE)` pairs in C-order of
-    * inner position, `(2^64-1, 2^64-1)` marking an absent inner chunk. The
-    * index sits at the shard's end (default) or start, optionally followed
-    * by a CRC32C of its bytes (the `crc32c` index codec).
+  /** `sharding_indexed` codec configuration as `zarr.json` states it: the
+    * inner chunk shape and where and how the shard index is stored. The
+    * shard <-> inner mapping, the index codec and its entry rule live in
+    * [[ZarrLayout.Sharding]].
     */
   final case class Shard3(
       inner: Array[Int],
@@ -59,23 +56,16 @@ object Zarr3IO extends Serializable {
       sharding: Option[Shard3] = None) {
     def dims: Int = shape.length
     def spec: GridSpec = GridSpec(shape, chunks)
-    /** The equivalent v2 meta driving the shared element codec. */
-    private[sources] def v2: ZarrIO.Meta =
-      ZarrIO.Meta(shape, chunks, DTYPES(dataType),
-        if (gzip) "gzip" else "", fillValue, separator)
-    /** Element-codec meta at inner-chunk granularity (sharded stores). */
-    private[sources] def innerV2: ZarrIO.Meta = {
-      val sh = sharding.getOrElse(
-        throw new IllegalStateException("innerV2 on an unsharded store"))
-      ZarrIO.Meta(shape, sh.inner, DTYPES(dataType),
-        if (gzip) "gzip" else "", fillValue, separator)
-    }
-    /** Inner chunks per shard, per axis (sharded stores). */
-    private[sources] def innersPerShard: Array[Int] = {
-      val sh = sharding.getOrElse(
-        throw new IllegalStateException("innersPerShard on an unsharded store"))
-      Array.tabulate(dims)(a => chunks(a) / sh.inner(a))
-    }
+    /** The store layout: the shared element codec at tile (inner-chunk)
+      * granularity, plus the shard facts when sharded.
+      */
+    private[sources] def layout: ZarrLayout = ZarrLayout(
+      ZarrIO.Meta(shape, sharding.fold(chunks)(_.inner), DTYPES(dataType),
+        if (gzip) "gzip" else "", fillValue, separator),
+      v3 = true,
+      sharding.map(sh => ZarrLayout.Sharding(
+        Array.tabulate(dims)(a => chunks(a) / sh.inner(a)),
+        sh.indexAtEnd, sh.indexCrc)))
   }
 
   // ------------------------------------------------------------- metadata
@@ -246,10 +236,6 @@ object Zarr3IO extends Serializable {
     (0 until ds.size()).map(i => ds.get(i).path("path").asText())
   }
 
-  /** Default chunk-key encoding: "c" <sep> i0 <sep> i1 ... */
-  private[sources] def chunkKey(loc: Array[Int], sep: String): String =
-    ("c" +: loc.map(_.toString)).mkString(sep)
-
   // ------------------------------------------------------------ read path
 
   def read(spark: SparkSession, dir: String): Dataset[Tile] =
@@ -260,216 +246,12 @@ object Zarr3IO extends Serializable {
     * sharded store, `keep` addresses INNER chunk coordinates (the tile
     * granularity is the same either way) and pruning happens twice: whole
     * shards on the driver listing, then per-inner-chunk byte ranges on the
-    * executor via the shard index.
+    * executor via the shard index. Absent chunks, shards and inner chunks
+    * read as fill_value ([[ZarrIO.readPruned]], the reader of every layout).
     */
   def read(spark: SparkSession, dir: String,
-           keep: Array[Int] => Boolean): Dataset[Tile] = {
-    val meta0 = readMeta(dir)
-    if (meta0.sharding.isDefined) readShardedStore(spark, dir, meta0, keep)
-    else readUnsharded(spark, dir, meta0, keep)
-  }
-
-  private def readUnsharded(spark: SparkSession, dir: String, meta: Meta3,
-           keep: Array[Int] => Boolean): Dataset[Tile] = {
-    import spark.implicits._
-    val v2 = meta.v2
-    val grid = meta.spec.gridShape
-    // absent chunk objects read as fill_value (zarr v3 semantics) — same
-    // dense-frame contract as the v2 tile reader. As in ZarrIO.readPruned,
-    // the nominal grid is never materialized on the driver: executors decode
-    // their own row-major index range against a broadcast presence set, so
-    // driver memory stays O(present chunks) on sparse stores.
-    val present = listChunkLocs(dir, meta).map(_.mkString(",")).toSet
-    val presentB = spark.sparkContext.broadcast(present)
-    val dims = meta.dims
-    val sep = meta.separator
-    val shape = meta.shape
-    val chunks = meta.chunks
-    val fill = meta.fillValue
-    val sconf = StoreIO.ser(StoreIO.hadoopConf)
-    val total = grid.foldLeft(1L)(_ * _)
-    val par = spark.sparkContext.defaultParallelism
-    spark.range(0L, total, 1L, math.max(1L, math.min(total, par.toLong)).toInt)
-      .flatMap { i =>
-        val loc = ZarrIO.locOfIndex(i, grid)
-        if (!keep(loc)) None
-        else {
-          val tileShape = Array.tabulate(dims) { a =>
-            math.min(chunks(a).toLong, shape(a) - loc(a).toLong * chunks(a)).toInt
-          }
-          if (!presentB.value.contains(loc.mkString(",")))
-            Some(Tile(loc, grid.clone(), tileShape,
-              Array.fill(tileShape.product)(fill)))
-          else {
-            val raw = StoreIO.readAllBytes(sconf.value,
-              new Path(dir, chunkKey(loc, sep)).toString)
-            Some(Tile(loc, grid.clone(), tileShape,
-              ZarrIO.decodeChunk(raw, v2, loc, tileShape)))
-          }
-        }
-      }
-  }
-
-  /** Sharded read: the driver lists SHARD objects and keeps those holding
-    * at least one kept inner chunk; each executor task opens its shard once
-    * and issues ranged reads — the index tail, then only the kept inner
-    * chunks' byte ranges. On an object store this is one connection per
-    * shard doing a handful of ranged GETs, never a whole-object download:
-    * the access pattern sharding exists for (fewer objects than chunks,
-    * partial reads within an object).
-    */
-  private def readShardedStore(spark: SparkSession, dir: String, meta: Meta3,
-      keep: Array[Int] => Boolean): Dataset[Tile] = {
-    import spark.implicits._
-    val sh = meta.sharding.get
-    val dims = meta.dims
-    val inner = sh.inner
-    val innerGrid = GridSpec(meta.shape, inner).gridShape
-    val ips = meta.innersPerShard
-    val cps = ips.product
-    val innerMeta = meta.innerV2
-    val shape = meta.shape
-    val sep = meta.separator
-    val atEnd = sh.indexAtEnd
-    val crc = sh.indexCrc
-    // absent SHARD objects and ABSENT index entries inside present shards
-    // both read as fill_value (v3 sharding semantics) — the dense frame a
-    // pipeline expects; a missing shard synthesizes its kept inners with
-    // zero I/O. Driver work is O(present shards): the shard grid is walked
-    // executor-side (each task decodes its own row-major index range), and
-    // per-shard inner enumeration never touches the driver at all.
-    val fill = meta.fillValue
-    val presentShards = listChunkLocs(dir, meta).map(_.mkString(",")).toSet
-    val presentB = spark.sparkContext.broadcast(presentShards)
-    val shardGrid = meta.spec.gridShape
-    val shardTotal = shardGrid.foldLeft(1L)(_ * _)
-    val par = spark.sparkContext.defaultParallelism
-    val sconf = StoreIO.ser(StoreIO.hadoopConf)
-    def fillTile(il: Array[Int]): Tile = {
-      val tileShape = Array.tabulate(dims) { a =>
-        math.min(inner(a).toLong, shape(a) - il(a).toLong * inner(a)).toInt
-      }
-      Tile(il, innerGrid.clone(), tileShape,
-        Array.fill(tileShape.product)(fill))
-    }
-    spark.range(0L, shardTotal, 1L,
-        math.max(1L, math.min(shardTotal, par.toLong)).toInt)
-      .flatMap { si =>
-        val sl = ZarrIO.locOfIndex(si, shardGrid)
-        val keptSeq = innerLocsOf(sl, ips, innerGrid).filter(keep)
-        val isPresent = presentB.value.contains(sl.mkString(","))
-        if (keptSeq.isEmpty) Seq.empty[Tile]
-        else if (!isPresent) keptSeq.map(fillTile)
-        else {
-        val path = new Path(dir, chunkKey(sl, sep)).toString
-        val idxSize = cps * 16 + (if (crc) 4 else 0)
-        val idxOff =
-          if (atEnd) StoreIO.fileLen(sconf.value, path) - idxSize else 0L
-        require(idxOff >= 0,
-          s"$path: shorter than its own shard index ($idxSize bytes)")
-        val in = StoreIO.open(sconf.value, path)
-        try {
-          val (offs, lens) =
-            decodeShardIndex(StoreIO.readRange(in, idxOff, idxSize), cps, crc, path)
-          keptSeq.flatMap { il =>
-            val pos = Array.tabulate(dims)(a => il(a) - sl(a) * ips(a))
-            val k = graft.core.Regions.linearIndex(pos, ips).toInt
-            if (offs(k) == ABSENT && lens(k) == ABSENT) Seq(fillTile(il))
-            else {
-              require(offs(k) >= 0 && lens(k) >= 0 && lens(k) <= Int.MaxValue,
-                s"$path: inner chunk ${il.mkString(",")} has corrupt index " +
-                  s"entry (offset ${offs(k)}, nbytes ${lens(k)})")
-              val raw = StoreIO.readRange(in, offs(k), lens(k).toInt)
-              val tileShape = Array.tabulate(dims) { a =>
-                math.min(inner(a).toLong, shape(a) - il(a).toLong * inner(a)).toInt
-              }
-              Seq(Tile(il, innerGrid.clone(), tileShape,
-                ZarrIO.decodeChunk(raw, innerMeta, il, tileShape)))
-            }
-          }
-        } finally in.close()
-        }
-      }
-  }
-
-  /** Global inner-chunk coordinates covered by the shard at `sl`, clipped
-    * to the array's inner grid (edge shards are partially filled).
-    */
-  private[sources] def innerLocsOf(sl: Array[Int], ips: Array[Int],
-      innerGrid: Array[Int]): Seq[Array[Int]] = {
-    val dims = sl.length
-    val out = Seq.newBuilder[Array[Int]]
-    val j = new Array[Int](dims)
-    var more = true
-    while (more) {
-      val g = Array.tabulate(dims)(a => sl(a) * ips(a) + j(a))
-      if (g.indices.forall(a => g(a) < innerGrid(a))) out += g
-      var a = dims - 1
-      while (a >= 0 && j(a) == ips(a) - 1) { j(a) = 0; a -= 1 }
-      if (a < 0) more = false else j(a) += 1
-    }
-    out.result()
-  }
-
-  private[sources] val ABSENT = -1L // 2^64-1 as a signed long: the spec's missing marker
-
-  /** Parse (and CRC-validate) a shard index: `cps` uint64-LE (offset,
-    * nbytes) pairs in C-order of inner position, optionally + CRC32C.
-    */
-  private[sources] def decodeShardIndex(bytes: Array[Byte], cps: Int, crc: Boolean,
-      path: String): (Array[Long], Array[Long]) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    if (crc) {
-      val c = new java.util.zip.CRC32C
-      c.update(bytes, 0, cps * 16)
-      require(c.getValue.toInt == bb.getInt(cps * 16),
-        s"$path: shard index CRC32C mismatch — index or tail corrupt")
-    }
-    val offs = new Array[Long](cps)
-    val lens = new Array[Long](cps)
-    var i = 0
-    while (i < cps) {
-      offs(i) = bb.getLong(i * 16)
-      lens(i) = bb.getLong(i * 16 + 8)
-      i += 1
-    }
-    (offs, lens)
-  }
-
-  private[sources] def listChunkLocs(dir: String, meta: Meta3): Seq[Array[Int]] = {
-    val conf = StoreIO.hadoopConf
-    val grid = meta.spec.gridShape
-    def valid(loc: Array[Int]): Boolean =
-      loc.length == meta.dims &&
-        loc.indices.forall(a => loc(a) >= 0 && loc(a) < grid(a))
-    if (meta.separator == "/") {
-      def walk(path: String, isFile: Boolean, depth: Int,
-          prefix: List[Int]): Seq[Array[Int]] =
-        if (depth == meta.dims) {
-          val loc = prefix.reverse.toArray
-          if (isFile && valid(loc)) Seq(loc) else Seq.empty
-        } else if (!isFile) {
-          StoreIO.list(conf, path).flatMap { c =>
-            c.getPath.getName.toIntOption match {
-              case Some(i) => walk(c.getPath.toString, c.isFile, depth + 1, i :: prefix)
-              case None    => Seq.empty
-            }
-          }
-        } else Seq.empty
-      walk(new Path(dir, "c").toString, isFile = false, 0, Nil)
-    } else {
-      StoreIO.list(conf, dir)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("c" + meta.separator))
-        .flatMap { f =>
-          val parts = f.getPath.getName
-            .split(java.util.regex.Pattern.quote(meta.separator)).drop(1)
-          val loc = parts.flatMap(_.toIntOption)
-          if (loc.length == parts.length && loc.length == meta.dims && valid(loc))
-            Seq(loc)
-          else Seq.empty
-        }
-    }
-  }
+           keep: Array[Int] => Boolean): Dataset[Tile] =
+    ZarrIO.readPruned(spark, dir, readMeta(dir).layout, keep)
 
   // ----------------------------------------------------------- write path
 
@@ -480,21 +262,8 @@ object Zarr3IO extends Serializable {
             dataType: String = "int64", gzip: Boolean = true,
             fillValue: Long = 0L): Unit = {
     require(DTYPES.contains(dataType), s"unsupported v3 data_type $dataType")
-    val meta = Meta3(spec.imageShape.clone(), spec.chunk.clone(), dataType,
-      gzip, fillValue, "/")
-    val v2 = meta.v2
-    val conf = StoreIO.hadoopConf
-    StoreIO.mkdirs(conf, dir)
-    writeMeta(dir, meta)
-    val sep = meta.separator
-    val sconf = StoreIO.ser(conf)
-    tiles.foreachPartition { (it: Iterator[Tile]) =>
-      it.foreach { t =>
-        val bytes = ZarrIO.encodeChunk(t.data, v2, t.shape)
-        StoreIO.write(sconf.value,
-          new Path(dir, chunkKey(t.loc, sep)).toString, bytes)
-      }
-    }
+    Meta3(spec.imageShape.clone(), spec.chunk.clone(), dataType, gzip,
+      fillValue, "/").layout.write(tiles, dir)
   }
 
   /** Write a tile table as a SHARDED zarr v3 store: `spec.chunk` is the
@@ -516,151 +285,8 @@ object Zarr3IO extends Serializable {
       shard.indices.forall(a => shard(a) > 0 && shard(a) % spec.chunk(a) == 0),
       s"shard shape ${shard.mkString(",")} must be a positive multiple of " +
         s"the inner chunk ${spec.chunk.mkString(",")} on every axis")
-    val meta = Meta3(spec.imageShape.clone(), shard.clone(), dataType, gzip,
-      fillValue, "/", Some(Shard3(spec.chunk.clone(), indexAtEnd, indexCrc)))
-    val innerMeta = meta.innerV2
-    val ips = meta.innersPerShard
-    val cps = ips.product
-    val shardGrid = meta.spec.gridShape
-    val dims = meta.dims
-    val conf = StoreIO.hadoopConf
-    StoreIO.mkdirs(conf, dir)
-    writeMeta(dir, meta)
-    ShardIndexCache.invalidateUnder(dir) // same-JVM rewrite loops
-    val sep = meta.separator
-    val sconf = StoreIO.ser(conf)
-    val atEnd = indexAtEnd
-    val crc = indexCrc
-    import tiles.sparkSession.implicits._
-    tiles.groupByKey { t =>
-      graft.core.Regions.linearIndex(
-        Array.tabulate(dims)(a => t.loc(a) / ips(a)), shardGrid)
-    }.mapGroups { (_, it) =>
-      val ts = it.toVector
-      val sl = Array.tabulate(dims)(a => ts.head.loc(a) / ips(a))
-      val enc = new Array[Array[Byte]](cps)
-      ts.foreach { t =>
-        val pos = Array.tabulate(dims)(a => t.loc(a) - sl(a) * ips(a))
-        require(pos.indices.forall(a => pos(a) >= 0 && pos(a) < ips(a)),
-          s"tile ${t.loc.mkString(",")} is outside shard ${sl.mkString(",")}")
-        val k = graft.core.Regions.linearIndex(pos, ips).toInt
-        require(enc(k) == null, s"duplicate tile at ${t.loc.mkString(",")}")
-        enc(k) = ZarrIO.encodeChunk(t.data, innerMeta, t.shape)
-      }
-      StoreIO.write(sconf.value,
-        new Path(dir, chunkKey(sl, sep)).toString, packShard(enc, atEnd, crc))
-      1
-    }.count()
-    ()
-  }
-
-  /** Assemble one shard object from its encoded inner chunks (slot k =
-    * C-order inner position, null = absent): payloads in slot order plus
-    * the binary `(offset, nbytes)` index at the configured end, CRC32C-
-    * protected when enabled. Shared by [[writeSharded]] and the DSv2
-    * sharded commit's pack job.
-    */
-  private[sources] def packShard(enc: Array[Array[Byte]], atEnd: Boolean,
-      crc: Boolean): Array[Byte] = {
-    val cps = enc.length
-    val idx = new Array[Byte](cps * 16 + (if (crc) 4 else 0))
-    val ibb = java.nio.ByteBuffer.wrap(idx).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var off = if (atEnd) 0L else idx.length.toLong
-    var k = 0
-    while (k < cps) {
-      if (enc(k) == null) {
-        ibb.putLong(k * 16, ABSENT); ibb.putLong(k * 16 + 8, ABSENT)
-      } else {
-        ibb.putLong(k * 16, off)
-        ibb.putLong(k * 16 + 8, enc(k).length.toLong)
-        off += enc(k).length
-      }
-      k += 1
-    }
-    if (crc) {
-      val c = new java.util.zip.CRC32C
-      c.update(idx, 0, cps * 16)
-      ibb.putInt(cps * 16, c.getValue.toInt)
-    }
-    val out = new java.io.ByteArrayOutputStream(
-      idx.length + enc.iterator.filter(_ != null).map(_.length).sum)
-    if (!atEnd) out.write(idx)
-    enc.foreach(e => if (e != null) out.write(e))
-    if (atEnd) out.write(idx)
-    out.toByteArray
-  }
-}
-
-/** Per-JVM cache of decoded shard indexes, so a scan whose partitions are
-  * the INNER chunks of a sharded store reads each shard's index once per
-  * executor, not once per inner chunk. Bounded LRU; entries are a few
-  * hundred bytes (16 B per inner slot).
-  *
-  * Keys carry a content fingerprint (file length + mtime from the same
-  * `getFileStatus` the end-located index needs anyway), so a shard
-  * REWRITTEN in place misses the cache on every JVM — executors on a real
-  * cluster can't rely on the writer-side [[invalidateUnder]], which only
-  * clears the writing JVM's map (kept as a same-JVM fast path: it also
-  * covers a rewrite landing within one mtime granule at identical length).
-  */
-private[sources] object ShardIndexCache {
-  private val MAX = 4096
-  private val map =
-    new java.util.LinkedHashMap[String, (Array[Long], Array[Long])](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Array[Long], Array[Long])]): Boolean =
-        size() > MAX
-    }
-  // Single-flight: concurrent misses on one key (the inner chunks of a
-  // freshly-planned shard run as parallel tasks) coalesce into ONE ranged
-  // read; the losers await the winner's future instead of each re-reading
-  // the same index tail from the store.
-  private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[(Array[Long], Array[Long])]]()
-
-  def indexOf(conf: org.apache.hadoop.conf.Configuration, path: String,
-      cps: Int, atEnd: Boolean, crc: Boolean): (Array[Long], Array[Long]) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val st = p.getFileSystem(conf).getFileStatus(p)
-    val key = s"$path#${st.getLen}#${st.getModificationTime}"
-    map.synchronized {
-      val hit = map.get(key)
-      if (hit != null) return hit
-    }
-    val mine = new java.util.concurrent.CompletableFuture[(Array[Long], Array[Long])]()
-    val winner = inflight.putIfAbsent(key, mine)
-    if (winner != null) return winner.join()
-    try {
-      // double-check: a prior flight may have completed and been removed
-      // between our map miss and winning the inflight slot
-      map.synchronized {
-        val hit = map.get(key)
-        if (hit != null) { mine.complete(hit); return hit }
-      }
-      val idxSize = cps * 16 + (if (crc) 4 else 0)
-      val idxOff = if (atEnd) st.getLen - idxSize else 0L
-      require(idxOff >= 0,
-        s"$path: shorter than its own shard index ($idxSize bytes)")
-      val in = StoreIO.open(conf, path)
-      val parsed =
-        try Zarr3IO.decodeShardIndex(StoreIO.readRange(in, idxOff, idxSize),
-          cps, crc, path)
-        finally in.close()
-      map.synchronized { map.put(key, parsed) }
-      mine.complete(parsed)
-      parsed
-    } catch {
-      case t: Throwable => mine.completeExceptionally(t); throw t
-    } finally inflight.remove(key)
-  }
-
-  /** Evict entries of shards under `dir` — path-prefix match on a path
-    * SEGMENT boundary, so invalidating `/a/store` leaves `/a/store2`'s
-    * entries alone.
-    */
-  def invalidateUnder(dir: String): Unit = map.synchronized {
-    val prefix = if (dir.endsWith("/")) dir else dir + "/"
-    val it = map.keySet().iterator()
-    while (it.hasNext) if (it.next().startsWith(prefix)) it.remove()
+    Meta3(spec.imageShape.clone(), shard.clone(), dataType, gzip, fillValue,
+      "/", Some(Shard3(spec.chunk.clone(), indexAtEnd, indexCrc)))
+      .layout.write(tiles, dir)
   }
 }

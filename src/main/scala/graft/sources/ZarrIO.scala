@@ -17,7 +17,12 @@ import graft.tiles.{GridSpec, Tile}
   * v2 on-disk layout directly — a `.zarray` JSON descriptor next to one
   * file per chunk named by its grid indices — with no third-party
   * dependency (JSON via the Jackson shipped inside Spark, compression via
-  * `java.util.zip`).
+  * `java.util.zip`). The chunk key format, the listing, the tile extents
+  * and the shard-index entry rule live in [[ZarrLayout]], the one home of
+  * the store layout; this object holds the v2 metadata, the element codec
+  * shared with [[Zarr3IO]], and the one dense-frame tile reader every
+  * layout goes through ([[readPruned]]), so [[read]], [[readPresent]] and
+  * [[readBox]] take a v2, v3 or sharded v3 store alike.
   *
   * Scale notes: the store is listed on the driver (names only — O(chunks)
   * strings, no data), and chunk payloads are read/written entirely on
@@ -36,7 +41,7 @@ import graft.tiles.{GridSpec, Tile}
   * order, edge chunks padded with `fill_value` — both per the v2 spec.
   */
 // Serializable: stateless codec object; executor closures reference its
-// lifted local helpers (buildTile), which captures the singleton itself.
+// lifted local helpers (tilesOf), which captures the singleton itself.
 object ZarrIO extends Serializable {
 
   final case class Meta(
@@ -216,9 +221,12 @@ object ZarrIO extends Serializable {
 
   // ------------------------------------------------------------ read path
 
+  // The readers below take a store of any layout (v2, v3, sharded v3):
+  // the format is detected from the metadata.
+
   /** Read the whole store as a tile table. */
   def read(spark: SparkSession, dir: String): Dataset[Tile] =
-    readPruned(spark, dir, _ => true)
+    readPruned(spark, dir, ZarrLayout.of(dir), _ => true)
 
   /** Sparse read: only the chunks that exist as objects — no fill-tile
     * synthesis for absent grid cells. For a mostly-empty store this keeps
@@ -228,67 +236,71 @@ object ZarrIO extends Serializable {
     * fill_value frame a pipeline read expects.
     */
   def readPresent(spark: SparkSession, dir: String): Dataset[Tile] =
-    readPruned(spark, dir, _ => true, includeFill = false)
+    readPruned(spark, dir, ZarrLayout.of(dir), _ => true, includeFill = false)
 
   /** Read only the chunks whose grid coordinates fall in `[lo, hi]`
     * (inclusive) — chunk-level pruning before any payload I/O.
     */
   def readBox(spark: SparkSession, dir: String,
       lo: Array[Int], hi: Array[Int]): Dataset[Tile] =
-    readPruned(spark, dir,
+    readPruned(spark, dir, ZarrLayout.of(dir),
       loc => loc.indices.forall(a => loc(a) >= lo(a) && loc(a) <= hi(a)))
 
-  private def readPruned(spark: SparkSession, dir: String,
-      keep: Array[Int] => Boolean, includeFill: Boolean = true): Dataset[Tile] = {
+  /** The tile reader of every layout (v2, v3, sharded v3): the tiles whose
+    * grid coordinates satisfy `keep`. Pruning happens before any payload is
+    * opened: whole objects on the listing, then, inside a present shard,
+    * per-inner byte ranges via its index.
+    *
+    * Zarr semantics: an object that does not exist, and an ABSENT index
+    * entry inside a present shard, still READ as fill_value — the dense
+    * tile dataset is the dask-array frame the reference pipelines over
+    * (cf. relabeling.py reading any zarr region). Driver-side cost is
+    * O(present objects) in both modes: the dense path never materializes
+    * the nominal grid — executors decode their own row-major range of the
+    * object grid and check presence in a broadcast set. `includeFill =
+    * false` skips absent tiles and parallelizes the listing itself.
+    */
+  private[sources] def readPruned(spark: SparkSession, dir: String,
+      layout: ZarrLayout, keep: Array[Int] => Boolean,
+      includeFill: Boolean = true): Dataset[Tile] = {
     import spark.implicits._
-    val meta = readMeta(dir)
-    val grid = meta.spec.gridShape
-    // driver sees names only; the separator "/" layout nests directories.
-    // Zarr semantics: a chunk OBJECT that does not exist still READS as
-    // fill_value — the dense tile dataset is the dask-array frame the
-    // reference pipelines over (cf. relabeling.py reading any zarr region).
-    // Driver-side cost is O(present chunks) in BOTH modes: the dense path
-    // never materializes the nominal grid — executors decode their own
-    // row-major index range and check presence in a broadcast set.
-    val present = listChunkLocs(dir, meta).map(_.mkString(",")).toSet
-    val dims = meta.dims
-    val sep = meta.separator
-    val shape = meta.shape
-    val chunks = meta.chunks
-    val fill = meta.fillValue
+    val present = layout.listChunkLocs(dir).map(_.mkString(",")).toSet
+    val grid = layout.grid
+    val fill = layout.meta.fillValue
     val sconf = StoreIO.ser(StoreIO.hadoopConf)
     val par = spark.sparkContext.defaultParallelism
 
-    def buildTile(loc: Array[Int], isPresent: Boolean): Tile = {
-      val tileShape = Array.tabulate(dims) { a =>
-        math.min(chunks(a).toLong, shape(a) - loc(a).toLong * chunks(a)).toInt
-      }
-      if (!isPresent)
-        Tile(loc, grid.clone(), tileShape,
-          Array.fill(tileShape.product)(fill))
-      else {
-        val raw = StoreIO.readAllBytes(sconf.value,
-          new Path(dir, loc.mkString(sep)).toString)
-        Tile(loc, grid.clone(), tileShape,
-          decodeChunk(raw, meta, loc, tileShape))
+    def tilesOf(obj: Array[Int], isPresent: Boolean): Seq[Tile] = {
+      val locs = layout.tilesOf(obj).filter(keep)
+      val raws =
+        if (locs.isEmpty || !isPresent) locs.map(_ => None)
+        else layout.readObject(sconf.value, dir, obj, locs)
+      locs.zip(raws).flatMap { case (loc, raw) =>
+        val shape = layout.tileShape(loc)
+        raw match {
+          case Some(bytes) =>
+            Some(Tile(loc, grid.clone(), shape, decodeChunk(bytes, layout.meta, loc, shape)))
+          case None if includeFill =>
+            Some(Tile(loc, grid.clone(), shape, Array.fill(shape.product)(fill)))
+          case None => None
+        }
       }
     }
 
     if (!includeFill) {
-      // O(present) end to end: parallelize the listing itself.
-      val locs = present.toSeq.sorted
-        .map(_.split(',').map(_.toInt)).filter(keep).map(_.toSeq)
-      spark.createDataset(locs)
-        .repartition(math.max(1, math.min(locs.size, par)))
-        .map(l => buildTile(l.toArray, isPresent = true))
+      val objs = present.toSeq.sorted.map(_.split(',').map(_.toInt))
+        .filter(layout.tilesOf(_).exists(keep)).map(_.toSeq)
+      spark.createDataset(objs)
+        .repartition(math.max(1, math.min(objs.size, par)))
+        .flatMap(o => tilesOf(o.toArray, isPresent = true))
     } else {
-      val total = grid.foldLeft(1L)(_ * _)
+      val objGrid = layout.objectGrid
+      val total = objGrid.foldLeft(1L)(_ * _)
       val presentB = spark.sparkContext.broadcast(present)
       spark.range(0L, total, 1L, math.max(1L, math.min(total, par.toLong)).toInt)
         .flatMap { i =>
-          val loc = locOfIndex(i, grid)
-          if (!keep(loc)) None
-          else Some(buildTile(loc, presentB.value.contains(loc.mkString(","))))
+          val obj = locOfIndex(i, objGrid)
+          tilesOf(obj, presentB.value.contains(obj.mkString(",")))
         }
     }
   }
@@ -302,47 +314,6 @@ object ZarrIO extends Serializable {
     loc
   }
 
-  /** All grid locations in row-major order (driver-side helper; read paths
-    * use [[locOfIndex]] on executors so the nominal grid is never a
-    * driver-memory structure).
-    */
-  private[sources] def enumerateGrid(grid: Array[Int]): Seq[Array[Int]] = {
-    val total = grid.foldLeft(1L)(_ * _)
-    (0L until total).map(locOfIndex(_, grid))
-  }
-
-  private[sources] def listChunkLocs(dir: String, meta: Meta): Seq[Array[Int]] = {
-    val conf = StoreIO.hadoopConf
-    val grid = meta.spec.gridShape
-    def valid(loc: Array[Int]): Boolean =
-      loc.length == meta.dims && loc.indices.forall(a => loc(a) >= 0 && loc(a) < grid(a))
-    if (meta.separator == "/") {
-      def walk(path: String, isFile: Boolean, depth: Int,
-          prefix: List[Int]): Seq[Array[Int]] =
-        if (depth == meta.dims) {
-          val loc = prefix.reverse.toArray
-          if (isFile && valid(loc)) Seq(loc) else Seq.empty
-        } else if (!isFile) {
-          StoreIO.list(conf, path).flatMap { c =>
-            c.getPath.getName.toIntOption match {
-              case Some(i) => walk(c.getPath.toString, c.isFile, depth + 1, i :: prefix)
-              case None    => Seq.empty
-            }
-          }
-        } else Seq.empty
-      walk(dir, isFile = false, 0, Nil)
-    } else {
-      StoreIO.list(conf, dir)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("."))
-        .flatMap { f =>
-          val parts = f.getPath.getName
-            .split(java.util.regex.Pattern.quote(meta.separator))
-          val loc = parts.flatMap(_.toIntOption)
-          if (loc.length == parts.length && valid(loc)) Seq(loc) else Seq.empty
-        }
-    }
-  }
-
   // ----------------------------------------------------------- write path
 
   /** Write a tile table as a zarr store. Executors write their own chunk
@@ -352,19 +323,7 @@ object ZarrIO extends Serializable {
     */
   def write(tiles: Dataset[Tile], spec: GridSpec, dir: String,
       dtype: String = "<i8", compressor: String = "zlib",
-      fillValue: Long = 0L): Unit = {
-    val meta = Meta(spec.imageShape.clone(), spec.chunk.clone(), dtype,
-      compressor, fillValue, ".")
-    val conf = StoreIO.hadoopConf
-    StoreIO.mkdirs(conf, dir)
-    writeMeta(dir, meta)
-    val sconf = StoreIO.ser(conf)
-    tiles.foreachPartition { (it: Iterator[Tile]) =>
-      it.foreach { t =>
-        val bytes = encodeChunk(t.data, meta, t.shape)
-        StoreIO.write(sconf.value,
-          new Path(dir, t.loc.mkString(meta.separator)).toString, bytes)
-      }
-    }
-  }
+      fillValue: Long = 0L): Unit =
+    ZarrLayout(Meta(spec.imageShape.clone(), spec.chunk.clone(), dtype,
+      compressor, fillValue, "."), v3 = false).write(tiles, dir)
 }

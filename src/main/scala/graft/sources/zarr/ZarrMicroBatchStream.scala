@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{StoreIO, Zarr3IO, ZarrIO}
+import graft.sources.{StoreIO, ZarrLayout}
 
 /** Offset = how many discovery entries the source has logged. Batch
   * (start, end] replays the chunk sets of entries start+1..end.
@@ -51,22 +51,15 @@ final case class ZarrSourceOffset(seq: Long) extends Offset {
   * append-only-ness. `maxChunksPerTrigger` caps discovered SHARDS here —
   * the per-trigger read volume it bounds is shard-sized either way.
   */
-final class ZarrMicroBatchStream(dir: String, meta: ZarrIO.Meta,
-    lo: Array[Long], hi: Array[Long], allowed: Array[Set[Long]],
-    required: StructType, checkpointLocation: String,
-    maxChunksPerTrigger: Int,
-    shard: Option[ShardInfo] = None) extends MicroBatchStream
+final class ZarrMicroBatchStream(dir: String, layout: ZarrLayout,
+    box: ZarrLayout.Bounds, required: StructType, checkpointLocation: String,
+    maxChunksPerTrigger: Int) extends MicroBatchStream
     with SupportsTriggerAvailableNow {
 
+  // the layout is immutable for the store's life — growth adds objects,
+  // never re-shapes — so the table's one copy serves every trigger
   private val conf = StoreIO.hadoopConf
   private val logDir = new Path(checkpointLocation, "zarr-chunk-log").toString
-  private val isV3 = ZarrTableProvider.isV3(dir)
-  // v3 metadata (shape/chunks/codec) is immutable for the store's life —
-  // growth adds objects, never re-shapes — so read it once
-  private val v3Meta = if (isV3) Some(Zarr3IO.readMeta(dir)) else None
-  // shard-expansion facts, fixed by the metadata
-  private val innerGrid = v3Meta.filter(_.sharding.isDefined)
-    .map(m3 => graft.tiles.GridSpec(m3.shape, m3.sharding.get.inner).gridShape)
 
   /** Chunk sets by discovery entry, index = seq - 1; rebuilt on restart. */
   private val entries =
@@ -95,24 +88,12 @@ final class ZarrMicroBatchStream(dir: String, meta: ZarrIO.Meta,
         locs.foreach(l => seen += keyOf(l))
       }
 
-  /** Same pruning semantics as the batch planner: pushed grid-coordinate
-    * bounds drop chunks at DISCOVERY, before they ever enter the log.
+  /** Discovery-time pruning, with the batch planner's semantics: a listed
+    * object enters the log only if it can serve a chunk surviving the
+    * pushed grid bounds — for a shard object, if ANY covered inner does.
     */
-  private def survives(loc: Array[Int]): Boolean =
-    loc.indices.forall(a =>
-      loc(a) >= lo(a) && loc(a) <= hi(a) &&
-        (allowed(a) == null || allowed(a).contains(loc(a).toLong)))
-
-  /** Inner chunks covered by shard `sl` (sharded stores). */
-  private def innersOf(sl: Array[Int]): Seq[Array[Int]] =
-    Zarr3IO.innerLocsOf(sl, shard.get.ips, innerGrid.get)
-
-  /** Discovery-time pruning: a listed object enters the log only if it can
-    * serve a surviving chunk — for a shard object, if ANY covered inner
-    * survives the pushed bounds.
-    */
-  private def objectSurvives(loc: Array[Int]): Boolean =
-    if (shard.isDefined) innersOf(loc).exists(survives) else survives(loc)
+  private def objectSurvives(obj: Array[Int]): Boolean =
+    layout.tilesOf(obj).exists(box.survives)
 
   override def initialOffset(): Offset = ZarrSourceOffset(0)
 
@@ -121,10 +102,8 @@ final class ZarrMicroBatchStream(dir: String, meta: ZarrIO.Meta,
     * so the whole log — deterministic across hosts).
     */
   private def listFresh(): Seq[Array[Int]] =
-    (v3Meta match {
-      case Some(m3) => Zarr3IO.listChunkLocs(dir, m3)
-      case None => ZarrIO.listChunkLocs(dir, meta)
-    }).filter(l => objectSurvives(l) && !seen.contains(keyOf(l)))
+    layout.listChunkLocs(dir)
+      .filter(l => objectSurvives(l) && !seen.contains(keyOf(l)))
       .sortBy(keyOf)
 
   /** `Trigger.AvailableNow` snapshot: the objects present at query start;
@@ -169,17 +148,16 @@ final class ZarrMicroBatchStream(dir: String, meta: ZarrIO.Meta,
     val s0 = start.asInstanceOf[ZarrSourceOffset].seq
     val e0 = end.asInstanceOf[ZarrSourceOffset].seq
     val objects = (s0 + 1 to e0).flatMap(i => entries((i - 1).toInt))
-    // sharded: the log holds shard locs; partitions are their surviving
-    // inner chunks (expansion is pure, so replay stays deterministic)
-    val chunks =
-      if (shard.isDefined) objects.flatMap(innersOf).filter(survives)
-      else objects
-    chunks.map(loc => ZarrInputPartition(loc): InputPartition).toArray
+    // the log holds object locs; partitions are their surviving tiles (a
+    // shard's inner chunks; expansion is pure, so replay stays
+    // deterministic)
+    objects.flatMap(layout.tilesOf).filter(box.survives)
+      .map(loc => ZarrInputPartition(loc): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ZarrReaderFactory(dir, meta, required.fieldNames, isV3,
-      StoreIO.ser(conf), vectorized = false, shard)
+    ZarrReaderFactory(dir, layout, required.fieldNames, StoreIO.ser(conf),
+      vectorized = false)
 
   override def deserializeOffset(json: String): Offset =
     ZarrSourceOffset(json.trim.toLong)

@@ -17,9 +17,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.{ShardIndexCache, StoreIO, Zarr3IO, ZarrIO}
+import graft.sources.{StoreIO, Zarr3IO, ZarrIO, ZarrLayout}
+import graft.sources.ZarrLayout.Bounds
 
-/** DataSource V2 for zarr v2 stores: `spark.read.format("zarr").load(dir)`.
+/** DataSource V2 for zarr stores (v2, v3 and sharded v3):
+  * `spark.read.format("zarr").load(dir)`. Every store-layout fact (keys,
+  * listing, tile extents, pushed-bounds test, shard-index entries) comes
+  * from the store's [[ZarrLayout]], built once per table.
   *
   * Schema for a d-dimensional store: grid coordinates `g0..g{d-1}`, in-chunk
   * coordinates `p0..p{d-1}`, and `value` — all BIGINT. Two pushdowns make it
@@ -50,8 +54,7 @@ class ZarrTableProvider extends TableProvider with DataSourceRegister {
   }
 
   private def dimsOf(p: String, options: util.Map[String, String]): Int =
-    if (ZarrTableProvider.hasMeta(p))
-      ZarrTableProvider.metaOf(p).dims
+    if (ZarrLayout.exists(p)) ZarrLayout.of(p).dims
     else {
       // a write to a fresh store: dims come from the mandatory option
       val sh = options.get("shape")
@@ -72,41 +75,6 @@ class ZarrTableProvider extends TableProvider with DataSourceRegister {
 
 object ZarrTableProvider {
 
-  /** Format autodetection: a v3 store has `zarr.json`, a v2 store
-    * `.zarray`. Either way the rest of the source works off the
-    * v2-equivalent codec meta (the v3 metadata maps onto it losslessly for
-    * the supported dtype/codec subset).
-    */
-  def isV3(dir: String): Boolean =
-    StoreIO.exists(StoreIO.hadoopConf, new Path(dir, "zarr.json").toString)
-
-  /** True when the path already holds a store (either format). */
-  def hasMeta(dir: String): Boolean =
-    isV3(dir) ||
-      StoreIO.exists(StoreIO.hadoopConf, new Path(dir, ".zarray").toString)
-
-  /** The scan-facing meta. For a SHARDED v3 store this is the INNER-chunk
-    * granularity equivalent: the relational surface exposes the same rows
-    * and the same (g*, p*) coordinates whether the store packs its chunks
-    * into shard objects or not — sharding is a storage layout, not a
-    * schema.
-    */
-  def metaOf(dir: String): ZarrIO.Meta =
-    if (isV3(dir)) {
-      val m3 = Zarr3IO.readMeta(dir)
-      if (m3.sharding.isDefined) m3.innerV2 else m3.v2
-    } else ZarrIO.readMeta(dir)
-
-  /** Shard layout of a sharded v3 store; None for unsharded (either
-    * format). Drives partition planning and the readers' ranged I/O.
-    */
-  def shardInfoOf(dir: String): Option[ShardInfo] =
-    if (isV3(dir)) {
-      val m3 = Zarr3IO.readMeta(dir)
-      m3.sharding.map(sh =>
-        ShardInfo(m3.innersPerShard, sh.indexAtEnd, sh.indexCrc))
-    } else None
-
   def schemaFor(dims: Int): StructType = StructType(
     (0 until dims).map(a => StructField(s"g$a", LongType, nullable = false)) ++
       (0 until dims).map(a => StructField(s"p$a", LongType, nullable = false)) :+
@@ -117,38 +85,6 @@ object ZarrTableProvider {
     * (meaningful in local mode, where executors share the JVM).
     */
   val payloadReads = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Every grid location inside the pushed [lo, hi] ∩ allowed box — the
-    * nominal-grid enumeration behind `assumeComplete` planning: pure
-    * arithmetic from metadata, zero listing RTTs. Pruned axes enumerate
-    * only their surviving values, so the cost is the SURVIVING box, not
-    * the grid.
-    */
-  private[zarr] def boxLocs(grid: Array[Int], lo: Array[Long],
-      hi: Array[Long], allowed: Array[Set[Long]]): Seq[Array[Int]] = {
-    val axes: Array[Array[Int]] = Array.tabulate(grid.length) { a =>
-      val l = math.max(0L, lo(a)).toInt
-      val h = math.min(grid(a) - 1L, hi(a)).toInt
-      (l to h).filter(v =>
-        allowed(a) == null || allowed(a).contains(v.toLong)).toArray
-    }
-    axes.foldLeft(Seq(Array.empty[Int]))((acc, vals) =>
-      acc.flatMap(prefix => vals.map(v => prefix :+ v)))
-  }
-
-  /** Inner-chunk bounds mapped to SHARD-grid bounds (floor division by
-    * inners-per-shard): a shard survives iff it could hold a surviving
-    * inner chunk. Conservative on `allowed` (membership of any covered
-    * inner), exact on the box.
-    */
-  private[zarr] def shardBox(ips: Array[Int], lo: Array[Long],
-      hi: Array[Long], allowed: Array[Set[Long]])
-      : (Array[Long], Array[Long], Array[Set[Long]]) = (
-    Array.tabulate(ips.length)(a => if (lo(a) < 0) 0L else lo(a) / ips(a)),
-    Array.tabulate(ips.length)(a => if (hi(a) < 0) -1L else hi(a) / ips(a)),
-    Array.tabulate(ips.length)(a =>
-      if (allowed(a) == null) null else allowed(a).map(_ / ips(a)))
-  )
 }
 
 /** `dir` is public so plan-walking code (e.g. the scope resolution behind
@@ -161,7 +97,7 @@ final class ZarrTable(val dir: String, dims: Int) extends Table
     with SupportsRead with SupportsWrite {
   // reads need the full store metadata; writes to a fresh dir must not
   // touch it (dims alone drives the schema)
-  private lazy val meta = ZarrTableProvider.metaOf(dir)
+  private lazy val layout = ZarrLayout.of(dir)
   override def name(): String = s"zarr:$dir"
   override def schema(): StructType = ZarrTableProvider.schemaFor(dims)
   override def capabilities(): util.Set[TableCapability] =
@@ -169,14 +105,14 @@ final class ZarrTable(val dir: String, dims: Int) extends Table
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(dir, meta, options.getBoolean("vectorized", true),
+    new ZarrScanBuilder(dir, layout, options.getBoolean("vectorized", true),
       options.getInt("maxChunksPerTrigger", 0),
       options.getBoolean("assumeComplete", false))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new ZarrWriteBuilder(dir, info)
 }
 
-final class ZarrScanBuilder(dir: String, meta: ZarrIO.Meta,
+final class ZarrScanBuilder(dir: String, layout: ZarrLayout,
     vectorized: Boolean,
     maxChunksPerTrigger: Int = 0,
     assumeComplete: Boolean = false) extends ScanBuilder with SupportsPushDownFilters
@@ -197,13 +133,12 @@ final class ZarrScanBuilder(dir: String, meta: ZarrIO.Meta,
   override def pushLimit(n: Int): Boolean = { limit = n; true }
   override def isPartiallyPushed: Boolean = true
 
-  private val dims = meta.dims
-  private val grid: Array[Int] = meta.spec.gridShape
-  // inclusive chunk-box bounds per grid axis, tightened by pushed filters
-  private val lo = Array.fill(dims)(0L)
-  private val hi = grid.map(_ - 1L)
-  // non-contiguous membership per axis (IN lists); null = unconstrained
-  private val allowed: Array[Set[Long]] = Array.fill(dims)(null)
+  private val dims = layout.dims
+  // chunk-box bounds per grid axis, tightened by pushed filters
+  private val box = Bounds.all(layout.grid)
+  private val lo = box.lo
+  private val hi = box.hi
+  private val allowed = box.allowed
   private var accepted: Array[Filter] = Array.empty
   private var required: StructType = ZarrTableProvider.schemaFor(dims)
 
@@ -361,11 +296,11 @@ final class ZarrScanBuilder(dir: String, meta: ZarrIO.Meta,
 
   override def build(): Scan =
     if (pushedAggSpecs != null)
-      new ZarrAggScan(dir, meta, lo.clone(), hi.clone(), allowed.clone(),
-        pushedGroupBy, pushedAggSpecs, assumeComplete)
+      new ZarrAggScan(dir, layout, box.snapshot, pushedGroupBy, pushedAggSpecs,
+        assumeComplete)
     else
-      new ZarrScan(dir, meta, lo.clone(), hi.clone(), allowed.clone(), required,
-        vectorized, limit, maxChunksPerTrigger, assumeComplete)
+      new ZarrScan(dir, layout, box.snapshot, required, vectorized, limit,
+        maxChunksPerTrigger, assumeComplete)
 }
 
 /** The chunk-list aggregates the source can answer without payload I/O. */
@@ -393,23 +328,23 @@ private[zarr] final case class AggPartial(cells: Long, minLoc: Array[Long],
     Array.tabulate(maxP.length)(a => math.max(maxP(a), o.maxP(a))))
 }
 
-/** Completely-pushed aggregate scan. On an UNSHARDED store the result rows
-  * are computed at PLAN time from the (pruned) chunk listing — the same
-  * listing the row scan performs to plan partitions — and the one task
-  * just emits them. On a SHARDED store inner-chunk presence lives in the
-  * per-shard binary indexes, so the scan runs one distributed metadata
-  * job over the shard listing: each task ranged-reads its shards' indexes
-  * (16 B per inner slot, [[ShardIndexCache]]d), folds the present
-  * surviving inner chunks into per-group [[AggPartial]]s, and only the
-  * combined group rows reach the driver — a coordinate-only `count()`
-  * over a 100 TB sharded store reads indexes, never chunk payloads, and
-  * never funnels per-chunk metadata through the driver. An empty
-  * surviving box yields count 0 and null extrema, matching the semantics
-  * of aggregating zero rows.
+/** Completely-pushed aggregate scan: the result rows are folded from the
+  * present surviving tiles' extents alone, and the one task just emits
+  * them. On an UNSHARDED store the fold runs at PLAN time over the (pruned)
+  * listing — the same listing the row scan performs to plan partitions. On
+  * a SHARDED store inner-chunk presence lives in the per-shard binary
+  * indexes: up to [[DriverShards]] shards are folded on the driver, more by
+  * one distributed metadata job over the shard listing, where each task
+  * ranged-reads its shards' indexes (16 B per inner slot, cached), folds
+  * them into per-group [[AggPartial]]s, and only the combined group rows
+  * reach the driver. A coordinate-only `count()` over a 100 TB store thus
+  * reads indexes at most, never chunk payloads, and never funnels
+  * per-chunk metadata through the driver. An empty surviving box yields
+  * count 0 and null extrema, matching the semantics of aggregating zero
+  * rows.
   */
-final class ZarrAggScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
-    hi: Array[Long], allowed: Array[Set[Long]], groupBy: Seq[Int],
-    aggs: Seq[ZarrAgg], assumeComplete: Boolean = false)
+final class ZarrAggScan(dir: String, layout: ZarrLayout, box: Bounds,
+    groupBy: Seq[Int], aggs: Seq[ZarrAgg], assumeComplete: Boolean = false)
     extends Scan with Batch with Serializable {
 
   override def readSchema(): StructType = StructType(
@@ -425,28 +360,7 @@ final class ZarrAggScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
   override def description(): String =
     s"ZarrAggScan groupBy=[${groupBy.map(a => s"g$a").mkString(", ")}] " +
       s"pushed=[${aggs.mkString(", ")}] bounds=" +
-      lo.indices.map(a => s"g$a in [${lo(a)}, ${hi(a)}]").mkString(", ")
-
-  private def survives(loc: Array[Int]): Boolean =
-    loc.indices.forall(a =>
-      loc(a) >= lo(a) && loc(a) <= hi(a) &&
-        (allowed(a) == null || allowed(a).contains(loc(a).toLong)))
-
-  /** Unsharded: every listed chunk exists; the listing IS the survivors.
-    * Under `assumeComplete` the caller asserts the nominal grid is fully
-    * present, so the survivors come from pure box arithmetic — a
-    * `count()` over a 100 TB dense store is zero-I/O INCLUDING the
-    * listing.
-    */
-  private def survivors: Seq[Array[Int]] =
-    if (assumeComplete)
-      ZarrTableProvider.boxLocs(meta.spec.gridShape, lo, hi, allowed)
-    else {
-      val locs =
-        if (ZarrTableProvider.isV3(dir)) Zarr3IO.listChunkLocs(dir, Zarr3IO.readMeta(dir))
-        else ZarrIO.listChunkLocs(dir, meta)
-      locs.filter(survives)
-    }
+      box.lo.indices.map(a => s"g$a in [${box.lo(a)}, ${box.hi(a)}]").mkString(", ")
 
   /** Driver-side shard threshold: at or below it the indexes are read on
     * the driver (each read is one tiny ranged GET, cached) instead of
@@ -455,37 +369,28 @@ final class ZarrAggScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
     */
   private val DriverShards = 16
 
-  /** Sharded: per-group partials from the present surviving inner chunks
-    * of the given shards — runs on executors (distributed job) or on the
-    * driver (small stores), same code either way.
+  /** Per-group partials from the present surviving tiles of the given
+    * objects — runs on executors (distributed job) or on the driver, same
+    * code either way.
     */
-  private def partialsOf(shardLocs: Iterator[Seq[Int]],
-      conf: org.apache.hadoop.conf.Configuration, m3: Zarr3IO.Meta3,
-      ips: Array[Int], innerGrid: Array[Int],
+  private def partialsOf(objs: Iterator[Seq[Int]],
+      conf: org.apache.hadoop.conf.Configuration,
       gb: Array[Int]): Iterator[(Seq[Long], AggPartial)] = {
-    val sh = m3.sharding.get
-    val cps = ips.product
-    val dims = m3.dims
     val acc = scala.collection.mutable.HashMap.empty[Seq[Long], AggPartial]
-    shardLocs.foreach { slSeq =>
-      val sl = slSeq.toArray
-      val spath = new Path(dir, Zarr3IO.chunkKey(sl, m3.separator)).toString
-      val (offs, lens) = ShardIndexCache.indexOf(conf, spath, cps,
-        sh.indexAtEnd, sh.indexCrc)
-      Zarr3IO.innerLocsOf(sl, ips, innerGrid).foreach { il =>
-        val pos = Array.tabulate(dims)(a => il(a) - sl(a) * ips(a))
-        val k = graft.core.Regions.linearIndex(pos, ips).toInt
-        if (!(offs(k) == Zarr3IO.ABSENT && lens(k) == Zarr3IO.ABSENT) &&
-            survives(il)) {
-          val tile = Array.tabulate(dims)(a =>
-            math.min(meta.chunks(a).toLong,
-              meta.shape(a) - il(a).toLong * meta.chunks(a)))
-          val p = AggPartial(tile.product, il.map(_.toLong),
-            il.map(_.toLong), tile.map(_ - 1))
-          val key: Seq[Long] = gb.map(il(_).toLong).toSeq
-          acc.updateWith(key) {
-            case Some(prev) => Some(prev.merge(p))
-            case None => Some(p)
+    objs.foreach { o =>
+      val obj = o.toArray
+      val kept = layout.tilesOf(obj).filter(box.survives)
+      if (kept.nonEmpty) {
+        val at = layout.locator(conf, dir, obj)
+        kept.foreach { loc =>
+          if (at(loc).isDefined) {
+            val last = layout.tileShape(loc).map(_ - 1L)
+            val p = AggPartial(layout.cells(loc), loc.map(_.toLong),
+              loc.map(_.toLong), last)
+            acc.updateWith(gb.map(loc(_).toLong).toSeq) {
+              case Some(prev) => Some(prev.merge(p))
+              case None => Some(p)
+            }
           }
         }
       }
@@ -493,37 +398,8 @@ final class ZarrAggScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
     acc.iterator
   }
 
-  /** Sharded group partials: distributed over the shard listing, combined
-    * by group key, only group rows collected.
-    */
-  private def shardedPartials(m3: Zarr3IO.Meta3): Map[Seq[Long], AggPartial] = {
-    val sh = m3.sharding.get
-    val ips = m3.innersPerShard
-    val innerGrid = graft.tiles.GridSpec(m3.shape, sh.inner).gridShape
-    val shards = (
-      if (assumeComplete) {
-        val (sl, sh2, sa) = ZarrTableProvider.shardBox(ips, lo, hi, allowed)
-        ZarrTableProvider.boxLocs(m3.spec.gridShape, sl, sh2, sa)
-      } else Zarr3IO.listChunkLocs(dir, m3)).map(_.toSeq)
-    val gb = groupBy.toArray
-    if (shards.size <= DriverShards)
-      partialsOf(shards.iterator, StoreIO.hadoopConf, m3, ips, innerGrid, gb)
-        .toMap
-    else {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val sconf = StoreIO.ser(StoreIO.hadoopConf)
-      spark.sparkContext
-        .parallelize(shards, math.max(1, math.min(shards.size,
-          spark.sparkContext.defaultParallelism)))
-        .mapPartitions(it =>
-          partialsOf(it, sconf.value, m3, ips, innerGrid, gb))
-        .reduceByKey(_.merge(_))
-        .collect().toMap
-    }
-  }
-
   /** The result rows; computed once — planInputPartitions can be invoked
-    * several times while planning, and the sharded path runs a job.
+    * several times while planning, and the sharded path may run a job.
     */
   private lazy val resultRows: Seq[Array[Any]] = {
     def fromPartial(p: Option[AggPartial]): Seq[Any] = aggs.map {
@@ -533,36 +409,25 @@ final class ZarrAggScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
       case ZarrAgg.MinP(_) => p.map(_ => 0L: Any).orNull
       case ZarrAgg.MaxP(a) => p.map(_.maxP(a): Any).orNull
     }
-    val m3 = if (ZarrTableProvider.isV3(dir)) Some(Zarr3IO.readMeta(dir)) else None
-    m3.filter(_.sharding.isDefined) match {
-      case Some(meta3) =>
-        val partials = shardedPartials(meta3)
-        if (groupBy.isEmpty)
-          Seq(fromPartial(partials.values.reduceOption(_.merge(_))).toArray)
-        else partials.toSeq.map { case (key, p) =>
-          (key.map(x => x: Any) ++ fromPartial(Some(p))).toArray
-        }
-      case None =>
-        def tileShape(loc: Array[Int], a: Int): Long =
-          math.min(meta.chunks(a).toLong,
-            meta.shape(a) - loc(a).toLong * meta.chunks(a))
-        def aggValues(locs: Seq[Array[Int]]): Seq[Any] = aggs.map {
-          case ZarrAgg.CountAll =>
-            locs.map(loc => loc.indices.map(tileShape(loc, _)).product).sum: Any
-          case ZarrAgg.MinG(a) =>
-            if (locs.isEmpty) null else (locs.map(_(a)).min.toLong: Any)
-          case ZarrAgg.MaxG(a) =>
-            if (locs.isEmpty) null else (locs.map(_(a)).max.toLong: Any)
-          case ZarrAgg.MinP(_) => if (locs.isEmpty) null else (0L: Any)
-          case ZarrAgg.MaxP(a) =>
-            if (locs.isEmpty) null
-            else (locs.map(loc => tileShape(loc, a) - 1).max: Any)
-        }
-        if (groupBy.isEmpty) Seq(aggValues(survivors).toArray)
-        else survivors.groupBy(loc => groupBy.map(loc(_)))
-          .toSeq.map { case (key, locs) =>
-            (key.map(_.toLong: Any) ++ aggValues(locs)).toArray
-          }
+    val objs = layout.objectsIn(dir, box, assumeComplete).map(_.toSeq)
+    val gb = groupBy.toArray
+    val partials =
+      if (layout.shard.isEmpty || objs.size <= DriverShards)
+        partialsOf(objs.iterator, StoreIO.hadoopConf, gb).toMap
+      else {
+        val spark = org.apache.spark.sql.SparkSession.active
+        val sconf = StoreIO.ser(StoreIO.hadoopConf)
+        spark.sparkContext
+          .parallelize(objs, math.max(1, math.min(objs.size,
+            spark.sparkContext.defaultParallelism)))
+          .mapPartitions(it => partialsOf(it, sconf.value, gb))
+          .reduceByKey(_.merge(_))
+          .collect().toMap
+      }
+    if (groupBy.isEmpty)
+      Seq(fromPartial(partials.values.reduceOption(_.merge(_))).toArray)
+    else partials.toSeq.map { case (key, p) =>
+      (key.map(x => x: Any) ++ fromPartial(Some(p))).toArray
     }
   }
 
@@ -588,10 +453,9 @@ final case class ZarrAggReaderFactory() extends PartitionReaderFactory {
   }
 }
 
-final class ZarrScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
-    hi: Array[Long], allowed: Array[Set[Long]], required: StructType,
-    vectorized: Boolean, limit: Int = -1, maxChunksPerTrigger: Int = 0,
-    assumeComplete: Boolean = false)
+final class ZarrScan(dir: String, layout: ZarrLayout, box: Bounds,
+    required: StructType, vectorized: Boolean, limit: Int = -1,
+    maxChunksPerTrigger: Int = 0, assumeComplete: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning {
 
@@ -601,9 +465,8 @@ final class ZarrScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
     * write-once-shard contract documented on the stream class.
     */
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ZarrMicroBatchStream(dir, meta, lo, hi, allowed, required,
-      checkpointLocation, maxChunksPerTrigger,
-      ZarrTableProvider.shardInfoOf(dir))
+    new ZarrMicroBatchStream(dir, layout, box, required, checkpointLocation,
+      maxChunksPerTrigger)
 
   /** Storage-partitioned read: the store is clustered by grid coordinates
     * (each chunk file holds exactly one (g0..gd-1) key — the write path's
@@ -616,7 +479,7 @@ final class ZarrScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
     * the tile workload.
     */
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    val gCols = (0 until meta.dims).map(a => s"g$a")
+    val gCols = (0 until layout.dims).map(a => s"g$a")
     if (gCols.forall(required.fieldNames.contains))
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
         gCols.map(c => org.apache.spark.sql.connector.expressions.Expressions.identity(c):
@@ -634,19 +497,23 @@ final class ZarrScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     // only the grid columns that SURVIVED column pruning: Spark resolves
     // these against the pruned output and would fail on a projected-out one
-    (0 until meta.dims).map(a => s"g$a")
+    (0 until layout.dims).map(a => s"g$a")
       .filter(required.fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
 
+  private val lo = box.lo
+  private val hi = box.hi
+  private val allowed = box.allowed
+
   override def filter(filters: Array[Filter]): Unit = {
     filters.foreach {
-      case EqualTo(att, v) => GAxis.unapply(att, meta.dims).foreach { a =>
+      case EqualTo(att, v) => GAxis.unapply(att, layout.dims).foreach { a =>
         GAxis.long(v).foreach { x =>
           lo(a) = math.max(lo(a), x); hi(a) = math.min(hi(a), x)
         }
       }
-      case In(att, values) => GAxis.unapply(att, meta.dims).foreach { a =>
+      case In(att, values) => GAxis.unapply(att, layout.dims).foreach { a =>
         val vs = values.flatMap(GAxis.long)
         if (vs.length == values.length) {
           val set = vs.toSet
@@ -671,7 +538,7 @@ final class ZarrScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
       val inBox =
         if (allowed(a) == null) math.max(0L, hi(a) - lo(a) + 1)
         else allowed(a).count(v => v >= lo(a) && v <= hi(a)).toLong
-      inBox * meta.chunks(a)
+      inBox * layout.meta.chunks(a)
     }.product
     private val rowBytes = 8L * required.size
     override def sizeInBytes = java.util.OptionalLong.of(
@@ -680,7 +547,7 @@ final class ZarrScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
   }
 
   override def description(): String =
-    s"ZarrScan ${meta.dims}d bounds=" +
+    s"ZarrScan ${layout.dims}d bounds=" +
       lo.indices.map { a =>
         val setPart =
           if (allowed(a) == null) ""
@@ -706,94 +573,45 @@ final class ZarrScan(dir: String, meta: ZarrIO.Meta, lo: Array[Long],
     fresh
   }
 
+  /** Partitions are the surviving tiles of the candidate objects (for a
+    * shard, its inner chunks: readers skip index-absent inners, so
+    * presence stays executor-side). Under a pushed LIMIT the planner walks
+    * the objects in listing order and plans only PRESENT surviving tiles
+    * until their exact cells cover the limit (Spark applies the exact limit
+    * on top): an unsharded listing holds only objects that exist, and a
+    * shard's inners are checked against its index (one cached ranged
+    * read) — a planned prefix of the nominal grid could under-deliver.
+    */
   private def doPlanPartitions(): Array[InputPartition] = {
-    def survives(loc: Array[Int]): Boolean =
-      loc.indices.forall(a =>
-        loc(a) >= lo(a) && loc(a) <= hi(a) &&
-          (allowed(a) == null || allowed(a).contains(loc(a).toLong)))
-    def cellsOf(loc: Array[Int]): Long =
-      loc.indices.map(a => math.min(meta.chunks(a).toLong,
-        meta.shape(a) - loc(a).toLong * meta.chunks(a))).product
-    val m3 = if (ZarrTableProvider.isV3(dir)) Some(Zarr3IO.readMeta(dir)) else None
-    m3.flatMap(m => m.sharding.map((m, _))) match {
-      case Some((meta3, sh)) =>
-        val ips = meta3.innersPerShard
-        val innerGrid = graft.tiles.GridSpec(meta3.shape, sh.inner).gridShape
-        // assumeComplete: the caller asserts every shard object of the
-        // nominal grid exists, so the shard list is box arithmetic (inner
-        // presence STILL comes from the shard indexes, executor-side)
-        def shardLocs: Seq[Array[Int]] =
-          if (assumeComplete) {
-            val (sl, sh2, sa) = ZarrTableProvider.shardBox(ips, lo, hi, allowed)
-            ZarrTableProvider.boxLocs(meta3.spec.gridShape, sl, sh2, sa)
-          } else Zarr3IO.listChunkLocs(dir, meta3)
-        if (limit < 0)
-          // the listing yields SHARD objects; partitions are the inner
-          // chunks they cover (readers skip index-absent inners —
-          // present-ness lives executor-side, never on the driver)
-          shardLocs
-            .flatMap(sl => Zarr3IO.innerLocsOf(sl, ips, innerGrid))
-            .filter(survives)
-            .map(loc => ZarrInputPartition(loc): InputPartition).toArray
-        else {
-          // partial limit with index-aware presence: walk shards in
-          // listing order, ranged-read each index (driver-side, cached),
-          // and plan only PRESENT surviving inners until their exact cell
-          // count covers the limit — a planned-prefix over the nominal
-          // grid could under-deliver when inners are absent
-          val conf = StoreIO.hadoopConf
-          val cps = ips.product
-          val out = Seq.newBuilder[InputPartition]
-          var covered = 0L
-          val shardIt = shardLocs.iterator
-          while (covered < limit && shardIt.hasNext) {
-            val sl = shardIt.next()
-            val spath = new Path(dir, Zarr3IO.chunkKey(sl, meta3.separator)).toString
-            val (offs, lens) = ShardIndexCache.indexOf(conf, spath, cps,
-              sh.indexAtEnd, sh.indexCrc)
-            Zarr3IO.innerLocsOf(sl, ips, innerGrid).foreach { il =>
-              if (covered < limit && survives(il)) {
-                val pos = Array.tabulate(il.length)(a => il(a) - sl(a) * ips(a))
-                val k = graft.core.Regions.linearIndex(pos, ips).toInt
-                if (!(offs(k) == Zarr3IO.ABSENT && lens(k) == Zarr3IO.ABSENT)) {
-                  covered += cellsOf(il)
-                  out += ZarrInputPartition(il)
-                }
+    val objs = layout.objectsIn(dir, box, assumeComplete)
+    val tiles =
+      if (limit < 0) objs.flatMap(layout.tilesOf).filter(box.survives)
+      else {
+        val conf = StoreIO.hadoopConf
+        val out = Seq.newBuilder[Array[Int]]
+        var covered = 0L
+        val it = objs.iterator
+        while (covered < limit && it.hasNext) {
+          val obj = it.next()
+          val kept = layout.tilesOf(obj).filter(box.survives)
+          if (kept.nonEmpty) {
+            val at = layout.locator(conf, dir, obj)
+            kept.foreach { loc =>
+              if (covered < limit && at(loc).isDefined) {
+                covered += layout.cells(loc)
+                out += loc
               }
             }
           }
-          out.result().toArray
         }
-      case None =>
-        val locs =
-          if (assumeComplete)
-            ZarrTableProvider.boxLocs(meta.spec.gridShape, lo, hi, allowed)
-          else m3 match {
-            case Some(meta3) => Zarr3IO.listChunkLocs(dir, meta3)
-            case None => ZarrIO.listChunkLocs(dir, meta)
-          }
-        val surviving = locs.filter(survives)
-        // partial limit: stop planning chunks once their combined cell
-        // count covers the limit (Spark applies the exact limit on top;
-        // unsharded listings only contain chunks that exist)
-        val chosen =
-          if (limit < 0) surviving
-          else {
-            var covered = 0L
-            surviving.takeWhile { loc =>
-              val take = covered < limit
-              if (take) covered += cellsOf(loc)
-              take
-            }
-          }
-        chosen.map(loc => ZarrInputPartition(loc): InputPartition).toArray
-    }
+        out.result()
+      }
+    tiles.map(loc => ZarrInputPartition(loc): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ZarrReaderFactory(dir, meta, required.fieldNames,
-      ZarrTableProvider.isV3(dir), StoreIO.ser(StoreIO.hadoopConf), vectorized,
-      ZarrTableProvider.shardInfoOf(dir))
+    ZarrReaderFactory(dir, layout, required.fieldNames,
+      StoreIO.ser(StoreIO.hadoopConf), vectorized)
 }
 
 /** Shared axis/literal matching for static and runtime filter pushdown. */
@@ -822,95 +640,51 @@ final case class ZarrInputPartition(loc: Array[Int]) extends InputPartition
     new GenericInternalRow(loc.map(_.toLong: Any))
 }
 
-/** Shard layout facts a reader needs: inner chunks per shard per axis and
-  * where/how the shard index is stored.
-  */
-final case class ShardInfo(ips: Array[Int], atEnd: Boolean, crc: Boolean)
-
-final case class ZarrReaderFactory(dir: String, meta: ZarrIO.Meta,
-    columns: Array[String], isV3: Boolean,
+final case class ZarrReaderFactory(dir: String, layout: ZarrLayout,
+    columns: Array[String],
     sconf: SerializableConfiguration,
-    vectorized: Boolean = true,
-    shard: Option[ShardInfo] = None) extends PartitionReaderFactory {
+    vectorized: Boolean = true) extends PartitionReaderFactory {
 
   /** Shared per-partition setup for both read paths: chunk location, the
     * (edge-clipped) tile shape, and the decoded payload — or null when
-    * `value` was pruned away, in which case no chunk file is opened at all.
+    * `value` was pruned away, in which case no chunk payload is read at
+    * all.
     *
     * Sharded store: the partition is an INNER chunk; its shard's index
     * (per-JVM cached) says whether it exists and where its bytes live, and
     * the payload comes from one ranged read — an absent inner chunk
     * returns a zero-extent tile, so both readers emit no rows for it
     * (matching the unsharded layout, where a missing chunk file is simply
-    * never planned).
+    * never planned). A corrupt index entry fails whether or not `value`
+    * is projected.
     */
   private def openChunk(partition: InputPartition): (Array[Int], Array[Int], Array[Long]) = {
     val loc = partition.asInstanceOf[ZarrInputPartition].loc
-    val dims = meta.dims
-    val tileShape = Array.tabulate(dims) { a =>
-      math.min(meta.chunks(a).toLong,
-        meta.shape(a) - loc(a).toLong * meta.chunks(a)).toInt
-    }
-    shard match {
-      case Some(si) =>
-        val sl = Array.tabulate(dims)(a => loc(a) / si.ips(a))
-        val pos = Array.tabulate(dims)(a => loc(a) - sl(a) * si.ips(a))
-        val k = graft.core.Regions.linearIndex(pos, si.ips).toInt
-        val spath = new Path(dir, Zarr3IO.chunkKey(sl, meta.separator)).toString
-        val (offs, lens) = ShardIndexCache.indexOf(sconf.value, spath,
-          si.ips.product, si.atEnd, si.crc)
-        if (offs(k) == Zarr3IO.ABSENT && lens(k) == Zarr3IO.ABSENT)
-          (loc, Array.fill(dims)(0), null) // absent inner chunk: no rows
-        else if (!columns.contains("value")) (loc, tileShape, null)
-        else {
-          ZarrTableProvider.payloadReads.incrementAndGet()
-          require(offs(k) >= 0 && lens(k) >= 0 && lens(k) <= Int.MaxValue,
-            s"$spath: inner chunk ${loc.mkString(",")} has corrupt index " +
-              s"entry (offset ${offs(k)}, nbytes ${lens(k)})")
-          val in = StoreIO.open(sconf.value, spath)
-          val raw =
-            try StoreIO.readRange(in, offs(k), lens(k).toInt)
-            finally in.close()
-          try (loc, tileShape, ZarrIO.decodeChunk(raw, meta, loc, tileShape))
-          catch { case e: Exception =>
+    layout.locator(sconf.value, dir, layout.objectOf(loc))(loc) match {
+      case None => (loc, Array.fill(layout.dims)(0), null) // absent inner chunk: no rows
+      case Some(_) if !columns.contains("value") => (loc, layout.tileShape(loc), null)
+      case Some(ref) =>
+        ZarrTableProvider.payloadReads.incrementAndGet()
+        val tileShape = layout.tileShape(loc)
+        try (loc, tileShape,
+          ZarrIO.decodeChunk(ref.read(sconf.value, dir), layout.meta, loc, tileShape))
+        catch {
+          case e: java.io.FileNotFoundException =>
+            // only an enumerated (assumeComplete) plan can reach a missing
+            // chunk — fail loudly instead of silently dropping the
+            // region's rows
             throw new java.io.IOException(
-              s"zarr inner chunk ${loc.mkString(",")} (shard " +
-                s"'${Zarr3IO.chunkKey(sl, meta.separator)}', bytes " +
-                s"[${offs(k)}, ${offs(k) + lens(k)})) in $dir failed to " +
-                s"decode: ${e.getMessage}", e)
-          }
+              s"zarr chunk '$ref' (grid ${loc.mkString(",")}) in $dir " +
+                "is absent but was planned: the store was declared " +
+                "complete (assumeComplete=true) or mutated concurrently", e)
+          case e: Exception =>
+            // surface the CHUNK, not a codec stack frame: at 100 TB a
+            // single corrupt object must be identifiable from the task
+            // failure alone
+            throw new java.io.IOException(
+              s"zarr chunk '$ref' (grid ${loc.mkString(",")}) in $dir " +
+                s"failed to decode: ${e.getMessage}", e)
         }
-      case None =>
-        val data: Array[Long] =
-          if (!columns.contains("value")) null
-          else {
-            ZarrTableProvider.payloadReads.incrementAndGet()
-            val key =
-              if (isV3) Zarr3IO.chunkKey(loc, meta.separator)
-              else loc.mkString(meta.separator)
-            try ZarrIO.decodeChunk(
-              StoreIO.readAllBytes(sconf.value, new Path(dir, key).toString),
-              meta, loc, tileShape)
-            catch {
-              case e: java.io.FileNotFoundException =>
-                // only an enumerated (assumeComplete) plan can reach a
-                // missing chunk — fail loudly instead of silently dropping
-                // the region's rows
-                throw new java.io.IOException(
-                  s"zarr chunk '$key' (grid ${loc.mkString(",")}) in $dir " +
-                    "is absent but was planned: the store was declared " +
-                    "complete (assumeComplete=true) or mutated concurrently",
-                  e)
-              case e: Exception =>
-                // surface the CHUNK, not a codec stack frame: at 100 TB a
-                // single corrupt object must be identifiable from the task
-                // failure alone
-                throw new java.io.IOException(
-                  s"zarr chunk '$key' (grid ${loc.mkString(",")}) in $dir " +
-                    s"failed to decode: ${e.getMessage}", e)
-            }
-          }
-        (loc, tileShape, data)
     }
   }
 
@@ -930,7 +704,7 @@ final case class ZarrReaderFactory(dir: String, meta: ZarrIO.Meta,
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
     import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
     val (loc, tileShape, data) = openChunk(partition)
-    val dims = meta.dims
+    val dims = layout.dims
     val total = tileShape.product
     val batchSize = math.min(4096, math.max(total, 1))
     val vectors = columns.map(_ => new OnHeapColumnVector(batchSize, LongType))
@@ -986,7 +760,7 @@ final case class ZarrReaderFactory(dir: String, meta: ZarrIO.Meta,
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val (loc, tileShape, data) = openChunk(partition)
-    val dims = meta.dims
+    val dims = layout.dims
     val total = tileShape.product
     // per-column emitters resolved once, not per row
     val emit: Array[(Array[Int], Int) => Long] = columns.map {
@@ -1047,7 +821,7 @@ final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo)
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = {
     val o = info.options
-    val storeExists = ZarrTableProvider.hasMeta(dir)
+    val storeExists = ZarrLayout.exists(dir)
     // layout options are mandatory for a fresh store; a write into an
     // EXISTING store may omit them and inherit the store's own metadata.
     // lazy: forced only when inheritance or append validation actually
@@ -1055,47 +829,48 @@ final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo)
     // store's metadata (extra RTTs on an object store), and in particular
     // can replace a SHARDED store, which is exactly what the sharded
     // error message below advertises.
-    lazy val existing =
+    lazy val existing: Option[ZarrIO.Meta] =
       if (storeExists) {
         // the DSv2 writer emits one object per chunk; layout inheritance
         // or append into a SHARDED store would corrupt it (chunk keys are
         // shard keys there). Rewrite sharded stores via
         // Zarr3IO.writeSharded, or overwrite with explicit layout options.
-        require(ZarrTableProvider.shardInfoOf(dir).isEmpty,
+        val old = ZarrLayout.of(dir)
+        require(old.shard.isEmpty,
           s"zarr write to $dir: the existing store is sharded " +
             "(sharding_indexed); appending or inheriting its layout is " +
             "unsupported — use mode(\"overwrite\") with explicit " +
             "shape/chunks/dtype/compressor (and optionally 'shards') " +
             "options to replace it")
-        Some(ZarrTableProvider.metaOf(dir))
+        Some(old.meta)
       } else None
-    def layout(name: String, fromMeta: ZarrIO.Meta => String): String =
+    def inherited(name: String, fromMeta: ZarrIO.Meta => String): String =
       Option(o.get(name)).orElse(existing.map(fromMeta)).getOrElse(
         throw new IllegalArgumentException(
           s"zarr write to $dir needs the '$name' option " +
             "(no existing store metadata to inherit it from)"))
-    val shape = layout("shape", _.shape.mkString(","))
+    val shape = inherited("shape", _.shape.mkString(","))
       .split(",").map(_.trim.toLong)
-    val chunks = layout("chunks", _.chunks.mkString(","))
+    val chunks = inherited("chunks", _.chunks.mkString(","))
       .split(",").map(_.trim.toInt)
     // format selection: "2" (default, .zarray + dot keys) or "3"
     // (zarr.json + c/ keys + bytes[+gzip] codec chain). An existing store
     // pins its own format — mixing layouts in one dir is always an error.
     // Resolved from isV3 alone (one existence probe), NOT from `existing`,
     // so it never forces the metadata read.
+    lazy val storeV3 = ZarrLayout.isV3(dir)
     val v3 = Option(o.get("zarrFormat")).map(_.trim)
-      .orElse(if (storeExists)
-        Some(if (ZarrTableProvider.isV3(dir)) "3" else "2") else None)
+      .orElse(if (storeExists) Some(if (storeV3) "3" else "2") else None)
       .getOrElse("2") match {
         case "3" => true
         case "2" => false
         case other => throw new IllegalArgumentException(
           s"zarrFormat must be '2' or '3', got '$other'")
       }
-    if (storeExists && v3 != ZarrTableProvider.isV3(dir))
+    if (storeExists && v3 != storeV3)
       throw new IllegalArgumentException(
         s"zarr write to $dir requests format ${if (v3) 3 else 2} but the " +
-          s"existing store is format ${if (ZarrTableProvider.isV3(dir)) 3 else 2}")
+          s"existing store is format ${if (storeV3) 3 else 2}")
     // 'shards' = shard shape (sharding_indexed): writers still stage one
     // object per INNER chunk; the commit packs them into shard objects
     val shardsOpt = Option(o.get("shards")).map(_.split(",").map(_.trim.toInt))
@@ -1104,8 +879,7 @@ final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo)
     require(shardsOpt.isEmpty || doTruncate || !storeExists,
       s"sharded zarr write to $dir needs mode(\"overwrite\"): appending " +
         "would rewrite committed shard objects in place")
-    var v3Meta: Option[Zarr3IO.Meta3] = None
-    val meta: ZarrIO.Meta = if (v3) {
+    val layout = if (v3) {
       val dataType = Option(o.get("dtype"))
         .orElse(existing.map(m => Zarr3IO.v3NameOf(m.dtype)))
         .getOrElse("int64")
@@ -1131,12 +905,12 @@ final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo)
               indexCrc = true)))
         case None => Zarr3IO.Meta3(shape, chunks, dataType, gz, 0L, "/")
       }
-      v3Meta = Some(m3)
-      if (m3.sharding.isDefined) m3.innerV2 else m3.v2
-    } else ZarrIO.Meta(shape, chunks,
+      m3.layout
+    } else ZarrLayout(ZarrIO.Meta(shape, chunks,
       Option(o.get("dtype")).orElse(existing.map(_.dtype)).getOrElse("<i8"),
       Option(o.get("compressor")).orElse(existing.map(_.compressor))
-        .getOrElse("zlib"), 0L, ".")
+        .getOrElse("zlib"), 0L, "."), v3 = false)
+    val meta = layout.meta
     // append-mode into a non-empty store: stale chunks from a prior write
     // survive commit, so they must decode identically under the NEW
     // metadata — reject any layout/codec mismatch up front
@@ -1154,32 +928,30 @@ final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo)
           s"compressor=${meta.compressor}) — prior chunks would decode as " +
           "garbage; use mode(\"overwrite\") to replace the store")
     }
-    new ZarrWrite(dir, meta, info.schema(), doTruncate, v3Meta,
-      info.queryId())
+    new ZarrWrite(dir, layout, info.schema(), doTruncate, info.queryId())
   }
 }
 
-final class ZarrWrite(dir: String, meta: ZarrIO.Meta, schema: StructType,
-    doTruncate: Boolean, v3Meta: Option[Zarr3IO.Meta3],
-    queryId: String = "")
+final class ZarrWrite(dir: String, layout: ZarrLayout, schema: StructType,
+    doTruncate: Boolean, queryId: String = "")
     extends Write with RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
   import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 
   override def requiredDistribution(): Distribution =
     Distributions.clustered(
-      (0 until meta.dims).map(a =>
+      (0 until layout.dims).map(a =>
         Expressions.identity(s"g$a"): org.apache.spark.sql.connector.expressions.Expression).toArray)
 
   override def requiredOrdering(): Array[SortOrder] =
-    (0 until meta.dims).map(a =>
+    (0 until layout.dims).map(a =>
       Expressions.sort(Expressions.identity(s"g$a"),
         SortDirection.ASCENDING): SortOrder).toArray
 
   override def toBatch: BatchWrite = {
     StoreIO.mkdirs(StoreIO.hadoopConf, dir)
     val staging = ".staging-" + java.util.UUID.randomUUID().toString
-    new ZarrBatchWrite(dir, staging, meta, schema, doTruncate, v3Meta)
+    new ZarrBatchWrite(dir, staging, layout, schema, doTruncate)
   }
 
   /** Native micro-batch sink (`df.writeStream.format("zarr")`) — the DSv2
@@ -1198,7 +970,7 @@ final class ZarrWrite(dir: String, meta: ZarrIO.Meta, schema: StructType,
     * metadata advertises chunks that are missing.
     */
   override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    require(v3Meta.forall(_.sharding.isEmpty),
+    require(layout.shard.isEmpty,
       "the streaming zarr sink cannot write the sharded layout: shard " +
         "objects pack at COMMIT from all their inner chunks, but a stream " +
         "appends chunks across epochs — write sharded stores with the " +
@@ -1208,12 +980,12 @@ final class ZarrWrite(dir: String, meta: ZarrIO.Meta, schema: StructType,
         "objects); use the batch writer with mode(\"overwrite\") to " +
         "replace a store")
     StoreIO.mkdirs(StoreIO.hadoopConf, dir)
-    new ZarrStreamingWrite(dir, meta, schema, v3Meta, queryId)
+    new ZarrStreamingWrite(dir, layout, schema, queryId)
   }
 }
 
-final class ZarrStreamingWrite(dir: String, meta: ZarrIO.Meta,
-    schema: StructType, v3Meta: Option[Zarr3IO.Meta3], queryId: String)
+final class ZarrStreamingWrite(dir: String, layout: ZarrLayout,
+    schema: StructType, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
@@ -1225,8 +997,8 @@ final class ZarrStreamingWrite(dir: String, meta: ZarrIO.Meta,
   private def stagingFor(epochId: Long) = s".staging-epoch-$queryId-$epochId"
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    ZarrStreamingWriterFactory(dir, meta, schema.fieldNames,
-      StoreIO.ser(StoreIO.hadoopConf), v3Meta.isDefined, queryId)
+    ZarrStreamingWriterFactory(dir, layout, schema.fieldNames,
+      StoreIO.ser(StoreIO.hadoopConf), queryId)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -1242,10 +1014,7 @@ final class ZarrStreamingWrite(dir: String, meta: ZarrIO.Meta,
       else StoreIO.moveInto(conf, p, root, rel) // replace = redelivery-safe
     move(stage, isFile = false, "")
     StoreIO.deleteRecursive(conf, stage.toString)
-    v3Meta match {
-      case Some(m3) => Zarr3IO.writeMeta(dir, m3)
-      case None => ZarrIO.writeMeta(dir, meta)
-    }
+    layout.writeMeta(dir)
   }
 
   override def abort(epochId: Long,
@@ -1257,24 +1026,22 @@ final class ZarrStreamingWrite(dir: String, meta: ZarrIO.Meta,
 /** Per-epoch delegation onto the batch writer: identical row -> chunk
   * encoding, staged under the epoch's deterministic directory.
   */
-final case class ZarrStreamingWriterFactory(dir: String, meta: ZarrIO.Meta,
-    columns: Array[String], sconf: SerializableConfiguration, v3: Boolean,
-    queryId: String)
+final case class ZarrStreamingWriterFactory(dir: String, layout: ZarrLayout,
+    columns: Array[String], sconf: SerializableConfiguration, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     ZarrWriterFactory(
       new Path(dir, s".staging-epoch-$queryId-$epochId").toString,
-      meta, columns, sconf, v3).createWriter(partitionId, taskId)
+      layout, columns, sconf).createWriter(partitionId, taskId)
 }
 
-final class ZarrBatchWrite(dir: String, staging: String, meta: ZarrIO.Meta,
-    schema: StructType, doTruncate: Boolean,
-    v3Meta: Option[Zarr3IO.Meta3]) extends BatchWrite {
+final class ZarrBatchWrite(dir: String, staging: String, layout: ZarrLayout,
+    schema: StructType, doTruncate: Boolean) extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    ZarrWriterFactory(new Path(dir, staging).toString, meta,
-      schema.fieldNames, StoreIO.ser(StoreIO.hadoopConf), v3Meta.isDefined)
+    ZarrWriterFactory(new Path(dir, staging).toString, layout.unsharded,
+      schema.fieldNames, StoreIO.ser(StoreIO.hadoopConf))
 
   private def packStaging = staging + "-pack"
 
@@ -1297,9 +1064,9 @@ final class ZarrBatchWrite(dir: String, staging: String, meta: ZarrIO.Meta,
     val conf = StoreIO.hadoopConf
     val root = new Path(dir)
     val stage = new Path(dir, staging)
-    val packed = v3Meta.filter(_.sharding.isDefined).map { m3 =>
+    val packed = layout.shard.map { sh =>
       val pack = new Path(dir, packStaging)
-      packShards(m3, stage, pack)
+      packShards(sh, stage, pack)
       pack
     }
     if (doTruncate)
@@ -1317,12 +1084,9 @@ final class ZarrBatchWrite(dir: String, staging: String, meta: ZarrIO.Meta,
     move(packed.getOrElse(stage), isFile = false, "")
     StoreIO.deleteRecursive(conf, stage.toString)
     packed.foreach(p => StoreIO.deleteRecursive(conf, p.toString))
-    v3Meta match {
-      case Some(m3) => Zarr3IO.writeMeta(dir, m3)
-      case None => ZarrIO.writeMeta(dir, meta)
-    }
+    layout.writeMeta(dir)
     if (packed.isDefined)
-      ShardIndexCache.invalidateUnder(dir) // same-JVM rewrite loops
+      graft.sources.ShardIndexCache.invalidateUnder(dir) // same-JVM rewrite loops
   }
 
   /** One pack task per shard: gather the shard's staged inner-chunk
@@ -1330,35 +1094,27 @@ final class ZarrBatchWrite(dir: String, staging: String, meta: ZarrIO.Meta,
     * and write the assembled shard object into `packDir`. Runs as a Spark
     * job from the driver-side commit; shard count bounds the parallelism.
     */
-  private def packShards(m3: Zarr3IO.Meta3, stage: Path, packDir: Path): Unit = {
+  private def packShards(sh: ZarrLayout.Sharding, stage: Path, packDir: Path): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val dims = m3.dims
-    val ips = m3.innersPerShard
-    val cps = ips.product
-    val sep = m3.separator
-    val sh = m3.sharding.get
     val sconf = StoreIO.ser(StoreIO.hadoopConf)
     val stageStr = stage.toString
     val packStr = packDir.toString
-    val innerM3 = m3.copy(chunks = sh.inner, sharding = None)
-    val groups = Zarr3IO.listChunkLocs(stageStr, innerM3)
-      .groupBy(loc => loc.indices.map(a => loc(a) / ips(a)).toVector)
-      .iterator.map { case (sl, locs) => (sl.toArray, locs.toArray) }.toSeq
+    val shards = layout
+    val staged = layout.unsharded
+    val groups = staged.listChunkLocs(stageStr)
+      .groupBy(loc => shards.objectOf(loc).toVector)
+      .iterator.map { case (obj, locs) => (obj.toArray, locs.toArray) }.toSeq
     if (groups.nonEmpty)
       spark.sparkContext
         .parallelize(groups, math.min(groups.size,
           math.max(1, spark.sparkContext.defaultParallelism)))
-        .foreach { case (sl, locs) =>
-          val enc = new Array[Array[Byte]](cps)
+        .foreach { case (obj, locs) =>
+          val enc = new Array[Array[Byte]](sh.slots)
           locs.foreach { loc =>
-            val pos = Array.tabulate(dims)(a => loc(a) - sl(a) * ips(a))
-            val k = graft.core.Regions.linearIndex(pos, ips).toInt
-            enc(k) = StoreIO.readAllBytes(sconf.value,
-              new Path(stageStr, Zarr3IO.chunkKey(loc, sep)).toString)
+            enc(sh.slotOf(loc)) =
+              StoreIO.readAllBytes(sconf.value, staged.path(stageStr, loc))
           }
-          StoreIO.write(sconf.value,
-            new Path(packStr, Zarr3IO.chunkKey(sl, sep)).toString,
-            Zarr3IO.packShard(enc, sh.indexAtEnd, sh.indexCrc))
+          StoreIO.write(sconf.value, shards.path(packStr, obj), sh.pack(enc))
         }
   }
 
@@ -1372,14 +1128,16 @@ final class ZarrBatchWrite(dir: String, staging: String, meta: ZarrIO.Meta,
 
 final case class ZarrChunksWritten(n: Int) extends WriterCommitMessage
 
-final case class ZarrWriterFactory(stageDir: String, meta: ZarrIO.Meta,
+/** Writes one object per chunk under `stageDir`, keyed by `layout` (always
+  * unsharded: a sharded write stages inner chunks and packs at commit).
+  */
+final case class ZarrWriterFactory(stageDir: String, layout: ZarrLayout,
     columns: Array[String],
-    sconf: SerializableConfiguration,
-    v3: Boolean = false) extends DataWriterFactory {
+    sconf: SerializableConfiguration) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val dims = meta.dims
-    val grid = meta.spec.gridShape
+    val dims = layout.dims
+    val grid = layout.grid
     val gIdx = (0 until dims).map(a => columns.indexOf(s"g$a")).toArray
     val pIdx = (0 until dims).map(a => columns.indexOf(s"p$a")).toArray
     val vIdx = columns.indexOf("value")
@@ -1403,23 +1161,15 @@ final case class ZarrWriterFactory(stageDir: String, meta: ZarrIO.Meta,
       // the hot loop must not allocate per row
       private val gBuf = new Array[Int](dims)
 
-      private def tileShapeOf(loc: Array[Int]): Array[Int] =
-        Array.tabulate(dims) { a =>
-          math.min(meta.chunks(a).toLong,
-            meta.shape(a) - loc(a).toLong * meta.chunks(a)).toInt
-        }
-
       private def flush(): Unit = if (curLoc != null) {
-        val key =
-          if (v3) Zarr3IO.chunkKey(curLoc, meta.separator)
-          else curLoc.mkString(meta.separator)
+        val key = layout.key(curLoc)
         if (!flushed.add(key)) throw new IllegalStateException(
           s"zarr writer revisited chunk ${curLoc.mkString(",")}: input " +
             "rows are not clustered by grid key — the write requires " +
             "the engine-enforced distribution (one chunk, one task, " +
             "contiguous rows)")
         StoreIO.write(sconf.value, new Path(stageDir, key).toString,
-          ZarrIO.encodeChunk(curData, meta, curShape))
+          ZarrIO.encodeChunk(curData, layout.meta, curShape))
         written += 1
         curLoc = null; curShape = null; curData = null
       }
@@ -1438,7 +1188,7 @@ final case class ZarrWriterFactory(stageDir: String, meta: ZarrIO.Meta,
         if (!same) {
           flush()
           curLoc = gBuf.clone()
-          curShape = tileShapeOf(curLoc)
+          curShape = layout.tileShape(curLoc)
           curData = new Array[Long](curShape.product)
         }
         var flat = 0

@@ -48,6 +48,13 @@ final case class GridSpec(imageShape: Array[Long], chunk: Array[Int]) {
   def gridShape: Array[Int] =
     Array.tabulate(dims)(a => ((imageShape(a) + chunk(a) - 1) / chunk(a)).toInt)
 
+  /** Exact extent of the tile at `loc`: the chunk, clipped at the image's
+    * high edge.
+    */
+  def tileShape(loc: Array[Int]): Array[Int] = Array.tabulate(dims) { a =>
+    math.min(chunk(a).toLong, imageShape(a) - loc(a).toLong * chunk(a)).toInt
+  }
+
   /** Padded global shape (a multiple of `chunk` on every axis). */
   def paddedShape: Array[Long] =
     Array.tabulate(dims)(a => gridShape(a).toLong * chunk(a))

@@ -138,6 +138,14 @@ class CorePropertySpec extends AnyFunSuite {
       byLabel.foreach { case (_, pairs) =>
         assert(pairs.map(_._2 != 0L).distinct.length == 1)
       }
+      // the same tile with every label + 2^40 takes the sparse (hash-map)
+      // path and must drop exactly what the dense path drops
+      val shift = 1L << 40
+      val far = Kernels.removeOverlapped(
+        t.copy(data = t.data.map(v => if (v == 0L) 0L else v + shift)),
+        Array(2, 2), 0.25)
+      assert(far.data.toSeq == out.data.map(v => if (v == 0L) 0L else v + shift).toSeq,
+        "sparse path must keep the dense path's survivors, each + 2^40")
     }
   }
 

@@ -184,18 +184,19 @@ class StreamingZarrSpec extends AnyFunSuite {
     // redeliver it (restage + recommit) — the store's chunk objects and
     // metadata must be byte-identical after both commits
     import graft.sources.zarr.{ZarrStreamingWrite, ZarrStreamingWriterFactory}
-    import graft.sources.{StoreIO, ZarrIO}
+    import graft.sources.{StoreIO, ZarrIO, ZarrLayout}
     import org.apache.spark.sql.catalyst.InternalRow
     val store = TempDirs.create("graft_stzarrn_redeliver")
     StoreIO.mkdirs(StoreIO.hadoopConf, store)
-    val meta = ZarrIO.Meta(Array(4L, 4L), Array(2, 2), "<i8", "zlib", 0L, ".")
+    val layout = ZarrLayout(
+      ZarrIO.Meta(Array(4L, 4L), Array(2, 2), "<i8", "zlib", 0L, "."), v3 = false)
     val cols = Array("g0", "g1", "p0", "p1", "value")
-    val sw = new ZarrStreamingWrite(store, meta,
+    val sw = new ZarrStreamingWrite(store, layout,
       org.apache.spark.sql.types.StructType.fromDDL(
         "g0 BIGINT, g1 BIGINT, p0 BIGINT, p1 BIGINT, value BIGINT"),
-      None, "q-redeliver")
-    val factory = ZarrStreamingWriterFactory(store, meta, cols,
-      StoreIO.ser(StoreIO.hadoopConf), v3 = false, "q-redeliver")
+      "q-redeliver")
+    val factory = ZarrStreamingWriterFactory(store, layout, cols,
+      StoreIO.ser(StoreIO.hadoopConf), "q-redeliver")
     def stageAndCommit(): Unit = {
       val w = factory.createWriter(0, 0L, 7L)
       for (p0 <- 0 until 2; p1 <- 0 until 2)

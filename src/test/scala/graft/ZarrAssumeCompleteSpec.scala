@@ -72,6 +72,9 @@ class ZarrAssumeCompleteSpec extends AnyFunSuite {
     val grouped = df.groupBy("g0").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(grouped == Map(0L -> 8L, 1L -> 8L))
+    // a bound past Int.MaxValue empties the enumerated box (it must not
+    // wrap around to grid row 0)
+    assert(df.filter(col("g0") >= 4294967296L).count() == 0L)
     assert(CountingFileSystem.lists.get() == 0,
       s"metadata aggregate listed the store " +
         s"(${CountingFileSystem.lists.get()} calls)")

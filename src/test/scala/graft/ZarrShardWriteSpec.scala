@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.rel.RelabelRel
 import graft.sources.StoreIO
-import graft.sources.zarr.ZarrTableProvider
+import graft.sources.ZarrLayout
 
 /** The DSv2 sharded write path (`shards` option): staged inner chunks
   * packed into indexed shard objects by the distributed commit.
@@ -40,7 +40,7 @@ class ZarrShardWriteSpec extends AnyFunSuite {
   test("sharded DSv2 write: object-per-shard layout, same rows back") {
     val dir = TempDirs.create("graft_dsw_shard")
     sharded(px, dir)
-    assert(ZarrTableProvider.shardInfoOf(dir).isDefined)
+    assert(ZarrLayout.of(dir).shard.isDefined)
     // 6x4 inner grid at 2x2 inners per shard -> 3x2 shard objects
     val conf = StoreIO.hadoopConf
     val rows = StoreIO.list(conf, dir + "/c")
@@ -85,7 +85,7 @@ class ZarrShardWriteSpec extends AnyFunSuite {
     val poisoned = px.unionByName(spark.range(1).selectExpr("0L AS g0",
       "0L AS g1", s"${RelabelRel.L}L AS p0", "0L AS p1", "1L AS value"))
     intercept[Exception] { sharded(poisoned, dir) }
-    assert(ZarrTableProvider.shardInfoOf(dir).isDefined)
+    assert(ZarrLayout.of(dir).shard.isDefined)
     assert(nonZero(dir) == before)
   }
 

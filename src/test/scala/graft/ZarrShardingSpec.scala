@@ -145,6 +145,42 @@ class ZarrShardingSpec extends AnyFunSuite {
     assert(msg.contains("CRC32C") && msg.contains("c/1/0"), msg)
   }
 
+  test("a corrupt index entry fails the scan, the pushed count and the limit") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = tmp("zarr3_shard_badentry")
+    // only shard c/0/0's inners, so it is the one object every path meets
+    // first; a CRC-free index lets the bad entry through to the entry rule
+    val kept = allTiles.filter(t => t.loc(0) < 2 && t.loc(1) < 2)
+    Zarr3IO.writeSharded(spark.createDataset(kept), spec, Array(4, 4),
+      dir, "uint16", gzip = false, indexCrc = false)
+    val shard = new java.io.File(dir, "c/0/0")
+    val bytes = java.nio.file.Files.readAllBytes(shard.toPath)
+    val idxOff = bytes.length - 4 * 16
+    // inner (0,0) is slot 0: offset -2, a valid length
+    java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putLong(idxOff, -2L)
+    graft.sources.StoreIO.write(graft.sources.StoreIO.hadoopConf,
+      shard.getAbsolutePath, bytes)
+    def failsNamingEntry(what: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(m => m.contains("c/0/0") &&
+        m.contains("inner chunk 0,0") && m.contains("corrupt index entry")),
+        s"$what: ${msgs(e).mkString(" | ")}")
+    }
+    val df = spark.read.format("zarr").load(dir)
+    failsNamingEntry("full scan")(df.collect())
+    failsNamingEntry("tile read")(Zarr3IO.read(spark, dir).collect())
+    val cnt = df.agg(count(lit(1)))
+    failsNamingEntry("pushed count") {
+      assert(cnt.queryExecution.executedPlan.toString.contains("ZarrAggScan"))
+      cnt.collect()
+    }
+    failsNamingEntry("limit(1)")(df.select("g0", "g1").limit(1).collect())
+  }
+
   test("DSv2 scan over a sharded store: inner granularity, absent skipped") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

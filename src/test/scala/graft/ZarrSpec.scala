@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.ZarrIO
+import graft.sources.{Zarr3IO, ZarrIO, ZarrLayout}
 import graft.tiles.{GridSpec, Tile}
 
 /** Zarr v2 source/sink.
@@ -116,24 +116,36 @@ class ZarrSpec extends AnyFunSuite {
     val tiles = (for (gy <- 0 until 2; gx <- 0 until 2) yield
       Tile(Array(gy, gx), Array(2, 2), Array(3, 4),
         Array.fill(12)((gy * 2 + gx + 1).toLong))).toSeq
-    val dir = TempDirs.create("zarr_sparse")
-    ZarrIO.write(spark.createDataset(tiles), spec, dir, "<i4", "")
-    // punch a hole: delete chunk (1,0) so the store is genuinely sparse
-    val sep = ZarrIO.readMeta(dir).separator
-    val hole = new java.io.File(dir, Seq(1, 0).mkString(sep))
-    assert(hole.delete(), s"could not delete $hole")
+    // every unsharded layout: v2 with '.' and '/' keys, and v3 ('c/1/0')
+    val stores: Seq[(String, String => Unit)] = Seq(
+      "v2 '.'" -> (dir => ZarrIO.write(spark.createDataset(tiles), spec, dir, "<i4", "")),
+      "v2 '/'" -> (dir => ZarrLayout(ZarrIO.Meta(spec.imageShape, spec.chunk,
+        "<i4", "", 0L, "/"), v3 = false).write(spark.createDataset(tiles), dir)),
+      "v3" -> (dir => Zarr3IO.write(spark.createDataset(tiles), spec, dir,
+        "int32", gzip = false)))
+    for ((name, write) <- stores) {
+      val dir = TempDirs.create("zarr_sparse")
+      write(dir)
+      // punch a hole: delete chunk (1,0) so the store is genuinely sparse
+      val hole = new java.io.File(ZarrLayout.of(dir).path(dir, Array(1, 0)))
+      assert(hole.delete(), s"$name: could not delete $hole")
 
-    val dense = ZarrIO.read(spark, dir).collect()
-    assert(dense.length == 4, "dense frame keeps the nominal grid")
-    val filled = dense.find(_.loc.toSeq == Seq(1, 0)).get
-    assert(filled.data.forall(_ == 0L), "absent chunk reads as fill_value")
+      val dense = ZarrIO.read(spark, dir).collect()
+      assert(dense.length == 4, s"$name: dense frame keeps the nominal grid")
+      val filled = dense.find(_.loc.toSeq == Seq(1, 0)).get
+      assert(filled.data.forall(_ == 0L), s"$name: absent chunk reads as fill_value")
+      dense.filter(_.loc.toSeq != Seq(1, 0)).foreach { t =>
+        val orig = tiles.find(_.loc.toSeq == t.loc.toSeq).get
+        assert(t.data.toSeq == orig.data.toSeq, s"$name ${t.loc.toSeq}")
+      }
 
-    val present = ZarrIO.readPresent(spark, dir).collect()
-    assert(present.length == 3, "sparse read is O(present chunks)")
-    assert(!present.exists(_.loc.toSeq == Seq(1, 0)))
-    present.foreach { t =>
-      val orig = tiles.find(_.loc.toSeq == t.loc.toSeq).get
-      assert(t.data.toSeq == orig.data.toSeq)
+      val present = ZarrIO.readPresent(spark, dir).collect()
+      assert(present.length == 3, s"$name: sparse read is O(present chunks)")
+      assert(!present.exists(_.loc.toSeq == Seq(1, 0)))
+      present.foreach { t =>
+        val orig = tiles.find(_.loc.toSeq == t.loc.toSeq).get
+        assert(t.data.toSeq == orig.data.toSeq, s"$name ${t.loc.toSeq}")
+      }
     }
   }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.sources.Zarr3IO
-import graft.sources.zarr.ZarrTableProvider
+import graft.sources.ZarrLayout
 
 /** The DSv2 write path with zarrFormat=3: zarr.json metadata, c/-keys,
   * bytes+gzip codecs — readable by BOTH the DSv2 scan (autodetect) and the
@@ -30,7 +30,7 @@ class ZarrV3WriteSpec extends AnyFunSuite {
       .option("zarrFormat", "3")
       .mode("overwrite").save(dir)
     // the store IS v3 on disk
-    assert(ZarrTableProvider.isV3(dir))
+    assert(ZarrLayout.isV3(dir))
     assert(new java.io.File(dir, "zarr.json").isFile)
     assert(new java.io.File(dir, "c/0/1").isFile, "c/-keys missing")
     // DSv2 scan autodetects
@@ -56,7 +56,7 @@ class ZarrV3WriteSpec extends AnyFunSuite {
       .mode("append").save(dir)
     val n = spark.read.format("zarr").load(dir).count()
     assert(n == 64)
-    assert(ZarrTableProvider.isV3(dir))
+    assert(ZarrLayout.isV3(dir))
   }
 
   test("append changing the store layout is rejected up front") {

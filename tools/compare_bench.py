@@ -56,7 +56,9 @@ Self-check (the r16 verdicts this tool must reproduce):
   git show b57115d:bench_full.json > /tmp/r14.json   # r14 ruler, 272.2 s
   git show 19572f4:bench_full.json > /tmp/r16.json   # r16 ruler, 307.7 s
   git show f9f74be:bench_full.json > /tmp/r16drv.json  # driver run, 469.8 s
-  compare_bench.py /tmp/r14.json /tmp/r16.json bench_full_run{2,3}.json
+  git show 93eeb03:bench_full_run2.json > /tmp/run2.json
+  git show 93eeb03:bench_full_run3.json > /tmp/run3.json
+  compare_bench.py /tmp/r14.json /tmp/r16.json /tmp/run2.json /tmp/run3.json
     -> HELD (r16: "the suite held; no demonstrable regression")
   compare_bench.py /tmp/r16.json /tmp/r16drv.json
     -> NOT-ADJUDICABLE: candidate CONTAMINATED (calib drift 2.35x, ...)
