@@ -53,7 +53,12 @@ class Annotate3dSpec extends AnyFunSuite {
 
   test("dataset-level 3D annotate over the 3D golden remove output") {
     import spark.implicits._
-    val in = Goldens.tiles(spark, "rem_3d", Goldens.grid3d)
+    // the O3 output of a seeded 15x10x15 volume in 5^3 chunks, the rem_3d
+    // geometry (3x2x3 grid, overlap 2, threshold 0.125)
+    val rem = StageTables.rem3d
+    assert(rem.length == 18 && rem.count(_.data.exists(_ != 0L)) > 1,
+      "the remove output must hold labels in more than one tile")
+    val in = spark.createDataset(rem)
     val got = Annotate.annotateLabeledTiles3d(in, Array(0, 2, 2)).collect()
     assert(got.nonEmpty)
     // plane ids must be consistent per tile: within [zOff, zOff + dz)

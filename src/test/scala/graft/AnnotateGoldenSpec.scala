@@ -2,14 +2,24 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.Dataset
 import graft.geojson.Annotate
 import graft.ops.{CCLSegmentation, Relabel}
 import graft.tiles.GridSpec
 
-/** O5/O6 golden tests against `ann_2d.npz` (converted to canonical JSON in
-  * test resources): contour tracing must reproduce OpenCV point order
-  * bit-for-bit; compositions `labels2geojson` / `image2geojson` must land on
-  * the same annotations from core-sized and raw inputs respectively.
+/** O5/O6 tests against `ann_2d.npz` (converted to canonical JSON in test
+  * resources, `ann_2d.json`).
+  *
+  * Parity tests (the four "... matches ann_2d"): contour tracing must
+  * reproduce OpenCV point order bit-for-bit; compositions `labels2geojson` /
+  * `image2geojson` must land on the same annotations from core-sized and
+  * raw inputs respectively. They read the reference's npz corpus through
+  * [[Goldens]].
+  *
+  * Sink tests (zip, annotation dir, Hadoop scheme): `zipAnnotations` and
+  * `writeAnnotationDir` must write one `{loc}.geojson` per non-null row
+  * with its body. Their input is `ann_2d.json` itself as a
+  * `Dataset[TileAnnotation]`, so they need no corpus.
   */
 class AnnotateGoldenSpec extends AnyFunSuite {
 
@@ -26,6 +36,18 @@ class AnnotateGoldenSpec extends AnyFunSuite {
     node.properties().asScala.map { e =>
       e.getKey -> (if (e.getValue.isNull) null else e.getValue.toString)
     }.toMap
+  }
+
+  /** `ann_2d.json` as the sink tests' input: one row per tile, `null` for
+    * the empty tiles, spread over several partitions so the executor-side
+    * writers and `toLocalIterator` run over several tasks.
+    */
+  private def goldenAnnotations: Dataset[Annotate.TileAnnotation] = {
+    import spark.implicits._
+    val rows = golden.toSeq.sortBy(_._1).map { case (k, v) => Annotate.TileAnnotation(k, v) }
+    assert(rows.count(_.geojson != null) == 9 && rows.count(_.geojson == null) == 3,
+      "ann_2d.json must hold 9 annotated and 3 empty tiles")
+    spark.createDataset(spark.sparkContext.parallelize(rows, 4))
   }
 
   private def assertMatchesGolden(got: Seq[Annotate.TileAnnotation]): Unit = {
@@ -70,8 +92,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
   }
 
   test("zip sink writes one member per non-empty tile") {
-    val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
-    val ann = Annotate.annotateLabeledTiles(in, ov)
+    val ann = goldenAnnotations
     val out = java.nio.file.Paths.get(TempDirs.create("graft-zip"))
       .resolve("annotations.zip")
     Annotate.zipAnnotations(ann, out)
@@ -98,8 +119,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.cfs.impl", "graft.CountingFileSystem")
     val backing = java.nio.file.Paths.get(TempDirs.create("graft-anncfs"))
-    val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
-    val ann = Annotate.annotateLabeledTiles(in, ov)
+    val ann = goldenAnnotations
     val n = Annotate.writeAnnotationDir(ann, "cfs:" + backing.toAbsolutePath)
     val files = backing.toFile.listFiles()
       .map(_.getName).filterNot(_.endsWith(".crc")).toSet
@@ -118,8 +138,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.cfs.impl", "graft.CountingFileSystem")
     val backing = java.nio.file.Paths.get(TempDirs.create("graft-zipcfs"))
-    val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
-    val ann = Annotate.annotateLabeledTiles(in, ov)
+    val ann = goldenAnnotations
     Annotate.zipAnnotations(ann, "cfs:" + backing.resolve("a.zip"))
     val zf = new java.util.zip.ZipFile(backing.resolve("a.zip").toFile)
     try {
@@ -139,8 +158,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
   }
 
   test("executor-side annotation dir matches the zip members") {
-    val in = Goldens.tiles(spark, "rem_2d", Goldens.grid2d)
-    val ann = Annotate.annotateLabeledTiles(in, ov)
+    val ann = goldenAnnotations
     val dir = java.nio.file.Paths.get(TempDirs.create("graft-anndir"))
     val n = Annotate.writeAnnotationDir(ann, dir)
     // hidden `.crc` siblings are local-ChecksumFileSystem metadata

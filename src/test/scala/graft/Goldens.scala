@@ -6,6 +6,13 @@ import graft.tiles.Tile
 /** Golden fixture loading: each npz stores one array per chunk keyed
   * "y-x" / "z-y-x" (`tests/fixtures.py:31-39`). We convert them into tile
   * tables directly.
+  *
+  * Only reference-parity tests read the corpus: RelabelGoldenSpec's stage-pair
+  * and end-to-end comparisons (all but "distributed sort_label_indices
+  * matches the broadcast variant") and AnnotateGoldenSpec's four "... matches
+  * ann_2d" tests. Tests that need a stage's output only as input build it in
+  * the repo with [[StageTables]]. Without the corpus each parity test fails
+  * with one "golden corpus missing" line; none is skipped.
   */
 object Goldens {
   /** The reference's golden `*.npz` samples (its `tests/samples`):

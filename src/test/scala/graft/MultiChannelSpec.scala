@@ -14,8 +14,9 @@ class MultiChannelSpec extends AnyFunSuite {
 
   test("two class channels ride remove+merge consistently") {
     import spark.implicits._
-    // reuse the rem_2d golden labels; derive two deterministic channels
-    val base = Goldens.localTiles("seg_2d", Goldens.grid2d)
+    // an O2 table in the seg_2d geometry (4x3 grid); derive two
+    // deterministic channels from its labels
+    val base = StageTables.seg2d
     val withCh = base.map { t =>
       val ch1 = t.data.map(v => if (v != 0L) 1L + v % 2 else 0L)
       val ch2 = t.data.map(v => if (v != 0L) 10L + v % 3 else 0L)
@@ -35,6 +36,8 @@ class MultiChannelSpec extends AnyFunSuite {
     // every surviving pixel's channels must encode the OWNING label's
     // pre-offset id: ch1 = 1 + label%2, ch2 = 10 + label%3
     val offsetUnit = 2147483648L / 12 + 2147483648L
+    assert(merged.flatMap(_.data.filter(_ != 0L).map(_ % offsetUnit % 2)).toSet == Set(0L, 1L),
+      "the survivors must show both label % 2 values")
     for (t <- merged) {
       assert(t.classes.length == 2)
       t.data.indices.foreach { i =>

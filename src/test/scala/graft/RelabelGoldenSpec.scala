@@ -99,8 +99,12 @@ class RelabelGoldenSpec extends AnyFunSuite {
   }
 
   test("distributed sort_label_indices matches the broadcast variant") {
-    for ((file, grid) <- Seq(("trim_2d", Goldens.grid2d), ("trim_3d", Goldens.grid3d))) {
-      val in = Goldens.tiles(spark, file, grid)
+    // image2labels of the in-repo 2-D image and 3-D volume (trim_2d/trim_3d geometry)
+    for ((name, tiles) <- Seq(("2d", StageTables.trim2d), ("3d", StageTables.trim3d))) {
+      val labels = tiles.flatMap(_.data.filter(_ != 0L)).distinct.sorted
+      assert(labels.length > 1 && labels != (1L to labels.length.toLong),
+        s"$name: the O10 input must hold several labels that are not already 1..K")
+      val in = spark.createDataset(tiles)(spark.implicits.newProductEncoder)
       val viaBroadcast = Relabel.sortLabelIndices(in).collect().toSeq
       val viaDistributed = Relabel.sortLabelIndicesDistributed(in).collect().toSeq
       Goldens.assertSameTiles(viaDistributed, viaBroadcast)

@@ -10,7 +10,12 @@ class TileIOSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
 
   test("tile table parquet round-trip (flat and coarse-partitioned)") {
-    val in = Goldens.localTiles("rem_2d", Goldens.grid2d, withClasses = true)
+    // an O3 table in the rem_2d geometry, with its nonzero-mask classes channel
+    val in = StageTables.rem2d(withClasses = true)
+    assert(in.exists(_.data.exists(_ >= (1L << 32))),
+      "the table must hold a label >= 2^32, so parquet carries full int64 values")
+    assert(in.exists(_.classes.exists(_.exists(_ != 0L))),
+      "the table must hold a nonzero classes value")
     val ds = spark.createDataset(in)(spark.implicits.newProductEncoder)
     for (coarse <- Seq(0, 4)) {
       val dir = TempDirs.create("tileio")
@@ -21,7 +26,9 @@ class TileIOSpec extends AnyFunSuite {
   }
 
   test("readBox prunes to the requested grid range") {
-    val in = Goldens.localTiles("rem_2d", Goldens.grid2d)
+    val in = StageTables.rem2d()
+    assert(in.length == 12 && in.forall(_.grid.toSeq == Seq(4, 3)),
+      "readBox needs the full 4x3 grid of tiles")
     val ds = spark.createDataset(in)(spark.implicits.newProductEncoder)
     val dir = TempDirs.create("tileio")
     TileIO.write(ds, dir, coarsePartitions = 3)
