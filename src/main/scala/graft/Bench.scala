@@ -29,7 +29,7 @@ object Bench {
       catch { case _: Exception => -1.0 }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // session + calib + loadavg all come from BenchProtocol — ONE code path
-    // shared with the adjudication probe (tools/TimeQueries), so the ruler
+    // shared with the re-time probe (graft.tools.TimeQueries), so the ruler
     // cannot drift between the artifact and a re-time
     val (cpus, cpusN) = BenchProtocol.cpusEnv()
     val spark = BenchProtocol.session(cpus, cpusN)

@@ -4,13 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** THE single code path for everything the benchmark protocol depends on:
   * the session shape, the co-tenant load probe, and the fixed-shape
-  * calibration micro-run. [[Bench]] (the per-round artifact) and
-  * [[graft.tools.TimeQueries]] (the ad-hoc adjudication probe) both build
-  * on this object, so the ruler can never drift between the two paths —
-  * before round 14 each tool carried a hand-maintained copy, and the probe
-  * path had already drifted once (it never installed [[plans.DotProductFusion]],
-  * so its timed plans were not the artifact's plans for the dot-product
-  * gates).
+  * calibration micro-run. [[Bench]] (the per-round artifact) and the
+  * test-scope re-time probe `graft.tools.TimeQueries` both build on this
+  * object, so a re-time runs the artifact's plans (with
+  * [[plans.DotProductFusion]] installed) under the artifact's session.
   */
 object BenchProtocol {
 

@@ -323,7 +323,8 @@ object Kernels {
       val r = rank.get(tile.data(i))
       // fail loudly instead of an opaque unboxing NPE
       if (r == null) throw new IllegalStateException(
-        s"label ${tile.data(i)} has no rank: $RankMissCause")
+        s"label ${tile.data(i)} of tile ${tile.loc.mkString("(", ",", ")")} " +
+          s"has no rank: $RankMissCause")
       out(i) = r
       i += 1
     }

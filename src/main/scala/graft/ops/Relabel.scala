@@ -238,23 +238,12 @@ object Relabel {
       }
     graft.Caching.releaseAfterAction(spark.createDataset(pinned)
       .groupByKey(_.linearIndex)
-      .cogroup(perTile.groupByKey(_._1)) { (lin, ts, rs) =>
+      .cogroup(perTile.groupByKey(_._1)) { (_, ts, rs) =>
         val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
         rs.foreach(_._2.foreach { case (l, r) => rank.put(l, r) })
         // remap every tile in the group (duplicated locations are remapped,
-        // not dropped) and fail loudly on rank misses rather than NPE-ing
-        ts.map { t =>
-          val checked = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-          t.data.foreach { l =>
-            if (!checked.containsKey(l)) {
-              val r = rank.get(l)
-              require(r != null,
-                s"label $l of tile $lin has no rank: ${Kernels.RankMissCause}")
-              checked.put(l, r)
-            }
-          }
-          Kernels.sortRemap(t, checked)
-        }
+        // not dropped)
+        ts.map(t => Kernels.sortRemap(t, rank))
       }, tileLabels)
   }
 

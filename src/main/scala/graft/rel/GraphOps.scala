@@ -24,8 +24,7 @@ object GraphOps {
     * than the exact same min-id labeling computed in milliseconds on the
     * driver (measured: dd_phash_clusters' 537k-edge mirror labels in
     * ~0.9 s vs 3.7 s through the fixpoint). Set 0 to force the
-    * distributed path (the ComponentsScale probe does, so the fixpoint
-    * shapes stay measurable); above the cap the Tungsten fixpoint runs
+    * distributed path; above the cap the Tungsten fixpoint runs
     * unchanged — the billions-of-pairs 100 TB path.
     */
   val DriverCapKey = "graft.graph.componentsDriverMaxEdges"
@@ -152,18 +151,14 @@ object GraphOps {
     * both lineage and stats; blocks are reclaimed by the ContextCleaner as
     * references drop.
     *
-    * Round shape (round 5 tightened it from 5 joins to 3 + one agg): the
-    * PRE-ROUND component rides along as `oc` so the change count needs no
-    * extra comparison join, and the neighbor-min pass is one inner
-    * edges-join producing messages union'd with the self rows into a
-    * single min-aggregate — two fewer shuffles per round than the r4
-    * formulation, with identical semantics. (A co-partitioned RDD fixpoint
-    * — the GraphX shape, edges shuffled exactly once — was measured on the
-    * differential probe `tools/ComponentsScale` and LOST ~1.5x to this
-    * Tungsten formulation at harness scale: RDD tuple shuffles pay Java
-    * serialization while every exchange here stays in Tungsten binary.
-    * The probe keeps both shapes honest if the tradeoff shifts at cluster
-    * scale.)
+    * Round shape (3 joins + one agg): the PRE-ROUND component rides along
+    * as `oc` so the change count needs no extra comparison join, and the
+    * neighbor-min pass is one inner edges-join producing messages union'd
+    * with the self rows into a single min-aggregate. (A co-partitioned RDD
+    * fixpoint — the GraphX shape, edges shuffled exactly once — LOST ~1.5x
+    * to this Tungsten formulation at harness scale: RDD tuple shuffles pay
+    * Java serialization while every exchange here stays in Tungsten
+    * binary; COVERAGE.md, "dd_components round work".)
     *
     * Only EDGE-TOUCHED vertices enter the fixpoint: an isolated vertex is
     * its own component and can never change, so at corpus scale (where the

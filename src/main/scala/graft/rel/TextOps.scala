@@ -136,8 +136,8 @@ object TextOps {
 
   /** The band self-join over a minima relation; caches `mins` (read by all
     * four band values on both join sides) for the action's lifetime.
-    * `private[graft]`: tools/ShuffleScale drives THIS code path (not a
-    * replica) at synthetic 1x/4x/16x corpus sizes, so the measured scaling
+    * `private[graft]`: graft.tools.ShuffleScale drives THIS code path (not
+    * a replica) at synthetic 1x/4x/16x corpus sizes, so the measured scaling
     * exponent and plan shape are the production gate's own.
     */
   private[graft] def candFromMins(mins: DataFrame): DataFrame = {
@@ -159,11 +159,10 @@ object TextOps {
     * all-pairs product). Returns (truth, shd): callers must hand `shd`
     * to `Caching.releaseAfterAction` with their terminal frame (the
     * distinct shingle relation feeds the pair join AND both size
-    * lookups). `private[graft]`: the round-14 adjudication probe
-    * (tools/LshRecallProfile) times this subquery through the gate's own
-    * code path to name the gate's cost center.
+    * lookups). Its share of the gate's time is in SCALE.md,
+    * "dd_lsh_recall — slowest-batch-gate cost attribution".
     */
-  private[graft] def lshTruthPairs(s: SparkSession, d: String)
+  private def lshTruthPairs(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val shd = shinglesDf(nearCorpusDf(s, d)).distinct()
     val dsh = shd.select(col("doc_id"), xxhash64(col("shingle")).as("hs"))
@@ -626,8 +625,8 @@ object TextOps {
     // one fused pass over the UTF-8 bytes, NO token-array materialization
     // (the split/filter form allocates every token slice just to count
     // them — the dominant cost of a token-budget scan at corpus scale;
-    // OpsScale measures the delta). Non-empty-token semantics, so runs of
-    // spaces count nothing.
+    // COVERAGE.md, "Round-8 wave 5", has the A/B). Non-empty-token
+    // semantics, so runs of spaces count nothing.
     Q("tx_tokens_native", (s, d) => {
       tbl(s, d, "documents")
         .select(col("doc_id"),

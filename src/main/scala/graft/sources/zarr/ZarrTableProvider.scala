@@ -53,24 +53,31 @@ class ZarrTableProvider extends TableProvider with DataSourceRegister {
     p
   }
 
-  private def dimsOf(p: String, options: util.Map[String, String]): Int =
-    if (ZarrLayout.exists(p)) ZarrLayout.of(p).dims
-    else {
-      // a write to a fresh store: dims come from the mandatory option
-      val sh = options.get("shape")
-      require(sh != null,
-        s"no store at $p and no 'shape' option — nothing to infer from")
-      sh.split(",").length
-    }
+  // Spark builds one provider per load/save and asks it for the schema,
+  // then the table: both come from this one table, so the store metadata
+  // is read once per query
+  private var table: ZarrTable = _
+
+  private def tableFor(options: util.Map[String, String]): ZarrTable = {
+    val p = path(options)
+    if (table == null || table.dir != p)
+      table =
+        if (ZarrLayout.exists(p)) new ZarrTable(p, ZarrLayout.of(p))
+        else {
+          // a write to a fresh store: dims come from the mandatory option
+          val sh = options.get("shape")
+          require(sh != null,
+            s"no store at $p and no 'shape' option — nothing to infer from")
+          new ZarrTable(p, None, sh.split(",").length)
+        }
+    table
+  }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ZarrTableProvider.schemaFor(dimsOf(path(options), options))
+    tableFor(options).schema()
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val p = path(properties)
-    new ZarrTable(p, dimsOf(p, properties))
-  }
+      properties: util.Map[String, String]): Table = tableFor(properties)
 }
 
 object ZarrTableProvider {
@@ -92,12 +99,14 @@ object ZarrTableProvider {
   * treat a zarr relation as a file-store leaf with a root path — a query
   * mixing a path-scoped parquet layout with a zarr scan must see the zarr
   * root as a FOREIGN store and decline, not overlook it.
+  *
+  * `store` is the layout of the store at `dir`, or None before a write to a
+  * fresh directory, whose `dims` come from the write's `shape` option.
   */
-final class ZarrTable(val dir: String, dims: Int) extends Table
-    with SupportsRead with SupportsWrite {
-  // reads need the full store metadata; writes to a fresh dir must not
-  // touch it (dims alone drives the schema)
-  private lazy val layout = ZarrLayout.of(dir)
+final class ZarrTable(val dir: String, store: Option[ZarrLayout], dims: Int)
+    extends Table with SupportsRead with SupportsWrite {
+  def this(dir: String, layout: ZarrLayout) =
+    this(dir, Some(layout), layout.dims)
   override def name(): String = s"zarr:$dir"
   override def schema(): StructType = ZarrTableProvider.schemaFor(dims)
   override def capabilities(): util.Set[TableCapability] =
@@ -105,11 +114,12 @@ final class ZarrTable(val dir: String, dims: Int) extends Table
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(dir, layout, options.getBoolean("vectorized", true),
+    new ZarrScanBuilder(dir, store.getOrElse(ZarrLayout.of(dir)),
+      options.getBoolean("vectorized", true),
       options.getInt("maxChunksPerTrigger", 0),
       options.getBoolean("assumeComplete", false))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new ZarrWriteBuilder(dir, info)
+    new ZarrWriteBuilder(dir, info, store)
 }
 
 final class ZarrScanBuilder(dir: String, layout: ZarrLayout,
@@ -815,35 +825,33 @@ final case class ZarrReaderFactory(dir: String, layout: ZarrLayout,
   *    LAST — a failed or aborted write leaves the old store fully intact,
   *    and readers never observe a store without metadata.
   */
-final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo)
-    extends WriteBuilder with SupportsTruncate {
+final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo,
+    store: Option[ZarrLayout]) extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = {
     val o = info.options
-    val storeExists = ZarrLayout.exists(dir)
+    val storeExists = store.isDefined
     // layout options are mandatory for a fresh store; a write into an
     // EXISTING store may omit them and inherit the store's own metadata.
     // lazy: forced only when inheritance or append validation actually
-    // needs it — an OVERWRITE with full layout options never reads the
-    // store's metadata (extra RTTs on an object store), and in particular
-    // can replace a SHARDED store, which is exactly what the sharded
-    // error message below advertises.
+    // needs it, so an OVERWRITE with full layout options can replace a
+    // SHARDED store, which is exactly what the sharded error message
+    // below advertises.
     lazy val existing: Option[ZarrIO.Meta] =
-      if (storeExists) {
+      store.map { old =>
         // the DSv2 writer emits one object per chunk; layout inheritance
         // or append into a SHARDED store would corrupt it (chunk keys are
         // shard keys there). Rewrite sharded stores via
         // Zarr3IO.writeSharded, or overwrite with explicit layout options.
-        val old = ZarrLayout.of(dir)
         require(old.shard.isEmpty,
           s"zarr write to $dir: the existing store is sharded " +
             "(sharding_indexed); appending or inheriting its layout is " +
             "unsupported — use mode(\"overwrite\") with explicit " +
             "shape/chunks/dtype/compressor (and optionally 'shards') " +
             "options to replace it")
-        Some(old.meta)
-      } else None
+        old.meta
+      }
     def inherited(name: String, fromMeta: ZarrIO.Meta => String): String =
       Option(o.get(name)).orElse(existing.map(fromMeta)).getOrElse(
         throw new IllegalArgumentException(
@@ -856,9 +864,7 @@ final class ZarrWriteBuilder(dir: String, info: LogicalWriteInfo)
     // format selection: "2" (default, .zarray + dot keys) or "3"
     // (zarr.json + c/ keys + bytes[+gzip] codec chain). An existing store
     // pins its own format — mixing layouts in one dir is always an error.
-    // Resolved from isV3 alone (one existence probe), NOT from `existing`,
-    // so it never forces the metadata read.
-    lazy val storeV3 = ZarrLayout.isV3(dir)
+    val storeV3 = store.exists(_.v3)
     val v3 = Option(o.get("zarrFormat")).map(_.trim)
       .orElse(if (storeExists) Some(if (storeV3) "3" else "2") else None)
       .getOrElse("2") match {

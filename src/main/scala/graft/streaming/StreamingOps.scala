@@ -542,12 +542,12 @@ object StreamingOps {
     * per-tile oracle: shard assembly, index reads, and shard-granular
     * discovery all sit under the hash gate.
     *
-    * TIMING NOTE (adjudicated, VERDICT r10): at the driver SF this gate
-    * reads ~4x its batch twin `px_zarr3_sharded` — that is the fixed
-    * per-micro-batch floor (offset log + plan + commit per trigger) over
-    * sf0.1's TINY shards, not a scale defect. `tools/StreamAmortizeScale`
-    * measures the ratio falling 11.9x -> 2.3x as shards grow 34 -> 537 MB,
-    * with the one-trigger bound at 1.5-1.7x: at real shard sizes (hundreds
+    * TIMING NOTE: at the driver SF this gate reads ~4x its batch twin
+    * `px_zarr3_sharded` — that is the fixed per-micro-batch floor (offset
+    * log + plan + commit per trigger) over sf0.1's TINY shards, not a
+    * scale defect. The ratio falls 11.9x -> 2.3x as shards grow 34 ->
+    * 537 MB, with the one-trigger bound at 1.5-1.7x (COVERAGE.md,
+    * "Shard-size amortization curve measured"): at real shard sizes (hundreds
     * of MB, the zarr v3 sharding design point) the streaming read is
     * within a sixtieth of a disk-saturated batch scan's envelope. Do not
     * "fix" this by fattening the gate's store — the gate exists to hash

@@ -141,9 +141,52 @@ object StreamingTiles {
     val dims = overlaps.length
     val dirs = Halo.directions(dims)
     val ov = overlaps.clone()
+    collectNeighborhoods(
+      removed.flatMap(t => Halo.shardsOf(t, ov, Halo.receiverWillMerge)),
+      tombstoneTtlMs)(
+      // contributions this receiver will get: itself plus every in-grid
+      // sender whose parity rule ships toward it
+      (loc, grid) => 1 + dirs.count { d =>
+        val sender = Array.tabulate(dims)(a => loc(a) + d(a))
+        Halo.inGrid(loc, d, grid) && Halo.receiverWillMerge(sender, d.map(-_))
+      },
+      (lin, shards) => Halo.assembleMerged(lin, shards, ov))
+  }
 
-    withIngestWatermark(removed
-      .flatMap(t => Halo.shardsOf(t, ov, Halo.receiverWillMerge)))
+  def expandSegmentRemoveStream(
+      tiles: Dataset[Tile],
+      overlaps: Array[Int],
+      segFn: SegmentationFn,
+      threshold: Double,
+      tombstoneTtlMs: Long = DefaultTombstoneTtlMs): Dataset[Tile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    val dirs = Halo.directions(overlaps.length)
+    val ov = overlaps.clone()
+    collectNeighborhoods(
+      tiles.flatMap(t => Halo.shardsOf(t, ov, (_, _) => true)),
+      tombstoneTtlMs)(
+      (loc, grid) => 1 + dirs.count(d => Halo.inGrid(loc, d, grid)),
+      (_, shards) => {
+        val expanded = Halo.assembleExpanded(shards, ov)
+        val (labels, classes) = segFn.segment(expanded)
+        val segmented = expanded.copy(data = labels, classes = classes)
+        Kernels.removeOverlapped(segmented, ov, threshold)
+      })
+  }
+
+  /** The stateful receiver both stages share: buffer each receiver's
+    * shards, deduped on the sender's relative direction `rd`, until
+    * `expected(loc, grid)` have arrived; then emit `complete(lin, shards)`
+    * once and keep a tombstone for `tombstoneTtlMs`.
+    */
+  private def collectNeighborhoods(shards: Dataset[Halo.Shard],
+      tombstoneTtlMs: Long)(
+      expected: (Array[Int], Array[Int]) => Int,
+      complete: (Long, Array[Halo.Shard]) => Tile): Dataset[Tile] = {
+    val spark = shards.sparkSession
+    import spark.implicits._
+    withIngestWatermark(shards)
       .groupByKey(_._1.destLin)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
@@ -159,75 +202,13 @@ object StreamingTiles {
               state.setTimeoutTimestamp(deadline(state, tombstoneTtlMs))
               Iterator.empty
             } else {
-              val merged = (have ++ it).groupBy(_.rd.toSeq).map(_._2.head).toList
-              val loc = merged.head.destLoc
-              val grid = merged.head.grid
-              // contributions this receiver will get: itself plus every
-              // in-grid sender whose parity rule ships toward it
-              val expected = 1 + dirs.count { d =>
-                val sender = Array.tabulate(dims)(a => loc(a) + d(a))
-                Halo.inGrid(loc, d, grid) &&
-                  Halo.receiverWillMerge(sender, d.map(-_))
-              }
-              if (merged.size >= expected) {
-                state.update((true, Nil))
-                state.setTimeoutTimestamp(deadline(state, tombstoneTtlMs))
-                Iterator.single(Halo.assembleMerged(lin, merged.toArray, ov))
-              } else {
-                // pending buffers survive 10x the tombstone TTL (re-armed on
-                // every shard): abandoned post-expiry partial redeliveries
-                // must not hold pixel state forever
-                state.update((false, merged))
-                state.setTimeoutTimestamp(
-                  deadline(state, tombstoneTtlMs * PendingTtlFactor))
-                Iterator.empty
-              }
-            }
-          }
-        })
-  }
-
-  def expandSegmentRemoveStream(
-      tiles: Dataset[Tile],
-      overlaps: Array[Int],
-      segFn: SegmentationFn,
-      threshold: Double,
-      tombstoneTtlMs: Long = DefaultTombstoneTtlMs): Dataset[Tile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    val dims = overlaps.length
-    val dirs = Halo.directions(dims)
-    val ov = overlaps.clone()
-
-    withIngestWatermark(tiles
-      .flatMap(t => Halo.shardsOf(t, ov, (_, _) => true)))
-      .groupByKey(_._1.destLin)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        (_: Long, rows: Iterator[(Halo.Shard, java.sql.Timestamp)],
-         state: GroupState[ShardState]) => {
-          val it = rows.map(_._1)
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val (done, have) = state.getOption.getOrElse((false, Nil))
-            if (done) { // redelivery after completion: suppress, extend TTL
-              state.setTimeoutTimestamp(deadline(state, tombstoneTtlMs))
-              Iterator.empty
-            } else {
               val merged = (have ++ it)
                 .groupBy(_.rd.toSeq).map(_._2.head).toList // at-least-once dedup
-              val loc = merged.head.destLoc
-              val grid = merged.head.grid
-              val expected = 1 + dirs.count(d => Halo.inGrid(loc, d, grid))
-              if (merged.size >= expected) {
+              if (merged.size >= expected(merged.head.destLoc, merged.head.grid)) {
                 // tombstone: emit exactly once (within the TTL window)
                 state.update((true, Nil))
                 state.setTimeoutTimestamp(deadline(state, tombstoneTtlMs))
-                val expanded = Halo.assembleExpanded(merged.toArray, ov)
-                val (labels, classes) = segFn.segment(expanded)
-                val segmented = expanded.copy(data = labels, classes = classes)
-                Iterator.single(
-                  Kernels.removeOverlapped(segmented, ov, threshold))
+                Iterator.single(complete(lin, merged.toArray))
               } else {
                 // pending buffers survive 10x the tombstone TTL (re-armed on
                 // every shard): abandoned post-expiry partial redeliveries

@@ -22,6 +22,7 @@ class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.opens.incrementAndGet()
+    CountingFileSystem.bump(CountingFileSystem.opensByFile, f.toUri.getPath, 1)
     val in = super.open(f, bufferSize)
     new FSDataInputStream(
       new CountingFileSystem.CountingStream(in, f.toUri.getPath))
@@ -36,13 +37,16 @@ class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 object CountingFileSystem {
   val opens = new java.util.concurrent.atomic.AtomicLong(0)
   val lists = new java.util.concurrent.atomic.AtomicLong(0)
+  private val opensByFile =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
   private val readsByFile =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
   private val bytesByFile =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
   def reset(): Unit = {
-    opens.set(0); lists.set(0); readsByFile.clear(); bytesByFile.clear()
+    opens.set(0); lists.set(0)
+    opensByFile.clear(); readsByFile.clear(); bytesByFile.clear()
   }
 
   private def bump(m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong],
@@ -50,19 +54,21 @@ object CountingFileSystem {
     m.computeIfAbsent(path,
       _ => new java.util.concurrent.atomic.AtomicLong(0)).addAndGet(n)
 
-  /** Ranged reads against files whose path satisfies `pred`. */
-  def rangedReads(pred: String => Boolean): Long = {
+  private def total(m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong],
+      pred: String => Boolean): Long = {
     var n = 0L
-    readsByFile.forEach((p, c) => if (pred(p)) n += c.get())
+    m.forEach((p, c) => if (pred(p)) n += c.get())
     n
   }
 
+  /** `open` calls on files whose path satisfies `pred`. */
+  def opensOf(pred: String => Boolean): Long = total(opensByFile, pred)
+
+  /** Ranged reads against files whose path satisfies `pred`. */
+  def rangedReads(pred: String => Boolean): Long = total(readsByFile, pred)
+
   /** Bytes moved by ranged reads against files satisfying `pred`. */
-  def rangedBytes(pred: String => Boolean): Long = {
-    var n = 0L
-    bytesByFile.forEach((p, c) => if (pred(p)) n += c.get())
-    n
-  }
+  def rangedBytes(pred: String => Boolean): Long = total(bytesByFile, pred)
 
   /** Wraps the underlying stream, counting positioned (ranged) reads —
     * `FSDataInputStream.readFully(pos, buf)` dispatches to the wrapped

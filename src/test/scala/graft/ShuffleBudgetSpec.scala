@@ -1,13 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Nd
 import graft.ops.{CCLSegmentation, Relabel}
 import graft.tiles.GridSpec
+import graft.tools.TaskMetricSum
 
 /** Shuffle-volume regression guards: the scale arguments in the query
   * docstrings ("only margins move", "communication is d² per partition",
@@ -22,13 +21,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTest.session
   private val sf = "/root/testdata/sf0.001"
 
-  private val bytes = new AtomicLong(0)
-  private object listener extends SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        bytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
-
   /** Shuffle bytes written while running `action` once. The
     * counter is only meaningful because suites run serially against the
     * shared session (build.sbt `Test / parallelExecution := false`) — a
@@ -36,18 +28,13 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     */
   private def shuffleOf(action: => Any): Long = {
     val sc = spark.sparkContext
-    // deterministic drain: no events from before this measurement linger
-    org.apache.spark.ListenerDrain.drain(sc)
-    sc.addSparkListener(listener)
+    val bytes = new TaskMetricSum(sc, _.shuffleWriteMetrics.bytesWritten)
     try {
-      bytes.set(0)
+      bytes.reset()
       action
-      // block until the bus has dispatched every posted event — a fixed
-      // sleep either truncates the count (slow bus) or wastes wall-clock
-      org.apache.spark.ListenerDrain.drain(sc)
       bytes.get()
     } finally {
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(bytes)
       spark.catalog.clearCache()
     }
   }

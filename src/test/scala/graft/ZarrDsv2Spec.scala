@@ -232,8 +232,8 @@ class ZarrDsv2Spec extends AnyFunSuite {
   test("runtime filters prune chunks at execution time (DPP analogue)") {
     import org.apache.spark.sql.sources.{EqualTo, In}
     // build the scan directly and drive the runtime-filtering contract
-    val meta = ZarrIO.readMeta(dir)
-    val table = new graft.sources.zarr.ZarrTable(dir, meta.dims)
+    val table = new graft.sources.zarr.ZarrTable(dir,
+      graft.sources.ZarrLayout.of(dir))
     val sb = table.newScanBuilder(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Collections.emptyMap()))

@@ -119,6 +119,34 @@ class ZarrSchemeSpec extends AnyFunSuite {
         "repeated per micro-batch")
   }
 
+  test("DSv2 read and inheriting write each open the store metadata once") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = tmpUri("zarr_cfs_meta")
+    // 4x4 image in 2x2 chunks: a v2 store of 4 chunk objects
+    val tiles = for (gy <- 0 until 2; gx <- 0 until 2) yield
+      Tile(Array(gy, gx), Array(2, 2), Array(2, 2),
+        Array.tabulate(4)(i => (gy * 100 + gx * 10 + i).toLong))
+    graft.sources.ZarrIO.write(spark.createDataset(tiles),
+      GridSpec(Array(4L, 4L), Array(2, 2)), dir, "<i8", "")
+    CountingFileSystem.reset()
+    val got = spark.read.format("zarr").load(dir)
+      .agg(sum("value")).collect()(0).getLong(0)
+    assert(got == tiles.map(_.data.sum).sum)
+    val meta = CountingFileSystem.opensOf(_.endsWith("/.zarray"))
+    assert(meta == 1, s"store metadata opened $meta times for one query")
+    assert(CountingFileSystem.opens.get() == 1 + 4,
+      s"${CountingFileSystem.opens.get() - meta} chunk opens for 4 chunks")
+    // a write that takes its layout from the store reads the metadata once
+    CountingFileSystem.reset()
+    spark.range(16).selectExpr("id div 8 AS g0", "(id div 4) % 2 AS g1",
+        "(id div 2) % 2 AS p0", "id % 2 AS p1", "id AS value")
+      .write.format("zarr").mode("overwrite").save(dir)
+    val writeMeta = CountingFileSystem.opensOf(_.endsWith("/.zarray"))
+    assert(writeMeta == 1,
+      s"store metadata opened $writeMeta times for one inheriting overwrite")
+  }
+
   test("DSv2 round-trip write + read through cfs:") {
     val dir = tmpUri("zarr_cfs_write")
     spark.range(16)

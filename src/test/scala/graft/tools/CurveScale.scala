@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Layout-pruning probe: how many BYTES does a 2-D box query actually read
@@ -15,10 +12,10 @@ import org.apache.spark.sql.functions._
   * the task input metrics, so parquet's stats-based skipping shows up
   * directly.
   *
-  * `sbt "runMain graft.tools.CurveScale 4000000 64"` → 4M rows, 64 files per
-  * layout. Expectation at any scale: both curves read a small fraction of
-  * the unsorted bytes, and Hilbert ≤ Morton (tighter envelopes, the
-  * lo_locality gate's measured claim).
+  * `sbt "Test/runMain graft.tools.CurveScale 4000000 64"` → 4M rows, 64
+  * files per layout. Expectation at any scale: both curves read a small
+  * fraction of the unsorted bytes, and Hilbert ≤ Morton (tighter
+  * envelopes, the lo_locality gate's measured claim).
   */
 object CurveScale {
 
@@ -66,13 +63,7 @@ object CurveScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 4000000L
     val files = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Probes.localSession()
     spark.sparkContext.setLogLevel("WARN")
 
     // synthetic 16-bit keys with mild correlation (realistic: co-clustered
@@ -105,21 +96,14 @@ object CurveScale {
     // before the Spark-side filter) — the direct measure of what the
     // min/max statistics pruned; bytesRead at probe scale is dominated by
     // per-file footers and the extra curve column
-    val recs = new AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recs.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val recs = new TaskMetricSum(spark.sparkContext,
+      _.inputMetrics.recordsRead)
 
     // the same 2-D box through each layout's natural predicate
     val (xlo, xhi, ylo, yhi) = (20000L, 24000L, 40000L, 46000L)
     def measure(label: String, q: DataFrame): (String, Long, Long) = {
-      org.apache.spark.ListenerDrainTool.drain(spark.sparkContext)
-      recs.set(0)
+      recs.reset()
       val rows = q.count()
-      org.apache.spark.ListenerDrainTool.drain(spark.sparkContext)
       (label, rows, recs.get())
     }
     val boxFilter = col("x").between(xlo, xhi) && col("y").between(ylo, yhi)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * pushdown (`PushedFilters`/`ReadSchema`), broadcast joins, and
   * whole-stage-codegen spans can be eyeballed.
   *
-  * `sbt "runMain graft.tools.Explain q1_agg q3_dim_join"` (no args = all).
+  * `sbt "Test/runMain graft.tools.Explain q1_agg q3_dim_join"` (no args = all).
   */
 object Explain {
   def main(args: Array[String]): Unit = {

@@ -1,30 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the iterative graph family (HITS, k-core peeling,
   * multi-source BFS): a deterministic synthetic bipartite graph many times
   * the sf0.1 purchase graph, timed per ROUND, because the round constant —
-  * not the join shape — is what survives a 100x scale-up (cf.
-  * ComponentsScale for the components fixpoint). Every round is the same
-  * plan the gated queries run: equi-join of the cached edge relation
-  * against a node-sized relation plus one hash aggregate.
+  * not the join shape — is what survives a 100x scale-up (the components
+  * fixpoint's own A/B is in COVERAGE.md, "dd_components round work").
+  * Every round is the same plan the gated queries run: equi-join of the
+  * cached edge relation against a node-sized relation plus one hash
+  * aggregate.
   *
-  * `sbt "runMain graft.tools.GraphScale 2000000"` -> 2M edges (the sf0.1
-  * purchase graph carries ~300k directed pairs).
+  * `sbt "Test/runMain graft.tools.GraphScale 2000000"` -> 2M edges (the
+  * sf0.1 purchase graph carries ~300k directed pairs).
   */
 object GraphScale {
 
   def main(args: Array[String]): Unit = {
     val nEdges = if (args.nonEmpty) args(0).toLong else 2000000L
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Probes.localSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     // bipartite: ~nEdges/20 left nodes with skewed fan-out to 50k right

@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput smoke for the beyond-reference relational operators at
@@ -11,32 +7,19 @@ import org.apache.spark.sql.functions._
   * and the KMV sketch, each over tens of millions of generated rows on
   * local[32], reporting wall seconds, output rows, and shuffle bytes.
   *
-  * `sbt "runMain graft.tools.OpsScale 20"` -> 20M events, 2M states.
+  * `sbt "Test/runMain graft.tools.OpsScale 20"` -> 20M events, 2M states.
   */
 object OpsScale {
-
-  private val shuffleBytes = new AtomicLong(0)
-
-  private final class ShuffleListener extends SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
 
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toInt else 20
     val nEvents = m * 1000000L
     val nStates = nEvents / 10
     val nUsers = 100000L
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Probes.localSession()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new ShuffleListener)
+    val shuffleBytes = new TaskMetricSum(spark.sparkContext,
+      _.shuffleWriteMetrics.bytesWritten)
 
     // deterministic pseudo-random events: user via multiplicative hash,
     // time scattered over ~nEvents ticks
@@ -51,15 +34,12 @@ object OpsScale {
       .groupBy("user_id", "s_t").agg(max("s_v").as("s_v"))
 
     def probeN(name: String, work: Long)(f: => Long): Unit = {
-      shuffleBytes.set(0)
+      shuffleBytes.reset()
       val t0 = System.nanoTime()
       val rows = f
       val sec = (System.nanoTime() - t0) / 1e9
-      // the listener bus is async: give queued task-end events time to
-      // drain so shuffle bytes are attributed to the probe that caused them
-      Thread.sleep(500)
       println(f"""{"probe":"$name","sec":$sec%.1f,"rows":$rows,""" +
-        f""""shuffleMB":${shuffleBytes.get / 1e6}%.0f,""" +
+        f""""shuffleMB":${shuffleBytes.get() / 1e6}%.0f,""" +
         f""""rowsPerSec":${(work / sec).toLong}}""")
     }
     def probe(name: String)(f: => Long): Unit = probeN(name, nEvents)(f)

@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * the full micro-batch run (their plan properties are pinned by the
   * streaming specs instead).
   *
-  * `sbt "runMain graft.tools.PlanAudit"` — prints violations/drift and a
+  * `sbt "Test/runMain graft.tools.PlanAudit"` — prints violations/drift and a
   * final verdict line; exit 1 on any violation.
   */
 object PlanAudit {

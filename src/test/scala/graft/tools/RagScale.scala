@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput smoke for the round-8 training-set-prep operators at
@@ -13,34 +9,21 @@ import org.apache.spark.sql.functions._
   * rows, and shuffle bytes — the numbers behind the "would this shape hold
   * at 100 TB" claims in COVERAGE.md.
   *
-  * `sbt "runMain graft.tools.RagScale 2"` -> 2M docs / 20M events.
+  * `sbt "Test/runMain graft.tools.RagScale 2"` -> 2M docs / 20M events.
   */
 object RagScale {
-
-  private val shuffleBytes = new AtomicLong(0)
-
-  private final class ShuffleListener extends SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
 
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toInt else 2
     val nDocs = m * 1000000L
     val nEvents = nDocs * 10
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Probes.localSession()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new ShuffleListener)
+    val shuffleBytes = new TaskMetricSum(spark.sparkContext,
+      _.shuffleWriteMetrics.bytesWritten)
 
     def timed(name: String)(rows: => Long): Unit = {
-      shuffleBytes.set(0)
+      shuffleBytes.reset()
       val t0 = System.nanoTime()
       val n = rows
       val sec = (System.nanoTime() - t0) / 1e9

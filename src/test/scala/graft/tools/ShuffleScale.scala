@@ -38,8 +38,8 @@ import graft.tiles.{GridSpec, Tile}
   *    study — exactly the distinction this probe exists to document.)
   *  - Halo: an NxN grid (16/32/64 — the largest is the verdict's
   *    ~64x64-tile grid, 170x the 6x4 golden) of 128x128 tiles carrying
-  *    the ScaleSmoke blob field (radius-5 blobs on a 24-px lattice, so
-  *    objects cross tile borders and both exchanges carry real margins).
+  *    a binary field of radius-5 blobs on a 24-px lattice, so objects
+  *    cross tile borders and both exchanges carry real margins.
   *
   * At the largest size each family's physical plan is asserted: the band
   * join is still a hash equi-join on (band, bandval), the IVF probe join
@@ -48,7 +48,7 @@ import graft.tiles.{GridSpec, Tile}
   * exchanges (SURVEY §3.1's two neighbor exchanges; the reference's only
   * scale datum is `examples/test_relabeling_3D.ipynb` cell 20).
   *
-  * `sbt "runMain graft.tools.ShuffleScale"` (optional arg: base doc/vec
+  * `sbt "Test/runMain graft.tools.ShuffleScale"` (optional arg: base doc/vec
   * count, default 50000).
   */
 object ShuffleScale {
@@ -130,8 +130,8 @@ object ShuffleScale {
   private val haloCs = 128
   private val haloOv = 16
 
-  /** The ScaleSmoke blob field: radius-5 blobs on a 24-px lattice, so
-    * objects cross tile borders and both halo exchanges carry real margins.
+  /** The binary blob field: radius-5 blobs on a 24-px lattice, so objects
+    * cross tile borders and both halo exchanges carry real margins.
     */
   def haloBlob(gy: Int, gx: Int): Array[Long] = {
     val cs = haloCs

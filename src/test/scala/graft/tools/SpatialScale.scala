@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput shape for the spatial joins at synthetic scale: N million
@@ -13,17 +9,9 @@ import org.apache.spark.sql.functions._
   * shuffle bytes for the binned point-in-polygon join, plus the radius
   * join's 3x3 stencil at matched density.
   *
-  * `sbt "runMain graft.tools.SpatialScale 4"` -> 4M points / 0.4M polys.
+  * `sbt "Test/runMain graft.tools.SpatialScale 4"` -> 4M points / 0.4M polys.
   */
 object SpatialScale {
-
-  private val shuffleBytes = new AtomicLong(0)
-
-  private final class ShuffleListener extends SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
 
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toInt else 4
@@ -32,19 +20,14 @@ object SpatialScale {
     // domain scales with sqrt(n): constant density, constant per-cell work
     val domain = math.max(1024L,
       math.round(math.sqrt(nPts.toDouble)) * 8)
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Probes.localSession()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new ShuffleListener)
+    val shuffleBytes = new TaskMetricSum(spark.sparkContext,
+      _.shuffleWriteMetrics.bytesWritten)
     spark.range(0).count() // warm the session
 
     def timed(name: String)(rows: => Long): Unit = {
-      shuffleBytes.set(0)
+      shuffleBytes.reset()
       val t0 = System.nanoTime()
       val n = rows
       val sec = (System.nanoTime() - t0) / 1e9

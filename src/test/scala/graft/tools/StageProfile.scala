@@ -6,7 +6,7 @@ import graft.BenchProtocol
 /** Per-stage profiler for declared gates (guide §1: measure first, decide
   * from stage-level evidence, not wall-clock guesses).
   *
-  * `runMain graft.tools.StageProfile gate [gate ...]` times each gate once
+  * `Test/runMain graft.tools.StageProfile gate [gate ...]` times each gate once
   * through the bench session (BenchProtocol — the artifact's own plans) and
   * prints, per stage: wall span, cumulative task time, shuffle read/write
   * bytes, input bytes, task count, and the first line of the stage name, so

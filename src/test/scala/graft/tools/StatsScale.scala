@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,34 +10,21 @@ import org.apache.spark.sql.functions._
   * wall seconds, output rows, and shuffle bytes behind the "would this
   * hold at 100 TB" claims in COVERAGE.md.
   *
-  * `sbt "runMain graft.tools.StatsScale 2"` -> 20M events / 200k users.
+  * `sbt "Test/runMain graft.tools.StatsScale 2"` -> 20M events / 200k users.
   */
 object StatsScale {
-
-  private val shuffleBytes = new AtomicLong(0)
-
-  private final class ShuffleListener extends SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
 
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toInt else 2
     val nEvents = m * 10000000L
     val nUsers = m * 100000L
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Probes.localSession()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new ShuffleListener)
+    val shuffleBytes = new TaskMetricSum(spark.sparkContext,
+      _.shuffleWriteMetrics.bytesWritten)
 
     def timed(name: String)(rows: => Long): Unit = {
-      shuffleBytes.set(0)
+      shuffleBytes.reset()
       val t0 = System.nanoTime()
       val n = rows
       val sec = (System.nanoTime() - t0) / 1e9

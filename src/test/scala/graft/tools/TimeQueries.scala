@@ -1,6 +1,7 @@
 package graft.tools
 import graft.BenchProtocol
-/** Ad-hoc per-query wall-time probe: `runMain graft.tools.TimeQueries q1_agg ...`
+/** Ad-hoc per-query wall-time probe:
+  * `Test/runMain graft.tools.TimeQueries q1_agg ...`.
   * Session, calib micro-run, and loadavg come from [[graft.BenchProtocol]]
   * — the SAME code path Bench's artifact uses — so the timed plans are the
   * ones the artifact measures and probe numbers can be calib-normalized

@@ -8,7 +8,7 @@ import graft.tiles.{GridSpec, Tile}
 /** Scan-rate probe for the DSv2 zarr source: writes one synthetic store,
   * then times a full-payload aggregate and a coordinate-only count through
   * BOTH read paths (vectorized ColumnarBatch vs row-at-a-time), reporting
-  * cells/s. `sbt "runMain graft.tools.ZarrScanScale 8192"` -> 8192x8192
+  * cells/s. `sbt "Test/runMain graft.tools.ZarrScanScale 8192"` -> 8192x8192
   * cells in 512x512 chunks (256 chunk files, 64M cells).
   */
 object ZarrScanScale {
@@ -17,13 +17,7 @@ object ZarrScanScale {
     val n = if (args.nonEmpty) args(0).toInt else 8192
     val chunk = 512
     val g = n / chunk
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Probes.localSession()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 
