@@ -194,8 +194,13 @@ object Bench {
     println(full)
     // …while the LAST line is a short, always-complete JSON summary: a tail
     // capture that truncates the map line still ends with one parseable
-    // object carrying the headline total
-    println(s"""{"queries_file":"$outFile","load_max":${fmt(loadMax)},"load_start":${fmt(loadStart)},"calib_s":${fmt(calibS)},"calib_start_s":${fmt(calibStartS)},"calib_end_s":${fmt(calibEndS)},"episode_load_threshold":${fmt(EpisodeLoad)},$quietJson,"flagged":$flaggedJson,"cpus":$cpusN,"passes":2,"failed":$failedJson,"sf":"$sfDir","unit":"sec","metric":"total","value":${fmt(total)}}""")
+    // object carrying the headline total and the per-query seconds, at 2
+    // decimals to keep the line short
+    val qs2 = results.map { case (k, r) =>
+      "\"" + k + "\":" + (if (r.sec < 0) "-1"
+        else String.format(java.util.Locale.ROOT, "%.2f", Double.box(r.sec)))
+    }.mkString("{", ",", "}")
+    println(s"""{"queries_file":"$outFile","queries":$qs2,"load_max":${fmt(loadMax)},"load_start":${fmt(loadStart)},"calib_s":${fmt(calibS)},"calib_start_s":${fmt(calibStartS)},"calib_end_s":${fmt(calibEndS)},"episode_load_threshold":${fmt(EpisodeLoad)},$quietJson,"flagged":$flaggedJson,"cpus":$cpusN,"passes":2,"failed":$failedJson,"sf":"$sfDir","unit":"sec","metric":"total","value":${fmt(total)}}""")
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft.geojson
 
+import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.tiles.Tile
 
@@ -303,29 +304,64 @@ object Annotate {
     streamAnnotationZips(annotations, outDir.toAbsolutePath.toString,
       queryName)
 
+  /** One zip member, deflated on an executor: what `ZipOutputStream` would
+    * write for it at level 9 (`Deflater(9, nowrap)` and a CRC-32 of the
+    * body), ready to be appended raw.
+    */
+  private[geojson] final case class DeflatedMember(name: String, crc: Long, size: Long,
+                                                   deflated: Array[Byte])
+
+  private[geojson] def deflateMember(name: String, body: Array[Byte]): DeflatedMember = {
+    val crc = new java.util.zip.CRC32
+    crc.update(body)
+    val deflater = new java.util.zip.Deflater(9, true)
+    try {
+      // the call sequence of DeflaterOutputStream: all input, then finish
+      val out = new java.io.ByteArrayOutputStream(body.length / 4 + 64)
+      val buf = new Array[Byte](8192)
+      deflater.setInput(body)
+      while (!deflater.needsInput()) out.write(buf, 0, deflater.deflate(buf))
+      deflater.finish()
+      while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
+      DeflatedMember(name, crc.getValue, body.length.toLong, out.toByteArray)
+    } finally deflater.end()
+  }
+
   /** O6 `zip_annotated_labeled_tiles` (`relabeling.py:126-163`): write one
     * `{y}-{x}.geojson` member per non-empty tile into a single zip. This is
-    * an action (the reference computes here too, `relabeling.py:150`);
-    * annotations stream through the driver via `toLocalIterator`. The zip
-    * is created through the Hadoop `FileSystem` API, so `outZip` may be an
-    * HDFS/object-store URI — one streamed PUT on such stores.
+    * an action (the reference computes here too, `relabeling.py:150`), and
+    * it runs as one job: each partition deflates its own members on the
+    * executor, and the driver appends them raw, in partition order, with
+    * commons-compress. The driver therefore holds every compressed member
+    * at once — at most the compressed archive, not the GeoJSON — so an
+    * archive that does not fit the driver belongs in
+    * [[writeAnnotationDir]], the bounded scale path. The zip is created
+    * through the Hadoop `FileSystem` API, so `outZip` may be an
+    * HDFS/object-store URI — one streamed PUT on such stores. An empty
+    * input gives an empty, valid archive (the end-of-central-directory
+    * record alone).
     */
   def zipAnnotations(annotations: Dataset[TileAnnotation],
                      outZip: String): String = {
-    val conf = annotations.sparkSession.sparkContext.hadoopConfiguration
+    val spark = annotations.sparkSession
+    import spark.implicits._
+    val members = annotations.mapPartitions(_.collect {
+      case a if a.geojson != null =>
+        deflateMember(s"${a.locKey}.geojson", a.geojson.getBytes("UTF-8"))
+    }).collect()
     val p = new org.apache.hadoop.fs.Path(outZip)
-    val zos = new java.util.zip.ZipOutputStream(
-      p.getFileSystem(conf).create(p, true))
-    zos.setLevel(9)
+    val zos = new ZipArchiveOutputStream(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true))
     try {
-      val it = annotations.toLocalIterator()
-      while (it.hasNext) {
-        val a = it.next()
-        if (a.geojson != null) {
-          zos.putNextEntry(new java.util.zip.ZipEntry(s"${a.locKey}.geojson"))
-          zos.write(a.geojson.getBytes("UTF-8"))
-          zos.closeEntry()
-        }
+      val now = System.currentTimeMillis()
+      members.foreach { m =>
+        val e = new ZipArchiveEntry(m.name)
+        e.setMethod(java.util.zip.ZipEntry.DEFLATED)
+        e.setTime(now)
+        e.setCrc(m.crc)
+        e.setSize(m.size)
+        e.setCompressedSize(m.deflated.length.toLong)
+        zos.addRawArchiveEntry(e, new java.io.ByteArrayInputStream(m.deflated))
       }
     } finally zos.close()
     outZip

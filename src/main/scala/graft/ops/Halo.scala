@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import java.nio.ByteBuffer
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.ShuffledRDD
+import org.apache.spark.sql.Dataset
 import graft.core.{Kernels, Nd, Regions}
 import graft.tiles.Tile
 
@@ -8,15 +11,24 @@ import graft.tiles.Tile
   * (`relabeling.py:185-190`) and of `da.map_overlap`'s neighbor fetch
   * (`relabeling.py:85-95`).
   *
-  * Each tile flatMaps into up to `3^d - 1` margin shards keyed by the
-  * destination chunk location, followed by one `groupByKey(linear index)`
-  * reassembly — exactly one Exchange per halo, mirroring the reference's two
-  * neighbor-communication stages (SURVEY.md §3.1).
+  * Each tile flatMaps into shards keyed by the receiving chunk: its own
+  * full payload (`rd = 0`) plus up to `3^d - 1` margins toward its
+  * neighbors. One shuffle places them and each receiver reassembles its
+  * tile — one exchange per halo, mirroring the reference's two
+  * neighbor-communication stages (SURVEY.md §3.1). Shard volume is
+  * therefore the tile itself plus `O(overlap * surface_area)` of margins;
+  * shipping margins only, with the tile side co-partitioned, is open work.
   *
-  * At 100 TB scale this is the dominant data movement: shard volume is
-  * `O(overlap * surface_area)` per tile — a small fraction of tile volume
-  * for realistic `overlap << chunk` — and the shuffle is a pure equi-key
-  * exchange with bounded fan-in (at most 3^d shards per key), so no skew.
+  * Both exchanges place shards with one [[ChunkPartitioner]]: chunk `lin`
+  * of a `chunks`-chunk grid goes to partition `lin * n / chunks`, so each
+  * reducer holds a contiguous row-major range of chunks, and emits its
+  * tiles in ascending `lin`. The shuffle is an RDD shuffle with that exact
+  * partitioner, which adaptive query execution does not resize: AQE
+  * coalesces reducers by compressed shuffle bytes, but the work after a
+  * halo exchange (segmentation, overlap removal, painting, contour
+  * tracing) scales with pixels, and a few hundred KB of compressed shards
+  * can carry seconds of it. Everything after the exchange up to the next
+  * one is a narrow map, so it runs in the same `n` tasks.
   */
 object Halo {
 
@@ -37,6 +49,92 @@ object Halo {
       data: Array[Byte],
       classes: Array[Array[Byte]]
   )
+
+  /** Places chunk `lin` of a grid of `chunks` chunks in partition
+    * `lin * numPartitions / chunks`, so every partition holds a contiguous
+    * row-major range of ⌊chunks/n⌋ or ⌈chunks/n⌉ chunks. Keys are
+    * `(lin, chunks)` pairs: the grid size rides with each key because a
+    * receiver of [[mergeAndTrim]] cannot know it without a job.
+    */
+  private final class ChunkPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = {
+      val (lin, chunks) = key.asInstanceOf[(Long, Long)]
+      require(lin >= 0 && lin < chunks,
+        s"halo: linear chunk index $lin is outside a grid of $chunks chunks")
+      (lin * numPartitions / chunks).toInt
+    }
+  }
+
+  /** A shard as one byte array, the record that crosses the shuffle (its
+    * `destLin` travels in the key). Java serialization of the case class
+    * would add its field descriptors to every shuffle block.
+    */
+  private def encode(s: Shard): Array[Byte] = {
+    val dims = s.destLoc.length
+    val buf = ByteBuffer.allocate(1 + dims * 13 + 8 + s.data.length +
+      s.classes.map(_.length + 4).sum)
+    buf.put(dims.toByte)
+    s.destLoc.foreach(buf.putInt)
+    s.grid.foreach(buf.putInt)
+    s.rd.foreach(d => buf.put(d.toByte))
+    s.shape.foreach(buf.putInt)
+    buf.putInt(s.data.length).put(s.data)
+    buf.putInt(s.classes.length)
+    s.classes.foreach(c => buf.putInt(c.length).put(c))
+    buf.array()
+  }
+
+  private def decode(destLin: Long, bytes: Array[Byte]): Shard = {
+    val buf = ByteBuffer.wrap(bytes)
+    val dims = buf.get().toInt
+    def ints() = Array.fill(dims)(buf.getInt())
+    def packed() = { val a = new Array[Byte](buf.getInt()); buf.get(a); a }
+    val destLoc = ints()
+    val grid = ints()
+    val rd = Array.fill(dims)(buf.get().toInt)
+    val shape = ints()
+    val data = packed()
+    Shard(destLin, destLoc, grid, rd, shape, data, Array.fill(buf.getInt())(packed()))
+  }
+
+  /** The one halo exchange: every tile sends the shards `send` selects, a
+    * [[ChunkPartitioner]] over `min(reducers, spark.sql.shuffle.partitions)`
+    * partitions places them, and `assemble` turns each receiver's shards
+    * into its tile, in ascending `lin`. The reduce side sorts the records
+    * by `lin` in Spark's shuffle sorter, which spills under memory
+    * pressure; assembly then holds one receiver's shards at a time.
+    *
+    * The input is read through `Dataset.rdd`: when its plan has an
+    * exchange of its own, adaptive execution runs that stage when this is
+    * called, not at the output's action.
+    */
+  private def exchange(tiles: Dataset[Tile], reducers: Long, overlaps: Array[Int],
+      send: (Array[Int], Array[Int]) => Boolean)(
+      assemble: (Long, Array[Shard]) => Tile): Dataset[Tile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    val n = math.max(1L,
+      math.min(reducers, spark.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
+    val shards = tiles.rdd.flatMap { t =>
+      val chunks = t.grid.foldLeft(1L)(_ * _)
+      shardsOf(t, overlaps, send).map(s => ((s.destLin, chunks), encode(s)))
+    }
+    val placed = new ShuffledRDD[(Long, Long), Array[Byte], Array[Byte]](
+      shards, new ChunkPartitioner(n))
+      .setKeyOrdering(Ordering.by[(Long, Long), Long](_._1))
+    spark.createDataset(placed.mapPartitions({ it =>
+      val in = it.buffered
+      new Iterator[Tile] {
+        def hasNext: Boolean = in.hasNext
+        def next(): Tile = {
+          val lin = in.head._1._1
+          val group = Array.newBuilder[Shard]
+          while (in.hasNext && in.head._1._1 == lin) group += decode(lin, in.next()._2)
+          assemble(lin, group.result())
+        }
+      }
+    }, preservesPartitioning = true))
+  }
 
   /** All non-zero direction vectors in {-1,0,1}^dims. */
   private[graft] def directions(dims: Int): IndexedSeq[Array[Int]] =
@@ -105,23 +203,24 @@ object Halo {
 
   /** O1 halo expansion: input tiles are core (chunk) sized; output tiles
     * carry `overlap` margins copied from every existing neighbor
-    * (`boundary=None`: grid borders get no halo).
+    * (`boundary=None`: grid borders get no halo). The output has as many
+    * partitions as the input, capped by `spark.sql.shuffle.partitions`.
     */
-  def expand(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    tiles
-      .flatMap(t => shardsOf(t, overlaps, (_, _) => true))
-      .groupByKey(_.destLin)
-      .mapGroups { (lin, it) =>
-        val all = it.toArray
-        require(all.exists(_.rd.forall(_ == 0)),
-          s"halo expand: no tile present at linear chunk index $lin — the " +
-            "tile table must cover the full grid (dense chunking, like the " +
-            "reference's dask arrays)")
-        assembleExpanded(all, overlaps)
-      }
-  }
+  def expand(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] =
+    expand(tiles, overlaps, tiles.rdd.getNumPartitions.toLong)
+
+  /** [[expand]] over `min(reducers, spark.sql.shuffle.partitions)`
+    * partitions; [[Relabel.prepareInput]] passes the grid's chunk count.
+    */
+  private[graft] def expand(tiles: Dataset[Tile], overlaps: Array[Int],
+      reducers: Long): Dataset[Tile] =
+    exchange(tiles, reducers, overlaps, (_, _) => true) { (lin, all) =>
+      require(all.exists(_.rd.forall(_ == 0)),
+        s"halo expand: no tile present at linear chunk index $lin — the " +
+          "tile table must cover the full grid (dense chunking, like the " +
+          "reference's dask arrays)")
+      assembleExpanded(all, overlaps)
+    }
 
   private[graft] def assembleExpanded(all: Array[Shard], overlaps: Array[Int]): Tile = {
     val core = all.find(_.rd.forall(_ == 0)).get
@@ -163,15 +262,13 @@ object Halo {
     *
     * Only shards a receiver's merging-parity regions will consume are sent
     * (`utils.py:101-110`) — roughly half the traffic of a blind exchange.
+    * The output has as many partitions as the input, capped by
+    * `spark.sql.shuffle.partitions`; after [[expand]] that is the same
+    * placement, so O4 runs as many tasks as O1.
     */
-  def mergeAndTrim(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    tiles
-      .flatMap(t => shardsOf(t, overlaps, receiverWillMerge))
-      .groupByKey(_.destLin)
-      .mapGroups((lin, it) => assembleMerged(lin, it.toArray, overlaps))
-  }
+  def mergeAndTrim(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] =
+    exchange(tiles, tiles.rdd.getNumPartitions.toLong, overlaps, receiverWillMerge)(
+      assembleMerged(_, _, overlaps))
 
   /** Paint-and-trim one receiver's merge group (shared with the streaming
     * re-expression in [[graft.streaming.StreamingTiles]]).

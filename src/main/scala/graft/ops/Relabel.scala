@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.collection.mutable
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.LongAccumulator
@@ -59,6 +60,8 @@ object Relabel {
   /** O1 `prepare_input` (`relabeling.py:166-192`): zero-pad ragged high-edge
     * tiles to the chunk size (pad is tile-local — no shuffle), then
     * halo-expand every tile by `overlaps` from its neighbors (one shuffle).
+    * The output has `min(chunks in the grid, spark.sql.shuffle.partitions)`
+    * partitions, each a contiguous range of chunks ([[Halo]]).
     *
     * Input tiles must be chunk-aligned: tile (i,j) holds image block
     * [i*cs, (i+1)*cs) x [j*cs, (j+1)*cs) clipped to the image.
@@ -69,7 +72,7 @@ object Relabel {
     val chunk = spec.chunk
     validateOverlaps(overlaps, chunk)
     val padded = tiles.map(t => Kernels.padTo(t, chunk))
-    Halo.expand(padded, overlaps)
+    Halo.expand(padded, overlaps, spec.gridShape.foldLeft(1L)(_ * _))
   }
 
   /** O2 `segment_overlapped_input` (`relabeling.py:14-47`): embarrassingly
@@ -145,14 +148,16 @@ object Relabel {
   }
 
   /** O4 `merge_overlapped_tiles` (`relabeling.py:79-99`): one neighbor
-    * exchange + parity paint + halo trim. Output tiles are core-sized.
+    * exchange + parity paint + halo trim. Output tiles are core-sized, in
+    * as many partitions as the input, capped by
+    * `spark.sql.shuffle.partitions` ([[Halo.mergeAndTrim]]).
     */
   def mergeOverlappedTiles(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] =
     Halo.mergeAndTrim(tiles, overlaps)
 
   /** Session conf key: label-cardinality cap for [[sortLabelIndices]]'s
     * broadcast rank map. The driver materializes at most cap+1 labels (a
-    * `limit` probe, never the unbounded label space), and a space that
+    * capped probe, never the unbounded label space), and a space that
     * exceeds the cap auto-switches to [[sortLabelIndicesDistributed]] —
     * same output contract, no driver round-trip — in the AQE spirit of
     * deciding the physical strategy from the observed size (the
@@ -168,7 +173,8 @@ object Relabel {
   /** O10 `sort_label_indices` (`relabeling.py:312-346`): global distinct of
     * the label space (eager, like the reference's `da.unique(...).compute()`
     * at `relabeling.py:331`) broadcast back as a dense-rank map. The probe
-    * and the remap read the input through one physical plan, so the remap
+    * (one job: a per-partition distinct, merged by `treeAggregate`) and
+    * the remap read the input through one physical plan, so the remap
     * reuses the shuffle output the probe already wrote (the halo exchanges
     * of an `image2labels` input run once, not twice). Persist the input
     * first if it is expensive to recompute. Label spaces above
@@ -182,19 +188,23 @@ object Relabel {
     require(cap > 0, s"$SortBroadcastCapKey must be positive, got $cap")
     val probeN = math.min(cap, Int.MaxValue - 1L).toInt + 1
     val pinned = tiles.rdd
-    // per-tile distinct first: shrinks the shuffle to O(labels), not O(pixels).
-    // Below the cap, limit(cap+1) exhausts the input in ~log4(P) scale-up
-    // jobs, each re-reading only the shuffled label ids: the price of
-    // never collecting an unbounded label space to the driver.
-    val probe = spark.createDataset(pinned.flatMap(t => t.data.distinct.iterator))
-      .distinct()
-      .limit(probeN)
-      .collect()
-    if (probe.length >= probeN)
+    // one job: each partition's distinct labels, capped at cap+1, merged
+    // under the same cap, so at most cap+1 labels ever reach the driver
+    def capped(seen: mutable.HashSet[Long], labels: Array[Long]): mutable.HashSet[Long] = {
+      var i = 0
+      while (i < labels.length && seen.size < probeN) {
+        if (i == 0 || labels(i) != labels(i - 1)) seen += labels(i)
+        i += 1
+      }
+      seen
+    }
+    val probe = pinned.treeAggregate(mutable.HashSet.empty[Long])(
+      (seen, t) => capped(seen, t.data), (a, b) => capped(a, b.toArray))
+    if (probe.size >= probeN)
       // over the cap: the probe saw cap+1 distinct labels, so the full
       // collect would be the driver OOM this guard exists to prevent
       return sortLabelIndicesDistributed(spark.createDataset(pinned))
-    val distinctLabels = probe.sorted
+    val distinctLabels = probe.toArray.sorted
     val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     var i = 0L
     distinctLabels.foreach { l => rank.put(l, i); i += 1 }

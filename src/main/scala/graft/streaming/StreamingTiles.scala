@@ -12,16 +12,18 @@ import graft.tiles.Tile
   * any number of microbatches — the "process chunks as the scanner lands
   * them" mode the batch reference has no counterpart for.
   *
-  * The batch halo exchange is a flatMap-to-margin-shards + one groupByKey
-  * ([[graft.ops.Halo.expand]]). Streaming keeps exactly that dataflow and
+  * The batch halo exchange is a flatMap-to-shards + one shuffle placed by
+  * linear chunk index ([[graft.ops.Halo.expand]]). Streaming keeps that
+  * dataflow, groups the shards by `destLin`, and
   * swaps the reassembly for `flatMapGroupsWithState`: each receiver
   * location buffers the shards that have arrived; when the count reaches
   * its expected neighborhood size (1 + in-grid neighbors — static grid
   * geometry, not data-dependent), it assembles the overlapped tile, runs
   * the tile-local segment+remove kernels, EMITS, and clears its state.
-  * State is O(margins) per in-flight border and shrinks to an O(1)
+  * State is one neighborhood's shards per in-flight receiver and shrinks to an O(1)
   * tombstone once a neighborhood completes — the streaming analog of the
-  * batch shuffle buffer, with the same O(overlap x surface) volume bound.
+  * batch shuffle buffer, holding the same shards (each tile's own payload
+  * plus its margins).
   * Duplicate deliveries (at-least-once sources) are absorbed twice over:
   * pending shards dedup on the sender's relative direction, and the
   * tombstone makes emission exactly-once even when a whole neighborhood is

@@ -40,7 +40,7 @@ class AnnotateGoldenSpec extends AnyFunSuite {
 
   /** `ann_2d.json` as the sink tests' input: one row per tile, `null` for
     * the empty tiles, spread over several partitions so the executor-side
-    * writers and `toLocalIterator` run over several tasks.
+    * writers and the zip sink's deflate run over several tasks.
     */
   private def goldenAnnotations: Dataset[Annotate.TileAnnotation] = {
     import spark.implicits._
@@ -108,6 +108,56 @@ class AnnotateGoldenSpec extends AnyFunSuite {
       assert(mapper.readTree(body) ==
         mapper.readTree(golden(expected.head.stripSuffix(".geojson"))))
     } finally zf.close()
+  }
+
+  test("zip sink: one job, members equal to a level-9 ZipOutputStream, empty input is a valid archive") {
+    import scala.jdk.CollectionConverters._
+    val ann = goldenAnnotations
+    val dir = java.nio.file.Paths.get(TempDirs.create("graft-zipraw"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    try {
+      org.apache.spark.ListenerDrain.drain(sc)
+      jobs.set(0)
+      Annotate.zipAnnotations(ann, dir.resolve("a.zip"))
+      org.apache.spark.ListenerDrain.drain(sc)
+      assert(jobs.get == 1, s"zipAnnotations ran ${jobs.get} jobs")
+    } finally sc.removeSparkListener(counter)
+
+    // the same bodies, in the same order, through ZipOutputStream at level 9
+    val bodies = ann.collect().filter(_.geojson != null)
+      .map(a => s"${a.locKey}.geojson" -> a.geojson.getBytes("UTF-8"))
+    val ref = dir.resolve("ref.zip")
+    val zos = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(ref))
+    zos.setLevel(9)
+    try bodies.foreach { case (name, body) =>
+      zos.putNextEntry(new java.util.zip.ZipEntry(name)); zos.write(body); zos.closeEntry()
+    } finally zos.close()
+
+    def members(p: java.nio.file.Path): Seq[(String, Long, Long, Seq[Byte])] = {
+      val zf = new java.util.zip.ZipFile(p.toFile)
+      try zf.entries().asScala.map { e =>
+        (e.getName, e.getCrc, e.getCompressedSize,
+          zf.getInputStream(e).readAllBytes().toSeq)
+      }.toSeq
+      finally zf.close()
+    }
+    val got = members(dir.resolve("a.zip"))
+    assert(got.map(_._1) == bodies.map(_._1).toSeq, "member names or their order differ")
+    assert(got == members(ref), "name, CRC, compressed size or body differs from ZipOutputStream")
+    assert(got.map(_._4) == bodies.map(_._2.toSeq).toSeq)
+
+    // no member: the archive is the 22-byte end-of-central-directory record
+    import spark.implicits._
+    val empty = dir.resolve("empty.zip")
+    Annotate.zipAnnotations(spark.emptyDataset[Annotate.TileAnnotation], empty)
+    assert(java.nio.file.Files.size(empty) == 22L)
+    assert(members(empty).isEmpty)
   }
 
   test("annotation dir sink writes through a non-default Hadoop scheme") {

@@ -48,7 +48,7 @@ class ShuffleScaleSmokeSpec extends AnyFunSuite {
     val dir = TempDirs.create("smoke_halo")
     ShuffleScale.haloStage(spark, 8, dir)
     val p = ShuffleScale.haloPipeline(spark, dir, 8)
-    ShuffleScale.assertHaloPlan(p.queryExecution.executedPlan.toString)
+    ShuffleScale.assertHaloPlan(p)
     assert(p.count() == 64L, "pipeline lost tiles")
   }
 }
