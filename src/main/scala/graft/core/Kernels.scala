@@ -314,17 +314,26 @@ object Kernels {
       "deterministic or persist the input before sorting"
 
   /** O10 `sort_indices` (`chunkops.py:104-113`): remap every label to its
-    * index in the globally sorted distinct-label list (broadcast).
+    * index in the globally sorted distinct-label list (broadcast). A label
+    * is looked up only where it differs from the previous voxel's, so runs
+    * of background or of one object pay one boxed lookup.
     */
   def sortRemap(tile: Tile, rank: java.util.HashMap[java.lang.Long, java.lang.Long]): Tile = {
-    val out = new Array[Long](tile.data.length)
+    val data = tile.data
+    val out = new Array[Long](data.length)
+    var label = 0L
+    var r = 0L
     var i = 0
     while (i < out.length) {
-      val r = rank.get(tile.data(i))
-      // fail loudly instead of an opaque unboxing NPE
-      if (r == null) throw new IllegalStateException(
-        s"label ${tile.data(i)} of tile ${tile.loc.mkString("(", ",", ")")} " +
-          s"has no rank: $RankMissCause")
+      if (i == 0 || data(i) != label) {
+        label = data(i)
+        val boxed = rank.get(label)
+        // fail loudly instead of an opaque unboxing NPE
+        if (boxed == null) throw new IllegalStateException(
+          s"label $label of tile ${tile.loc.mkString("(", ",", ")")} " +
+            s"has no rank: $RankMissCause")
+        r = boxed
+      }
       out(i) = r
       i += 1
     }

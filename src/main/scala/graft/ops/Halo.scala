@@ -2,8 +2,8 @@ package graft.ops
 
 import java.nio.ByteBuffer
 import org.apache.spark.Partitioner
-import org.apache.spark.rdd.ShuffledRDD
-import org.apache.spark.sql.Dataset
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.{Kernels, Nd, Regions}
 import graft.tiles.Tile
 
@@ -29,6 +29,13 @@ import graft.tiles.Tile
   * tracing) scales with pixels, and a few hundred KB of compressed shards
   * can carry seconds of it. Everything after the exchange up to the next
   * one is a narrow map, so it runs in the same `n` tasks.
+  *
+  * The exchange itself works on `RDD[Tile]`. The public [[expand]] and
+  * [[mergeAndTrim]] read their input through `Dataset.rdd` and wrap the
+  * output in a Dataset; the composites in [[Relabel]] chain both
+  * exchanges and the per-tile maps between them on one RDD lineage and
+  * build a single Dataset at the end (see [[Relabel]] for the planning
+  * cost this saves).
   */
 object Halo {
 
@@ -98,31 +105,23 @@ object Halo {
   }
 
   /** The one halo exchange: every tile sends the shards `send` selects, a
-    * [[ChunkPartitioner]] over `min(reducers, spark.sql.shuffle.partitions)`
-    * partitions places them, and `assemble` turns each receiver's shards
-    * into its tile, in ascending `lin`. The reduce side sorts the records
-    * by `lin` in Spark's shuffle sorter, which spills under memory
-    * pressure; assembly then holds one receiver's shards at a time.
-    *
-    * The input is read through `Dataset.rdd`: when its plan has an
-    * exchange of its own, adaptive execution runs that stage when this is
-    * called, not at the output's action.
+    * [[ChunkPartitioner]] over `partitions` partitions places them, and
+    * `assemble` turns each receiver's shards into its tile, in ascending
+    * `lin`. The reduce side sorts the records by `lin` in Spark's shuffle
+    * sorter, which spills under memory pressure; assembly then holds one
+    * receiver's shards at a time.
     */
-  private def exchange(tiles: Dataset[Tile], reducers: Long, overlaps: Array[Int],
+  private def exchange(tiles: RDD[Tile], partitions: Int, overlaps: Array[Int],
       send: (Array[Int], Array[Int]) => Boolean)(
-      assemble: (Long, Array[Shard]) => Tile): Dataset[Tile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    val n = math.max(1L,
-      math.min(reducers, spark.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
-    val shards = tiles.rdd.flatMap { t =>
+      assemble: (Long, Array[Shard]) => Tile): RDD[Tile] = {
+    val shards = tiles.flatMap { t =>
       val chunks = t.grid.foldLeft(1L)(_ * _)
       shardsOf(t, overlaps, send).map(s => ((s.destLin, chunks), encode(s)))
     }
     val placed = new ShuffledRDD[(Long, Long), Array[Byte], Array[Byte]](
-      shards, new ChunkPartitioner(n))
+      shards, new ChunkPartitioner(partitions))
       .setKeyOrdering(Ordering.by[(Long, Long), Long](_._1))
-    spark.createDataset(placed.mapPartitions({ it =>
+    placed.mapPartitions({ it =>
       val in = it.buffered
       new Iterator[Tile] {
         def hasNext: Boolean = in.hasNext
@@ -133,8 +132,15 @@ object Halo {
           assemble(lin, group.result())
         }
       }
-    }, preservesPartitioning = true))
+    }, preservesPartitioning = true)
   }
+
+  /** Partitions of a halo exchange's output: `min(reducers,
+    * spark.sql.shuffle.partitions)`, at least one.
+    */
+  private[graft] def partitions(spark: SparkSession, reducers: Long): Int =
+    math.max(1L,
+      math.min(reducers, spark.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
 
   /** All non-zero direction vectors in {-1,0,1}^dims. */
   private[graft] def directions(dims: Int): IndexedSeq[Array[Int]] =
@@ -205,16 +211,24 @@ object Halo {
     * carry `overlap` margins copied from every existing neighbor
     * (`boundary=None`: grid borders get no halo). The output has as many
     * partitions as the input, capped by `spark.sql.shuffle.partitions`.
+    *
+    * The input is read through `Dataset.rdd` when this is called: when its
+    * plan has an exchange of its own, adaptive execution runs that stage
+    * then, not at the output's action. The same holds for [[mergeAndTrim]].
     */
-  def expand(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] =
-    expand(tiles, overlaps, tiles.rdd.getNumPartitions.toLong)
+  def expand(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    val in = tiles.rdd
+    spark.createDataset(expand(in, overlaps, partitions(spark, in.getNumPartitions.toLong)))
+  }
 
-  /** [[expand]] over `min(reducers, spark.sql.shuffle.partitions)`
-    * partitions; [[Relabel.prepareInput]] passes the grid's chunk count.
+  /** [[expand]] over the tile RDD into `partitions` partitions; the
+    * composites in [[Relabel]] pass the grid's chunk count, capped.
     */
-  private[graft] def expand(tiles: Dataset[Tile], overlaps: Array[Int],
-      reducers: Long): Dataset[Tile] =
-    exchange(tiles, reducers, overlaps, (_, _) => true) { (lin, all) =>
+  private[graft] def expand(tiles: RDD[Tile], overlaps: Array[Int],
+      partitions: Int): RDD[Tile] =
+    exchange(tiles, partitions, overlaps, (_, _) => true) { (lin, all) =>
       require(all.exists(_.rd.forall(_ == 0)),
         s"halo expand: no tile present at linear chunk index $lin — the " +
           "tile table must cover the full grid (dense chunking, like the " +
@@ -266,9 +280,17 @@ object Halo {
     * `spark.sql.shuffle.partitions`; after [[expand]] that is the same
     * placement, so O4 runs as many tasks as O1.
     */
-  def mergeAndTrim(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] =
-    exchange(tiles, tiles.rdd.getNumPartitions.toLong, overlaps, receiverWillMerge)(
-      assembleMerged(_, _, overlaps))
+  def mergeAndTrim(tiles: Dataset[Tile], overlaps: Array[Int]): Dataset[Tile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    val in = tiles.rdd
+    spark.createDataset(mergeAndTrim(in, overlaps, partitions(spark, in.getNumPartitions.toLong)))
+  }
+
+  /** [[mergeAndTrim]] over the tile RDD into `partitions` partitions. */
+  private[graft] def mergeAndTrim(tiles: RDD[Tile], overlaps: Array[Int],
+      partitions: Int): RDD[Tile] =
+    exchange(tiles, partitions, overlaps, receiverWillMerge)(assembleMerged(_, _, overlaps))
 
   /** Paint-and-trim one receiver's merge group (shared with the streaming
     * re-expression in [[graft.streaming.StreamingTiles]]).

@@ -62,4 +62,32 @@ class SortLabelIndicesSpec extends AnyFunSuite {
   test("nondeterministic segmentation: distributed ranks give dense labels") {
     check("distributed")(Relabel.sortLabelIndicesDistributed)
   }
+
+  test("a zarr write, then a collect, of sortLabelIndicesDistributed(image2labels) release its cache") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // start from an empty cache: the assertions below are about this test's own
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    def sorted() = Relabel.sortLabelIndicesDistributed(Relabel.image2labels(
+      spark.createDataset(BlobImages.toTiles(
+        imageGen.pureApply(Gen.Parameters.default, Seed(0L)), N, N, CS)),
+      spec, graft.ops.CCLSegmentation(), Array(OV, OV), threshold = 0.25))
+    def assertReleased(sink: String): Unit = {
+      org.apache.spark.ListenerDrain.drain(sc)
+      assert(sc.getPersistentRDDs.isEmpty, s"$sink left ${sc.getPersistentRDDs.size} persisted RDDs")
+      assert(cache.isEmpty, s"$sink left the cache manager non-empty")
+    }
+    val written = sorted()
+    assert(sc.getPersistentRDDs.nonEmpty && !cache.isEmpty,
+      "building the result persisted nothing; the release checks below would be vacuous")
+    graft.sources.ZarrIO.write(written, spec, TempDirs.create("graft-o10-release"))
+    assertReleased("ZarrIO.write")
+    val collected = sorted()
+    assert(sc.getPersistentRDDs.nonEmpty)
+    assert(collected.collect().length == (N / CS) * (N / CS))
+    assertReleased("collect")
+  }
 }
