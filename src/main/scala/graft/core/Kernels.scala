@@ -59,9 +59,14 @@ object Kernels {
       if (v != 0L) total(v.toInt) += 1
       i += 1
     }
-    Nd.foreachIndex(shape, Regions.interiorBox(loc, grid, overlaps, shape)) { flat =>
-      val v = data(flat)
-      if (v != 0L) intr(v.toInt) += 1
+    Nd.foreachRun(shape, Regions.interiorBox(loc, grid, overlaps, shape)) { (from, n) =>
+      var f = from
+      val end = from + n
+      while (f < end) {
+        val v = data(f)
+        if (v != 0L) intr(v.toInt) += 1
+        f += 1
+      }
     }
 
     // codes: +/-(dims+1) firmly in/out (`chunkops.py:49-52`); 0 = band
@@ -81,13 +86,18 @@ object Kernels {
       val drop = Regions.parityDrop(loc, levels)
       val rdim = Regions.regionDim(levels)
       val box = Regions.sourceBox(loc, grid, overlaps, levels, shape)
-      Nd.foreachIndex(shape, box) { flat =>
-        val v = data(flat)
-        if (v != 0L) {
-          val li = v.toInt
-          if (total(li) > 0 && math.abs(codes(li)) < rdim &&
-              intr(li).toDouble / total(li).toDouble >= threshold)
-            codes(li) = if (drop) -rdim else rdim
+      Nd.foreachRun(shape, box) { (from, n) =>
+        var f = from
+        val end = from + n
+        while (f < end) {
+          val v = data(f)
+          if (v != 0L) {
+            val li = v.toInt
+            if (total(li) > 0 && math.abs(codes(li)) < rdim &&
+                intr(li).toDouble / total(li).toDouble >= threshold)
+              codes(li) = if (drop) -rdim else rdim
+          }
+          f += 1
         }
       }
     }
@@ -116,7 +126,8 @@ object Kernels {
     * A margin face only exists where a neighbor actually shipped a halo
     * (`loc > 0` low side, `loc < grid-1` high side), so edge tiles cannot
     * false-positive. Returns (axis, label) pairs, deduplicated, in
-    * deterministic (axis, label) order. One pass over the tile.
+    * deterministic (axis, label) order. One pass over the tile's rows;
+    * a row on no leading margin face reads only its own margin ends.
     */
   def marginSpanViolations(tile: Tile, overlaps: Array[Int]): Array[(Int, Long)] = {
     val dims = tile.dims
@@ -129,25 +140,46 @@ object Kernels {
       return Array.empty
     val lowSeen = Array.fill(dims)(new java.util.HashSet[Long]())
     val highSeen = Array.fill(dims)(new java.util.HashSet[Long]())
-    val strides = new Array[Int](dims)
-    if (dims > 0) {
-      strides(dims - 1) = 1
-      var a = dims - 2
-      while (a >= 0) { strides(a) = strides(a + 1) * shape(a + 1); a -= 1 }
-    }
-    var flat = 0
-    while (flat < data.length) {
-      val v = data(flat)
-      if (v != 0L) {
-        var a = 0
-        while (a < dims) {
-          val idx = (flat / strides(a)) % shape(a)
-          if (hasLow(a) && idx < overlaps(a)) lowSeen(a).add(v)
-          if (hasHigh(a) && idx >= shape(a) - overlaps(a)) highSeen(a).add(v)
-          a += 1
-        }
+    // walk rows of the last axis: the leading coordinates, and so which of
+    // their margin faces a row lies in, change once per row
+    val last = dims - 1
+    val rowLen = shape(last)
+    val lowCut = if (hasLow(last)) overlaps(last) else 0
+    val highCut = if (hasHigh(last)) rowLen - overlaps(last) else rowLen
+    val idx = new Array[Int](dims)
+    val inLow = new Array[Boolean](dims)
+    val inHigh = new Array[Boolean](dims)
+    var rowStart = 0
+    while (rowLen > 0 && rowStart < data.length) {
+      var anyFace = false
+      var a = 0
+      while (a < last) {
+        inLow(a) = hasLow(a) && idx(a) < overlaps(a)
+        inHigh(a) = hasHigh(a) && idx(a) >= shape(a) - overlaps(a)
+        anyFace ||= inLow(a) || inHigh(a)
+        a += 1
       }
-      flat += 1
+      var j = if (anyFace || lowCut > 0) 0 else highCut
+      while (j < rowLen) {
+        val v = data(rowStart + j)
+        if (v != 0L) {
+          if (anyFace) {
+            a = 0
+            while (a < last) {
+              if (inLow(a)) lowSeen(a).add(v)
+              if (inHigh(a)) highSeen(a).add(v)
+              a += 1
+            }
+          }
+          if (j < lowCut) lowSeen(last).add(v)
+          if (j >= highCut) highSeen(last).add(v)
+        }
+        j += 1
+        if (!anyFace && j == lowCut) j = math.max(j, highCut)
+      }
+      rowStart += rowLen
+      a = last - 1
+      while (a >= 0 && { idx(a) += 1; idx(a) == shape(a) }) { idx(a) = 0; a -= 1 }
     }
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
     var a = 0
@@ -195,9 +227,14 @@ object Kernels {
       i += 1
     }
     val interior = Regions.interiorBox(loc, grid, overlaps, shape)
-    Nd.foreachIndex(shape, interior) { flat =>
-      val v = data(flat)
-      if (v != 0L) total.get(v)(1) += 1
+    Nd.foreachRun(shape, interior) { (from, n) =>
+      var f = from
+      val end = from + n
+      while (f < end) {
+        val v = data(f)
+        if (v != 0L) total.get(v)(1) += 1
+        f += 1
+      }
     }
 
     // region-dim codes (`chunkops.py:49-52`): +/-(dims+1) for firmly
@@ -224,9 +261,14 @@ object Kernels {
       val rdim = Regions.regionDim(levels)
       val box = Regions.sourceBox(loc, grid, overlaps, levels, shape)
       val present = new java.util.HashSet[java.lang.Long]()
-      Nd.foreachIndex(shape, box) { flat =>
-        val v = data(flat)
-        if (v != 0L) present.add(v)
+      Nd.foreachRun(shape, box) { (from, n) =>
+        var f = from
+        val end = from + n
+        while (f < end) {
+          val v = data(f)
+          if (v != 0L) present.add(v)
+          f += 1
+        }
       }
       val it = present.iterator()
       while (it.hasNext) {
@@ -266,6 +308,7 @@ object Kernels {
     val shape = tile.shape
     val out = tile.data.clone()
     val outClasses = if (tile.hasClasses) tile.classes.map(_.clone()) else tile.classes
+    val nCh = if (tile.hasClasses) outClasses.length else 0
 
     for (levels <- Regions.mergingOverlaps(tile.loc, tile.grid)) {
       val dst = Regions.destBox(tile.loc, tile.grid, overlaps, levels, shape)
@@ -273,19 +316,23 @@ object Kernels {
       require(shard.length == dst.numel,
         s"shard size ${shard.length} != dest box ${dst.numel} for region ${levels.mkString(",")} of tile ${tile.loc.mkString(",")}")
       var i = 0
-      Nd.foreachIndex(shape, dst) { flat =>
-        val v = shard(i)
-        if (v != 0L) {
-          out(flat) = v
-          if (outClasses.nonEmpty) {
+      Nd.foreachRun(shape, dst) { (from, n) =>
+        var flat = from
+        var j = i
+        val end = from + n
+        while (flat < end) {
+          val v = shard(j)
+          if (v != 0L) {
+            out(flat) = v
             var ch = 0
-            while (ch < outClasses.length) {
-              outClasses(ch)(flat) = shardClasses(ch)(i)
+            while (ch < nCh) {
+              outClasses(ch)(flat) = shardClasses(ch)(j)
               ch += 1
             }
           }
+          flat += 1; j += 1
         }
-        i += 1
+        i = j
       }
     }
     tile.copy(data = out, classes = outClasses)

@@ -71,7 +71,7 @@ object Nd {
   def sliceBox(src: Array[Long], srcShape: Array[Int], box: Box): Array[Long] = {
     val out = new Array[Long](box.numel)
     var i = 0
-    foreachIndex(srcShape, box) { flat => out(i) = src(flat); i += 1 }
+    foreachRun(srcShape, box) { (from, n) => System.arraycopy(src, from, out, i, n); i += n }
     out
   }
 
@@ -79,7 +79,7 @@ object Nd {
   def pasteBox(dst: Array[Long], dstShape: Array[Int], box: Box,
                payload: Array[Long]): Unit = {
     var i = 0
-    foreachIndex(dstShape, box) { flat => dst(flat) = payload(i); i += 1 }
+    foreachRun(dstShape, box) { (from, n) => System.arraycopy(payload, i, dst, from, n); i += n }
   }
 
   /** Visit `box` as maximal contiguous runs: `f(flatStart, length)`. Trailing
@@ -118,16 +118,18 @@ object Nd {
     val out = new Array[Byte](1 + box.numel * width)
     out(0) = width.toByte
     val buf = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
-    buf.position(1)
+    var pos = 1
     foreachRun(srcShape, box) { (from, n) =>
       var i = from
+      var p = pos
       val end = from + n
       width match {
-        case 1 => while (i < end) { buf.put(src(i).toByte); i += 1 }
-        case 2 => while (i < end) { buf.putShort(src(i).toShort); i += 1 }
-        case 4 => while (i < end) { buf.putInt(src(i).toInt); i += 1 }
-        case _ => while (i < end) { buf.putLong(src(i)); i += 1 }
+        case 1 => while (i < end) { out(p) = src(i).toByte; i += 1; p += 1 }
+        case 2 => while (i < end) { buf.putShort(p, src(i).toShort); i += 1; p += 2 }
+        case 4 => while (i < end) { buf.putInt(p, src(i).toInt); i += 1; p += 4 }
+        case _ => buf.slice(p, n * 8).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().put(src, from, n)
       }
+      pos += n * width
     }
     out
   }
@@ -139,16 +141,18 @@ object Nd {
     require(packed.length == 1 + box.numel * width,
       s"packed payload of ${packed.length} bytes does not hold ${box.numel} values of width $width")
     val buf = ByteBuffer.wrap(packed).order(ByteOrder.LITTLE_ENDIAN)
-    buf.position(1)
+    var pos = 1
     foreachRun(dstShape, box) { (from, n) =>
       var i = from
+      var p = pos
       val end = from + n
       width match {
-        case 1 => while (i < end) { dst(i) = buf.get() & 0xffL; i += 1 }
-        case 2 => while (i < end) { dst(i) = buf.getShort() & 0xffffL; i += 1 }
-        case 4 => while (i < end) { dst(i) = buf.getInt() & 0xffffffffL; i += 1 }
-        case _ => while (i < end) { dst(i) = buf.getLong(); i += 1 }
+        case 1 => while (i < end) { dst(i) = packed(p) & 0xffL; i += 1; p += 1 }
+        case 2 => while (i < end) { dst(i) = buf.getShort(p) & 0xffffL; i += 1; p += 2 }
+        case 4 => while (i < end) { dst(i) = buf.getInt(p) & 0xffffffffL; i += 1; p += 4 }
+        case _ => buf.slice(p, n * 8).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(dst, from, n)
       }
+      pos += n * width
     }
   }
 
@@ -156,10 +160,16 @@ object Nd {
   def paintNonZero(dst: Array[Long], dstShape: Array[Int], box: Box,
                    payload: Array[Long]): Unit = {
     var i = 0
-    foreachIndex(dstShape, box) { flat =>
-      val v = payload(i)
-      if (v != 0L) dst(flat) = v
-      i += 1
+    foreachRun(dstShape, box) { (from, n) =>
+      var f = from
+      var j = i
+      val end = from + n
+      while (f < end) {
+        val v = payload(j)
+        if (v != 0L) dst(f) = v
+        f += 1; j += 1
+      }
+      i = j
     }
   }
 

@@ -227,14 +227,14 @@ object Annotate {
     // directories; the qualified URI also pins the scheme, so every
     // executor opens the same store the driver validated
     val dir = fs.makeQualified(root).toString
-    val sconf = graft.sources.StoreIO.ser(conf)
+    val sconf = graft.sources.StoreIO.broadcastConf(spark)
     import spark.implicits._
     annotations
       .filter(_.geojson != null)
       .mapPartitions { it =>
         var n = 0L
         it.foreach { a =>
-          graft.sources.StoreIO.write(sconf.value,
+          graft.sources.StoreIO.write(sconf.value.value,
             s"$dir/${a.locKey}.geojson", a.geojson.getBytes("UTF-8"))
           n += 1
         }

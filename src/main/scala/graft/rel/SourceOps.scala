@@ -536,7 +536,7 @@ object SourceOps {
       import s.implicits._
       val dir = stage("avro")
       graft.sources.StoreIO.mkdirs(graft.sources.StoreIO.hadoopConf, dir)
-      val sconf = graft.sources.StoreIO.ser(graft.sources.StoreIO.hadoopConf)
+      val sconf = graft.sources.StoreIO.broadcastConf(s)
       val schemaJson = AVRO_SCHEMA
       ev(s, d)
         .select(col("event_id"), Q.tsMicros(col("ts")).as("ts_us"),
@@ -566,7 +566,7 @@ object SourceOps {
           // regime must read back as zero files, not eight headers)
           if (n == 0) Iterator.empty
           else {
-            graft.sources.StoreIO.write(sconf.value,
+            graft.sources.StoreIO.write(sconf.value.value,
               s"$dir/part-$pid.avro", bos.toByteArray)
             Iterator.single(n)
           }
@@ -577,7 +577,7 @@ object SourceOps {
       val back = s.sparkContext
         .parallelize(files, math.max(1, files.size))
         .flatMap { p =>
-          val bytes = graft.sources.StoreIO.readAllBytes(sconf.value, p)
+          val bytes = graft.sources.StoreIO.readAllBytes(sconf.value.value, p)
           val rd = new org.apache.avro.file.DataFileReader(
             new org.apache.avro.file.SeekableByteArrayInput(bytes),
             new org.apache.avro.generic.GenericDatumReader[
@@ -616,7 +616,7 @@ object SourceOps {
       import s.implicits._
       val dir = stage("avroev")
       graft.sources.StoreIO.mkdirs(graft.sources.StoreIO.hadoopConf, dir)
-      val sconf = graft.sources.StoreIO.ser(graft.sources.StoreIO.hadoopConf)
+      val sconf = graft.sources.StoreIO.broadcastConf(s)
       val writerJson = AVRO_SCHEMA
       // v2: user_id dropped, schema_tag added with a default
       val readerJson = """{
@@ -651,7 +651,7 @@ object SourceOps {
           w.close()
           if (n == 0) Iterator.empty
           else {
-            graft.sources.StoreIO.write(sconf.value,
+            graft.sources.StoreIO.write(sconf.value.value,
               s"$dir/part-$pid.avro", bos.toByteArray)
             Iterator.single(n)
           }
@@ -663,7 +663,7 @@ object SourceOps {
         .parallelize(files, math.max(1, files.size))
         .flatMap { p =>
           val reader = new org.apache.avro.Schema.Parser().parse(readerJson)
-          val bytes = graft.sources.StoreIO.readAllBytes(sconf.value, p)
+          val bytes = graft.sources.StoreIO.readAllBytes(sconf.value.value, p)
           // writer schema comes from the container header; the reader
           // schema drives avro's resolution (defaults + skips)
           val rd = new org.apache.avro.file.DataFileReader(

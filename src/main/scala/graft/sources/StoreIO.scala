@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
 /** Path-scheme-aware byte I/O for the zarr stores: every read, write, list,
@@ -14,8 +16,8 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Driver-side callers pass [[hadoopConf]] (the active session's Hadoop
   * configuration, carrying `spark.hadoop.*` credentials); executor-side
-  * closures capture a [[ser]]-wrapped copy — `Configuration` itself is not
-  * serializable.
+  * closures capture a [[broadcastConf]] of it — `Configuration` itself is
+  * not serializable.
   */
 object StoreIO {
 
@@ -24,8 +26,18 @@ object StoreIO {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  def ser(conf: Configuration): SerializableConfiguration =
-    new SerializableConfiguration(conf)
+  /** A snapshot of `spark`'s Hadoop configuration for executor-side code,
+    * as one broadcast per call (the pattern of Spark's own
+    * `FileSourceScanExec`). A task then carries a broadcast id instead of
+    * its own serialized copy of a conf of a thousand-odd entries, and each
+    * executor deserializes the conf once per call rather than once per
+    * task. Nothing is cached across calls, so each call sees the session's
+    * conf as it is then.
+    */
+  def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] = {
+    val sc = spark.sparkContext
+    sc.broadcast(new SerializableConfiguration(new Configuration(sc.hadoopConfiguration)))
+  }
 
   private def fsOf(p: Path, conf: Configuration): FileSystem =
     p.getFileSystem(conf)

@@ -8,6 +8,7 @@ import java.util.zip.{Deflater, DeflaterOutputStream, GZIPInputStream, GZIPOutpu
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
+import graft.core.Nd
 import graft.tiles.{GridSpec, Tile}
 
 /** Zarr v2 chunk-store source/sink for tile tables.
@@ -117,7 +118,7 @@ object ZarrIO extends Serializable {
     * tile payload for chunk `loc` — edge padding is dropped here, so the
     * Tile rows match what [[graft.sources.TileIO.fromPixels]] builds.
     */
-  private[sources] def decodeChunk(raw: Array[Byte], meta: Meta,
+  private[graft] def decodeChunk(raw: Array[Byte], meta: Meta,
       loc: Array[Int], tileShape: Array[Int]): Array[Long] = {
     val bytes = meta.compressor match {
       case ""     => raw
@@ -130,70 +131,74 @@ object ZarrIO extends Serializable {
         s"expected ${meta.chunks.product.toLong * w}")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val out = new Array[Long](tileShape.product)
-    val chunkStrides = graft.core.Nd.strides(meta.chunks)
-    val idx = new Array[Int](meta.dims)
-    val dims = meta.dims
-    // hoist the dtype dispatch out of the pixel loop: one reader function
-    // per chunk, not a string match per element
-    val reader: Int => Long = meta.dtype match {
-      case "|u1" => src => bb.get(src) & 0xffL
-      case "<u2" => src => bb.getShort(src * 2) & 0xffffL
-      case "<i4" => src => bb.getInt(src * 4).toLong
-      case "<i8" => src => bb.getLong(src * 8)
-    }
-    var flat = 0
-    while (flat < out.length) {
-      var src = 0
-      var a = 0
-      while (a < dims) { src += idx(a) * chunkStrides(a); a += 1 }
-      out(flat) = reader(src)
-      flat += 1
-      var b = dims - 1
-      while (b >= 0 && { idx(b) += 1; idx(b) == tileShape(b) }) { idx(b) = 0; b -= 1 }
+    var o = 0
+    // the tile's rows inside the chunk (the tile sits at the chunk's
+    // origin), one dtype dispatch per row
+    Nd.foreachRun(meta.chunks, Nd.fullBox(tileShape)) { (from, n) =>
+      var i = from
+      var k = o
+      val end = from + n
+      meta.dtype match {
+        case "|u1" => while (i < end) { out(k) = bytes(i) & 0xffL; i += 1; k += 1 }
+        case "<u2" => while (i < end) { out(k) = bb.getShort(i * 2) & 0xffffL; i += 1; k += 1 }
+        case "<i4" => while (i < end) { out(k) = bb.getInt(i * 4).toLong; i += 1; k += 1 }
+        case "<i8" =>
+          bb.slice(from * 8, n * 8).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(out, o, n)
+      }
+      o += n
     }
     out
   }
 
+  /** The failure of a value that `dtype` cannot hold, worded as `require`. */
+  private def outOfRange(v: Long, dtype: String): Nothing =
+    throw new IllegalArgumentException(s"requirement failed: value $v out of $dtype range")
+
   /** Encode one tile payload as a full-size stored chunk (fill-padded). */
-  private[sources] def encodeChunk(data: Array[Long], meta: Meta,
+  private[graft] def encodeChunk(data: Array[Long], meta: Meta,
       tileShape: Array[Int]): Array[Byte] = {
     val w = WIDTHS(meta.dtype)
     val chunkElems = meta.chunks.product
     val bytes = new Array[Byte](chunkElems * w)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    // hoisted writer: range check + dispatch resolved once per chunk
-    val writer: (Int, Long) => Unit = meta.dtype match {
-      case "|u1" => (i, v) => {
-        require(v >= 0 && v <= 0xffL, s"value $v out of |u1 range")
-        bb.put(i, v.toByte)
+    // writes data(o until o + n) at chunk elements from until from + n,
+    // range-checking each value; one dtype dispatch per call
+    def put(src: Array[Long], o: Int, from: Int, n: Int): Unit = {
+      var i = from
+      var k = o
+      val end = from + n
+      meta.dtype match {
+        case "|u1" => while (i < end) {
+          val v = src(k)
+          if (v < 0 || v > 0xffL) outOfRange(v, "|u1")
+          bytes(i) = v.toByte; i += 1; k += 1
+        }
+        case "<u2" => while (i < end) {
+          val v = src(k)
+          if (v < 0 || v > 0xffffL) outOfRange(v, "<u2")
+          bb.putShort(i * 2, v.toShort); i += 1; k += 1
+        }
+        case "<i4" => while (i < end) {
+          val v = src(k)
+          if (v < Int.MinValue || v > Int.MaxValue) outOfRange(v, "<i4")
+          bb.putInt(i * 4, v.toInt); i += 1; k += 1
+        }
+        case "<i8" =>
+          bb.slice(from * 8, n * 8).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().put(src, o, n)
       }
-      case "<u2" => (i, v) => {
-        require(v >= 0 && v <= 0xffffL, s"value $v out of <u2 range")
-        bb.putShort(i * 2, v.toShort)
+    }
+    if (meta.fillValue != 0L && chunkElems > 0) {
+      // range-check and write the fill once, then double the filled prefix
+      put(Array(meta.fillValue), 0, 0, 1)
+      var filled = w
+      while (filled < bytes.length) {
+        val n = math.min(filled, bytes.length - filled)
+        System.arraycopy(bytes, 0, bytes, filled, n)
+        filled += n
       }
-      case "<i4" => (i, v) => {
-        require(v >= Int.MinValue && v <= Int.MaxValue, s"value $v out of <i4 range")
-        bb.putInt(i * 4, v.toInt)
-      }
-      case "<i8" => (i, v) => bb.putLong(i * 8, v)
     }
-    if (meta.fillValue != 0L) {
-      var i = 0
-      while (i < chunkElems) { writer(i, meta.fillValue); i += 1 }
-    }
-    val chunkStrides = graft.core.Nd.strides(meta.chunks)
-    val idx = new Array[Int](meta.dims)
-    val dims = meta.dims
-    var flat = 0
-    while (flat < data.length) {
-      var dst = 0
-      var a = 0
-      while (a < dims) { dst += idx(a) * chunkStrides(a); a += 1 }
-      writer(dst, data(flat))
-      flat += 1
-      var b = dims - 1
-      while (b >= 0 && { idx(b) += 1; idx(b) == tileShape(b) }) { idx(b) = 0; b -= 1 }
-    }
+    var o = 0
+    Nd.foreachRun(meta.chunks, Nd.fullBox(tileShape)) { (from, n) => put(data, o, from, n); o += n }
     meta.compressor match {
       case "" => bytes
       case "zlib" =>
@@ -267,14 +272,14 @@ object ZarrIO extends Serializable {
     val present = layout.listChunkLocs(dir).map(_.mkString(",")).toSet
     val grid = layout.grid
     val fill = layout.meta.fillValue
-    val sconf = StoreIO.ser(StoreIO.hadoopConf)
+    val sconf = StoreIO.broadcastConf(spark)
     val par = spark.sparkContext.defaultParallelism
 
     def tilesOf(obj: Array[Int], isPresent: Boolean): Seq[Tile] = {
       val locs = layout.tilesOf(obj).filter(keep)
       val raws =
         if (locs.isEmpty || !isPresent) locs.map(_ => None)
-        else layout.readObject(sconf.value, dir, obj, locs)
+        else layout.readObject(sconf.value.value, dir, obj, locs)
       locs.zip(raws).flatMap { case (loc, raw) =>
         val shape = layout.tileShape(loc)
         raw match {

@@ -169,12 +169,12 @@ final case class ZarrLayout(meta: ZarrIO.Meta, v3: Boolean,
     val conf = StoreIO.hadoopConf
     StoreIO.mkdirs(conf, dir)
     writeMeta(dir)
-    val sconf = StoreIO.ser(conf)
+    val sconf = StoreIO.broadcastConf(tiles.sparkSession)
     shard match {
       case None =>
         tiles.foreachPartition { (it: Iterator[Tile]) =>
           it.foreach { t =>
-            StoreIO.write(sconf.value, path(dir, t.loc),
+            StoreIO.write(sconf.value.value, path(dir, t.loc),
               ZarrIO.encodeChunk(t.data, meta, t.shape))
           }
         }
@@ -195,7 +195,7 @@ final case class ZarrLayout(meta: ZarrIO.Meta, v3: Boolean,
             require(enc(k) == null, s"duplicate tile at ${t.loc.mkString(",")}")
             enc(k) = ZarrIO.encodeChunk(t.data, meta, t.shape)
           }
-          StoreIO.write(sconf.value, path(dir, objectOf(ts.head.loc)), s.pack(enc))
+          StoreIO.write(sconf.value.value, path(dir, objectOf(ts.head.loc)), s.pack(enc))
           1
         }.count()
     }

@@ -3,6 +3,7 @@ package graft.sources.zarr
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
@@ -156,7 +157,8 @@ final class ZarrMicroBatchStream(dir: String, layout: ZarrLayout,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ZarrReaderFactory(dir, layout, required.fieldNames, StoreIO.ser(conf),
+    ZarrReaderFactory(dir, layout, required.fieldNames,
+      StoreIO.broadcastConf(SparkSession.active),
       vectorized = false)
 
   override def deserializeOffset(json: String): Offset =

@@ -15,6 +15,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.{StoreIO, Zarr3IO, ZarrIO, ZarrLayout}
@@ -425,12 +427,12 @@ final class ZarrAggScan(dir: String, layout: ZarrLayout, box: Bounds,
       if (layout.shard.isEmpty || objs.size <= DriverShards)
         partialsOf(objs.iterator, StoreIO.hadoopConf, gb).toMap
       else {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val sconf = StoreIO.ser(StoreIO.hadoopConf)
+        val spark = SparkSession.active
+        val sconf = StoreIO.broadcastConf(spark)
         spark.sparkContext
           .parallelize(objs, math.max(1, math.min(objs.size,
             spark.sparkContext.defaultParallelism)))
-          .mapPartitions(it => partialsOf(it, sconf.value, gb))
+          .mapPartitions(it => partialsOf(it, sconf.value.value, gb))
           .reduceByKey(_.merge(_))
           .collect().toMap
       }
@@ -621,7 +623,7 @@ final class ZarrScan(dir: String, layout: ZarrLayout, box: Bounds,
 
   override def createReaderFactory(): PartitionReaderFactory =
     ZarrReaderFactory(dir, layout, required.fieldNames,
-      StoreIO.ser(StoreIO.hadoopConf), vectorized)
+      StoreIO.broadcastConf(SparkSession.active), vectorized)
 }
 
 /** Shared axis/literal matching for static and runtime filter pushdown. */
@@ -652,7 +654,7 @@ final case class ZarrInputPartition(loc: Array[Int]) extends InputPartition
 
 final case class ZarrReaderFactory(dir: String, layout: ZarrLayout,
     columns: Array[String],
-    sconf: SerializableConfiguration,
+    sconf: Broadcast[SerializableConfiguration],
     vectorized: Boolean = true) extends PartitionReaderFactory {
 
   /** Shared per-partition setup for both read paths: chunk location, the
@@ -670,14 +672,14 @@ final case class ZarrReaderFactory(dir: String, layout: ZarrLayout,
     */
   private def openChunk(partition: InputPartition): (Array[Int], Array[Int], Array[Long]) = {
     val loc = partition.asInstanceOf[ZarrInputPartition].loc
-    layout.locator(sconf.value, dir, layout.objectOf(loc))(loc) match {
+    layout.locator(sconf.value.value, dir, layout.objectOf(loc))(loc) match {
       case None => (loc, Array.fill(layout.dims)(0), null) // absent inner chunk: no rows
       case Some(_) if !columns.contains("value") => (loc, layout.tileShape(loc), null)
       case Some(ref) =>
         ZarrTableProvider.payloadReads.incrementAndGet()
         val tileShape = layout.tileShape(loc)
         try (loc, tileShape,
-          ZarrIO.decodeChunk(ref.read(sconf.value, dir), layout.meta, loc, tileShape))
+          ZarrIO.decodeChunk(ref.read(sconf.value.value, dir), layout.meta, loc, tileShape))
         catch {
           case e: java.io.FileNotFoundException =>
             // only an enumerated (assumeComplete) plan can reach a missing
@@ -1004,7 +1006,7 @@ final class ZarrStreamingWrite(dir: String, layout: ZarrLayout,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     ZarrStreamingWriterFactory(dir, layout, schema.fieldNames,
-      StoreIO.ser(StoreIO.hadoopConf), queryId)
+      StoreIO.broadcastConf(SparkSession.active), queryId)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -1033,7 +1035,7 @@ final class ZarrStreamingWrite(dir: String, layout: ZarrLayout,
   * encoding, staged under the epoch's deterministic directory.
   */
 final case class ZarrStreamingWriterFactory(dir: String, layout: ZarrLayout,
-    columns: Array[String], sconf: SerializableConfiguration, queryId: String)
+    columns: Array[String], sconf: Broadcast[SerializableConfiguration], queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
@@ -1047,7 +1049,7 @@ final class ZarrBatchWrite(dir: String, staging: String, layout: ZarrLayout,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     ZarrWriterFactory(new Path(dir, staging).toString, layout.unsharded,
-      schema.fieldNames, StoreIO.ser(StoreIO.hadoopConf))
+      schema.fieldNames, StoreIO.broadcastConf(SparkSession.active))
 
   private def packStaging = staging + "-pack"
 
@@ -1101,8 +1103,8 @@ final class ZarrBatchWrite(dir: String, staging: String, layout: ZarrLayout,
     * job from the driver-side commit; shard count bounds the parallelism.
     */
   private def packShards(sh: ZarrLayout.Sharding, stage: Path, packDir: Path): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val sconf = StoreIO.ser(StoreIO.hadoopConf)
+    val spark = SparkSession.active
+    val sconf = StoreIO.broadcastConf(spark)
     val stageStr = stage.toString
     val packStr = packDir.toString
     val shards = layout
@@ -1118,9 +1120,9 @@ final class ZarrBatchWrite(dir: String, staging: String, layout: ZarrLayout,
           val enc = new Array[Array[Byte]](sh.slots)
           locs.foreach { loc =>
             enc(sh.slotOf(loc)) =
-              StoreIO.readAllBytes(sconf.value, staged.path(stageStr, loc))
+              StoreIO.readAllBytes(sconf.value.value, staged.path(stageStr, loc))
           }
-          StoreIO.write(sconf.value, shards.path(packStr, obj), sh.pack(enc))
+          StoreIO.write(sconf.value.value, shards.path(packStr, obj), sh.pack(enc))
         }
   }
 
@@ -1139,7 +1141,7 @@ final case class ZarrChunksWritten(n: Int) extends WriterCommitMessage
   */
 final case class ZarrWriterFactory(stageDir: String, layout: ZarrLayout,
     columns: Array[String],
-    sconf: SerializableConfiguration) extends DataWriterFactory {
+    sconf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val dims = layout.dims
@@ -1174,7 +1176,7 @@ final case class ZarrWriterFactory(stageDir: String, layout: ZarrLayout,
             "rows are not clustered by grid key — the write requires " +
             "the engine-enforced distribution (one chunk, one task, " +
             "contiguous rows)")
-        StoreIO.write(sconf.value, new Path(stageDir, key).toString,
+        StoreIO.write(sconf.value.value, new Path(stageDir, key).toString,
           ZarrIO.encodeChunk(curData, layout.meta, curShape))
         written += 1
         curLoc = null; curShape = null; curData = null

@@ -196,4 +196,86 @@ class CorePropertySpec extends AnyFunSuite {
     assert(widths == Set(1, 2, 4, 8))
     assert(zeroSize > 0 && subBox > 0, s"zero-size $zeroSize, strict sub-box $subBox")
   }
+
+  test("box kernels equal their per-voxel definitions over foreachIndex") {
+    def naiveSlice(src: Array[Long], shape: Array[Int], box: Nd.Box): Array[Long] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+      Nd.foreachIndex(shape, box)(out += src(_))
+      out.toArray
+    }
+    def naivePaste(dst: Array[Long], shape: Array[Int], box: Nd.Box,
+                   payload: Array[Long], nonZeroOnly: Boolean): Unit = {
+      var i = 0
+      Nd.foreachIndex(shape, box) { flat =>
+        if (!nonZeroOnly || payload(i) != 0L) dst(flat) = payload(i)
+        i += 1
+      }
+    }
+    def naivePack(src: Array[Long], shape: Array[Int], box: Nd.Box, width: Int): Array[Byte] =
+      width.toByte +: naiveSlice(src, shape, box).flatMap(v =>
+        (0 until width).map(b => (v >>> (8 * b)).toByte))
+    def naiveUnpack(dst: Array[Long], shape: Array[Int], box: Nd.Box,
+                    packed: Array[Byte]): Unit = {
+      val w = packed(0).toInt
+      val values = Array.tabulate(box.numel)(i => (0 until w).foldLeft(0L)((acc, b) =>
+        acc | ((packed(1 + i * w + b) & 0xffL) << (8 * b))))
+      naivePaste(dst, shape, box, values, nonZeroOnly = false)
+    }
+
+    val rnd = new scala.util.Random(11)
+    def randomValue(): Long = rnd.nextInt(4) match {
+      case 0 => 0L
+      case 1 => rnd.nextInt(256).toLong
+      case 2 => rnd.nextInt() & 0xffffffffL
+      case _ => rnd.nextLong()
+    }
+    val kinds = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    for (sample <- 0 until 400) {
+      val dims = 1 + sample % 3
+      val shape = Array.fill(dims)(1 + rnd.nextInt(if (dims == 1) 12 else 6))
+      val start = shape.map(n => rnd.nextInt(n))
+      val box = rnd.nextInt(4) match {
+        case 0 => Nd.fullBox(shape)
+        case 1 => // zero extent on one axis
+          val a = rnd.nextInt(dims)
+          Nd.Box(start, Array.tabulate(dims)(k =>
+            if (k == a) start(k) else start(k) + 1 + rnd.nextInt(shape(k) - start(k))))
+        case 2 => // one row: extent 1 on every leading axis
+          Nd.Box(start, Array.tabulate(dims)(k =>
+            if (k < dims - 1) start(k) + 1 else start(k) + 1 + rnd.nextInt(shape(k) - start(k))))
+        case _ =>
+          Nd.Box(start, Array.tabulate(dims)(k => start(k) + 1 + rnd.nextInt(shape(k) - start(k))))
+      }
+      val total = Nd.size(shape)
+      kinds(
+        if (box.numel == 0) "zero-size"
+        else if (box.numel == total) "full"
+        else if (dims > 1 && (0 until dims - 1).forall(k => box.end(k) - box.start(k) == 1)) "single-row"
+        else "strict sub-box") += 1
+      kinds(s"${dims}-D") += 1
+
+      val src = Array.fill(total)(randomValue())
+      val payload = Array.fill(box.numel)(randomValue())
+      val dst0 = Array.fill(total)(randomValue())
+      assert(Nd.sliceBox(src, shape, box).sameElements(naiveSlice(src, shape, box)))
+      val pasted = dst0.clone(); Nd.pasteBox(pasted, shape, box, payload)
+      val pastedRef = dst0.clone(); naivePaste(pastedRef, shape, box, payload, nonZeroOnly = false)
+      assert(pasted.sameElements(pastedRef))
+      val painted = dst0.clone(); Nd.paintNonZero(painted, shape, box, payload)
+      val paintedRef = dst0.clone(); naivePaste(paintedRef, shape, box, payload, nonZeroOnly = true)
+      assert(painted.sameElements(paintedRef))
+      for (width <- Seq(1, 2, 4, 8)) {
+        val mask = if (width == 8) -1L else (1L << (8 * width)) - 1L
+        val narrow = src.map(_ & mask)
+        val packed = Nd.packBox(narrow, shape, box, width)
+        assert(packed.sameElements(naivePack(narrow, shape, box, width)),
+          s"packBox width $width, shape ${shape.mkString("x")}")
+        val back = dst0.clone(); Nd.unpackBox(back, shape, box, packed)
+        val backRef = dst0.clone(); naiveUnpack(backRef, shape, box, packed)
+        assert(back.sameElements(backRef), s"unpackBox width $width")
+      }
+    }
+    Seq("zero-size", "full", "single-row", "strict sub-box", "1-D", "2-D", "3-D")
+      .foreach(k => assert(kinds(k) > 0, s"no $k sample: $kinds"))
+  }
 }

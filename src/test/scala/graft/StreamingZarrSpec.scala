@@ -196,7 +196,7 @@ class StreamingZarrSpec extends AnyFunSuite {
         "g0 BIGINT, g1 BIGINT, p0 BIGINT, p1 BIGINT, value BIGINT"),
       "q-redeliver")
     val factory = ZarrStreamingWriterFactory(store, layout, cols,
-      StoreIO.ser(StoreIO.hadoopConf), "q-redeliver")
+      StoreIO.broadcastConf(spark), "q-redeliver")
     def stageAndCommit(): Unit = {
       val w = factory.createWriter(0, 0L, 7L)
       for (p0 <- 0 until 2; p1 <- 0 until 2)

@@ -124,4 +124,72 @@ class ZarrHadoopSpec extends AnyFunSuite {
       if (t == null) Seq.empty else t.getMessage +: chain(t.getCause)
     assert(chain(ex).exists(m => m != null && m.contains("append-mode")))
   }
+
+  test("zarr read and write tasks carry no Hadoop conf") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerStageSubmitted}
+    import org.apache.spark.storage.BroadcastBlockId
+    val sc = spark.sparkContext
+    // the bytes of the action's task binaries (RDD + closure, which every
+    // task deserializes): the scheduler broadcasts a stage's binary right
+    // after posting its submission, so it is the first broadcast made after
+    // that event; broadcasts older than `mark` that the block manager
+    // reports again do not count
+    def taskBinaryBytes(action: => Unit): Long = {
+      val mark = { val m = sc.broadcast(0); m.destroy(); m.id }
+      val events = new java.util.concurrent.ConcurrentLinkedQueue[Option[(Long, Long)]]()
+      val listener = new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = events.add(None)
+        override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+          e.blockUpdatedInfo.blockId match {
+            case BroadcastBlockId(id, field) if id > mark && field.startsWith("piece") =>
+              val b = e.blockUpdatedInfo
+              events.add(Some((id, b.memSize + b.diskSize)))
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try { action; org.apache.spark.ListenerDrain.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      var seen = Set.empty[Long]
+      var binaries = Set.empty[Long]
+      var submitted = false
+      var bytes = 0L
+      events.forEach {
+        case None => submitted = true
+        case Some((id, size)) =>
+          if (submitted && !seen(id)) { binaries += id; submitted = false }
+          if (binaries(id) && size > 0) bytes += size
+          seen += id
+      }
+      assert(binaries.nonEmpty, "the action submitted no stage")
+      bytes
+    }
+    val spec = GridSpec(Array(5L, 7L), Array(3, 4))
+    val tiles = spark.createDataset(sampleTiles(spec))
+    val src = tmpUri("zarr_conf_src")
+    ZarrIO.write(tiles, spec, src, "<u2", "zlib")
+    def measure(): Seq[Long] = Seq(
+      taskBinaryBytes { ZarrIO.read(spark, src).collect(); () },
+      taskBinaryBytes(ZarrIO.write(tiles, spec, tmpUri("zarr_conf_dst"), "<u2", "zlib")),
+      taskBinaryBytes { spark.read.format("zarr").load(src).collect(); () },
+      taskBinaryBytes(spark.read.format("zarr").load(src).write.format("zarr")
+        .option("shape", "5,7").option("chunks", "3,4").option("dtype", "<u2")
+        .mode("overwrite").save(tmpUri("zarr_conf_dsv2"))))
+    val paths = Seq("read", "write", "DSv2 read", "DSv2 write")
+
+    val base = measure()
+    val hc = sc.hadoopConfiguration
+    val rnd = new scala.util.Random(3)
+    val keys = (0 until 1000).map(i => f"graft.test.conf.pad.$i%04d")
+    try {
+      // 100 random characters each: ~100 KB that compression cannot hide
+      keys.foreach(k => hc.set(k, rnd.alphanumeric.take(100).mkString))
+      val padded = measure()
+      paths.indices.foreach { i =>
+        assert(padded(i) - base(i) < 10000L,
+          s"${paths(i)} task binaries ${base(i)} -> ${padded(i)} bytes")
+      }
+    } finally keys.foreach(hc.unset)
+  }
 }

@@ -110,6 +110,66 @@ class ZarrSpec extends AnyFunSuite {
       Option(ex.getCause).exists(_.getMessage.contains("u1 range")))
   }
 
+  test("chunk codec: edge-clipped tiles round-trip per dtype and fill") {
+    val rnd = new scala.util.Random(5)
+    val ranges = Seq("|u1" -> (0L, 255L), "<u2" -> (0L, 65535L),
+      "<i4" -> (Int.MinValue.toLong, Int.MaxValue.toLong), "<i8" -> (Long.MinValue, Long.MaxValue))
+    val width = Map("|u1" -> 1, "<u2" -> 2, "<i4" -> 4, "<i8" -> 8)
+    for ((dtype, (lo, hi)) <- ranges; fill <- Seq(0L, 7L);
+         chunks <- Seq(Array(9), Array(4, 6), Array(3, 4, 5)); comp <- Seq("", "zlib")) {
+      // an edge tile: clipped on at least one axis, full or clipped on the rest
+      val clipped = rnd.nextInt(chunks.length)
+      val tileShape = Array.tabulate(chunks.length)(a =>
+        if (a != clipped && rnd.nextBoolean()) chunks(a) else 1 + rnd.nextInt(chunks(a) - 1))
+      val meta = ZarrIO.Meta(chunks.map(_.toLong), chunks, dtype, comp, fill, ".")
+      val data = Array.fill(tileShape.product) {
+        if (hi == Long.MaxValue) rnd.nextLong()
+        else lo + (rnd.nextDouble() * (hi - lo + 1).toDouble).toLong.min(hi - lo)
+      }
+      if (dtype == "<i4") data(0) = -123456789L
+      val what = s"$dtype fill $fill chunks ${chunks.mkString("x")} tile " +
+        s"${tileShape.mkString("x")} compressor '$comp'"
+      val enc = ZarrIO.encodeChunk(data, meta, tileShape)
+      if (comp.isEmpty) {
+        // the stored chunk element by element: the tile row-major inside
+        // the chunk, fill everywhere else, little-endian
+        val w = width(dtype)
+        val expected = Array.fill(chunks.product)(fill)
+        var i = 0
+        graft.core.Nd.foreachIndex(chunks, graft.core.Nd.Box(new Array[Int](chunks.length),
+          tileShape)) { flat => expected(flat) = data(i); i += 1 }
+        val stored = Array.tabulate(chunks.product)(e => (0 until w).foldLeft(0L)((acc, b) =>
+          acc | ((enc(e * w + b) & 0xffL) << (8 * b))))
+        val mask = if (w == 8) -1L else (1L << (8 * w)) - 1L
+        assert(stored.sameElements(expected.map(_ & mask)), what)
+      }
+      val back = ZarrIO.decodeChunk(enc, meta, new Array[Int](chunks.length), tileShape)
+      assert(back.sameElements(data), what)
+      if (dtype == "<i4") assert(back(0) == -123456789L, s"$what: <i4 must sign-extend")
+    }
+  }
+
+  test("chunk codec: the first out-of-range value in tile order is named") {
+    val meta = ZarrIO.Meta(Array(2L, 4L), Array(2, 4), "|u1", "", 0L, ".")
+    // tile 2x3 inside a 2x4 chunk: 256 is first in tile row-major order
+    val ex = intercept[IllegalArgumentException] {
+      ZarrIO.encodeChunk(Array(1L, 2L, 256L, 300L, -1L, 3L), meta, Array(2, 3))
+    }
+    assert(ex.getMessage == "requirement failed: value 256 out of |u1 range")
+    val u2 = intercept[IllegalArgumentException] {
+      ZarrIO.encodeChunk(Array(1L, -1L, 70000L), meta.copy(dtype = "<u2"), Array(1, 3))
+    }
+    assert(u2.getMessage == "requirement failed: value -1 out of <u2 range")
+    val i4 = intercept[IllegalArgumentException] {
+      ZarrIO.encodeChunk(Array(0L, 1L << 31), meta.copy(dtype = "<i4"), Array(1, 2))
+    }
+    assert(i4.getMessage == s"requirement failed: value ${1L << 31} out of <i4 range")
+    val badFill = intercept[IllegalArgumentException] {
+      ZarrIO.encodeChunk(Array(1L), meta.copy(fillValue = 999L), Array(1, 1))
+    }
+    assert(badFill.getMessage == "requirement failed: value 999 out of |u1 range")
+  }
+
   test("sparse store: dense read synthesizes fill, readPresent skips it") {
     import spark.implicits._
     val spec = GridSpec(Array(6L, 8L), Array(3, 4))
