@@ -361,11 +361,20 @@ object Kernels {
       "deterministic or persist the input before sorting"
 
   /** O10 `sort_indices` (`chunkops.py:104-113`): remap every label to its
-    * index in the globally sorted distinct-label list (broadcast). A label
-    * is looked up only where it differs from the previous voxel's, so runs
-    * of background or of one object pay one boxed lookup.
+    * index in `sorted`, the globally sorted distinct-label list
+    * (broadcast). A label is binary-searched only where it differs from the
+    * previous voxel's, so runs of background or of one object pay one
+    * lookup.
     */
-  def sortRemap(tile: Tile, rank: java.util.HashMap[java.lang.Long, java.lang.Long]): Tile = {
+  def sortRemap(tile: Tile, sorted: Array[Long]): Tile = remapRanks(tile, sorted, _.toLong)
+
+  /** [[sortRemap]] over a tile's own sorted `labels`, where `ranks(i)` is
+    * the global rank of `labels(i)`.
+    */
+  def sortRemap(tile: Tile, labels: Array[Long], ranks: Array[Long]): Tile =
+    remapRanks(tile, labels, ranks(_))
+
+  private def remapRanks(tile: Tile, labels: Array[Long], rankAt: Int => Long): Tile = {
     val data = tile.data
     val out = new Array[Long](data.length)
     var label = 0L
@@ -374,17 +383,75 @@ object Kernels {
     while (i < out.length) {
       if (i == 0 || data(i) != label) {
         label = data(i)
-        val boxed = rank.get(label)
-        // fail loudly instead of an opaque unboxing NPE
-        if (boxed == null) throw new IllegalStateException(
+        val at = java.util.Arrays.binarySearch(labels, label)
+        if (at < 0) throw new IllegalStateException(
           s"label $label of tile ${tile.loc.mkString("(", ",", ")")} " +
             s"has no rank: $RankMissCause")
-        r = boxed
+        r = rankAt(at)
       }
       out(i) = r
       i += 1
     }
     tile.copy(data = out)
+  }
+
+  /** O10's label probe over one partition: the sorted distinct labels of
+    * `tiles`, at most `limit` of the smallest. Only a label that differs
+    * from the previous voxel's is buffered. A full buffer is sorted and
+    * deduplicated in place, keeping at most `limit` values, and doubles
+    * only when that leaves it more than half full.
+    */
+  def distinctLabels(tiles: Iterator[Tile], limit: Int): Array[Long] = {
+    var buf = new Array[Long](1024)
+    var n = 0
+    tiles.foreach { t =>
+      val d = t.data
+      var i = 0
+      while (i < d.length) {
+        if (i == 0 || d(i) != d(i - 1)) {
+          if (n == buf.length) {
+            n = sortDistinct(buf, n, limit)
+            if (n > buf.length / 2) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+          }
+          buf(n) = d(i)
+          n += 1
+        }
+        i += 1
+      }
+    }
+    java.util.Arrays.copyOf(buf, sortDistinct(buf, n, limit))
+  }
+
+  /** Sorts `a(0 until n)` in place and moves its distinct values, at most
+    * `limit` of the smallest, to the front; returns how many there are.
+    */
+  private def sortDistinct(a: Array[Long], n: Int, limit: Int): Int = {
+    java.util.Arrays.sort(a, 0, n)
+    var k = 0
+    var i = 0
+    while (i < n && k < limit) {
+      if (k == 0 || a(i) != a(k - 1)) { a(k) = a(i); k += 1 }
+      i += 1
+    }
+    k
+  }
+
+  /** The sorted distinct union of the sorted distinct `a` and `b`, at most
+    * `limit` of the smallest.
+    */
+  def mergeDistinct(a: Array[Long], b: Array[Long], limit: Int): Array[Long] = {
+    val out = new Array[Long](math.min(a.length.toLong + b.length, limit.toLong).toInt)
+    var i, j, k = 0
+    while (k < out.length && (i < a.length || j < b.length)) {
+      val v =
+        if (j == b.length || (i < a.length && a(i) <= b(j))) a(i)
+        else b(j)
+      if (i < a.length && a(i) == v) i += 1
+      if (j < b.length && b(j) == v) j += 1
+      out(k) = v
+      k += 1
+    }
+    if (k == out.length) out else java.util.Arrays.copyOf(out, k)
   }
 
   /** Zero-pad a tile on the high side to `target` shape

@@ -105,16 +105,64 @@ object Nd {
     var bits = 0L
     var i = 0
     while (i < a.length) { bits |= a(i); i += 1 }
+    widthOf(bits)
+  }
+
+  private def widthOf(bits: Long): Int =
     if (bits < 0L || (bits >>> 32) != 0L) 8
     else if ((bits >>> 16) != 0L) 4
     else if ((bits >>> 8) != 0L) 2
     else 1
+
+  /** The wire frame `(width, base)` of `a`, chosen once per source array:
+    * its [[packWidth]] and no base, unless a base narrows that width. Only
+    * a width above 1 pays a scan for the non-zero min and max; the base is
+    * then `min - 1`, so every non-zero value crosses as `v - base >= 1`
+    * and zero stays free to mean zero. Chunk-offset labels (every label of
+    * a tile in `[lin * offset + 1, lin * offset + count]`) thus cross at
+    * the width of their count, not of their offset.
+    */
+  def packFrame(a: Array[Long]): (Int, Option[Long]) = {
+    val width = packWidth(a)
+    if (width == 1) return (width, None)
+    var min = Long.MaxValue
+    var max = Long.MinValue
+    var i = 0
+    while (i < a.length) {
+      val v = a(i)
+      if (v != 0L) { if (v < min) min = v; if (v > max) max = v }
+      i += 1
+    }
+    // width > 1, so some value is non-zero; the span is unsigned, and a
+    // base is worth its 8 header bytes only where it narrows the width
+    val span = max - min
+    if (span < 0L || span >= 0xffffffffL) return (width, None)
+    val based = widthOf(span + 1)
+    if (based < width) (based, Some(min - 1)) else (width, None)
   }
 
-  /** [[sliceBox]] into the width-tagged wire format: byte 0 = `width`, then
-    * `box.numel` little-endian values of `width` bytes each.
+  /** Byte 0's flag for a payload with a base, and such a payload's header
+    * length (the flag byte and the base).
     */
-  def packBox(src: Array[Long], srcShape: Array[Int], box: Box, width: Int): Array[Byte] = {
+  private final val BaseFlag = 0x80
+  private final val BasedHeader = 9
+
+  /** [[sliceBox]] into the halo wire format. Byte 0 is the width (1, 2, 4
+    * or 8); without a base, `box.numel` little-endian values of `width`
+    * bytes each follow. With a base (from [[packFrame]]), byte 0 also has
+    * its high bit (`0x80`) set, the 8-byte little-endian base follows it,
+    * and then the values, each non-zero `v` as `v - base` (zero stays
+    * zero). An array packed without a base is byte-identical to the
+    * format before bases existed, so older payloads still decode.
+    */
+  def packBox(src: Array[Long], srcShape: Array[Int], box: Box, width: Int,
+              base: Option[Long] = None): Array[Byte] = base match {
+    case None => packPlain(src, srcShape, box, width)
+    case Some(b) => packBased(src, srcShape, box, width, b)
+  }
+
+  private def packPlain(src: Array[Long], srcShape: Array[Int], box: Box,
+                        width: Int): Array[Byte] = {
     val out = new Array[Byte](1 + box.numel * width)
     out(0) = width.toByte
     val buf = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
@@ -134,12 +182,44 @@ object Nd {
     out
   }
 
+  private def packBased(src: Array[Long], srcShape: Array[Int], box: Box,
+                        width: Int, base: Long): Array[Byte] = {
+    val out = new Array[Byte](BasedHeader + box.numel * width)
+    out(0) = (width | BaseFlag).toByte
+    val buf = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
+    buf.putLong(1, base)
+    var pos = BasedHeader
+    foreachRun(srcShape, box) { (from, n) =>
+      var i = from
+      var p = pos
+      val end = from + n
+      width match {
+        case 1 => while (i < end) { val v = src(i); out(p) = (if (v == 0L) 0L else v - base).toByte; i += 1; p += 1 }
+        case 2 => while (i < end) { val v = src(i); buf.putShort(p, (if (v == 0L) 0L else v - base).toShort); i += 1; p += 2 }
+        case 4 => while (i < end) { val v = src(i); buf.putInt(p, (if (v == 0L) 0L else v - base).toInt); i += 1; p += 4 }
+        case _ => while (i < end) { val v = src(i); buf.putLong(p, if (v == 0L) 0L else v - base); i += 1; p += 8 }
+      }
+      pos += n * width
+    }
+    out
+  }
+
   /** [[pasteBox]] from the wire format written by [[packBox]]. */
   def unpackBox(dst: Array[Long], dstShape: Array[Int], box: Box,
                 packed: Array[Byte]): Unit = {
-    val width = packed(0).toInt
-    require(packed.length == 1 + box.numel * width,
-      s"packed payload of ${packed.length} bytes does not hold ${box.numel} values of width $width")
+    val based = (packed(0) & BaseFlag) != 0
+    val width = packed(0) & 0x7f
+    val header = if (based) BasedHeader else 1
+    require((width == 1 || width == 2 || width == 4 || width == 8) &&
+      packed.length == header + box.numel * width,
+      s"packed payload of ${packed.length} bytes does not hold ${box.numel} values of width $width" +
+        (if (based) " after its 8-byte base" else ""))
+    if (based) unpackBased(dst, dstShape, box, packed, width)
+    else unpackPlain(dst, dstShape, box, packed, width)
+  }
+
+  private def unpackPlain(dst: Array[Long], dstShape: Array[Int], box: Box,
+                          packed: Array[Byte], width: Int): Unit = {
     val buf = ByteBuffer.wrap(packed).order(ByteOrder.LITTLE_ENDIAN)
     var pos = 1
     foreachRun(dstShape, box) { (from, n) =>
@@ -151,6 +231,25 @@ object Nd {
         case 2 => while (i < end) { dst(i) = buf.getShort(p) & 0xffffL; i += 1; p += 2 }
         case 4 => while (i < end) { dst(i) = buf.getInt(p) & 0xffffffffL; i += 1; p += 4 }
         case _ => buf.slice(p, n * 8).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(dst, from, n)
+      }
+      pos += n * width
+    }
+  }
+
+  private def unpackBased(dst: Array[Long], dstShape: Array[Int], box: Box,
+                          packed: Array[Byte], width: Int): Unit = {
+    val buf = ByteBuffer.wrap(packed).order(ByteOrder.LITTLE_ENDIAN)
+    val base = buf.getLong(1)
+    var pos = BasedHeader
+    foreachRun(dstShape, box) { (from, n) =>
+      var i = from
+      var p = pos
+      val end = from + n
+      width match {
+        case 1 => while (i < end) { val s = packed(p) & 0xffL; dst(i) = if (s == 0L) 0L else s + base; i += 1; p += 1 }
+        case 2 => while (i < end) { val s = buf.getShort(p) & 0xffffL; dst(i) = if (s == 0L) 0L else s + base; i += 1; p += 2 }
+        case 4 => while (i < end) { val s = buf.getInt(p) & 0xffffffffL; dst(i) = if (s == 0L) 0L else s + base; i += 1; p += 4 }
+        case _ => while (i < end) { val s = buf.getLong(p); dst(i) = if (s == 0L) 0L else s + base; i += 1; p += 8 }
       }
       pos += n * width
     }

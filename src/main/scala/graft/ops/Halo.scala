@@ -44,8 +44,10 @@ object Halo {
     * receiver (-1/0/+1 per axis; all-zero = the receiver's own payload);
     * `shape` = shard extent. `data` and each `classes` channel are
     * width-tagged bytes ([[Nd.packBox]]): a uint8 image crosses the O1
-    * shuffle at one byte per pixel, O4's chunk-disjoint global labels at
-    * eight.
+    * shuffle at one byte per pixel. O4's chunk-disjoint global labels
+    * cross as offsets from their tile's own label range, at the width of
+    * the tile's label count (one or two bytes in practice), not of its
+    * chunk offset (eight bytes from linear index 2 on).
     */
   final case class Shard(
       destLin: Long,
@@ -184,17 +186,20 @@ object Halo {
   }
 
   /** The shards `t` sends: its own payload plus one margin per in-grid
-    * direction `d` with `send(t.loc, d)`. Each array is packed at the width
-    * of its whole source array, found once per tile.
+    * direction `d` with `send(t.loc, d)`. Each array is packed in the wire
+    * frame of its whole source array ([[Nd.packFrame]]), found once per
+    * tile.
     */
   private[graft] def shardsOf(t: Tile, overlaps: Array[Int],
       send: (Array[Int], Array[Int]) => Boolean): Seq[Shard] = {
-    val width = Nd.packWidth(t.data)
-    val classWidths = t.classes.map(Nd.packWidth)
+    val (width, base) = Nd.packFrame(t.data)
+    val classFrames = t.classes.map(Nd.packFrame)
     def pack(box: Nd.Box): (Array[Byte], Array[Array[Byte]]) =
-      (Nd.packBox(t.data, t.shape, box, width),
-        Array.tabulate(t.classes.length)(ch =>
-          Nd.packBox(t.classes(ch), t.shape, box, classWidths(ch))))
+      (Nd.packBox(t.data, t.shape, box, width, base),
+        Array.tabulate(t.classes.length) { ch =>
+          val (w, b) = classFrames(ch)
+          Nd.packBox(t.classes(ch), t.shape, box, w, b)
+        })
     val (own, ownClasses) = pack(Nd.fullBox(t.shape))
     Shard(t.linearIndex, t.loc, t.grid, new Array[Int](t.dims), t.shape, own, ownClasses) +:
       directions(t.dims).collect {

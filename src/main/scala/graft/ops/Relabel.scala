@@ -1,6 +1,5 @@
 package graft.ops
 
-import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -183,28 +182,33 @@ object Relabel {
     Halo.mergeAndTrim(tiles, overlaps)
 
   /** Session conf key: label-cardinality cap for [[sortLabelIndices]]'s
-    * broadcast rank map. The driver materializes at most cap+1 labels (a
+    * broadcast rank table. The driver materializes at most cap+1 labels (a
     * capped probe, never the unbounded label space), and a space that
     * exceeds the cap auto-switches to [[sortLabelIndicesDistributed]] —
     * same output contract, no driver round-trip — in the AQE spirit of
     * deciding the physical strategy from the observed size (the
     * `componentsDriverMaxEdges` precedent). Default 4M labels: the rank
-    * map is a boxed java HashMap (~100 B/entry → ~400 MB transient on
-    * the driver plus one broadcast copy per executor JVM), which fits
-    * default driver heaps; the reference's own collect
-    * (`relabeling.py:331`) has no such guard, so a 100× label space
-    * OOMs there and silently switches strategy here.
+    * table is the probe's sorted primitive `Array[Long]`, 8 B per label
+    * on the heap and in the broadcast (measured at 1M and 4M chunk-offset
+    * labels: 8.0 B/label, against 88.4 B/label on the heap and 28 B/label
+    * Java-serialized for the boxed `HashMap[Long, Long]` it replaced).
+    * That is 32 MB at the cap, plus at most two more arrays of that size
+    * while the driver merges partition probes, and one broadcast copy per
+    * executor JVM, which fits default driver heaps; the reference's own
+    * collect (`relabeling.py:331`) has no such guard, so a 100× label
+    * space OOMs there and silently switches strategy here.
     */
   val SortBroadcastCapKey = "graft.relabel.sortBroadcastMaxLabels"
 
   /** O10 `sort_label_indices` (`relabeling.py:312-346`): global distinct of
     * the label space (eager, like the reference's `da.unique(...).compute()`
-    * at `relabeling.py:331`) broadcast back as a dense-rank map. The probe
-    * (one job: a per-partition distinct, merged by `treeAggregate`) and
-    * the remap read the input through one physical plan, so the remap
-    * reuses the shuffle output the probe already wrote (the halo exchanges
-    * of an `image2labels` input run once, not twice). Persist the input
-    * first if it is expensive to recompute. Label spaces above
+    * at `relabeling.py:331`) broadcast back as the sorted label array, in
+    * which a label's rank is its index. The probe (one job: a per-partition
+    * sorted distinct, merged by `treeAggregate`) and the remap read the
+    * input through one physical plan, so the remap reuses the shuffle
+    * output the probe already wrote (the halo exchanges of an
+    * `image2labels` input run once, not twice). Persist the input first if
+    * it is expensive to recompute. Label spaces above
     * [[SortBroadcastCapKey]] never reach the driver: the call degrades to
     * the distributed variant.
     */
@@ -215,27 +219,17 @@ object Relabel {
     require(cap > 0, s"$SortBroadcastCapKey must be positive, got $cap")
     val probeN = math.min(cap, Int.MaxValue - 1L).toInt + 1
     val pinned = tiles.rdd
-    // one job: each partition's distinct labels, capped at cap+1, merged
-    // under the same cap, so at most cap+1 labels ever reach the driver
-    def capped(seen: mutable.HashSet[Long], labels: Array[Long]): mutable.HashSet[Long] = {
-      var i = 0
-      while (i < labels.length && seen.size < probeN) {
-        if (i == 0 || labels(i) != labels(i - 1)) seen += labels(i)
-        i += 1
-      }
-      seen
-    }
-    val probe = pinned.treeAggregate(mutable.HashSet.empty[Long])(
-      (seen, t) => capped(seen, t.data), (a, b) => capped(a, b.toArray))
-    if (probe.size >= probeN)
+    // one job: each partition's distinct labels as a sorted primitive
+    // array, capped at cap+1, merged under the same cap, so at most cap+1
+    // labels ever reach the driver
+    val probe = pinned.mapPartitions(tiles => Iterator.single(Kernels.distinctLabels(tiles, probeN)))
+      .treeAggregate(Array.emptyLongArray)(
+        Kernels.mergeDistinct(_, _, probeN), Kernels.mergeDistinct(_, _, probeN))
+    if (probe.length >= probeN)
       // over the cap: the probe saw cap+1 distinct labels, so the full
       // collect would be the driver OOM this guard exists to prevent
       return sortLabelIndicesDistributed(spark.createDataset(pinned))
-    val distinctLabels = probe.toArray.sorted
-    val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-    var i = 0L
-    distinctLabels.foreach { l => rank.put(l, i); i += 1 }
-    val bc = spark.sparkContext.broadcast(rank)
+    val bc = spark.sparkContext.broadcast(probe)
     spark.createDataset(pinned.map(t => Kernels.sortRemap(t, bc.value)))
   }
 
@@ -243,10 +237,10 @@ object Relabel {
     * [[sortLabelIndices]]) collects the distinct label set to the driver —
     * fine for millions of labels, fatal for billions. This variant keeps
     * everything distributed: global distinct -> range-partitioned sort with
-    * `zipWithIndex` (two passes, no single-partition sort) -> per-tile rank
-    * maps via an equi-join on the tile's own distinct labels -> cogroup
-    * remap. More shuffles than the broadcast path; choose by label-space
-    * size. Like the broadcast variant, it runs jobs at call time (range
+    * `zipWithIndex` (two passes, no single-partition sort) -> per-tile
+    * (label, rank) pairs via an equi-join on the tile's own distinct labels
+    * -> cogroup remap over the tile's sorted labels. More shuffles than the
+    * broadcast path; choose by label-space size. Like the broadcast variant, it runs jobs at call time (range
     * sampling + zipWithIndex) and reads the input through one physical
     * plan; persist the input first if it is expensive to recompute.
     */
@@ -276,11 +270,12 @@ object Relabel {
     graft.Caching.releaseAfterAction(spark.createDataset(pinned)
       .groupByKey(_.linearIndex)
       .cogroup(perTile.groupByKey(_._1)) { (_, ts, rs) =>
-        val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        rs.foreach(_._2.foreach { case (l, r) => rank.put(l, r) })
+        val pairs = rs.flatMap(_._2).toArray.sortBy(_._1)
+        val labels = pairs.map(_._1)
+        val ranks = pairs.map(_._2)
         // remap every tile in the group (duplicated locations are remapped,
         // not dropped)
-        ts.map(t => Kernels.sortRemap(t, rank))
+        ts.map(t => Kernels.sortRemap(t, labels, ranks))
       }, tileLabels)
   }
 

@@ -278,4 +278,83 @@ class CorePropertySpec extends AnyFunSuite {
     Seq("zero-size", "full", "single-row", "strict sub-box", "1-D", "2-D", "3-D")
       .foreach(k => assert(kinds(k) > 0, s"no $k sample: $kinds"))
   }
+
+  test("frame-of-reference packing: a base only where it narrows, today's bytes elsewhere") {
+    def le(v: Long, width: Int): Seq[Byte] = (0 until width).map(b => (v >>> (8 * b)).toByte)
+    // hand-written encoders: the untagged format (the width, then each value
+    // little-endian) and the tagged one (width | 0x80, the base, then each
+    // non-zero value minus the base)
+    def untagged(values: Array[Long], width: Int): Array[Byte] =
+      (width.toByte +: values.toSeq.flatMap(le(_, width))).toArray
+    def tagged(values: Array[Long], width: Int, base: Long): Array[Byte] =
+      ((width | 0x80).toByte +: (le(base, 8) ++
+        values.toSeq.flatMap(v => le(if (v == 0L) 0L else v - base, width)))).toArray
+    // the narrowest width holding `top`; 9 when no width does (a 2^64 span)
+    def widthFor(top: BigInt): Int = Seq(1, 2, 4, 8).find(w => top < (BigInt(1) << (8 * w))).getOrElse(9)
+
+    val maxOffset = Regions.labelOffset(Array(63, 63, 63), Array(64, 64, 64))
+    val rnd = new scala.util.Random(17)
+    def sparse(n: Int)(v: => Long): Array[Long] =
+      Array.fill(n)(if (rnd.nextInt(3) == 0) v else 0L)
+    def sample(kind: Int, n: Int): Array[Long] = {
+      val k = 1 + rnd.nextInt(34)
+      val b = rnd.nextLong(maxOffset + 1)
+      kind match {
+        case 0 => sparse(n)(b + 1 + rnd.nextLong((1L << k) - 1)) // zero-heavy offset labels
+        case 1 => Array.fill(n)(b + 1 + rnd.nextLong((1L << k) - 1)) // no zeros
+        case 2 => sparse(n)(-b - 1 - rnd.nextLong((1L << k) - 1)) // negatives
+        case 3 => // next to one extreme, or spanning both
+          val spread = 1 + rnd.nextInt(70000)
+          val side = rnd.nextInt(3)
+          sparse(n)(if (side == 0 || (side == 2 && rnd.nextBoolean()))
+            Long.MinValue + (if (rnd.nextInt(4) == 0) 0 else rnd.nextInt(spread))
+          else Long.MaxValue - (if (rnd.nextInt(4) == 0) 0 else rnd.nextInt(spread)))
+        case 4 => sparse(n)(1 + rnd.nextLong(1L << k)) // small values: a base seldom narrows
+        case _ => sparse(n)(rnd.nextLong()) // no narrow frame
+      }
+    }
+
+    val seen = scala.collection.mutable.Set.empty[String]
+    for (i <- 0 until 2000) {
+      val kind = i % 6
+      val shape = Array(1 + rnd.nextInt(6), 1 + rnd.nextInt(8))
+      val src = sample(kind, shape.product)
+      val nonZero = src.filter(_ != 0L)
+      val width = Nd.packWidth(src)
+      val (w, base) = Nd.packFrame(src)
+      val top = if (nonZero.isEmpty) BigInt(0) else BigInt(nonZero.max) - BigInt(nonZero.min) + 1
+      val based = widthFor(top)
+      // a base is chosen exactly when it narrows the width, and it is min - 1
+      val expected =
+        if (width > 1 && based < width) (based, Some(nonZero.min - 1)) else (width, None)
+      assert((w, base) == expected, s"frame of ${src.mkString(",")}")
+      val full = Nd.fullBox(shape)
+      val packed = Nd.packBox(src, shape, full, w, base)
+      base match {
+        case None =>
+          assert(packed.sameElements(untagged(src, w)), s"untagged bytes of ${src.mkString(",")}")
+          seen += s"plain $w"
+        case Some(b) =>
+          assert(packed.sameElements(tagged(src, w, b)), s"tagged bytes of ${src.mkString(",")}")
+          seen += s"based $w"
+          if (nonZero.exists(_ < 0L)) seen += "based negative"
+          if (nonZero.contains(Long.MinValue) || nonZero.contains(Long.MaxValue)) seen += "based extreme"
+      }
+      // every width a base fits round-trips, over the full box and a sub-box
+      val frames = base.toSeq.flatMap(b => Seq(1, 2, 4, 8).filter(_ >= w).map(ww => (ww, Some(b)))) :+
+        ((width, None))
+      val y0 = rnd.nextInt(shape(0)); val x0 = rnd.nextInt(shape(1))
+      val sub = Nd.Box(Array(y0, x0),
+        Array(y0 + 1 + rnd.nextInt(shape(0) - y0), x0 + 1 + rnd.nextInt(shape(1) - x0)))
+      for ((ww, b) <- frames; box <- Seq(full, sub)) {
+        val bytes = Nd.packBox(src, shape, box, ww, b)
+        val back = new Array[Long](box.numel)
+        Nd.unpackBox(back, box.shape, Nd.fullBox(box.shape), bytes)
+        assert(back.sameElements(Nd.sliceBox(src, shape, box)),
+          s"round trip at width $ww, base $b of ${src.mkString(",")}")
+      }
+    }
+    Seq("plain 1", "plain 2", "plain 4", "plain 8", "based 1", "based 2", "based 4",
+      "based negative", "based extreme").foreach(k => assert(seen(k), s"no $k sample: $seen"))
+  }
 }

@@ -4,7 +4,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Dataset
-import graft.ops.{CCLSegmentation, Relabel}
+import graft.core.Nd
+import graft.ops.{CCLSegmentation, Halo, Relabel}
 import graft.tiles.{GridSpec, Tile}
 import graft.tools.TaskMetricSum
 
@@ -81,4 +82,57 @@ class HaloPlacementSpec extends AnyFunSuite {
         assertPlaced("O4", placement(Relabel.mergeOverlappedTiles(removed, ovs)), chunks, n)
       } finally Seq(input, o1, removed).filter(_ != null).foreach(_.unpersist(true))
     }
+
+  test("O4 ships chunk-offset labels at their tile-local width: at most 2 bytes per value from lin 2 on") {
+    import spark.implicits._
+    val img = BlobImages.gen(32, 32, 12, 24, ov + 1).pureApply(Gen.Parameters.default, Seed(7L))
+    val spec = GridSpec(Array(32L, 32L), Array(8, 8))
+    val ovs = Array(ov, ov)
+    val removed = Relabel.removeOverlappedLabels(Relabel.segmentOverlappedInput(
+      Relabel.prepareInput(spark.createDataset(BlobImages.toTiles(img, 32, 32, 8)), spec, ovs),
+      CCLSegmentation()), ovs, 0.25).collect()
+    assert(removed.length == 16)
+    val offset = removed.filter(_.linearIndex >= 2)
+    val labelled = offset.count(_.data.exists(_ != 0L))
+    assert(labelled >= 8, s"only $labelled tiles from lin 2 on hold labels")
+    for (t <- offset; s <- Halo.shardsOf(t, ovs, Halo.receiverWillMerge)) {
+      // their global IDs alone would need eight bytes
+      assert(t.data.forall(_ == 0L) || Nd.packWidth(t.data) == 8)
+      val width = s.data(0) & 0x7f
+      val n = Nd.size(s.shape)
+      assert(width <= 2 && s.data.length <= 9 + 2 * n,
+        s"tile ${t.linearIndex} ships ${s.data.length} B for $n labels at width $width")
+    }
+  }
+
+  test("O4 shards in the untagged width-8 format still assemble; a short payload fails naming its width") {
+    val ovs = Array(2, 2, 2)
+    val shards = StageTables.rem3d.flatMap(t => Halo.shardsOf(t, ovs, Halo.receiverWillMerge))
+    assert(shards.exists(s => (s.data(0) & 0x80) != 0), "no shard carries a base")
+    // what older streaming checkpoints hold: every label at width 8, untagged
+    def widen(s: Halo.Shard)(packed: Array[Byte]): Array[Byte] = {
+      val values = new Array[Long](Nd.size(s.shape))
+      Nd.unpackBox(values, s.shape, Nd.fullBox(s.shape), packed)
+      val buf = java.nio.ByteBuffer.allocate(1 + 8 * values.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.put(8.toByte)
+      values.foreach(buf.putLong)
+      buf.array()
+    }
+    val old = shards.map(s => s.copy(data = widen(s)(s.data), classes = s.classes.map(widen(s))))
+    val oldByLin = old.groupBy(_.destLin)
+    val trimmed = StageTables.trim3d.map(t => t.linearIndex -> t).toMap
+    for ((lin, group) <- shards.groupBy(_.destLin)) {
+      val now = Halo.assembleMerged(lin, group.toArray, ovs)
+      val before = Halo.assembleMerged(lin, oldByLin(lin).toArray, ovs)
+      assert(now.data.sameElements(trimmed(lin).data), s"tile $lin differs from image2labels")
+      assert(before.data.sameElements(now.data), s"old-format tile $lin differs")
+    }
+    for (s <- Seq(shards.find(s => (s.data(0) & 0x80) != 0).get, old.head)) {
+      val width = s.data(0) & 0x7f
+      val e = intercept[IllegalArgumentException](Nd.unpackBox(
+        new Array[Long](Nd.size(s.shape)), s.shape, Nd.fullBox(s.shape), s.data.dropRight(1)))
+      assert(e.getMessage.contains(s"of width $width"), e.getMessage)
+    }
+  }
 }
