@@ -60,17 +60,18 @@ object CCL {
       }
     }
 
-    // second pass: number roots by first occurrence in raster order
+    // second pass: number roots by first occurrence in raster order. A
+    // root is the raster-first pixel of its component, so the scan reaches
+    // it before any other member and numbers it then; `out`, indexed by
+    // root, is the root-to-label table
     val out = new Array[Long](n)
-    val rootLabel = new java.util.HashMap[Integer, Integer]()
-    var next = 1
+    var next = 1L
     flat = 0
     while (flat < n) {
       if (parent(flat) != -1) {
         val r = find(flat)
-        var lbl = rootLabel.get(r)
-        if (lbl == null) { lbl = next; rootLabel.put(r, next); next += 1 }
-        out(flat) = lbl.toLong
+        if (r == flat) { out(flat) = next; next += 1 }
+        else out(flat) = out(r)
       }
       flat += 1
     }

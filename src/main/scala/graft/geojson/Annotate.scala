@@ -55,16 +55,19 @@ object Annotate {
     }
     val (offX, offY) = (off(1), off(0)) // swapped to (x, y) order
 
-    // single pass: per-label bbox + class maximum
+    // single pass: per-label bbox + class maximum. A label's pixels come
+    // in row runs, so the map is looked up only where the label changes
     final case class Acc(var y0: Int, var y1: Int, var x0: Int, var x1: Int,
                          var cls: Long)
     val acc = new java.util.TreeMap[java.lang.Long, Acc]()
+    var lastV = 0L
+    var lastA: Acc = null
     var i = 0
     while (i < data.length) {
       val v = data(i)
       if (v != 0L) {
         val y = i / w; val x = i % w
-        var a = acc.get(v)
+        var a = if (v == lastV) lastA else acc.get(v)
         if (a == null) { a = Acc(y, y, x, x, 0L); acc.put(v, a) }
         else {
           if (y < a.y0) a.y0 = y; if (y > a.y1) a.y1 = y
@@ -77,6 +80,8 @@ object Annotate {
             ch += 1
           }
         }
+        lastV = v
+        lastA = a
       }
       i += 1
     }
@@ -210,10 +215,11 @@ object Annotate {
     * file and still counts). The directory is NOT cleared first — pass a
     * fresh directory when an exact listing matters, exactly like the
     * reference's behavior on pre-existing directories
-    * (`relabeling.py:136-139`). On checksummed filesystems (plain local
-    * paths) Hadoop leaves hidden `.{name}.crc` siblings, as in any Spark
-    * local output dir — listers should skip dot/underscore names per the
-    * standard convention.
+    * (`relabeling.py:136-139`). Files are written through
+    * [[graft.sources.StoreIO]], which writes no `.{name}.crc` sibling on a
+    * local path; a directory an older version wrote may still hold some,
+    * so listers should skip dot/underscore names per the standard
+    * convention.
     */
   def writeAnnotationDir(annotations: Dataset[TileAnnotation],
                          outDir: String): Long = {
@@ -221,7 +227,7 @@ object Annotate {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
+    graft.sources.StoreIO.mkdirs(conf, outDir)
     // qualify on the DRIVER before capture: executors must not resolve a
     // relative (or defaultFS-relative) path against their own working
     // directories; the qualified URI also pins the scheme, so every
@@ -287,7 +293,7 @@ object Annotate {
     val conf = annotations.sparkSession.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
+    graft.sources.StoreIO.mkdirs(conf, outDir)
     val dir = fs.makeQualified(root).toString
     annotations.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[TileAnnotation], batchId: Long) =>
@@ -352,9 +358,8 @@ object Annotate {
       case a if a.geojson != null =>
         deflateMember(s"${a.locKey}.geojson", a.geojson.getBytes("UTF-8"))
     }).collect()
-    val p = new org.apache.hadoop.fs.Path(outZip)
     val zos = new ZipArchiveOutputStream(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true))
+      graft.sources.StoreIO.create(spark.sparkContext.hadoopConfiguration, outZip))
     try {
       val now = System.currentTimeMillis()
       members.foreach { m =>

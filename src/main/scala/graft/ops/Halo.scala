@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.nio.ByteBuffer
-import org.apache.spark.Partitioner
+import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.{Kernels, Nd, Regions}
@@ -11,24 +11,43 @@ import graft.tiles.Tile
   * (`relabeling.py:185-190`) and of `da.map_overlap`'s neighbor fetch
   * (`relabeling.py:85-95`).
   *
-  * Each tile flatMaps into shards keyed by the receiving chunk: its own
-  * full payload (`rd = 0`) plus up to `3^d - 1` margins toward its
-  * neighbors. One shuffle places them and each receiver reassembles its
-  * tile — one exchange per halo, mirroring the reference's two
-  * neighbor-communication stages (SURVEY.md §3.1). Shard volume is
-  * therefore the tile itself plus `O(overlap * surface_area)` of margins;
-  * shipping margins only, with the tile side co-partitioned, is open work.
+  * Each tile flatMaps into shards keyed by the receiving chunk: up to
+  * `3^d - 1` margins toward its neighbors and, unless it is already at
+  * home, its own full payload (`rd = 0`). One shuffle places them and each
+  * receiver reassembles its tile — one exchange per halo, mirroring the
+  * reference's two neighbor-communication stages (SURVEY.md §3.1).
   *
   * Both exchanges place shards with one [[ChunkPartitioner]]: chunk `lin`
-  * of a `chunks`-chunk grid goes to partition `lin * n / chunks`, so each
-  * reducer holds a contiguous row-major range of chunks, and emits its
-  * tiles in ascending `lin`. The shuffle is an RDD shuffle with that exact
+  * of a `chunks`-chunk grid goes to partition `((lin + 1) * n - 1) /
+  * chunks`, which is Spark's own split of `chunks` rows into `n` slices
+  * (`spark.range`, `parallelize`, a local table scan), so each reducer
+  * holds a contiguous row-major range of chunks, and emits its tiles in
+  * ascending `lin`. The shuffle is an RDD shuffle with that exact
   * partitioner, which adaptive query execution does not resize: AQE
   * coalesces reducers by compressed shuffle bytes, but the work after a
   * halo exchange (segmentation, overlap removal, painting, contour
   * tracing) scales with pixels, and a few hundred KB of compressed shards
   * can carry seconds of it. Everything after the exchange up to the next
   * one is a narrow map, so it runs in the same `n` tasks.
+  *
+  * At home: when the input already has the exchange's `n` partitions, a
+  * tile in input partition `p` whose `lin` the partitioner maps to `p`,
+  * and whose `lin` is above the last at-home `lin` before it in `p`, ships
+  * only its margins. The reduce side zips the shuffled shards with the
+  * same input partition, applies the same rule to find those tiles again
+  * (an ascending stream, like the shuffled records), and pastes each one's
+  * core in place. A zarr read and a row-major tile table arrive placed, so
+  * O1 moves `O(overlap * surface)` per chunk, the halo model's bound,
+  * instead of the chunk plus its margins. The price is that O1's reduce
+  * stage reads its input partition a second time: persist an input that
+  * is expensive to recompute. Every other tile ships its core as before,
+  * and an input that recomputes in a different order or with a cell twice
+  * fails the assembly's one-core-per-chunk check, naming the chunk.
+  *
+  * O4 ships its cores on purpose: its input is O3's output, so re-reading
+  * it on the reduce side would run O1's reduce, O2 and O3 a second time
+  * inside O4's stage, and its `rd = 0` shards are the only materialization
+  * of that output.
   *
   * The exchange itself works on `RDD[Tile]`. The public [[expand]] and
   * [[mergeAndTrim]] read their input through `Dataset.rdd` and wrap the
@@ -60,19 +79,46 @@ object Halo {
   )
 
   /** Places chunk `lin` of a grid of `chunks` chunks in partition
-    * `lin * numPartitions / chunks`, so every partition holds a contiguous
-    * row-major range of ⌊chunks/n⌋ or ⌈chunks/n⌉ chunks. Keys are
-    * `(lin, chunks)` pairs: the grid size rides with each key because a
-    * receiver of [[mergeAndTrim]] cannot know it without a job.
+    * `((lin + 1) * numPartitions - 1) / chunks`: the last slice whose first
+    * row is at most `lin` when Spark splits `chunks` rows into
+    * `numPartitions` slices (slice `i` starts at `i * chunks /
+    * numPartitions`). Every partition holds a contiguous row-major range
+    * of ⌊chunks/n⌋ or ⌈chunks/n⌉ chunks. Keys are `(lin, chunks)` pairs:
+    * the grid size rides with each key because a receiver of
+    * [[mergeAndTrim]] cannot know it without a job.
     */
   private final class ChunkPartitioner(val numPartitions: Int) extends Partitioner {
     def getPartition(key: Any): Int = {
       val (lin, chunks) = key.asInstanceOf[(Long, Long)]
       require(lin >= 0 && lin < chunks,
         s"halo: linear chunk index $lin is outside a grid of $chunks chunks")
-      (lin * numPartitions / chunks).toInt
+      (((lin + 1) * numPartitions - 1) / chunks).toInt
     }
   }
+
+  private def chunksOf(t: Tile): Long = t.grid.foldLeft(1L)(_ * _)
+
+  /** The at-home rule over input partition `part` of an exchange into
+    * `partitions` partitions: each tile with whether it stays where it is.
+    * A tile is at home iff `home` holds, the partitioner maps its `lin` to
+    * `part`, and its `lin` is above the last at-home `lin` before it, so
+    * the at-home tiles of a partition come out in ascending `lin`, at most
+    * once each, and the same input order gives the same answer on the map
+    * and on the reduce side.
+    */
+  private[graft] def placedAt(part: Int, partitions: Int, home: Boolean,
+      tiles: Iterator[Tile]): Iterator[(Tile, Boolean)] =
+    if (!home) tiles.map(t => (t, false))
+    else {
+      val placer = new ChunkPartitioner(partitions)
+      var last = -1L
+      tiles.map { t =>
+        val lin = t.linearIndex
+        val at = lin > last && placer.getPartition((lin, chunksOf(t))) == part
+        if (at) last = lin
+        (t, at)
+      }
+    }
 
   /** A shard as one byte array, the record that crosses the shuffle (its
     * `destLin` travels in the key). Java serialization of the case class
@@ -112,29 +158,46 @@ object Halo {
     * `lin`. The reduce side sorts the records by `lin` in Spark's shuffle
     * sorter, which spills under memory pressure; assembly then holds one
     * receiver's shards at a time.
+    *
+    * With `keepHome`, and an input of `partitions` partitions, at-home
+    * tiles ([[placedAt]]) send no `rd = 0` shard; the reduce side reads
+    * them from its own input partition and hands each to `assemble` as
+    * the receiver's local core.
     */
   private def exchange(tiles: RDD[Tile], partitions: Int, overlaps: Array[Int],
-      send: (Array[Int], Array[Int]) => Boolean)(
-      assemble: (Long, Array[Shard]) => Tile): RDD[Tile] = {
-    val shards = tiles.flatMap { t =>
-      val chunks = t.grid.foldLeft(1L)(_ * _)
-      shardsOf(t, overlaps, send).map(s => ((s.destLin, chunks), encode(s)))
+      keepHome: Boolean, send: (Array[Int], Array[Int]) => Boolean)(
+      assemble: (Long, Option[Tile], Array[Shard]) => Tile): RDD[Tile] = {
+    val home = keepHome && tiles.getNumPartitions == partitions
+    val shards = tiles.mapPartitionsWithIndex { (part, it) =>
+      placedAt(part, partitions, home, it).flatMap { case (t, at) =>
+        val chunks = chunksOf(t)
+        shardsOf(t, overlaps, send, core = !at).map(s => ((s.destLin, chunks), encode(s)))
+      }
     }
     val placed = new ShuffledRDD[(Long, Long), Array[Byte], Array[Byte]](
       shards, new ChunkPartitioner(partitions))
       .setKeyOrdering(Ordering.by[(Long, Long), Long](_._1))
-    placed.mapPartitions({ it =>
-      val in = it.buffered
+    def receive(shipped: Iterator[((Long, Long), Array[Byte])],
+        cores: Iterator[Tile]): Iterator[Tile] = {
+      val in = shipped.buffered
+      val own = cores.buffered
       new Iterator[Tile] {
-        def hasNext: Boolean = in.hasNext
+        def hasNext: Boolean = in.hasNext || own.hasNext
         def next(): Tile = {
-          val lin = in.head._1._1
+          val ownLin = if (own.hasNext) own.head.linearIndex else Long.MaxValue
+          val lin = if (in.hasNext) math.min(in.head._1._1, ownLin) else ownLin
+          val core = if (ownLin == lin) Some(own.next()) else None
           val group = Array.newBuilder[Shard]
           while (in.hasNext && in.head._1._1 == lin) group += decode(lin, in.next()._2)
-          assemble(lin, group.result())
+          assemble(lin, core, group.result())
         }
       }
-    }, preservesPartitioning = true)
+    }
+    if (!home) placed.mapPartitions(receive(_, Iterator.empty), preservesPartitioning = true)
+    else placed.zipPartitions(tiles, preservesPartitioning = true) { (shipped, in) =>
+      receive(shipped, placedAt(TaskContext.getPartitionId(), partitions, home, in)
+        .collect { case (t, true) => t })
+    }
   }
 
   /** Partitions of a halo exchange's output: `min(reducers,
@@ -185,13 +248,13 @@ object Halo {
     Nd.Box(start, end)
   }
 
-  /** The shards `t` sends: its own payload plus one margin per in-grid
-    * direction `d` with `send(t.loc, d)`. Each array is packed in the wire
-    * frame of its whole source array ([[Nd.packFrame]]), found once per
-    * tile.
+  /** The shards `t` sends: its own payload when `core`, plus one margin
+    * per in-grid direction `d` with `send(t.loc, d)`. Each array is packed
+    * in the wire frame of its whole source array ([[Nd.packFrame]]), found
+    * once per tile.
     */
   private[graft] def shardsOf(t: Tile, overlaps: Array[Int],
-      send: (Array[Int], Array[Int]) => Boolean): Seq[Shard] = {
+      send: (Array[Int], Array[Int]) => Boolean, core: Boolean = true): Seq[Shard] = {
     val (width, base) = Nd.packFrame(t.data)
     val classFrames = t.classes.map(Nd.packFrame)
     def pack(box: Nd.Box): (Array[Byte], Array[Array[Byte]]) =
@@ -200,22 +263,58 @@ object Halo {
           val (w, b) = classFrames(ch)
           Nd.packBox(t.classes(ch), t.shape, box, w, b)
         })
-    val (own, ownClasses) = pack(Nd.fullBox(t.shape))
-    Shard(t.linearIndex, t.loc, t.grid, new Array[Int](t.dims), t.shape, own, ownClasses) +:
-      directions(t.dims).collect {
-        case d if inGrid(t.loc, d, t.grid) && send(t.loc, d) =>
-          val dest = Array.tabulate(t.dims)(a => t.loc(a) + d(a))
-          val box = marginBox(t, d, overlaps)
-          val (data, classes) = pack(box)
-          Shard(Regions.linearIndex(dest, t.grid), dest, t.grid, d.map(-_), box.shape,
-            data, classes)
-      }
+    val margins = directions(t.dims).collect {
+      case d if inGrid(t.loc, d, t.grid) && send(t.loc, d) =>
+        val dest = Array.tabulate(t.dims)(a => t.loc(a) + d(a))
+        val box = marginBox(t, d, overlaps)
+        val (data, classes) = pack(box)
+        Shard(Regions.linearIndex(dest, t.grid), dest, t.grid, d.map(-_), box.shape,
+          data, classes)
+    }
+    if (!core) margins
+    else {
+      val (own, ownClasses) = pack(Nd.fullBox(t.shape))
+      Shard(t.linearIndex, t.loc, t.grid, new Array[Int](t.dims), t.shape, own, ownClasses) +:
+        margins
+    }
   }
+
+  /** The receiver's own tile: `local` (at home, [[exchange]]) or its one
+    * shipped `rd = 0` shard, after checking that every sender direction
+    * arrived at most once and the chunk has exactly one core. A grid cell
+    * that appears twice in the input, or an input that recomputes
+    * differently on the reduce side, fails here, naming the cell. `None`:
+    * no core at all (the caller names its own contract).
+    */
+  private def ownCore(lin: Long, local: Option[Tile],
+      all: Array[Shard]): Option[Either[Tile, Shard]] = {
+    val seen = new java.util.BitSet()
+    if (local.isDefined) seen.set(centre(local.get.dims))
+    for (s <- all) {
+      var k = 0
+      s.rd.foreach(d => k = k * 3 + d + 1)
+      if (seen.get(k)) {
+        val sender = Regions.linearIndex(Array.tabulate(s.rd.length)(a => s.destLoc(a) + s.rd(a)),
+          s.grid)
+        throw new IllegalArgumentException(
+          s"halo: the chunk at linear index $sender appears twice in the tile table, or " +
+            s"its input recomputed differently: chunk $lin received two " +
+            (if (k == centre(s.rd.length)) "cores" else "margins from it"))
+      }
+      seen.set(k)
+    }
+    local.map(Left(_)).orElse(all.find(_.rd.forall(_ == 0)).map(Right(_)))
+  }
+
+  /** [[ownCore]]'s index of the all-zero direction: `(3^dims - 1) / 2`. */
+  private def centre(dims: Int): Int = (math.pow(3, dims).toInt - 1) / 2
 
   /** O1 halo expansion: input tiles are core (chunk) sized; output tiles
     * carry `overlap` margins copied from every existing neighbor
     * (`boundary=None`: grid borders get no halo). The output has as many
     * partitions as the input, capped by `spark.sql.shuffle.partitions`.
+    * Tiles already in their output partition ship their margins only, and
+    * the reduce stage reads the input a second time ([[Halo]]).
     *
     * The input is read through `Dataset.rdd` when this is called: when its
     * plan has an exchange of its own, adaptive execution runs that stage
@@ -233,41 +332,51 @@ object Halo {
     */
   private[graft] def expand(tiles: RDD[Tile], overlaps: Array[Int],
       partitions: Int): RDD[Tile] =
-    exchange(tiles, partitions, overlaps, (_, _) => true) { (lin, all) =>
-      require(all.exists(_.rd.forall(_ == 0)),
-        s"halo expand: no tile present at linear chunk index $lin — the " +
-          "tile table must cover the full grid (dense chunking, like the " +
-          "reference's dask arrays)")
-      assembleExpanded(all, overlaps)
-    }
+    exchange(tiles, partitions, overlaps, keepHome = true, (_, _) => true)(
+      assembleExpanded(_, _, _, overlaps))
 
-  private[graft] def assembleExpanded(all: Array[Shard], overlaps: Array[Int]): Tile = {
-    val core = all.find(_.rd.forall(_ == 0)).get
-    val loc = core.destLoc
-    val grid = core.grid
+  /** One receiver's halo-expanded tile: its core (`local`, or the shipped
+    * `rd = 0` shard) with every shipped margin pasted around it.
+    */
+  private[graft] def assembleExpanded(lin: Long, local: Option[Tile], all: Array[Shard],
+      overlaps: Array[Int]): Tile = {
+    val core = ownCore(lin, local, all).getOrElse(throw new IllegalArgumentException(
+      s"halo expand: no tile present at linear chunk index $lin — the " +
+        "tile table must cover the full grid (dense chunking, like the " +
+        "reference's dask arrays)"))
+    val (loc, grid, cs, nCh) = core.fold(
+      t => (t.loc, t.grid, t.shape, t.classes.length),
+      s => (s.destLoc, s.grid, s.shape, s.classes.length))
     val dims = loc.length
-    val cs = core.shape
     val outShape = Array.tabulate(dims) { a =>
       cs(a) + (if (loc(a) > 0) overlaps(a) else 0) +
         (if (loc(a) < grid(a) - 1) overlaps(a) else 0)
     }
     val lowOff = Array.tabulate(dims)(a => if (loc(a) > 0) overlaps(a) else 0)
-    val nCh = core.classes.length
     val out = new Array[Long](Nd.size(outShape))
     val outCls = Array.fill(nCh)(new Array[Long](out.length))
-    for (s <- all) {
+    def boxOf(rd: Array[Int]): Nd.Box = {
       val start = new Array[Int](dims)
       val end = new Array[Int](dims)
       var a = 0
       while (a < dims) {
-        s.rd(a) match {
+        rd(a) match {
           case -1 => start(a) = 0; end(a) = overlaps(a)
           case 1  => start(a) = outShape(a) - overlaps(a); end(a) = outShape(a)
           case _  => start(a) = lowOff(a); end(a) = lowOff(a) + cs(a)
         }
         a += 1
       }
-      val box = Nd.Box(start, end)
+      Nd.Box(start, end)
+    }
+    for (t <- local) {
+      val box = boxOf(new Array[Int](dims))
+      Nd.pasteBox(out, outShape, box, t.data)
+      var ch = 0
+      while (ch < nCh) { Nd.pasteBox(outCls(ch), outShape, box, t.classes(ch)); ch += 1 }
+    }
+    for (s <- all) {
+      val box = boxOf(s.rd)
       Nd.unpackBox(out, outShape, box, s.data)
       var ch = 0
       while (ch < nCh) { Nd.unpackBox(outCls(ch), outShape, box, s.classes(ch)); ch += 1 }
@@ -292,19 +401,19 @@ object Halo {
     spark.createDataset(mergeAndTrim(in, overlaps, partitions(spark, in.getNumPartitions.toLong)))
   }
 
-  /** [[mergeAndTrim]] over the tile RDD into `partitions` partitions. */
+  /** [[mergeAndTrim]] over the tile RDD into `partitions` partitions.
+    * Every tile ships its core ([[Halo]] says why).
+    */
   private[graft] def mergeAndTrim(tiles: RDD[Tile], overlaps: Array[Int],
       partitions: Int): RDD[Tile] =
-    exchange(tiles, partitions, overlaps, receiverWillMerge)(assembleMerged(_, _, overlaps))
+    exchange(tiles, partitions, overlaps, keepHome = false, receiverWillMerge)(
+      (lin, _, all) => assembleMerged(lin, all, overlaps))
 
   /** Paint-and-trim one receiver's merge group (shared with the streaming
     * re-expression in [[graft.streaming.StreamingTiles]]).
     */
   private[graft] def assembleMerged(lin: Long, all: Array[Shard],
       overlaps: Array[Int]): Tile = {
-    val core = all.find(_.rd.forall(_ == 0)).getOrElse(
-      throw new IllegalArgumentException(
-        s"merge: no tile present at linear chunk index $lin — dense grid required"))
     def unpack(s: Shard): (Array[Long], Array[Array[Long]]) = {
       val box = Nd.fullBox(s.shape)
       def one(packed: Array[Byte]): Array[Long] = {
@@ -314,6 +423,9 @@ object Halo {
       }
       (one(s.data), s.classes.map(one))
     }
+    val core = ownCore(lin, None, all).flatMap(_.toOption).getOrElse(
+      throw new IllegalArgumentException(
+        s"merge: no tile present at linear chunk index $lin — dense grid required"))
     val (data, classes) = unpack(core)
     val own = Tile(core.destLoc, core.grid, core.shape, data, classes)
     // region levels (receiver perspective): sender above (rd=+1) feeds a

@@ -64,6 +64,13 @@ final case class IdentitySegmentation() extends SegmentationFn {
   * runs then, under adaptive execution, not at the output's action.
   * Sinks stay Dataset actions, so [[graft.Caching.releaseAfterAction]]
   * still sees the query-execution event it releases on.
+  *
+  * O1 keeps a tile that is already in its output partition where it is
+  * and ships only its margins ([[Halo]]), so O1's reduce stage reads its
+  * input partition again: a zarr read or a persisted table costs little
+  * to re-read, but persist an input that is expensive to recompute (a
+  * join, an aggregation, a random generator), as [[sortLabelIndices]]
+  * advises for its own input.
   */
 object Relabel {
 
@@ -78,7 +85,11 @@ object Relabel {
     * tiles to the chunk size (pad is tile-local — no shuffle), then
     * halo-expand every tile by `overlaps` from its neighbors (one shuffle).
     * The output has `min(chunks in the grid, spark.sql.shuffle.partitions)`
-    * partitions, each a contiguous range of chunks ([[Halo]]).
+    * partitions, each a contiguous range of chunks ([[Halo]]). When the
+    * input already has that many partitions, the tiles that sit in their
+    * output partition ship their margins only, and the reduce stage reads
+    * the input partition a second time to paste their cores: persist an
+    * input that is expensive to recompute.
     *
     * Input tiles must be chunk-aligned: tile (i,j) holds image block
     * [i*cs, (i+1)*cs) x [j*cs, (j+1)*cs) clipped to the image.

@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
@@ -18,6 +19,16 @@ import org.apache.spark.util.SerializableConfiguration
   * configuration, carrying `spark.hadoop.*` credentials); executor-side
   * closures capture a [[broadcastConf]] of it — `Configuration` itself is
   * not serializable.
+  *
+  * Local paths: Hadoop's local file system sets the permission of every
+  * file, checksum sibling and directory it creates, and without its native
+  * library it does so by starting a `chmod` process each time (19–20 per
+  * zarr write of a small 3-D image). Bytes are therefore created, read
+  * and directories made through [[PlainLocalFileSystem]], Hadoop's raw
+  * local file system without that step: files and directories get the
+  * process umask's modes, and no `.crc` sibling is written or checked.
+  * Listing, deletes and renames keep the checksummed file system, which
+  * hides, removes and moves the `.crc` siblings an earlier write left.
   */
 object StoreIO {
 
@@ -42,6 +53,20 @@ object StoreIO {
   private def fsOf(p: Path, conf: Configuration): FileSystem =
     p.getFileSystem(conf)
 
+  /** The file system that creates, reads and makes directories at `p`: a
+    * [[PlainLocalFileSystem]] where `p`'s own is a local file system of the
+    * `file` scheme (Hadoop's, or a subclass such as Hive's proxy), else
+    * `p`'s own, so a local file system registered under another scheme
+    * keeps its own behaviour.
+    */
+  private def bytesFsOf(p: Path, conf: Configuration): FileSystem = fsOf(p, conf) match {
+    case fs @ (_: LocalFileSystem | _: RawLocalFileSystem) if fs.getUri.getScheme == "file" =>
+      val plain = new PlainLocalFileSystem
+      plain.initialize(fs.getUri, conf)
+      plain
+    case fs => fs
+  }
+
   def exists(conf: Configuration, path: String): Boolean = {
     val p = new Path(path)
     fsOf(p, conf).exists(p)
@@ -49,7 +74,7 @@ object StoreIO {
 
   def readAllBytes(conf: Configuration, path: String): Array[Byte] = {
     val p = new Path(path)
-    val fs = fsOf(p, conf)
+    val fs = bytesFsOf(p, conf)
     val len = fs.getFileStatus(p).getLen
     require(len <= Int.MaxValue, s"$path: $len bytes exceeds one chunk buffer")
     val buf = new Array[Byte](len.toInt)
@@ -70,7 +95,7 @@ object StoreIO {
     */
   def open(conf: Configuration, path: String): org.apache.hadoop.fs.FSDataInputStream = {
     val p = new Path(path)
-    fsOf(p, conf).open(p)
+    bytesFsOf(p, conf).open(p)
   }
 
   def readRange(in: org.apache.hadoop.fs.FSDataInputStream,
@@ -84,15 +109,21 @@ object StoreIO {
     * `mkdirs` on a local path.
     */
   def write(conf: Configuration, path: String, bytes: Array[Byte]): Unit = {
-    val p = new Path(path)
-    val fs = fsOf(p, conf)
-    val out = fs.create(p, true)
+    val out = create(conf, path)
     try out.write(bytes) finally out.close()
+  }
+
+  /** Open `path` for writing, overwriting it and creating its parent
+    * directories; the caller closes.
+    */
+  def create(conf: Configuration, path: String): org.apache.hadoop.fs.FSDataOutputStream = {
+    val p = new Path(path)
+    bytesFsOf(p, conf).create(p, true)
   }
 
   def mkdirs(conf: Configuration, path: String): Unit = {
     val p = new Path(path)
-    fsOf(p, conf).mkdirs(p); ()
+    bytesFsOf(p, conf).mkdirs(p); ()
   }
 
   def deleteRecursive(conf: Configuration, path: String): Unit = {
@@ -113,8 +144,16 @@ object StoreIO {
   def moveInto(conf: Configuration, src: Path, dstDir: Path, rel: String): Unit = {
     val target = new Path(dstDir, rel)
     val fs = fsOf(target, conf)
-    Option(target.getParent).foreach(fs.mkdirs(_))
+    Option(target.getParent).foreach(d => bytesFsOf(d, conf).mkdirs(d))
     if (fs.exists(target)) fs.delete(target, false)
     require(fs.rename(src, target), s"rename $src -> $target failed")
   }
+}
+
+/** Hadoop's raw local file system without its `setPermission`: a file or
+  * directory keeps the modes the process umask gives it at creation,
+  * instead of a `chmod` process per file ([[StoreIO]]).
+  */
+private[sources] final class PlainLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = ()
 }

@@ -264,6 +264,12 @@ object ZarrIO extends Serializable {
     * the nominal grid — executors decode their own row-major range of the
     * object grid and check presence in a broadcast set. `includeFill =
     * false` skips absent tiles and parallelizes the listing itself.
+    *
+    * The dense range has as many slices as a halo exchange over its
+    * objects has partitions ([[graft.ops.Halo.partitions]]), and Spark
+    * splits a range the way [[graft.ops.Halo]] places chunks, so on an
+    * unsharded store every tile of the read is already in the partition
+    * O1 would send it to: O1 ships its margins only.
     */
   private[sources] def readPruned(spark: SparkSession, dir: String,
       layout: ZarrLayout, keep: Array[Int] => Boolean,
@@ -302,7 +308,7 @@ object ZarrIO extends Serializable {
       val objGrid = layout.objectGrid
       val total = objGrid.foldLeft(1L)(_ * _)
       val presentB = spark.sparkContext.broadcast(present)
-      spark.range(0L, total, 1L, math.max(1L, math.min(total, par.toLong)).toInt)
+      spark.range(0L, total, 1L, graft.ops.Halo.partitions(spark, total))
         .flatMap { i =>
           val obj = locOfIndex(i, objGrid)
           tilesOf(obj, presentB.value.contains(obj.mkString(",")))

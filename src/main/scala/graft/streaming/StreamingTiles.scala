@@ -169,8 +169,8 @@ object StreamingTiles {
       tiles.flatMap(t => Halo.shardsOf(t, ov, (_, _) => true)),
       tombstoneTtlMs)(
       (loc, grid) => 1 + dirs.count(d => Halo.inGrid(loc, d, grid)),
-      (_, shards) => {
-        val expanded = Halo.assembleExpanded(shards, ov)
+      (lin, shards) => {
+        val expanded = Halo.assembleExpanded(lin, None, shards, ov)
         val (labels, classes) = segFn.segment(expanded)
         val segmented = expanded.copy(data = labels, classes = classes)
         Kernels.removeOverlapped(segmented, ov, threshold)

@@ -82,42 +82,56 @@ class CorePropertySpec extends AnyFunSuite {
     }
   }
 
+  /** CCL against brute-force flood fill: components are the face-connected
+    * sets of equal non-zero values, labelled 1..N by raster first
+    * occurrence.
+    */
+  private def assertFloodFill(shape: Array[Int], data: Array[Long]): Unit = {
+    val labels = CCL.label(data, shape)
+    val st = Nd.strides(shape)
+    def flood(seed: Int): Set[Int] = {
+      val stack = scala.collection.mutable.Stack(seed)
+      val seen = scala.collection.mutable.Set(seed)
+      while (stack.nonEmpty) {
+        val p = stack.pop()
+        for (a <- shape.indices; step <- Seq(-1, 1)) {
+          val c = p / st(a) % shape(a) + step
+          val q = p + step * st(a)
+          if (c >= 0 && c < shape(a) && data(q) == data(seed) && !seen(q)) { seen += q; stack.push(q) }
+        }
+      }
+      seen.toSet
+    }
+    val ctx = s"${shape.mkString("x")} image ${data.mkString(",")}"
+    for (i <- data.indices) {
+      if (data(i) == 0L) assert(labels(i) == 0L, ctx)
+      else {
+        val comp = flood(i)
+        assert(comp.map(labels(_)).size == 1, s"component split at $i: $ctx")
+        assert(data.indices.filter(labels(_) == labels(i)).toSet == comp,
+          s"component merged wrongly at $i: $ctx")
+      }
+    }
+    // labels are 1..N by raster first-occurrence
+    val firsts = labels.distinct.filter(_ != 0)
+    assert(firsts.sameElements(1L to firsts.length), ctx)
+  }
+
   test("CCL matches brute-force flood fill on random binary images") {
     val img = for {
       h <- Gen.choose(1, 9); w <- Gen.choose(1, 9)
       cells <- Gen.listOfN(h * w, Gen.oneOf(0L, 0L, 1L))
     } yield (Array(h, w), cells.toArray)
-    forAll(img) { case (shape, data) =>
-      val labels = CCL.label(data, shape)
-      val Array(h, w) = shape
-      // flood fill from each pixel; compare equivalence classes
-      def flood(seed: Int): Set[Int] = {
-        val stack = scala.collection.mutable.Stack(seed)
-        val seen = scala.collection.mutable.Set(seed)
-        while (stack.nonEmpty) {
-          val p = stack.pop()
-          val (y, x) = (p / w, p % w)
-          for ((ny, nx) <- Seq((y - 1, x), (y + 1, x), (y, x - 1), (y, x + 1)))
-            if (ny >= 0 && ny < h && nx >= 0 && nx < w) {
-              val q = ny * w + nx
-              if (data(q) == data(seed) && !seen(q)) { seen += q; stack.push(q) }
-            }
-        }
-        seen.toSet
-      }
-      for (i <- data.indices) {
-        if (data(i) == 0L) assert(labels(i) == 0L)
-        else {
-          val comp = flood(i)
-          assert(comp.map(labels(_)).size == 1, s"component split at $i")
-          assert(data.indices.filter(labels(_) == labels(i)).toSet == comp,
-            s"component merged wrongly at $i")
-        }
-      }
-      // labels are 1..N by raster first-occurrence
-      val firsts = labels.distinct.filter(_ != 0)
-      assert(firsts.sameElements(1L to firsts.length))
-    }
+    forAll(img) { case (shape, data) => assertFloodFill(shape, data) }
+  }
+
+  test("CCL matches brute-force flood fill on 2-D and 3-D multi-valued images") {
+    val img = for {
+      dims <- Gen.oneOf(2, 3)
+      shape <- Gen.listOfN(dims, Gen.choose(1, if (dims == 2) 9 else 5))
+      cells <- Gen.listOfN(shape.product, Gen.oneOf(0L, 0L, 1L, 2L, 3L, -1L, Long.MaxValue))
+    } yield (shape.toArray, cells.toArray)
+    forAll(img) { case (shape, data) => assertFloodFill(shape, data) }
   }
 
   test("remove kernel: offsets are chunk-disjoint and survivors keep identity") {

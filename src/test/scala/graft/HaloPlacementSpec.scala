@@ -4,7 +4,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Dataset
-import graft.core.Nd
+import graft.core.{Nd, Regions}
 import graft.ops.{CCLSegmentation, Halo, Relabel}
 import graft.tiles.{GridSpec, Tile}
 import graft.tools.TaskMetricSum
@@ -15,6 +15,12 @@ import graft.tools.TaskMetricSum
   * these reducers, because the work after an exchange scales with pixels,
   * not with compressed shuffle bytes. Each reducer holds a contiguous
   * row-major range of ⌊chunks/n⌋ or ⌈chunks/n⌉ tiles in ascending `lin`.
+  *
+  * O1 keeps a tile that is already in its output partition where it is:
+  * it ships its margins only, and the reducer pastes its core from its
+  * own input partition. Whatever the input's order and partitioning, the
+  * output is the same, and the shuffle carries exactly the margins plus
+  * the cores of the tiles that were not at home.
   */
 class HaloPlacementSpec extends AnyFunSuite {
 
@@ -134,5 +140,155 @@ class HaloPlacementSpec extends AnyFunSuite {
         new Array[Long](Nd.size(s.shape)), s.shape, Nd.fullBox(s.shape), s.data.dropRight(1)))
       assert(e.getMessage.contains(s"of width $width"), e.getMessage)
     }
+  }
+
+  /** A `shape` image of values up to 300 (two wire widths) and one classes
+    * channel, cut into `chunk` tiles, ragged at the high edges.
+    */
+  private def imageTiles(shape: Array[Int], chunk: Array[Int], seed: Int)
+      : (GridSpec, Seq[Tile], Array[Long], Array[Long]) = {
+    val rnd = new scala.util.Random(seed)
+    val img = Array.fill(Nd.size(shape))(if (rnd.nextInt(3) == 0) 0L else rnd.nextInt(300).toLong)
+    val cls = img.map(v => if (v == 0L) 0L else 1L + v % 3)
+    val spec = GridSpec(shape.map(_.toLong), chunk)
+    val grid = spec.gridShape
+    val tiles = (0 until grid.product).map { lin =>
+      val loc = unravel(lin, grid)
+      val box = Nd.Box(Array.tabulate(shape.length)(a => loc(a) * chunk(a)),
+        Array.tabulate(shape.length)(a => math.min((loc(a) + 1) * chunk(a), shape(a))))
+      Tile(loc, grid, box.shape, Nd.sliceBox(img, shape, box), Array(Nd.sliceBox(cls, shape, box)))
+    }
+    (spec, tiles, img, cls)
+  }
+
+  private def unravel(lin: Int, shape: Array[Int]): Array[Int] = {
+    val st = Nd.strides(shape)
+    Array.tabulate(shape.length)(a => lin / st(a) % shape(a))
+  }
+
+  /** O1's output tile at `loc` by definition: the window `[loc * chunk -
+    * ov, (loc + 1) * chunk + ov)` of the image, with no halo past the grid
+    * border and zeros past a ragged edge, for the data and the classes.
+    */
+  private def window(spec: GridSpec, img: Array[Long], cls: Array[Long], ovs: Array[Int],
+      loc: Array[Int]): Tile = {
+    val shape = spec.imageShape.map(_.toInt)
+    val out = spec.overlappedShape(loc, ovs)
+    val origin = Array.tabulate(loc.length)(a => loc(a) * spec.chunk(a) - (if (loc(a) > 0) ovs(a) else 0))
+    def cut(src: Array[Long]) = Array.tabulate(Nd.size(out)) { i =>
+      val g = unravel(i, out).zip(origin).map { case (x, o) => x + o }
+      if (g.indices.forall(a => g(a) < shape(a))) src(Regions.linearIndex(g, shape).toInt) else 0L
+    }
+    Tile(loc, spec.gridShape, out, cut(img), Array(cut(cls)))
+  }
+
+  /** How many tiles of `order`, split into `k` slices the way Spark splits
+    * a sequence, stay at home in an exchange into `n` partitions: the ones
+    * in the slice Spark's split of the `chunks` rows into `n` gives their
+    * `lin`, each above the last such `lin` in its slice.
+    */
+  private def atHome(order: Seq[Long], k: Int, n: Int, chunks: Long): Int =
+    if (k != n) 0
+    else (0 until k).map { p =>
+      var last = -1L
+      order.slice((p.toLong * order.size / k).toInt, ((p + 1).toLong * order.size / k).toInt)
+        .count { lin =>
+          val at = lin > last && p * chunks / n <= lin && lin < (p + 1) * chunks / n
+          if (at) last = lin
+          at
+        }
+    }.sum
+
+  /** Shuffle records written and read while running `action`. */
+  private def records(action: => Any): (Long, Long) = {
+    val sc = spark.sparkContext
+    val written = new TaskMetricSum(sc, _.shuffleWriteMetrics.recordsWritten)
+    val read = new TaskMetricSum(sc, _.shuffleReadMetrics.recordsRead)
+    try { written.reset(); read.reset(); action; (written.get(), read.get()) }
+    finally { sc.removeSparkListener(written); sc.removeSparkListener(read) }
+  }
+
+  /** `tiles` in `order` as a Dataset of exactly `k` partitions. */
+  private def input(tiles: Seq[Tile], order: Seq[Long], k: Int): Dataset[Tile] = {
+    import spark.implicits._
+    val byLin = tiles.map(t => t.linearIndex -> t).toMap
+    spark.createDataset(spark.sparkContext.parallelize(order.map(byLin), k))
+  }
+
+  private def assertSameTile(ctx: String, got: Tile, want: Tile): Unit = {
+    assert(got.loc.sameElements(want.loc) && got.grid.sameElements(want.grid) &&
+      got.shape.sameElements(want.shape), s"$ctx: tile ${want.loc.mkString(",")} is misplaced")
+    assert(got.data.sameElements(want.data), s"$ctx: tile ${want.loc.mkString(",")} data differs")
+    assert(got.classes.length == 1 && got.classes(0).sameElements(want.classes(0)),
+      s"$ctx: tile ${want.loc.mkString(",")} classes differ")
+  }
+
+  /** A ragged 3×3 grid of 8² chunks (`geojson2d`'s shape, where Spark's
+    * split and a `lin * n / chunks` placement differ) and a 2×3×3 grid of
+    * 4³ chunks, ragged on one axis.
+    */
+  private val placementGrids = Seq(
+    ("ragged 2-D 3x3", Array(20, 20), Array(8, 8)),
+    ("3-D 2x3x3", Array(8, 12, 10), Array(4, 4, 4)))
+
+  for ((name, shape, chunk) <- placementGrids)
+    test(s"O1 on a $name grid equals the image windows whatever the input's order; only cores away from home ship") {
+      val ovs = Array.fill(shape.length)(2)
+      val (spec, tiles, img, cls) = imageTiles(shape, chunk, 11)
+      val chunks = spec.gridShape.product.toLong
+      val n = math.min(chunks, spark.conf.get("spark.sql.shuffle.partitions").toLong).toInt
+      val margins = tiles.map(t => Halo.directions(t.dims).count(Halo.inGrid(t.loc, _, t.grid))).sum
+      val rowMajor = 0L until chunks
+      val orders = Seq(
+        ("placed", rowMajor, n),
+        ("reversed", rowMajor.reverse, n),
+        (s"placed over ${n + 1} partitions", rowMajor, n + 1),
+        ("half placed", rowMajor.filter(_ % 2 == 0) ++ rowMajor.filter(_ % 2 == 1), n))
+      for ((how, order, k) <- orders) {
+        val ctx = s"$name, $how"
+        val home = atHome(order, k, n, chunks)
+        if (how == "placed") assert(home == chunks, s"$ctx: only $home of $chunks tiles at home")
+        val o1 = Relabel.prepareInput(input(tiles, order, k), spec, ovs)
+        var out: Array[Tile] = null
+        val (written, _) = records { out = o1.collect() }
+        assert(written == margins + chunks - home,
+          s"$ctx: O1 shipped $written records for $margins margins and ${chunks - home} cores")
+        assert(out.map(_.linearIndex).toSeq == rowMajor, s"$ctx: output order")
+        out.foreach(t => assertSameTile(ctx, t, window(spec, img, cls, ovs, t.loc)))
+        assertPlaced(ctx, placement(o1), chunks.toInt, n)
+      }
+    }
+
+  test("O1 on a 1-chunk grid ships nothing and its reducer reads no records") {
+    val ovs = Array(2, 2)
+    val (spec, tiles, img, cls) = imageTiles(Array(5, 7), Array(8, 8), 12)
+    var out: Array[Tile] = null
+    val (written, read) = records {
+      out = Relabel.prepareInput(input(tiles, Seq(0L), 1), spec, ovs).collect()
+    }
+    assert(written == 0 && read == 0, s"a 1-chunk grid shipped $written and read $read records")
+    assert(out.length == 1)
+    assertSameTile("1-chunk grid", out(0), window(spec, img, cls, ovs, Array(0, 0)))
+  }
+
+  test("a grid cell that appears twice fails O1 and O4, naming its linear index") {
+    import spark.implicits._
+    val ovs = Array(2, 2)
+    val (spec, tiles, _, _) = imageTiles(Array(20, 20), Array(8, 8), 13)
+    def failure(action: => Any): String = {
+      val e = intercept[org.apache.spark.SparkException](action)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    }
+    // at home and shipped, and shipped twice
+    for ((order, k) <- Seq(((0L to 8L) :+ 4L).sorted -> 4, ((0L to 8L) :+ 4L) -> 5)) {
+      val msg = failure(Relabel.prepareInput(input(tiles, order, k), spec, ovs).collect())
+      assert(msg.contains("linear index 4 appears twice"), msg)
+    }
+    val removed = Relabel.removeOverlappedLabels(Relabel.segmentOverlappedInput(
+      Relabel.prepareInput(spark.createDataset(tiles), spec, ovs), CCLSegmentation()),
+      ovs, 0.25).collect()
+    val msg = failure(Relabel.mergeOverlappedTiles(
+      spark.createDataset(removed :+ removed(4)), ovs).collect())
+    assert(msg.contains("linear index 4 appears twice"), msg)
   }
 }

@@ -88,6 +88,24 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"prepareInput shuffled $b bytes for $expanded expanded uint8 pixels")
   }
 
+  test("O1 ships a placed uint8 image at under 1.5 bytes per margin pixel") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(3)
+    val img = Array.fill(128 * 128)(rnd.nextInt(256).toLong)
+    val spec = GridSpec(Array(128L, 128L), Array(32, 32))
+    val ov = Array(8, 8)
+    val margins = (for (gy <- 0 until 4; gx <- 0 until 4)
+      yield Nd.size(spec.overlappedShape(Array(gy, gx), ov)).toLong).sum - 128 * 128
+    // four row-major slices of four tiles: every tile is in its O1 partition
+    val placed = spark.createDataset(spark.sparkContext.parallelize(
+      BlobImages.toTiles(img, 128, 128, 32), 4))
+    val b = shuffleOf(Relabel.prepareInput(placed, spec, ov).count())
+    info(s"prepareInput of a placed input shuffled $b B for $margins margin pixels")
+    // the cores stay home: shipping them too would cost ~2.1 B per margin pixel
+    assert(b <= margins * 3 / 2,
+      s"prepareInput shuffled $b bytes for $margins margin uint8 pixels")
+  }
+
   test("sortLabelIndices adds only its label probe's shuffle to image2labels") {
     import spark.implicits._
     val img = BlobImages.gen(64, 64, 100, 200, 3).pureApply(Gen.Parameters.default, Seed(0L))

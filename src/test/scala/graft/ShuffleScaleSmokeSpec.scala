@@ -50,5 +50,9 @@ class ShuffleScaleSmokeSpec extends AnyFunSuite {
     val p = ShuffleScale.haloPipeline(spark, dir, 8)
     ShuffleScale.assertHaloPlan(p)
     assert(p.count() == 64L, "pipeline lost tiles")
+    val b = ShuffleScale.haloBytes(spark, dir, 8)
+    info(b.line)
+    assert(b.o1 > 0 && b.o4 > 0 && b.atHome <= 64, b.line)
+    assert(b.o1Margin < b.expanded && b.o4Margin < b.expanded, b.line)
   }
 }

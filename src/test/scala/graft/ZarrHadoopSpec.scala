@@ -125,6 +125,30 @@ class ZarrHadoopSpec extends AnyFunSuite {
     assert(chain(ex).exists(m => m != null && m.contains("append-mode")))
   }
 
+  test("a local store is written without .crc siblings, and a stale one fails no read") {
+    import spark.implicits._
+    val spec = GridSpec(Array(5L, 7L), Array(3, 4))
+    val tiles = sampleTiles(spec)
+    for (dir <- Seq(tmpUri("zarr_nocrc"), TempDirs.create("zarr_nocrc_plain"))) {
+      // an earlier write through Hadoop's checksummed local file system
+      // leaves a .crc sibling next to every file
+      val local = org.apache.hadoop.fs.FileSystem.getLocal(graft.sources.StoreIO.hadoopConf)
+      val chunk = new org.apache.hadoop.fs.Path(dir, "0.0")
+      val old = local.create(chunk, true)
+      try old.write(Array.fill[Byte](100)(7)) finally old.close()
+      assert(local.getRaw.exists(local.getChecksumFile(chunk)))
+      ZarrIO.write(spark.createDataset(tiles), spec, dir, "<u2", "zlib")
+      val files = new java.io.File(chunk.toUri.getPath).getParentFile.list().toSet
+      assert(files.filter(_.endsWith(".crc")) == Set(".0.0.crc"), files)
+      val back = ZarrIO.read(spark, dir).collect()
+      assert(back.length == 4)
+      back.foreach { t =>
+        val orig = tiles.find(_.loc.toSeq == t.loc.toSeq).get
+        assert(t.data.toSeq == orig.data.toSeq, t.loc.toSeq)
+      }
+    }
+  }
+
   test("zarr read and write tasks carry no Hadoop conf") {
     import spark.implicits._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerStageSubmitted}

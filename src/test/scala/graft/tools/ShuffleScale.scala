@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.BenchProtocol
-import graft.ops.{CCLSegmentation, Relabel}
+import graft.ops.{CCLSegmentation, Halo, Relabel}
 import graft.tiles.{GridSpec, Tile}
 
 /** Scale-trend probe for the three shuffle-heavy families (CurveScale's
@@ -41,7 +41,10 @@ import graft.tiles.{GridSpec, Tile}
   *  - Halo: an NxN grid (16/32/64 — the largest is the verdict's
   *    ~64x64-tile grid, 170x the 6x4 golden) of 128x128 tiles carrying
   *    a binary field of radius-5 blobs on a 24-px lattice, so objects
-  *    cross tile borders and both exchanges carry real margins.
+  *    cross tile borders and both exchanges carry real margins. Each
+  *    size also prints a `BYTES` line ([[HaloBytes]]): O1 and O4 shuffle
+  *    bytes per margin and per expanded voxel, and how many staged tiles
+  *    arrived in their O1 partition.
   *
   * At the largest size each family's physical plan is asserted: the band
   * join is still a hash equi-join on (band, bandval), the IVF probe join
@@ -174,6 +177,54 @@ object ShuffleScale {
       GridSpec(Array(grid.toLong * haloCs, grid.toLong * haloCs),
         Array(haloCs, haloCs)),
       CCLSegmentation(), Array(haloOv, haloOv), 0.05)
+  }
+
+  /** What the two halo exchanges of [[haloPipeline]] moved on a `grid`²
+    * grid, against the halo model: shuffle bytes of O1 and of O4, the
+    * margin voxels each must ship (O1 every in-grid margin of every chunk,
+    * O4 the margins its parity rule sends, both from the overlapped
+    * shapes), the expanded voxels (every halo-expanded tile), and how many
+    * of the parquet-staged tiles arrived in their O1 partition, so that
+    * O1 shipped only their margins.
+    */
+  final case class HaloBytes(o1: Long, o4: Long, o1Margin: Long, o4Margin: Long,
+      expanded: Long, atHome: Long, tiles: Long) {
+    def line: String =
+      f"O1 ${o1.toDouble / o1Margin}%.3f B/margin ${o1.toDouble / expanded}%.3f B/expanded voxel  " +
+        f"O4 ${o4.toDouble / o4Margin}%.3f B/margin ${o4.toDouble / expanded}%.3f B/expanded voxel  " +
+        s"at home $atHome of $tiles tiles"
+  }
+
+  def haloBytes(spark: SparkSession, dir: String, grid: Int): HaloBytes = {
+    import spark.implicits._
+    val spec = GridSpec(Array(grid.toLong * haloCs, grid.toLong * haloCs), Array(haloCs, haloCs))
+    val ov = Array(haloOv, haloOv)
+    val sc = spark.sparkContext
+    def shuffled(action: => Any): Long = {
+      val bytes = new TaskMetricSum(sc, _.shuffleWriteMetrics.bytesWritten)
+      try { bytes.reset(); action; bytes.get() } finally sc.removeSparkListener(bytes)
+    }
+    val tiles = spark.read.parquet(dir).select("loc", "grid", "shape", "data", "classes").as[Tile]
+    // `.rdd` adds no exchange, unlike `Dataset.count`'s aggregation
+    val o1 = shuffled(Relabel.prepareInput(tiles, spec, ov).rdd.count())
+    val both = shuffled(haloPipeline(spark, dir, grid).rdd.count())
+    val locs = for (y <- 0 until grid; x <- 0 until grid) yield Array(y, x)
+    val dirs = Halo.directions(2)
+    def margins(send: (Array[Int], Array[Int]) => Boolean): Long = locs.map { loc =>
+      val shape = spec.overlappedShape(loc, ov)
+      dirs.filter(d => Halo.inGrid(loc, d, spec.gridShape) && send(loc, d))
+        .map(d => (if (d(0) != 0) haloOv else shape(0)).toLong * (if (d(1) != 0) haloOv else shape(1)))
+        .sum
+    }.sum
+    val expanded = locs.map(loc => spec.overlappedShape(loc, ov).map(_.toLong).product).sum
+    val in = tiles.rdd
+    val n = Halo.partitions(spark, grid.toLong * grid)
+    val placed = in.getNumPartitions == n
+    val home = in.mapPartitionsWithIndex((part, it) =>
+      Iterator.single(Halo.placedAt(part, n, placed, it).count(_._2).toLong))
+      .collect().sum
+    HaloBytes(o1, both - o1, expanded - grid.toLong * grid * haloCs * haloCs,
+      margins(Halo.receiverWillMerge), expanded, home, grid.toLong * grid)
   }
 
   /** The halo scale claim: EXACTLY two shuffles — the prepare (O1) halo
@@ -339,6 +390,7 @@ object ShuffleScale {
           f"grid=${g}%2dx$g%-2d  min3=${best}%7.2f s  tiles=$rows%6d  " +
           f"load=${BenchProtocol.loadavg()}%.2f")
         require(rows == g.toLong * g, s"pipeline lost tiles: $rows")
+        println(s"BYTES halo grid=${g}x$g  ${haloBytes(spark, dir, g).line}")
         (best, rows)
       }
       // the scale claim: EXACTLY two exchanges at the largest grid — the
