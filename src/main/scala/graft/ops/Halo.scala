@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.nio.ByteBuffer
-import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.{Kernels, Nd, Regions}
@@ -30,18 +30,20 @@ import graft.tiles.Tile
   * can carry seconds of it. Everything after the exchange up to the next
   * one is a narrow map, so it runs in the same `n` tasks.
   *
-  * At home: when the input already has the exchange's `n` partitions, a
-  * tile in input partition `p` whose `lin` the partitioner maps to `p`,
-  * and whose `lin` is above the last at-home `lin` before it in `p`, ships
-  * only its margins. The reduce side zips the shuffled shards with the
+  * At home: when the input already has the exchange's `n` partitions and
+  * Spark knows it recomputes each partition in the same order (no
+  * unsorted shuffle in its lineage), a tile in input partition `p` whose
+  * `lin` the partitioner maps to `p`, and whose `lin` is above the last
+  * at-home `lin` before it in `p`, ships only its margins. The reduce side zips the shuffled shards with the
   * same input partition, applies the same rule to find those tiles again
   * (an ascending stream, like the shuffled records), and pastes each one's
   * core in place. A zarr read and a row-major tile table arrive placed, so
   * O1 moves `O(overlap * surface)` per chunk, the halo model's bound,
   * instead of the chunk plus its margins. The price is that O1's reduce
   * stage reads its input partition a second time: persist an input that
-  * is expensive to recompute. Every other tile ships its core as before,
-  * and an input that recomputes in a different order or with a cell twice
+  * is expensive to recompute, or whose user code does not recompute the
+  * same tiles in the same order. Every other tile ships its core as
+  * before, and an input that recomputes differently or holds a cell twice
   * fails the assembly's one-core-per-chunk check, naming the chunk.
   *
   * O4 ships its cores on purpose: its input is O3's output, so re-reading
@@ -159,15 +161,16 @@ object Halo {
     * sorter, which spills under memory pressure; assembly then holds one
     * receiver's shards at a time.
     *
-    * With `keepHome`, and an input of `partitions` partitions, at-home
-    * tiles ([[placedAt]]) send no `rd = 0` shard; the reduce side reads
-    * them from its own input partition and hands each to `assemble` as
-    * the receiver's local core.
+    * With `keepHome`, and an input of `partitions` partitions that
+    * recomputes in the same order, at-home tiles ([[placedAt]]) send no
+    * `rd = 0` shard; the reduce side reads them from its own input
+    * partition and hands each to `assemble` as the receiver's local core.
     */
   private def exchange(tiles: RDD[Tile], partitions: Int, overlaps: Array[Int],
       keepHome: Boolean, send: (Array[Int], Array[Int]) => Boolean)(
       assemble: (Long, Option[Tile], Array[Shard]) => Tile): RDD[Tile] = {
-    val home = keepHome && tiles.getNumPartitions == partitions
+    val home = keepHome && tiles.getNumPartitions == partitions &&
+      org.apache.spark.sql.graft.Bridge.recomputesInOrder(tiles)
     val shards = tiles.mapPartitionsWithIndex { (part, it) =>
       placedAt(part, partitions, home, it).flatMap { case (t, at) =>
         val chunks = chunksOf(t)
@@ -194,10 +197,10 @@ object Halo {
       }
     }
     if (!home) placed.mapPartitions(receive(_, Iterator.empty), preservesPartitioning = true)
-    else placed.zipPartitions(tiles, preservesPartitioning = true) { (shipped, in) =>
-      receive(shipped, placedAt(TaskContext.getPartitionId(), partitions, home, in)
-        .collect { case (t, true) => t })
-    }
+    else placed.zipPartitions(
+      tiles.mapPartitionsWithIndex((part, it) =>
+        placedAt(part, partitions, home, it).collect { case (t, true) => t }),
+      preservesPartitioning = true)(receive)
   }
 
   /** Partitions of a halo exchange's output: `min(reducers,

@@ -92,4 +92,12 @@ object Bridge {
         }
       case _ => None
     }
+
+  /** Whether every partition of `rdd` recomputes in the same order:
+    * Spark's own `DeterministicLevel` of its lineage is `DETERMINATE`. A
+    * shuffle without a key ordering upstream makes the order depend on
+    * which map outputs arrive first.
+    */
+  def recomputesInOrder(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    rdd.outputDeterministicLevel == org.apache.spark.rdd.DeterministicLevel.DETERMINATE
 }

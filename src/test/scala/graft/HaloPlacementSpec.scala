@@ -255,9 +255,25 @@ class HaloPlacementSpec extends AnyFunSuite {
           s"$ctx: O1 shipped $written records for $margins margins and ${chunks - home} cores")
         assert(out.map(_.linearIndex).toSeq == rowMajor, s"$ctx: output order")
         out.foreach(t => assertSameTile(ctx, t, window(spec, img, cls, ovs, t.loc)))
+        // one task computing every reducer in turn, as a coalesced sink does
+        o1.coalesce(1).collect().foreach(t =>
+          assertSameTile(s"$ctx, coalesced", t, window(spec, img, cls, ovs, t.loc)))
         assertPlaced(ctx, placement(o1), chunks.toInt, n)
       }
     }
+
+  test("O1 ships every core of an input whose order depends on a shuffle") {
+    val ovs = Array(2, 2)
+    val (spec, tiles, img, cls) = imageTiles(Array(20, 20), Array(8, 8), 14)
+    val margins = tiles.map(t => Halo.directions(2).count(Halo.inGrid(t.loc, _, t.grid))).sum
+    // a round-robin repartition into O1's own partition count
+    val shuffled = input(tiles, 0L until 9L, 4).repartition(4)
+    var out: Array[Tile] = null
+    val (written, _) = records { out = Relabel.prepareInput(shuffled, spec, ovs).collect() }
+    // the repartition's own records, then O1's margins and all nine cores
+    assert(written == 9 + margins + 9, s"shipped $written records for $margins margins")
+    out.foreach(t => assertSameTile("repartitioned", t, window(spec, img, cls, ovs, t.loc)))
+  }
 
   test("O1 on a 1-chunk grid ships nothing and its reducer reads no records") {
     val ovs = Array(2, 2)
