@@ -68,9 +68,11 @@ final case class IdentitySegmentation() extends SegmentationFn {
   * O1 keeps a tile that is already in its output partition where it is
   * and ships only its margins ([[Halo]]), so O1's reduce stage reads its
   * input partition again: a zarr read or a persisted table costs little
-  * to re-read, but persist an input that is expensive to recompute (a
-  * join, an aggregation, a random generator), as [[sortLabelIndices]]
-  * advises for its own input.
+  * to re-read, but persist an input whose own computation is expensive,
+  * or whose user code would not give the same tiles in the same order
+  * twice, as [[sortLabelIndices]] advises for its own input. An input
+  * with an unsorted shuffle in its lineage ships every tile and is read
+  * once.
   */
 object Relabel {
 
