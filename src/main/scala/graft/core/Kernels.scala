@@ -292,29 +292,39 @@ object Kernels {
     maskClasses(tile, out)
   }
 
-  /** O4 `merge_tiles` paint (`chunkops.py:132-189`), shard-based.
+  /** O4 `merge_tiles` paint (`chunkops.py:132-189`), shard-based, on the
+    * receiving tile's core.
     *
     * Rather than materializing the doubly-expanded array of `da.map_overlap`,
     * each merging region's source pixels arrive as a halo shard (keyed by the
-    * region levels from this tile's perspective). In exact merging-region
-    * order, non-zero shard labels overwrite the destination box; classes
-    * follow the same mask (`chunkops.py:170-181`).
+    * region levels from this tile's perspective). `core` is the receiver
+    * already cut to its interior: the reference paints the halo-expanded
+    * tile and then trims it (`da.overlap.trim_overlap`,
+    * `relabeling.py:97`), so only the core can reach the output. Each
+    * region's dest box is clipped to the core, and in exact merging-region
+    * order non-zero shard labels overwrite it; classes follow the same mask
+    * (`chunkops.py:170-181`). The paint is a pointwise overwrite, so
+    * clipping first gives the same voxels as painting and then trimming.
+    * It paints in place: `core`'s arrays are the output.
     *
     * `shardFor(levels)` returns the (labels, classes-channels) payload for a
-    * region, shaped as the region's dest box.
+    * region, shaped as the region's dest box clipped to the core.
     */
-  def mergePaint(tile: Tile, overlaps: Array[Int],
+  def mergePaint(core: Tile, overlaps: Array[Int],
                  shardFor: Array[Int] => (Array[Long], Array[Array[Long]])): Tile = {
-    val shape = tile.shape
-    val out = tile.data.clone()
-    val outClasses = if (tile.hasClasses) tile.classes.map(_.clone()) else tile.classes
-    val nCh = if (tile.hasClasses) outClasses.length else 0
+    val shape = core.shape
+    val frame = Regions.haloShape(core.loc, core.grid, overlaps, shape)
+    val interior = Regions.interiorBox(core.loc, core.grid, overlaps, frame)
+    val out = core.data
+    val outClasses = core.classes
+    val nCh = if (core.hasClasses) outClasses.length else 0
 
-    for (levels <- Regions.mergingOverlaps(tile.loc, tile.grid)) {
-      val dst = Regions.destBox(tile.loc, tile.grid, overlaps, levels, shape)
+    for (levels <- Regions.mergingOverlaps(core.loc, core.grid)) {
+      val dst = Regions.destBox(core.loc, core.grid, overlaps, levels, frame)
+        .intersect(interior).relativeTo(interior.start)
       val (shard, shardClasses) = shardFor(levels)
       require(shard.length == dst.numel,
-        s"shard size ${shard.length} != dest box ${dst.numel} for region ${levels.mkString(",")} of tile ${tile.loc.mkString(",")}")
+        s"shard size ${shard.length} != dest box ${dst.numel} for region ${levels.mkString(",")} of tile ${core.loc.mkString(",")}")
       var i = 0
       Nd.foreachRun(shape, dst) { (from, n) =>
         var flat = from
@@ -335,19 +345,7 @@ object Kernels {
         i = j
       }
     }
-    tile.copy(data = out, classes = outClasses)
-  }
-
-  /** Trim halos: keep only the interior box (`da.overlap.trim_overlap`,
-    * `relabeling.py:97`). After this, every tile is core (chunk) sized.
-    */
-  def trimOverlap(tile: Tile, overlaps: Array[Int]): Tile = {
-    val box = Regions.interiorBox(tile.loc, tile.grid, overlaps, tile.shape)
-    val data = Nd.sliceBox(tile.data, tile.shape, box)
-    val classes =
-      if (tile.hasClasses) tile.classes.map(ch => Nd.sliceBox(ch, tile.shape, box))
-      else tile.classes
-    tile.copy(shape = box.shape, data = data, classes = classes)
+    core
   }
 
   /** Why an O10 remap can meet a label its rank pass never saw. Both

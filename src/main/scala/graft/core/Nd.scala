@@ -30,6 +30,19 @@ object Nd {
   final case class Box(start: Array[Int], end: Array[Int]) {
     def shape: Array[Int] = Array.tabulate(start.length)(a => end(a) - start(a))
     def numel: Int = Nd.size(shape)
+
+    /** The part of this box inside `o` (empty on an axis where they do
+      * not meet).
+      */
+    def intersect(o: Box): Box = {
+      val s = Array.tabulate(start.length)(a => math.max(start(a), o.start(a)))
+      Box(s, Array.tabulate(start.length)(a => math.max(s(a), math.min(end(a), o.end(a)))))
+    }
+
+    /** This box in the coordinates of a frame whose origin is `origin`. */
+    def relativeTo(origin: Array[Int]): Box =
+      Box(Array.tabulate(start.length)(a => start(a) - origin(a)),
+        Array.tabulate(start.length)(a => end(a) - origin(a)))
   }
 
   /** Visit every flat index of `box` within an array of shape `shape`,
@@ -114,17 +127,48 @@ object Nd {
     else if ((bits >>> 8) != 0L) 2
     else 1
 
-  /** The wire frame `(width, base)` of `a`, chosen once per source array:
-    * its [[packWidth]] and no base, unless a base narrows that width. Only
-    * a width above 1 pays a scan for the non-zero min and max; the base is
-    * then `min - 1`, so every non-zero value crosses as `v - base >= 1`
-    * and zero stays free to mean zero. Chunk-offset labels (every label of
-    * a tile in `[lin * offset + 1, lin * offset + count]`) thus cross at
-    * the width of their count, not of their offset.
+  /** The wire frame `(width, base)` of `a`, chosen once per source array
+    * in one pass: its [[packWidth]] and no base, unless a base narrows
+    * that width. The base is `min - 1` of the non-zero values, so every
+    * non-zero value crosses as `v - base >= 1` and zero stays free to mean
+    * zero. Chunk-offset labels (every label of a tile in
+    * `[lin * offset + 1, lin * offset + count]`) thus cross at the width
+    * of their count, not of their offset.
+    *
+    * The pass keeps two branch-free reductions in unsigned order (`x ^
+    * Long.MinValue` maps it onto signed order), so its cost does not
+    * depend on where the zeros are: the max of `v`, whose highest set bit
+    * is the OR's and so gives the width, and the min of `v - 1`, where
+    * zero wraps to the top. Without negative values they are the non-zero
+    * max and min. An array holding a negative value, which no label offset
+    * gives, is scanned a second time for its non-zero range.
     */
   def packFrame(a: Array[Long]): (Int, Option[Long]) = {
-    val width = packWidth(a)
+    var high = Long.MinValue
+    var low = Long.MaxValue
+    var i = 0
+    while (i < a.length) {
+      val v = a(i)
+      high = math.max(high, v ^ Long.MinValue)
+      low = math.min(low, (v - 1) ^ Long.MinValue)
+      i += 1
+    }
+    val top = high ^ Long.MinValue
+    val width = widthOf(top)
     if (width == 1) return (width, None)
+    // width > 1, so some value is non-zero; `top` is negative only when
+    // some value is
+    val (min, max) = if (top >= 0L) ((low ^ Long.MinValue) + 1, top) else nonZeroRange(a)
+    // the span is unsigned, and a base is worth its 8 header bytes only
+    // where it narrows the width
+    val span = max - min
+    if (span < 0L || span >= 0xffffffffL) return (width, None)
+    val based = widthOf(span + 1)
+    if (based < width) (based, Some(min - 1)) else (width, None)
+  }
+
+  /** The signed min and max of the non-zero values of `a`. */
+  private def nonZeroRange(a: Array[Long]): (Long, Long) = {
     var min = Long.MaxValue
     var max = Long.MinValue
     var i = 0
@@ -133,12 +177,7 @@ object Nd {
       if (v != 0L) { if (v < min) min = v; if (v > max) max = v }
       i += 1
     }
-    // width > 1, so some value is non-zero; the span is unsigned, and a
-    // base is worth its 8 header bytes only where it narrows the width
-    val span = max - min
-    if (span < 0L || span >= 0xffffffffL) return (width, None)
-    val based = widthOf(span + 1)
-    if (based < width) (based, Some(min - 1)) else (width, None)
+    (min, max)
   }
 
   /** Byte 0's flag for a payload with a base, and such a payload's header
@@ -147,18 +186,33 @@ object Nd {
   private final val BaseFlag = 0x80
   private final val BasedHeader = 9
 
+  /** Byte 0's bit that belongs to the caller: [[packBox]] sets it when
+    * asked to `mark` a payload, [[unpackBox]] ignores it, and [[marked]]
+    * reads it. [[graft.ops.Halo]] marks a merge shard whose payload holds
+    * only the part of its box inside the receiving chunk's core.
+    */
+  private final val MarkFlag = 0x40
+
+  /** Whether `packed` was written with [[packBox]]'s `mark`. */
+  def marked(packed: Array[Byte]): Boolean = (packed(0) & MarkFlag) != 0
+
   /** [[sliceBox]] into the halo wire format. Byte 0 is the width (1, 2, 4
     * or 8); without a base, `box.numel` little-endian values of `width`
     * bytes each follow. With a base (from [[packFrame]]), byte 0 also has
     * its high bit (`0x80`) set, the 8-byte little-endian base follows it,
     * and then the values, each non-zero `v` as `v - base` (zero stays
-    * zero). An array packed without a base is byte-identical to the
-    * format before bases existed, so older payloads still decode.
+    * zero). With `mark`, byte 0 also has bit `0x40` set ([[marked]]). An
+    * array packed without a base or a mark is byte-identical to the
+    * format before either existed, so older payloads still decode.
     */
   def packBox(src: Array[Long], srcShape: Array[Int], box: Box, width: Int,
-              base: Option[Long] = None): Array[Byte] = base match {
-    case None => packPlain(src, srcShape, box, width)
-    case Some(b) => packBased(src, srcShape, box, width, b)
+              base: Option[Long] = None, mark: Boolean = false): Array[Byte] = {
+    val out = base match {
+      case None => packPlain(src, srcShape, box, width)
+      case Some(b) => packBased(src, srcShape, box, width, b)
+    }
+    if (mark) out(0) = (out(0) | MarkFlag).toByte
+    out
   }
 
   private def packPlain(src: Array[Long], srcShape: Array[Int], box: Box,
@@ -208,7 +262,7 @@ object Nd {
   def unpackBox(dst: Array[Long], dstShape: Array[Int], box: Box,
                 packed: Array[Byte]): Unit = {
     val based = (packed(0) & BaseFlag) != 0
-    val width = packed(0) & 0x7f
+    val width = packed(0) & 0x3f
     val header = if (based) BasedHeader else 1
     require((width == 1 || width == 2 || width == 4 || width == 8) &&
       packed.length == header + box.numel * width,

@@ -149,6 +149,17 @@ object Regions {
     Nd.Box(start, end)
   }
 
+  /** The halo-expanded frame around a core of shape `core`: `overlap`
+    * more on every side that has a neighbor, so that [[interiorBox]] of
+    * the frame is the core.
+    */
+  def haloShape(loc: Array[Int], grid: Array[Int], overlaps: Array[Int],
+                core: Array[Int]): Array[Int] =
+    Array.tabulate(loc.length) { a =>
+      core(a) + (if (loc(a) > 0) overlaps(a) else 0) +
+        (if (loc(a) < grid(a) - 1) overlaps(a) else 0)
+    }
+
   /** Linear chunk index, `np.ravel_multi_index(loc, grid)` row-major. */
   def linearIndex(loc: Array[Int], grid: Array[Int]): Long = {
     var acc = 0L

@@ -46,10 +46,19 @@ import graft.tiles.Tile
   * before, and an input that recomputes differently or holds a cell twice
   * fails the assembly's one-core-per-chunk check, naming the chunk.
   *
-  * O4 ships its cores on purpose: its input is O3's output, so re-reading
-  * it on the reduce side would run O1's reduce, O2 and O3 a second time
-  * inside O4's stage, and its `rd = 0` shards are the only materialization
-  * of that output.
+  * O4 ships only what survives the reference's trim (`relabeling.py:97`,
+  * paint then `trim_overlap`): each tile's interior box as its `rd = 0`
+  * shard, and margins `ov` thick on their varying axes but clipped to the
+  * sender's interior on the others, which on those axes is the receiver's
+  * core. The receiver unpacks the core into a core-sized tile and paints
+  * each region's dest box clipped to it ([[assembleMerged]]); no voxel
+  * that the trim would drop crosses the shuffle. On perfbench's
+  * `labels3d_zarr` that is 2,097,152 core and 1,021,952 margin voxels per
+  * channel, 58 % of the halo-expanded tiles and full-extent margins.
+  * O4 still ships its cores: its input is O3's output, so re-reading it
+  * on the reduce side would run O1's reduce, O2 and O3 a second time
+  * inside O4's stage, and its `rd = 0` shards are the only
+  * materialization of that output.
   *
   * The exchange itself works on `RDD[Tile]`. The public [[expand]] and
   * [[mergeAndTrim]] read their input through `Dataset.rdd` and wrap the
@@ -63,9 +72,13 @@ object Halo {
   /** A margin shard in flight. `destLin` = linear index of the receiving
     * chunk (the shuffle key); `rd` = where the *sender* sits relative to the
     * receiver (-1/0/+1 per axis; all-zero = the receiver's own payload);
-    * `shape` = shard extent. `data` and each `classes` channel are
-    * width-tagged bytes ([[Nd.packBox]]): a uint8 image crosses the O1
-    * shuffle at one byte per pixel. O4's chunk-disjoint global labels
+    * `shape` = shard extent: on the axes the sender shares with the
+    * receiver, O1's shards span the sender's whole tile and O4's only its
+    * interior, and O4's `rd = 0` shard is the interior box. `data` and
+    * each `classes` channel are width-tagged bytes ([[Nd.packBox]]); O4
+    * marks its `data` as clipped to the receiver's core ([[Nd.marked]]).
+    * A uint8 image crosses the O1 shuffle at one byte per pixel. O4's
+    * chunk-disjoint global labels
     * cross as offsets from their tile's own label range, at the width of
     * the tile's label count (one or two bytes in practice), not of its
     * chunk offset (eight bytes from linear index 2 on).
@@ -154,10 +167,10 @@ object Halo {
     Shard(destLin, destLoc, grid, rd, shape, data, Array.fill(buf.getInt())(packed()))
   }
 
-  /** The one halo exchange: every tile sends the shards `send` selects, a
-    * [[ChunkPartitioner]] over `partitions` partitions places them, and
-    * `assemble` turns each receiver's shards into its tile, in ascending
-    * `lin`. The reduce side sorts the records by `lin` in Spark's shuffle
+  /** The one halo exchange: every tile sends the shards `ship` gives it
+    * (with or without its core), a [[ChunkPartitioner]] over `partitions`
+    * partitions places them, and `assemble` turns each receiver's shards
+    * into its tile, in ascending `lin`. The reduce side sorts the records by `lin` in Spark's shuffle
     * sorter, which spills under memory pressure; assembly then holds one
     * receiver's shards at a time.
     *
@@ -166,15 +179,15 @@ object Halo {
     * `rd = 0` shard; the reduce side reads them from its own input
     * partition and hands each to `assemble` as the receiver's local core.
     */
-  private def exchange(tiles: RDD[Tile], partitions: Int, overlaps: Array[Int],
-      keepHome: Boolean, send: (Array[Int], Array[Int]) => Boolean)(
+  private def exchange(tiles: RDD[Tile], partitions: Int, keepHome: Boolean,
+      ship: (Tile, Boolean) => Seq[Shard])(
       assemble: (Long, Option[Tile], Array[Shard]) => Tile): RDD[Tile] = {
     val home = keepHome && tiles.getNumPartitions == partitions &&
       org.apache.spark.sql.graft.Bridge.recomputesInOrder(tiles)
     val shards = tiles.mapPartitionsWithIndex { (part, it) =>
       placedAt(part, partitions, home, it).flatMap { case (t, at) =>
         val chunks = chunksOf(t)
-        shardsOf(t, overlaps, send, core = !at).map(s => ((s.destLin, chunks), encode(s)))
+        ship(t, !at).map(s => ((s.destLin, chunks), encode(s)))
       }
     }
     val placed = new ShuffledRDD[(Long, Long), Array[Byte], Array[Byte]](
@@ -232,19 +245,21 @@ object Halo {
     true
   }
 
-  /** Slice of `tile` to ship toward direction `d`: per axis, `+1` sends the
-    * last `ov`, `-1` the first `ov`, `0` the full extent.
+  /** Slice of a tile of shape `shape` to ship toward direction `d`: per
+    * axis, `+1` sends the last `ov`, `-1` the first `ov`, `0` the sender's
+    * `extent` on that axis.
     */
-  private def marginBox(tile: Tile, d: Array[Int], overlaps: Array[Int]): Nd.Box = {
-    val dims = tile.dims
+  private def marginBox(shape: Array[Int], extent: Nd.Box, d: Array[Int],
+      overlaps: Array[Int]): Nd.Box = {
+    val dims = shape.length
     val start = new Array[Int](dims)
     val end = new Array[Int](dims)
     var a = 0
     while (a < dims) {
       d(a) match {
-        case 1  => start(a) = tile.shape(a) - overlaps(a); end(a) = tile.shape(a)
+        case 1  => start(a) = shape(a) - overlaps(a); end(a) = shape(a)
         case -1 => start(a) = 0; end(a) = overlaps(a)
-        case _  => start(a) = 0; end(a) = tile.shape(a)
+        case _  => start(a) = extent.start(a); end(a) = extent.end(a)
       }
       a += 1
     }
@@ -252,35 +267,50 @@ object Halo {
   }
 
   /** The shards `t` sends: its own payload when `core`, plus one margin
-    * per in-grid direction `d` with `send(t.loc, d)`. Each array is packed
-    * in the wire frame of its whole source array ([[Nd.packFrame]]), found
-    * once per tile.
+    * per in-grid direction `d` with `send(t.loc, d)`. The sender's extent
+    * is its whole tile, or with `clip` its interior ([[Regions.interiorBox]]):
+    * the core ships as that box, and each margin is `ov` thick on its
+    * varying axes and spans that box on the others, which on those axes
+    * is also the receiver's own extent. Clipped payloads are marked
+    * ([[Nd.marked]]) so that the receiver can place them. Each array is
+    * packed in the wire frame of its whole source array ([[Nd.packFrame]]),
+    * found once per tile.
     */
   private[graft] def shardsOf(t: Tile, overlaps: Array[Int],
-      send: (Array[Int], Array[Int]) => Boolean, core: Boolean = true): Seq[Shard] = {
+      send: (Array[Int], Array[Int]) => Boolean, core: Boolean = true,
+      clip: Boolean = false): Seq[Shard] = {
     val (width, base) = Nd.packFrame(t.data)
     val classFrames = t.classes.map(Nd.packFrame)
     def pack(box: Nd.Box): (Array[Byte], Array[Array[Byte]]) =
-      (Nd.packBox(t.data, t.shape, box, width, base),
+      (Nd.packBox(t.data, t.shape, box, width, base, mark = clip),
         Array.tabulate(t.classes.length) { ch =>
           val (w, b) = classFrames(ch)
           Nd.packBox(t.classes(ch), t.shape, box, w, b)
         })
+    val extent =
+      if (clip) Regions.interiorBox(t.loc, t.grid, overlaps, t.shape) else Nd.fullBox(t.shape)
     val margins = directions(t.dims).collect {
       case d if inGrid(t.loc, d, t.grid) && send(t.loc, d) =>
         val dest = Array.tabulate(t.dims)(a => t.loc(a) + d(a))
-        val box = marginBox(t, d, overlaps)
+        val box = marginBox(t.shape, extent, d, overlaps)
         val (data, classes) = pack(box)
         Shard(Regions.linearIndex(dest, t.grid), dest, t.grid, d.map(-_), box.shape,
           data, classes)
     }
     if (!core) margins
     else {
-      val (own, ownClasses) = pack(Nd.fullBox(t.shape))
-      Shard(t.linearIndex, t.loc, t.grid, new Array[Int](t.dims), t.shape, own, ownClasses) +:
-        margins
+      val (own, ownClasses) = pack(extent)
+      Shard(t.linearIndex, t.loc, t.grid, new Array[Int](t.dims), extent.shape, own,
+        ownClasses) +: margins
     }
   }
+
+  /** The shards O4 sends for `t`, an overlapped O3 tile: its core box and
+    * the margins its receivers' parity rule will paint ([[receiverWillMerge]]),
+    * each clipped to its receiver's core.
+    */
+  private[graft] def mergeShardsOf(t: Tile, overlaps: Array[Int]): Seq[Shard] =
+    shardsOf(t, overlaps, receiverWillMerge, clip = true)
 
   /** The receiver's own tile: `local` (at home, [[exchange]]) or its one
     * shipped `rd = 0` shard, after checking that every sender direction
@@ -335,7 +365,8 @@ object Halo {
     */
   private[graft] def expand(tiles: RDD[Tile], overlaps: Array[Int],
       partitions: Int): RDD[Tile] =
-    exchange(tiles, partitions, overlaps, keepHome = true, (_, _) => true)(
+    exchange(tiles, partitions, keepHome = true,
+      (t, core) => shardsOf(t, overlaps, (_, _) => true, core))(
       assembleExpanded(_, _, _, overlaps))
 
   /** One receiver's halo-expanded tile: its core (`local`, or the shipped
@@ -351,10 +382,7 @@ object Halo {
       t => (t.loc, t.grid, t.shape, t.classes.length),
       s => (s.destLoc, s.grid, s.shape, s.classes.length))
     val dims = loc.length
-    val outShape = Array.tabulate(dims) { a =>
-      cs(a) + (if (loc(a) > 0) overlaps(a) else 0) +
-        (if (loc(a) < grid(a) - 1) overlaps(a) else 0)
-    }
+    val outShape = Regions.haloShape(loc, grid, overlaps, cs)
     val lowOff = Array.tabulate(dims)(a => if (loc(a) > 0) overlaps(a) else 0)
     val out = new Array[Long](Nd.size(outShape))
     val outCls = Array.fill(nCh)(new Array[Long](out.length))
@@ -388,8 +416,10 @@ object Halo {
   }
 
   /** O4 merge: ship each merging region's source pixels as shards over the
-    * *already-overlapped* tiles, paint them in with the parity rule, then
-    * trim halos. One shuffle, same key as [[expand]].
+    * *already-overlapped* tiles and paint them in with the parity rule.
+    * One shuffle, same key as [[expand]]. Output tiles are core-sized:
+    * every shard is clipped to its receiver's core before it ships, since
+    * the reference's trim (`relabeling.py:97`) would drop the rest.
     *
     * Only shards a receiver's merging-parity regions will consume are sent
     * (`utils.py:101-110`) — roughly half the traffic of a blind exchange.
@@ -405,45 +435,69 @@ object Halo {
   }
 
   /** [[mergeAndTrim]] over the tile RDD into `partitions` partitions.
-    * Every tile ships its core ([[Halo]] says why).
+    * Every tile ships its core box ([[Halo]] says why).
     */
   private[graft] def mergeAndTrim(tiles: RDD[Tile], overlaps: Array[Int],
       partitions: Int): RDD[Tile] =
-    exchange(tiles, partitions, overlaps, keepHome = false, receiverWillMerge)(
+    exchange(tiles, partitions, keepHome = false, (t, _) => mergeShardsOf(t, overlaps))(
       (lin, _, all) => assembleMerged(lin, all, overlaps))
 
-  /** Paint-and-trim one receiver's merge group (shared with the streaming
-    * re-expression in [[graft.streaming.StreamingTiles]]).
+  /** Region levels of a shard from direction `rd`, as the receiver sees
+    * them: a sender above (`rd = +1`) feeds a level-1 region, one below
+    * (`rd = -1`) a level-0 region, and an axis the sender shares is not
+    * varying.
+    */
+  private def levelsOf(rd: Array[Int]): Array[Int] =
+    rd.map { case 1 => 1; case -1 => 0; case _ => Regions.NotVarying }
+
+  /** One receiver's merged core from its merge group (shared with the
+    * streaming re-expression in [[graft.streaming.StreamingTiles]]).
+    *
+    * One placement rule for every shard, the core included: its box is its
+    * region's dest box in the receiver's halo frame ([[Regions.destBox]];
+    * the whole frame for the core), clipped to the receiver's core when its
+    * payload is marked so ([[shardsOf]] with `clip`), and only the part of
+    * that box inside the core is unpacked. The core unpacks straight into
+    * the core-sized output and [[Kernels.mergePaint]] paints the regions
+    * over it in place; nothing is cloned and nothing is trimmed.
+    *
+    * Shards that [[mergeShardsOf]] did not clip (full-extent shards, as a
+    * streaming checkpoint written before the clip holds them) place by the
+    * same rule and assemble to the same tile. The mark, not the shape,
+    * tells the two apart: a chunk's core box has the shape of a full
+    * extent on a grid with smaller chunks.
     */
   private[graft] def assembleMerged(lin: Long, all: Array[Shard],
       overlaps: Array[Int]): Tile = {
-    def unpack(s: Shard): (Array[Long], Array[Array[Long]]) = {
-      val box = Nd.fullBox(s.shape)
-      def one(packed: Array[Byte]): Array[Long] = {
-        val out = new Array[Long](box.numel)
-        Nd.unpackBox(out, s.shape, box, packed)
-        out
-      }
-      (one(s.data), s.classes.map(one))
-    }
     val core = ownCore(lin, None, all).flatMap(_.toOption).getOrElse(
       throw new IllegalArgumentException(
         s"merge: no tile present at linear chunk index $lin — dense grid required"))
-    val (data, classes) = unpack(core)
-    val own = Tile(core.destLoc, core.grid, core.shape, data, classes)
-    // region levels (receiver perspective): sender above (rd=+1) feeds a
-    // level-1 region, sender below (rd=-1) a level-0 region.
-    val byRegion = all.filter(_.rd.exists(_ != 0)).map { s =>
-      (s.rd.map { case 1 => 1; case -1 => 0; case _ => Regions.NotVarying }.toSeq, s)
-    }.toMap
-    val merged = Kernels.mergePaint(own, overlaps, levels => {
-      val s = byRegion.getOrElse(levels.toSeq,
+    val (loc, grid) = (core.destLoc, core.grid)
+    val frame =
+      if (Nd.marked(core.data)) Regions.haloShape(loc, grid, overlaps, core.shape)
+      else core.shape
+    val interior = Regions.interiorBox(loc, grid, overlaps, frame)
+    def inCore(s: Shard): (Array[Long], Array[Array[Long]]) = {
+      val dest = Regions.destBox(loc, grid, overlaps, levelsOf(s.rd), frame)
+      val box = if (Nd.marked(s.data)) dest.intersect(interior) else dest
+      require(box.shape.sameElements(s.shape),
+        s"merge: a ${s.shape.mkString("x")} shard from direction ${s.rd.mkString(",")} " +
+          s"does not fit its ${box.shape.mkString("x")} box in chunk $lin")
+      val part = box.intersect(interior).relativeTo(box.start)
+      def one(packed: Array[Byte]): Array[Long] = {
+        val values = new Array[Long](box.numel)
+        Nd.unpackBox(values, s.shape, Nd.fullBox(s.shape), packed)
+        if (part.numel == values.length) values else Nd.sliceBox(values, s.shape, part)
+      }
+      (one(s.data), s.classes.map(one))
+    }
+    val (data, classes) = inCore(core)
+    val byRegion = all.filter(_.rd.exists(_ != 0)).map(s => (levelsOf(s.rd).toSeq, s)).toMap
+    Kernels.mergePaint(Tile(loc, grid, interior.shape, data, classes), overlaps, levels =>
+      inCore(byRegion.getOrElse(levels.toSeq,
         throw new IllegalArgumentException(
           s"merge: missing neighbor shard for region ${levels.mkString(",")} " +
-            s"of tile ${own.loc.mkString(",")} — dense grid required"))
-      unpack(s)
-    })
-    Kernels.trimOverlap(merged, overlaps)
+            s"of tile ${loc.mkString(",")} — dense grid required"))))
   }
 
   /** The receiver at `loc + d` uses the shard iff the corresponding region is

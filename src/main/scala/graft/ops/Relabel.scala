@@ -187,7 +187,8 @@ object Relabel {
   }
 
   /** O4 `merge_overlapped_tiles` (`relabeling.py:79-99`): one neighbor
-    * exchange + parity paint + halo trim. Output tiles are core-sized, in
+    * exchange + parity paint, on each tile's core only (the halo trim the
+    * reference ends with keeps nothing else). Output tiles are core-sized, in
     * as many partitions as the input, capped by
     * `spark.sql.shuffle.partitions` ([[Halo.mergeAndTrim]]).
     */

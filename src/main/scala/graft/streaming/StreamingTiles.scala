@@ -131,10 +131,13 @@ object StreamingTiles {
 
   /** The merge exchange as a second stateful stage, chained after
     * [[expandSegmentRemoveStream]]: removed tiles flatMap into the SAME
-    * parity-pruned merge shards as [[graft.ops.Halo.mergeAndTrim]], each
-    * receiver buffers until its (static) expected contribution count is
-    * reached, then paints + trims + emits. With both stages in one append-
-    * mode query the WHOLE image2labels chain runs incrementally.
+    * parity-pruned merge shards as [[graft.ops.Halo.mergeAndTrim]] (each
+    * clipped to its receiver's core), each receiver buffers until its
+    * (static) expected contribution count is reached, then paints its core
+    * and emits. With both stages in one append-mode query the WHOLE
+    * image2labels chain runs incrementally. Pending shards a checkpoint
+    * holds in the full-extent shapes of earlier versions assemble by the
+    * same rule ([[graft.ops.Halo.assembleMerged]]).
     */
   def mergeStream(removed: Dataset[Tile], overlaps: Array[Int],
                   tombstoneTtlMs: Long = DefaultTombstoneTtlMs): Dataset[Tile] = {
@@ -144,7 +147,7 @@ object StreamingTiles {
     val dirs = Halo.directions(dims)
     val ov = overlaps.clone()
     collectNeighborhoods(
-      removed.flatMap(t => Halo.shardsOf(t, ov, Halo.receiverWillMerge)),
+      removed.flatMap(t => Halo.mergeShardsOf(t, ov)),
       tombstoneTtlMs)(
       // contributions this receiver will get: itself plus every in-grid
       // sender whose parity rule ships toward it

@@ -63,11 +63,6 @@ final case class GridSpec(imageShape: Array[Long], chunk: Array[Int]) {
     * per side that has a neighbor (`boundary=None` rule,
     * `relabeling.py:185-190`).
     */
-  def overlappedShape(loc: Array[Int], overlaps: Array[Int]): Array[Int] = {
-    val g = gridShape
-    Array.tabulate(dims) { a =>
-      chunk(a) + (if (loc(a) > 0) overlaps(a) else 0) +
-        (if (loc(a) < g(a) - 1) overlaps(a) else 0)
-    }
-  }
+  def overlappedShape(loc: Array[Int], overlaps: Array[Int]): Array[Int] =
+    graft.core.Regions.haloShape(loc, gridShape, overlaps, chunk)
 }

@@ -4,8 +4,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Dataset
-import graft.core.{Nd, Regions}
-import graft.ops.{CCLSegmentation, Halo, Relabel}
+import graft.core.{CCL, Kernels, Nd, Regions}
+import graft.ops.{CCLSegmentation, Halo, Relabel, SegmentationFn}
 import graft.tiles.{GridSpec, Tile}
 import graft.tools.TaskMetricSum
 
@@ -115,17 +115,7 @@ class HaloPlacementSpec extends AnyFunSuite {
     val ovs = Array(2, 2, 2)
     val shards = StageTables.rem3d.flatMap(t => Halo.shardsOf(t, ovs, Halo.receiverWillMerge))
     assert(shards.exists(s => (s.data(0) & 0x80) != 0), "no shard carries a base")
-    // what older streaming checkpoints hold: every label at width 8, untagged
-    def widen(s: Halo.Shard)(packed: Array[Byte]): Array[Byte] = {
-      val values = new Array[Long](Nd.size(s.shape))
-      Nd.unpackBox(values, s.shape, Nd.fullBox(s.shape), packed)
-      val buf = java.nio.ByteBuffer.allocate(1 + 8 * values.length)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.put(8.toByte)
-      values.foreach(buf.putLong)
-      buf.array()
-    }
-    val old = shards.map(s => s.copy(data = widen(s)(s.data), classes = s.classes.map(widen(s))))
+    val old = shards.map(widened)
     val oldByLin = old.groupBy(_.destLin)
     val trimmed = StageTables.trim3d.map(t => t.linearIndex -> t).toMap
     for ((lin, group) <- shards.groupBy(_.destLin)) {
@@ -142,6 +132,22 @@ class HaloPlacementSpec extends AnyFunSuite {
     }
   }
 
+  /** `s` as older streaming checkpoints hold it: every value at width 8,
+    * untagged.
+    */
+  private def widened(s: Halo.Shard): Halo.Shard = {
+    def widen(packed: Array[Byte]): Array[Byte] = {
+      val values = new Array[Long](Nd.size(s.shape))
+      Nd.unpackBox(values, s.shape, Nd.fullBox(s.shape), packed)
+      val buf = java.nio.ByteBuffer.allocate(1 + 8 * values.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.put(8.toByte)
+      values.foreach(buf.putLong)
+      buf.array()
+    }
+    s.copy(data = widen(s.data), classes = s.classes.map(widen))
+  }
+
   /** A `shape` image of values up to 300 (two wire widths) and one classes
     * channel, cut into `chunk` tiles, ragged at the high edges.
     */
@@ -150,6 +156,15 @@ class HaloPlacementSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(seed)
     val img = Array.fill(Nd.size(shape))(if (rnd.nextInt(3) == 0) 0L else rnd.nextInt(300).toLong)
     val cls = img.map(v => if (v == 0L) 0L else 1L + v % 3)
+    val (spec, tiles) = cut(img, cls, shape, chunk)
+    (spec, tiles, img, cls)
+  }
+
+  /** `img` and its classes channel `cls`, both of `shape`, cut into `chunk`
+    * tiles, ragged at the high edges.
+    */
+  private def cut(img: Array[Long], cls: Array[Long], shape: Array[Int],
+      chunk: Array[Int]): (GridSpec, Seq[Tile]) = {
     val spec = GridSpec(shape.map(_.toLong), chunk)
     val grid = spec.gridShape
     val tiles = (0 until grid.product).map { lin =>
@@ -158,7 +173,7 @@ class HaloPlacementSpec extends AnyFunSuite {
         Array.tabulate(shape.length)(a => math.min((loc(a) + 1) * chunk(a), shape(a))))
       Tile(loc, grid, box.shape, Nd.sliceBox(img, shape, box), Array(Nd.sliceBox(cls, shape, box)))
     }
-    (spec, tiles, img, cls)
+    (spec, tiles)
   }
 
   private def unravel(lin: Int, shape: Array[Int]): Array[Int] = {
@@ -306,5 +321,131 @@ class HaloPlacementSpec extends AnyFunSuite {
     val msg = failure(Relabel.mergeOverlappedTiles(
       spark.createDataset(removed :+ removed(4)), ovs).collect())
     assert(msg.contains("linear index 4 appears twice"), msg)
+  }
+
+  /** Ragged grids for O4: blobs of at most `ov + 1` px in a 2-D image of
+    * 3×4 chunks and a 3-D volume of 3×3×3 chunks, ragged on every axis.
+    */
+  private val mergeGrids = Seq(
+    ("ragged 2-D 3x4", Array(20, 28), Array(8, 8)),
+    ("ragged 3-D 3x3x3", Array(10, 13, 11), Array(4, 5, 4)))
+
+  /** O3's output (overlap 2, threshold 0.25, [[ClassedCCL]]) on a seeded
+    * blob image of `shape` cut into `chunk` tiles, with the input tiles.
+    */
+  private def removedTiles(shape: Array[Int], chunk: Array[Int])
+      : (GridSpec, Seq[Tile], Seq[Tile]) = {
+    import spark.implicits._
+    val img = (if (shape.length == 2) BlobImages.gen(shape(0), shape(1), 6, 12, 3)
+      else BlobImages.gen3(shape(0), shape(1), shape(2), 8, 16, 3))
+      .pureApply(Gen.Parameters.default, Seed(5L))
+    val (spec, tiles) = cut(img, img, shape, chunk)
+    val ovs = Array.fill(shape.length)(ov)
+    val removed = Relabel.removeOverlappedLabels(Relabel.segmentOverlappedInput(
+      Relabel.prepareInput(spark.createDataset(tiles), spec, ovs), ClassedCCL), ovs, 0.25)
+    (spec, tiles, removed.collect().toSeq.sortBy(_.linearIndex))
+  }
+
+  /** Every direction vector in {-1,0,1}^dims, the zero vector included. */
+  private def allDirections(dims: Int): Seq[Array[Int]] =
+    (0 until dims).foldLeft(Seq(Array.empty[Int]))((acc, _) =>
+      for (d <- acc; v <- Seq(-1, 0, 1)) yield d :+ v)
+
+  for ((name, shape, chunk) <- mergeGrids)
+    test(s"O4 ships no voxel outside the receiver's core on a $name grid") {
+      val ovs = Array.fill(shape.length)(ov)
+      val (spec, _, removed) = removedTiles(shape, chunk)
+      val dims = shape.length
+      val grid = spec.gridShape
+      val byLin = removed.map(t => t.linearIndex -> t).toMap
+      def interior(t: Tile) = Regions.interiorBox(t.loc, t.grid, ovs, t.shape)
+      var shipped = 0L
+      for (t <- removed; s <- Halo.mergeShardsOf(t, ovs)) {
+        val ctx = s"shard from ${t.loc.mkString(",")} toward ${s.destLoc.mkString(",")}"
+        val core = interior(byLin(s.destLin)).shape
+        if (s.rd.forall(_ == 0))
+          assert(s.shape.sameElements(interior(t).shape), s"$ctx: core ${s.shape.mkString("x")}")
+        else assert((0 until dims).forall(a => s.shape(a) == (if (s.rd(a) != 0) ov else core(a))),
+          s"$ctx: margin ${s.shape.mkString("x")} for a ${core.mkString("x")} core")
+        // labels and the classes channel both hold exactly the shard's box
+        for (packed <- s.data +: s.classes.toSeq)
+          Nd.unpackBox(new Array[Long](Nd.size(s.shape)), s.shape, Nd.fullBox(s.shape), packed)
+        assert(s.classes.length == 1, s"$ctx: ${s.classes.length} class channels")
+        // marked as clipped, and labels at their tile-local width
+        assert(Nd.marked(s.data) && (s.data(0) & 0x3f) <= 2, s"$ctx: header byte ${s.data(0)}")
+        shipped += Nd.size(s.shape)
+      }
+      // the model: every chunk's (padded) core, plus one margin toward each
+      // in-grid neighbour whose parity rule merges it, `ov` thick where the
+      // two chunks differ and chunk-sized where they share a coordinate
+      val locs = (0 until grid.product).map(lin => unravel(lin, grid))
+      val margins = for (loc <- locs; d <- allDirections(dims) if d.exists(_ != 0)) yield {
+        val dest = Array.tabulate(dims)(a => loc(a) + d(a))
+        val merges = (0 until dims).exists(a => d(a) != 0 && dest(a) % 2 != 0)
+        if (dest.indices.forall(a => dest(a) >= 0 && dest(a) < grid(a)) && merges)
+          (0 until dims).map(a => (if (d(a) != 0) ov else chunk(a)).toLong).product
+        else 0L
+      }
+      val model = locs.size.toLong * chunk.map(_.toLong).product + margins.sum
+      assert(shipped == model, s"O4 shipped $shipped voxels per channel; the core model is $model")
+    }
+
+  /** Merge shards by the box rule that streaming checkpoints written before
+    * the clip hold: the core is the whole overlapped tile, and a margin
+    * spans the sender's whole tile on the axes it shares with its receiver.
+    */
+  private def fullExtentShards(t: Tile, ovs: Array[Int]): Seq[Halo.Shard] = {
+    val (width, base) = Nd.packFrame(t.data)
+    def pack(box: Nd.Box) = (Nd.packBox(t.data, t.shape, box, width, base),
+      t.classes.map { c => val (w, b) = Nd.packFrame(c); Nd.packBox(c, t.shape, box, w, b) })
+    allDirections(t.dims).flatMap { d =>
+      val dest = Array.tabulate(t.dims)(a => t.loc(a) + d(a))
+      val inGrid = dest.indices.forall(a => dest(a) >= 0 && dest(a) < t.grid(a))
+      val merges = d.forall(_ == 0) || d.indices.exists(a => d(a) != 0 && dest(a) % 2 != 0)
+      if (!inGrid || !merges) None
+      else {
+        val box = Nd.Box(Array.tabulate(t.dims)(a => if (d(a) == 1) t.shape(a) - ovs(a) else 0),
+          Array.tabulate(t.dims)(a => if (d(a) == -1) ovs(a) else t.shape(a)))
+        val (data, classes) = pack(box)
+        Some(Halo.Shard(Regions.linearIndex(dest, t.grid), dest, t.grid, d.map(-_), box.shape,
+          data, classes))
+      }
+    }
+  }
+
+  for ((name, shape, chunk) <- mergeGrids)
+    test(s"O4 full-extent shards from older checkpoints assemble to the same tiles on a $name grid") {
+      import spark.implicits._
+      val ovs = Array.fill(shape.length)(ov)
+      val (spec, tiles, removed) = removedTiles(shape, chunk)
+      val labelled = Relabel.image2labels(spark.createDataset(tiles), spec, ClassedCCL, ovs, 0.25)
+        .collect().map(t => t.linearIndex -> t).toMap
+      val clipped = removed.flatMap(Halo.mergeShardsOf(_, ovs)).groupBy(_.destLin)
+      val full = removed.flatMap(fullExtentShards(_, ovs)).groupBy(_.destLin)
+      assert(full.values.flatten.size == clipped.values.flatten.size)
+      def isCore(s: Halo.Shard) = s.rd.forall(_ == 0)
+      for ((lin, now) <- clipped) {
+        val before = full(lin)
+        val groups = Seq(
+          "core-clipped" -> now,
+          "full-extent" -> before,
+          "full-extent, untagged width 8" -> before.map(widened),
+          "full-extent core, clipped margins" -> (before.filter(isCore) ++ now.filterNot(isCore)),
+          "clipped core, full-extent margins at width 8" ->
+            (now.filter(isCore) ++ before.filterNot(isCore).map(widened)))
+        for ((how, group) <- groups) {
+          val t = Halo.assembleMerged(lin, group.toArray, ovs)
+          assertSameTile(s"$name, $how", Kernels.cropTo(t, spec.tileShape(t.loc)), labelled(lin))
+        }
+      }
+      assert(labelled.values.exists(_.classes(0).exists(_ > 1L)), "no object of a second class")
+    }
+}
+
+/** CCL labels with a classes channel that varies by object: `1 + label % 3`. */
+private case object ClassedCCL extends SegmentationFn {
+  def segment(tile: Tile): (Array[Long], Array[Array[Long]]) = {
+    val labels = CCL.label(tile.data, tile.shape)
+    (labels, Array(labels.map(v => if (v == 0L) 0L else 1L + v % 3)))
   }
 }

@@ -106,6 +106,21 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"prepareInput shuffled $b bytes for $margins margin uint8 pixels")
   }
 
+  test("O4 ships only its receivers' cores: a fixed blob image's merge stays under 18,400 bytes") {
+    import spark.implicits._
+    val img = BlobImages.gen(128, 128, 3000, 3000, 3).pureApply(Gen.Parameters.default, Seed(4L))
+    val spec = GridSpec(Array(128L, 128L), Array(32, 32))
+    val ov = Array(8, 8)
+    val removed = Relabel.removeOverlappedLabels(Relabel.segmentOverlappedInput(
+      Relabel.prepareInput(spark.createDataset(BlobImages.toTiles(img, 128, 128, 32)), spec, ov),
+      CCLSegmentation(returnsClasses = true)), ov, 0.25).collect().toSeq
+    val b = shuffleOf(Relabel.mergeOverlappedTiles(spark.createDataset(removed), ov).rdd.count())
+    info(s"mergeOverlappedTiles shuffled $b B")
+    // whole halo-expanded tiles and full-extent margins shipped 19,104 B
+    // here; core boxes and margins clipped to their receiver's core 17,724 B
+    assert(b <= 18400L, s"O4 shuffled $b bytes: more than its receivers' cores")
+  }
+
   test("sortLabelIndices adds only its label probe's shuffle to image2labels") {
     import spark.implicits._
     val img = BlobImages.gen(64, 64, 100, 200, 3).pureApply(Gen.Parameters.default, Seed(0L))

@@ -43,8 +43,9 @@ import graft.tiles.{GridSpec, Tile}
   *    a binary field of radius-5 blobs on a 24-px lattice, so objects
   *    cross tile borders and both exchanges carry real margins. Each
   *    size also prints a `BYTES` line ([[HaloBytes]]): O1 and O4 shuffle
-  *    bytes per margin and per expanded voxel, and how many staged tiles
-  *    arrived in their O1 partition.
+  *    bytes per margin voxel, O1's per expanded voxel and O4's per voxel of
+  *    its core model, and how many staged tiles arrived in their O1
+  *    partition.
   *
   * At the largest size each family's physical plan is asserted: the band
   * join is still a hash equi-join on (band, bandval), the IVF probe join
@@ -182,16 +183,17 @@ object ShuffleScale {
   /** What the two halo exchanges of [[haloPipeline]] moved on a `grid`²
     * grid, against the halo model: shuffle bytes of O1 and of O4, the
     * margin voxels each must ship (O1 every in-grid margin of every chunk,
-    * O4 the margins its parity rule sends, both from the overlapped
-    * shapes), the expanded voxels (every halo-expanded tile), and how many
-    * of the parquet-staged tiles arrived in their O1 partition, so that
-    * O1 shipped only their margins.
+    * from the overlapped shapes; O4 the margins its parity rule sends,
+    * each clipped to its receiver's core), O4's model (every chunk's core
+    * plus its margins, all that O4's trim keeps), the expanded voxels
+    * (every halo-expanded tile), and how many of the parquet-staged tiles
+    * arrived in their O1 partition, so that O1 shipped only their margins.
     */
   final case class HaloBytes(o1: Long, o4: Long, o1Margin: Long, o4Margin: Long,
-      expanded: Long, atHome: Long, tiles: Long) {
+      o4Model: Long, expanded: Long, atHome: Long, tiles: Long) {
     def line: String =
       f"O1 ${o1.toDouble / o1Margin}%.3f B/margin ${o1.toDouble / expanded}%.3f B/expanded voxel  " +
-        f"O4 ${o4.toDouble / o4Margin}%.3f B/margin ${o4.toDouble / expanded}%.3f B/expanded voxel  " +
+        f"O4 ${o4.toDouble / o4Margin}%.3f B/margin ${o4.toDouble / o4Model}%.3f B/modelled voxel  " +
         s"at home $atHome of $tiles tiles"
   }
 
@@ -210,11 +212,11 @@ object ShuffleScale {
     val both = shuffled(haloPipeline(spark, dir, grid).rdd.count())
     val locs = for (y <- 0 until grid; x <- 0 until grid) yield Array(y, x)
     val dirs = Halo.directions(2)
-    def margins(send: (Array[Int], Array[Int]) => Boolean): Long = locs.map { loc =>
-      val shape = spec.overlappedShape(loc, ov)
-      dirs.filter(d => Halo.inGrid(loc, d, spec.gridShape) && send(loc, d))
-        .map(d => (if (d(0) != 0) haloOv else shape(0)).toLong * (if (d(1) != 0) haloOv else shape(1)))
-        .sum
+    // O4's margins: `haloOv` thick on their varying axes, the receiver's
+    // core on the others
+    val o4Margin = locs.map { loc =>
+      dirs.filter(d => Halo.inGrid(loc, d, spec.gridShape) && Halo.receiverWillMerge(loc, d))
+        .map(_.map(v => (if (v != 0) haloOv else haloCs).toLong).product).sum
     }.sum
     val expanded = locs.map(loc => spec.overlappedShape(loc, ov).map(_.toLong).product).sum
     val in = tiles.rdd
@@ -223,8 +225,9 @@ object ShuffleScale {
     val home = in.mapPartitionsWithIndex((part, it) =>
       Iterator.single(Halo.placedAt(part, n, placed, it).count(_._2).toLong))
       .collect().sum
-    HaloBytes(o1, both - o1, expanded - grid.toLong * grid * haloCs * haloCs,
-      margins(Halo.receiverWillMerge), expanded, home, grid.toLong * grid)
+    val cores = grid.toLong * grid * haloCs * haloCs
+    HaloBytes(o1, both - o1, expanded - cores, o4Margin, cores + o4Margin, expanded, home,
+      grid.toLong * grid)
   }
 
   /** The halo scale claim: EXACTLY two shuffles — the prepare (O1) halo
